@@ -7,41 +7,64 @@ Streaming needed for a batch corpus):
   - the corpus is bucketed by pmod(xxhash64(url), n_buckets) — a pure
     function of the data, so bucket membership is stable across runs,
     executors, and cluster sizes (the Iceberg-partition analog);
-  - buckets are processed in groups; each group is ONE Spark write job
-    into output partition dirs (partitionBy("bucket"), dynamic
-    partition overwrite -> idempotent: re-writing a bucket replaces it
-    byte-for-byte, never duplicates);
-  - after each group commits, a lineage row per bucket (bucket, docs,
-    kept, group metrics) is appended to the _manifest table;
+  - buckets are processed in groups, and each group is labelled ONCE:
+    the group's label rows (never its html) are repartitioned by bucket
+    and cached;
+  - commit 1, labels: the cached frame is written into output partition
+    dirs (partitionBy("bucket"), dynamic partition overwrite ->
+    idempotent: re-writing a bucket replaces it, never duplicates), one
+    file per bucket;
+  - commit 2, manifest: the per-bucket lineage row (bucket, docs, kept,
+    dropped-by-rule, scrub and unresolved-stratum counts) is aggregated
+    from the same cached frame — the written labels are never re-read —
+    and appended to the _manifest table, one row per bucket of the group,
+    zeros for empty buckets;
   - on startup the manifest is read and completed buckets are skipped —
     the scan never reads them again (pushed-down bucket filter).
 
-A killed run resumes by re-running the same command: output equals a
-single uninterrupted run exactly (tests/test_resume.py asserts this).
+A run killed between the two commits leaves labels without manifest
+rows; rerunning the same command rewrites those buckets and commits
+their rows, so output equals a single uninterrupted run exactly
+(tests/test_resume.py asserts this).
 """
 
 from __future__ import annotations
 
 import os
 
+import pyarrow as pa
+from pyspark import StorageLevel
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions.quality import RULES_WITH_PPL
-from .pipeline import DEFAULT_UNRESOLVED_POLICY, run_pipeline
+from .pipeline import (
+    DEFAULT_UNRESOLVED_POLICY,
+    UNRESOLVED_DROP_RULE,
+    run_pipeline,
+)
 
 MANIFEST_DIR = "_manifest"
 LABELS_DIR = "labels"
 
-# dropped-by-rule manifest columns, one per ladder rule (north rule:
-# metrics rows carry docs seen, kept, DROPPED-BY-RULE, scrub counts)
-_DROP_COLS = tuple(f"drop_{rule_id}" for rule_id, _, _, _ in RULES_WITH_PPL)
+# dropped-by-rule manifest columns, one per drop_rule a label can carry:
+# every ladder rule plus the unresolved-language drop, so that per bucket
+# docs - kept == sum(drop_*) under every unresolved policy
+_DROP_RULES = tuple(rule_id for rule_id, _, _, _ in RULES_WITH_PPL) + (
+    UNRESOLVED_DROP_RULE,
+)
+_DROP_COLS = tuple(f"drop_{rule}" for rule in _DROP_RULES)
 # unresolved-language stratum audit columns (explicit policy, r5)
-_UNRESOLVED_COLS = (
-    "unresolved_kept",
-    "unresolved_quarantined",
-    "unresolved_dropped",
+_UNRESOLVED_DISPOSITIONS = ("kept", "quarantined", "dropped")
+_UNRESOLVED_COLS = tuple(f"unresolved_{d}" for d in _UNRESOLVED_DISPOSITIONS)
+MANIFEST_COLS = (
+    ("docs", "kept", "scrub_email", "scrub_toxicity") + _DROP_COLS + _UNRESOLVED_COLS
+)
+MANIFEST_SCHEMA = T.StructType(
+    [T.StructField("bucket", T.IntegerType())]
+    + [T.StructField(c, T.LongType()) for c in MANIFEST_COLS]
 )
 
 
@@ -51,26 +74,48 @@ def bucket_col(url_col: str = "url", n_buckets: int = 32):
 
 def completed_buckets(spark: SparkSession, out_dir: str) -> set[int]:
     """Probe the manifest through Spark's reader (works on any Hadoop
-    filesystem — HDFS/S3/local — unlike a driver-local os.path check)."""
+    filesystem — HDFS/S3/local — unlike a driver-local os.path check).
+    Only ``bucket`` is read, with a fixed schema: every engine version
+    wrote it as int, so no footer is sampled or merged."""
     path = os.path.join(out_dir, MANIFEST_DIR)
     try:
-        # mergeSchema: manifest rows appended by different engine
-        # versions may carry different metric columns (e.g. the
-        # drop_* widening); schema is the union, never one sampled
-        # footer, so resumes across upgrades stay correct
-        rows = (
-            spark.read.option("mergeSchema", "true")
-            .parquet(path)
-            .select("bucket")
-            .distinct()
-            .collect()
-        )
+        rows = spark.read.schema("bucket int").parquet(path).collect()
     except AnalysisException:  # path does not exist yet -> fresh run
         return set()
     # any OTHER error (permissions, corrupt footer, transient FS) must
     # propagate: swallowing it would silently restart the whole run and
     # append duplicate manifest rows (ADVICE r2)
     return {r["bucket"] for r in rows}
+
+
+def _manifest_aggs():
+    """Per-bucket lineage aggregates over label rows, named as
+    MANIFEST_COLS."""
+    return [
+        F.count("*").alias("docs"),
+        F.sum(F.col("keep").cast("long")).alias("kept"),
+        F.sum(F.coalesce("scrub_email", F.lit(0))).alias("scrub_email"),
+        F.sum(F.coalesce("scrub_toxicity", F.lit(0))).alias("scrub_toxicity"),
+        *(
+            F.sum((F.col("drop_rule") == rule).cast("long")).alias(f"drop_{rule}")
+            for rule in _DROP_RULES
+        ),
+        *(
+            F.sum(
+                (F.col("lang_pred").isNull() & (F.col("disposition") == d)).cast(
+                    "long"
+                )
+            ).alias(f"unresolved_{d}")
+            for d in _UNRESOLVED_DISPOSITIONS
+        ),
+    ]
+
+
+def _append_manifest(spark: SparkSession, rows: list[tuple], path: str) -> None:
+    """Append lineage rows (MANIFEST_SCHEMA order) as one Arrow-built
+    local frame: no Python-runner round trip, one small file."""
+    table = pa.table(dict(zip(MANIFEST_SCHEMA.names, zip(*rows))))
+    spark.createDataFrame(table, MANIFEST_SCHEMA).write.mode("append").parquet(path)
 
 
 def run_with_resume(
@@ -105,89 +150,37 @@ def run_with_resume(
     manifest_path = os.path.join(out_dir, MANIFEST_DIR)
 
     for group in groups:
-        src = pages.withColumn("bucket", bucket_col(n_buckets=n_buckets))
-        src = src.filter(F.col("bucket").isin(group))
-        labels = run_pipeline(
-            spark,
-            src.drop("bucket"),
-            model=model,
-            unresolved_policy=unresolved_policy,
-        )
-        labels = labels.withColumn("bucket", bucket_col(n_buckets=n_buckets))
-        # idempotent per-partition write: dynamic overwrite replaces
-        # exactly the bucket= dirs this group touches
-        labels.write.mode("overwrite").partitionBy("bucket").parquet(
-            labels_path
-        )
-        # lineage + metrics rows, appended only after the data commit.
-        # Every bucket in the group gets a row — including empty buckets
-        # (which wrote no partition dir): an absent row would keep the
-        # bucket in `todo` forever and the run would never converge.
-        # slim local frame (r07): the default createDataFrame path
-        # costs one Python-runner round trip per default-parallelism
-        # slice on every evaluation
-        from ..session import local_rows_df
-
-        group_df = local_rows_df(
-            spark, [(int(b),) for b in group], "bucket int", slices=1
+        src = pages.filter(bucket_col(n_buckets=n_buckets).isin(group))
+        # only label rows cross the shuffle; each bucket lands in one
+        # partition, so the write below makes one file per bucket
+        labels = (
+            run_pipeline(spark, src, model=model, unresolved_policy=unresolved_policy)
+            .withColumn("bucket", bucket_col(n_buckets=n_buckets))
+            .repartition("bucket")
+            .persist(StorageLevel.MEMORY_AND_DISK)
         )
         try:
-            agg = (
-                spark.read.option("mergeSchema", "true").parquet(labels_path)
-                .filter(F.col("bucket").isin(group))
-                .groupBy("bucket")
-                .agg(
-                    F.count("*").alias("docs"),
-                    F.sum(F.col("keep").cast("long")).alias("kept"),
-                    F.sum(F.coalesce("scrub_email", F.lit(0))).alias(
-                        "scrub_email"
-                    ),
-                    F.sum(F.coalesce("scrub_toxicity", F.lit(0))).alias(
-                        "scrub_toxicity"
-                    ),
-                    *(
-                        F.sum(
-                            (F.col("drop_rule") == rule_id).cast("long")
-                        ).alias(f"drop_{rule_id}")
-                        for rule_id, _, _, _ in RULES_WITH_PPL
-                    ),
-                    # unresolved-stratum disposition (audit columns for
-                    # the explicit policy; older outputs without the
-                    # disposition column fall back to keep/lang_pred)
-                    *(
-                        F.sum(
-                            (
-                                F.col("lang_pred").isNull()
-                                & (F.col("disposition") == d)
-                            ).cast("long")
-                        ).alias(f"unresolved_{d}")
-                        for d in ("kept", "quarantined", "dropped")
-                    ),
-                )
+            # idempotent per-partition write: dynamic overwrite replaces
+            # exactly the bucket= dirs this group touches
+            labels.write.mode("overwrite").partitionBy("bucket").parquet(
+                labels_path
             )
-            lineage = group_df.join(agg, "bucket", "left")
-        except AnalysisException:  # no labels written yet (all-empty group)
-            lineage = group_df.select(
-                "bucket",
-                *(
-                    F.lit(None).cast("long").alias(c)
-                    for c in ("docs", "kept", "scrub_email", "scrub_toxicity")
-                    + _DROP_COLS
-                    + _UNRESOLVED_COLS
-                ),
-            )
-        lineage = lineage.na.fill(
-            0,
-            [
-                "docs",
-                "kept",
-                "scrub_email",
-                "scrub_toxicity",
-                *_DROP_COLS,
-                *_UNRESOLVED_COLS,
-            ],
-        )
-        lineage.write.mode("append").parquet(manifest_path)
+            stats = {
+                r["bucket"]: r.asDict()
+                for r in labels.groupBy("bucket").agg(*_manifest_aggs()).collect()
+            }
+            # lineage rows, appended only after the labels commit. Every
+            # bucket in the group gets a row — including empty buckets
+            # (which wrote no partition dir): an absent row would keep the
+            # bucket in `todo` forever and the run would never converge.
+            # A sum over only NULLs (no doc with a drop_rule) is NULL: 0.
+            rows = [
+                (b, *(stats.get(b, {}).get(c) or 0 for c in MANIFEST_COLS))
+                for b in group
+            ]
+            _append_manifest(spark, rows, manifest_path)
+        finally:
+            labels.unpersist()
     return len(groups)
 
 
@@ -204,11 +197,4 @@ def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame:
     df = spark.read.option("mergeSchema", "true").parquet(
         os.path.join(out_dir, MANIFEST_DIR)
     )
-    fillable = [
-        c
-        for c in ("docs", "kept", "scrub_email", "scrub_toxicity")
-        + _DROP_COLS
-        + _UNRESOLVED_COLS
-        if c in df.columns
-    ]
-    return df.na.fill(0, fillable)
+    return df.na.fill(0, [c for c in MANIFEST_COLS if c in df.columns])

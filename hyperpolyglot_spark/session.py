@@ -14,6 +14,19 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory(phys_bytes: int | None = None) -> str:
+    """``spark.driver.memory`` unless set: $SPARK_DRIVER_MEM, else half
+    of physical memory (``phys_bytes``, default this host's). In local
+    mode the driver heap is the executors' heap too; half leaves the
+    rest to the Python workers and the page cache."""
+    env = os.environ.get("SPARK_DRIVER_MEM")
+    if env:
+        return env
+    if phys_bytes is None:
+        phys_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{phys_bytes // 2**21}m"
+
+
 def get_spark(
     app_name: str = "hyperpolyglot_spark",
     cores: int | None = None,
@@ -65,7 +78,7 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_READER_BATCH", "512"),
         )
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Dio.netty.tryReflectionSetAccessible=true")
         .config(

@@ -17,8 +17,11 @@ the session also caps the parquet reader batch at 512 rows so a
 default-heap run degrades gracefully instead of OOMing the scan.)
 
 Resumable: re-running the same command continues from the bucket
-manifest (plans/resume.py). Metrics + per-bucket lineage land under
-<output>/_manifest; labels under <output>/labels partitioned by bucket.
+manifest (plans/resume.py). Each bucket group is labelled once and
+committed twice: first its labels under <output>/labels, one parquet
+file per bucket dir, then its per-bucket lineage + metrics rows under
+<output>/_manifest, aggregated from the same labels in memory. A run
+killed between the two commits redoes that group on rerun.
 
 With --synthesize N the job generates N deterministic synthetic pages
 instead of reading --input (self-contained smoke/bench runs).
@@ -49,7 +52,7 @@ def main(argv: list[str] | None = None) -> int:
     args = p.parse_args(argv)
 
     from hyperpolyglot_spark.session import get_spark
-    from hyperpolyglot_spark.plans.resume import run_with_resume
+    from hyperpolyglot_spark.plans.resume import read_manifest, run_with_resume
 
     spark = get_spark("quality_filter", cores=args.cores)
     if args.synthesize:
@@ -73,10 +76,7 @@ def main(argv: list[str] | None = None) -> int:
     )
     print(f"completed {groups} bucket group(s); output at {args.output}")
 
-    manifest = spark.read.option("mergeSchema", "true").parquet(
-        f"{args.output}/_manifest"
-    )
-    manifest.orderBy("bucket").show(200, truncate=False)
+    read_manifest(spark, args.output).orderBy("bucket").show(200, truncate=False)
     return 0
 
 
