@@ -80,12 +80,12 @@ def _spread(spark: SparkSession, df: DataFrame) -> DataFrame:
     The sf testdata tables are single parquet files with ONE row group
     (r07 audit), so every scan is one task no matter the split config —
     a per-doc-heavy stage (gram explode, minhash UDF, quality ladder)
-    then runs on 1 of 32 cores. Same fix and same gate as the frozen
-    bench.py pages path: shuffle the (small, under-split) input across
-    the cores ONCE, only when the scan under-splits them. At corpus
-    scale a real table has thousands of row groups, the gate never
-    fires, and no corpus-sized shuffle is added — this is the
-    guide §2.5 'unsplittable input' repartition, not a tuning constant.
+    then runs on 1 of 32 cores. The fix: shuffle the (small,
+    under-split) input across the cores ONCE, only when the scan
+    under-splits them. At corpus scale a real table has thousands of
+    row groups, the gate never fires, and no corpus-sized shuffle is
+    added — this is the guide §2.5 'unsplittable input' repartition,
+    not a tuning constant.
 
     Applied ONLY where an A/B noop-sink measurement showed a win
     (OPTIMIZATION_r07.md): shallow plans whose per-row compute
@@ -791,16 +791,14 @@ def docs_keep_drop(spark, sf_dir):
     """The quality-filter rule ladder as an oracle query: signals
     (length, symbol ratio, 3-gram repetition, stopword density) +
     first-match-wins keep/drop over the documents table — the same
-    column expressions the pipeline parity-tests, DuckDB-checked
-    end-to-end. (No url column here, so the vendor rule can't fire;
-    perplexity is oracled separately by doc_perplexity.)"""
-    from hyperpolyglot_spark.functions.quality import (
-        with_keep_drop,
-        with_quality_signals,
-    )
+    py_signals/py_keep_drop spec the pipeline runs, checked against
+    DuckDB SQL generated from the same dims. (No url column here, so
+    the vendor rule can't fire; perplexity is oracled separately by
+    doc_perplexity.)"""
+    from hyperpolyglot_spark.functions.quality import with_keep_drop
 
     docs = _spread(spark, _t(spark, sf_dir, "documents"))
-    df = with_keep_drop(with_quality_signals(docs, "text"))
+    df = with_keep_drop(docs, "text")
     return df.select(
         "doc_id",
         "n_chars",
@@ -1137,11 +1135,7 @@ def unresolved_disposition(spark, sf_dir):
         ppl_thresholds_for,
         with_perplexity,
     )
-    from hyperpolyglot_spark.functions.quality import (
-        MAX_PPL,
-        with_keep_drop,
-        with_quality_signals,
-    )
+    from hyperpolyglot_spark.functions.quality import MAX_PPL, with_keep_drop
     from hyperpolyglot_spark.plans.pipeline import disposition_col
 
     docs = (
@@ -1161,7 +1155,8 @@ def unresolved_disposition(spark, sf_dir):
     # right-size parallelism to the input: this is a ~450-row fixture
     # union, but the parquet scan contributes 32 near-empty partitions
     # — and the plan chains TWO dependent ArrowEvalPython stages
-    # (classify -> perplexity), so every task holds 2 python workers.
+    # (classify + keep/drop -> perplexity), so every task holds 2
+    # python workers.
     # 33 tasks x 2 workers meant ~60 worker spawns for 450 rows (the
     # 11s bench entry, VERDICT r5 #3); 4 partitions keeps it to the
     # warm pool. At corpus scale the operator is run_pipeline, which
@@ -1169,7 +1164,7 @@ def unresolved_disposition(spark, sf_dir):
     df = docs.unionByName(fx).repartition(4).withColumn(
         "lang_pred", clf(F.col("text"), F.array().cast("array<string>"))
     )
-    df = with_keep_drop(with_quality_signals(df, "text"))
+    df = with_keep_drop(df, "text")
     # LM scores only rows every cheap rule passed (X5 economics, same
     # as py_label_page): dropped rows ship NULL text to the scorer
     df = df.withColumn("_ppl_text", F.when(F.col("keep"), F.col("text")))
@@ -1579,10 +1574,7 @@ def langid_noisy_texts(spark, sf_dir):
     time; behavioral floors pinned in test_realtext."""
     from hyperpolyglot_spark.datagen.realtext import noisy_texts
     from hyperpolyglot_spark.functions.langid import make_classify_udf
-    from hyperpolyglot_spark.functions.quality import (
-        with_keep_drop,
-        with_quality_signals,
-    )
+    from hyperpolyglot_spark.functions.quality import with_keep_drop
 
     df = local_rows_df(
         spark,
@@ -1593,7 +1585,7 @@ def langid_noisy_texts(spark, sf_dir):
     df = df.withColumn(
         "lang_pred", clf(F.col("text"), F.array().cast("array<string>"))
     )
-    df = with_keep_drop(with_quality_signals(df, "text"))
+    df = with_keep_drop(df, "text")
     return df.select(
         "doc_id",
         "lang",
@@ -1703,15 +1695,12 @@ def source_rule_rollup(spark, sf_dir):
     aggregation over the quality ladder's output — the per-host
     keep-rate table that feeds url_blocklist updates at corpus
     scale."""
-    from hyperpolyglot_spark.functions.quality import (
-        with_keep_drop,
-        with_quality_signals,
-    )
+    from hyperpolyglot_spark.functions.quality import with_keep_drop
 
     docs = _spread(
         spark, _t(spark, sf_dir, "documents").select("doc_id", "source", "text")
     )
-    kd = with_keep_drop(with_quality_signals(docs, "text"))
+    kd = with_keep_drop(docs, "text")
     return (
         kd.groupBy(
             "source",
@@ -1922,9 +1911,9 @@ def _script_mix_sql() -> str:
 def _keep_drop_sql() -> str:
     """DuckDB form of the quality signals + rule ladder, generated from
     the SAME dims (symbol class, spaceless class, stopword set, RULES
-    table) the Spark side uses — one source of truth, two engines. A
-    NULL gated signal never fires its rule (CASE WHEN NULL falls
-    through), matching the py spec and column ladder."""
+    table) py_signals/py_keep_drop use — the spec's independent
+    oracle. A NULL gated signal never fires its rule (CASE WHEN NULL
+    falls through), matching py_keep_drop."""
     from hyperpolyglot_spark.functions.langdata import ALL_STOPWORDS
     from hyperpolyglot_spark.functions.langid import NORM_FROM, NORM_TO
     from hyperpolyglot_spark.functions.quality import (
@@ -1937,9 +1926,9 @@ def _keep_drop_sql() -> str:
         SPACELESS_THRESHOLD,
     )
 
-    # r6: same invisible-char normalization as with_quality_signals /
-    # py_signals — DuckDB translate() deletes chars beyond len(to),
-    # identical to Spark's (SQL-standard rule)
+    # r6: same invisible-char normalization as py_signals
+    # (langid.normalize_scoring_text) — DuckDB translate() deletes chars
+    # beyond len(to) (SQL-standard rule)
     _nf, _nt = NORM_FROM, NORM_TO
     # SQL-escape: the Afrikaans stopword 'n carries an apostrophe
     stops = ", ".join("'" + w.replace("'", "''") + "'" for w in sorted(ALL_STOPWORDS))

@@ -1,8 +1,7 @@
 """Per-document metadata detectors (stages 1-3) + candidate algebra.
 
-Pure-Python spec functions; the Spark pipeline reproduces each with
-column expressions / broadcast joins (see operators/cascade.py) and the
-tests assert parity row-by-row.
+Pure-Python spec functions, composed into the cascade by
+operators/cascade.detect_lang_py.
 
 Semantics mirrored from the reference:
   - filter_candidates: src/lib.rs:268-290 — either side empty -> other

@@ -7,24 +7,26 @@ default (keep) at the end. Cheap rules run first so expensive stages
 never see dropped docs (the `.h -> C` classifier-dodge trick,
 codegen.rs:329-336 / README.md:76-83, generalized — SURVEY.md §4 X5).
 
-Two implementations with identical semantics, tested for parity:
-  - py_signals/py_keep_drop: pure-Python spec (oracle mode).
-  - with_quality_signals/with_keep_drop: Spark column expressions —
-    built-ins only, whole-stage-codegen'd, no Python in the hot path.
+py_signals/py_keep_drop are the one implementation (the spec); the
+pipeline's fused label UDF and with_keep_drop both run it, and the
+DuckDB SQL generated from the same dims (__spark_entry__._keep_drop_sql)
+is its independent oracle.
 
-Word split spec: ASCII-whitespace runs (both sides operate on
-extraction output, which collapses all whitespace to single spaces).
+Word split spec: ASCII-whitespace runs (extraction output collapses all
+whitespace to single spaces).
 """
 
 from __future__ import annotations
 
 import re
 
-from pyspark.sql import Column, DataFrame
+import pandas as pd
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .langdata import ALL_STOPWORDS
-from .langid import NORM_FROM, NORM_TO, normalize_scoring_text
+from .langid import normalize_scoring_text
 
 # Letter ranges of every script in the language universe (the 26
 # scripts). Shared by the symbol class below (negated: anything not a
@@ -101,8 +103,8 @@ _HANGUL_ANY_RE = re.compile("[가-힯]")
 
 # Vendor/boilerplate URL blocklist — the P3/P4 analog of the reference's
 # ~120 vendored-path globs (src/filters/vendor.rs, documentation.rs),
-# compiled to ONE regex alternation so it is a single pushed-down
-# predicate. Java- and RE2-safe (no lookaround). Categories mirror the
+# compiled to ONE regex alternation so it is a single search per url.
+# Java- and RE2-safe (no lookaround). Categories mirror the
 # reference's: third-party asset dirs, minified bundles, tracking,
 # admin/infra paths, and boilerplate/legal sections (the doc-filter
 # analog).
@@ -157,8 +159,7 @@ _BOILERPLATE_FILES = (
     r"polyfill[^/]*\.js", r"webfont[^/]*\.js",
 )
 # ~120 vendor/boilerplate patterns (the vendor.rs:3-364 breadth analog)
-# compiled into ONE alternation so the filter is a single pushed-down
-# rlike predicate.
+# compiled into ONE alternation.
 VENDOR_URL_RE = (
     "(?:/(?:" + "|".join(_VENDOR_PATH_DIRS) + ")/"
     "|[?&](?:" + "|".join(_TRACKING_PARAMS) + ")="
@@ -401,7 +402,7 @@ def py_keep_drop(
     """First-match-wins over ``rules``; no match -> keep (default rule).
     Pass precomputed ``signals`` to avoid recomputing them. A signal
     that is absent or None never fires its rule (SQL-null semantics,
-    same as the column ladder)."""
+    same as the DuckDB ladder's CASE WHEN)."""
     sig = signals if signals is not None else py_signals(text, url)
     for rule_id, signal, op, thr in rules:
         val = sig.get(signal)
@@ -411,171 +412,44 @@ def py_keep_drop(
 
 
 # ======================================================================
-# Spark column expressions (the distributed implementation)
+# Spark runner: the spec over Arrow batches
 # ======================================================================
 
-_STOP_ARRAY = None  # built lazily so import works without a session
+_KEEP_DROP_SCHEMA = T.StructType(
+    [
+        T.StructField("n_chars", T.LongType()),
+        T.StructField("n_words", T.LongType()),
+        T.StructField("symbol_ratio", T.DoubleType()),
+        T.StructField("rep3_ratio", T.DoubleType()),
+        T.StructField("stop_density", T.DoubleType()),
+        T.StructField("spaceless_ratio", T.DoubleType()),
+        T.StructField("keep", T.BooleanType()),
+        T.StructField("drop_rule", T.StringType()),
+    ]
+)
+# every field but (keep, drop_rule)
+_SIGNAL_FIELDS = _KEEP_DROP_SCHEMA.fieldNames()[:-2]
 
 
-def _stop_array() -> Column:
-    """The stopword set as an ARRAY literal, consumed by array_intersect.
-
-    NOT a map literal probed per word: Spark's GetMapValue on a literal
-    map is a LINEAR key scan, so at 102 languages (~2.9k stopwords) a
-    per-word probe cost 2.9k comparisons x words x rows — the 24->102
-    widening made the ladder 4x slower. array_intersect instead builds
-    one hash set per ROW (O(stops + words)), and per-word membership
-    then scans only the <=dozens matched stopwords."""
-    global _STOP_ARRAY
-    if _STOP_ARRAY is None:
-        _STOP_ARRAY = F.array(*[F.lit(w) for w in sorted(ALL_STOPWORDS)])
-    return _STOP_ARRAY
-
-
-def words_col(text: Column) -> Column:
-    return F.filter(F.split(text, r"[ \t\n\r\f\x0B]+"), lambda w: w != "")
+@F.pandas_udf(_KEEP_DROP_SCHEMA)
+def _keep_drop_udf(texts: pd.Series) -> pd.DataFrame:
+    rows = []
+    for t in texts:
+        if t is None:
+            rows.append((None,) * len(_KEEP_DROP_SCHEMA.fields))
+            continue
+        sig = py_signals(t)
+        keep, rule = py_keep_drop(t, signals=sig)
+        rows.append((*(sig[n] for n in _SIGNAL_FIELDS), keep, rule))
+    df = pd.DataFrame(rows, columns=_KEEP_DROP_SCHEMA.fieldNames())
+    return df.astype({"n_chars": "Int64", "n_words": "Int64"})
 
 
-def with_quality_signals(
-    df: DataFrame, text_col: str = "text", url_col: str | None = None
-) -> DataFrame:
-    """Append signal columns. Pure built-ins, no shuffle, no Python.
-
-    Heavy intermediates (the words array, the 3-gram array) are
-    materialized as real columns first so each is evaluated ONCE per
-    row — expression trees passed to several downstream columns would
-    otherwise be re-evaluated per reference (no CSE across projections
-    for interpreted higher-order functions)."""
-    # r6: same invisible-char normalization as py_signals. r07:
-    # materialized as a real column — the inlined expression form was
-    # re-evaluated by every consumer (the executed docs_keep_drop plan
-    # carried 32 copies of translate(text), one per signal reference);
-    # as a multiply-referenced non-cheap alias it survives
-    # CollapseProject, so the translate now runs once per row.
-    df = df.withColumn(
-        "_t", F.translate(F.col(text_col), NORM_FROM, NORM_TO)
-    )
-    t = F.col("_t")
-    df = df.withColumn("_w", words_col(t))
-    nw = F.size("_w")
-    # 3-grams as zipped word triples — three O(n) slices + one zip,
-    # never a per-gram lambda. Distinct-triple count == distinct
-    # "a b c" string count because words contain no whitespace.
-    n3 = nw - F.lit(2)
-    zip3 = F.arrays_zip(
-        F.slice("_w", 1, n3), F.slice("_w", 2, n3), F.slice("_w", 3, n3)
-    )
-    rep3 = F.when(
-        nw >= 3,
-        1.0 - F.size(F.array_distinct(zip3)) / n3.cast("double"),
-    ).otherwise(F.lit(0.0))
-    n_chars = F.length(t)
-    n_sym = n_chars - F.length(F.regexp_replace(t, _SYMBOL_CLASS, ""))
-    # stopword hits with token multiplicity: intersect the lowered
-    # words with the stopword set ONCE per row (hash set, not a
-    # per-word linear probe), then count words in the (small) matched
-    # array. The per-word Hangul-particle rlike runs only for docs
-    # that contain a Hangul syllable at all — same doc-level gate as
-    # the python spec's fast path.
-    df = df.withColumn("_lw", F.transform("_w", F.lower))
-    df = df.withColumn(
-        "_stopm", F.array_intersect(_stop_array(), F.col("_lw"))
-    )
-    stop_hits = F.when(
-        t.rlike("[가-힯]"),
-        F.size(
-            F.filter(
-                "_w",
-                lambda x: F.array_contains(F.col("_stopm"), F.lower(x))
-                | x.rlike(_HANGUL_PARTICLE_RE_S),
-            )
-        ),
-    ).otherwise(
-        F.size(
-            F.filter("_lw", lambda x: F.array_contains(F.col("_stopm"), x))
-        )
-    )
-    is_vendor = (
-        F.col(url_col).rlike(VENDOR_URL_RE).cast("double")
-        if url_col
-        else F.lit(0.0)
-    )
-    n_spaceless = n_chars - F.length(
-        F.regexp_replace(t, _SPACELESS_CLASS, "")
-    )
-    spaceless_ratio = (
-        n_spaceless.cast("double") / F.greatest(n_chars, F.lit(1)).cast("double")
-    )
-    is_spaceless = spaceless_ratio > F.lit(SPACELESS_THRESHOLD)
-    # char-trigram distinct ratio over the capped text: explode an int
-    # sequence + substr (the exploded_grams trick) is for bulk aggs;
-    # per-row a transform over <= 2000 elements is the right shape
-    tc = F.substring(t, 1, _REP_CHAR_CAP)
-    tclen = F.length(tc)
-    n_ctri = F.greatest(tclen - F.lit(_REP_CHAR_N - 1), F.lit(0))
-    ctri = F.when(
-        tclen >= _REP_CHAR_N,
-        F.transform(
-            F.sequence(F.lit(1), tclen - F.lit(_REP_CHAR_N - 1)),
-            lambda i: tc.substr(i, F.lit(_REP_CHAR_N)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    rep_char = F.when(
-        n_ctri > 0,
-        1.0 - F.size(F.array_distinct(ctri)) / n_ctri.cast("double"),
-    ).otherwise(F.lit(0.0))
-    stop_density = stop_hits.cast("double") / F.greatest(
-        F.size("_w"), F.lit(1)
-    ).cast("double")
-    null_d = F.lit(None).cast("double")
-    return (
-        df.withColumn("n_chars", n_chars.cast("long"))
-        .withColumn("n_words", F.size("_w").cast("long"))
-        .withColumn(
-            "symbol_ratio",
-            n_sym.cast("double") / F.greatest(n_chars, F.lit(1)).cast("double"),
-        )
-        .withColumn("rep3_ratio", rep3.cast("double"))
-        .withColumn("stop_density", stop_density)
-        .withColumn("spaceless_ratio", spaceless_ratio.cast("double"))
-        .withColumn(
-            "n_chars_gated",
-            F.when(~is_spaceless, n_chars.cast("double")).otherwise(null_d),
-        )
-        .withColumn(
-            "n_chars_spaceless_gated",
-            F.when(is_spaceless, n_chars.cast("double")).otherwise(null_d),
-        )
-        .withColumn(
-            "rep3_gated", F.when(~is_spaceless, rep3.cast("double")).otherwise(null_d)
-        )
-        .withColumn(
-            "rep_char_gated",
-            F.when(is_spaceless, rep_char.cast("double")).otherwise(null_d),
-        )
-        .withColumn(
-            "stop_density_gated",
-            F.when(~is_spaceless, stop_density).otherwise(null_d),
-        )
-        .withColumn("is_vendor_url", is_vendor)
-        .drop("_t", "_w", "_lw", "_stopm")
-    )
-
-
-def with_keep_drop(
-    df: DataFrame,
-    rules: tuple[tuple[str, str, str, float], ...] = RULES,
-) -> DataFrame:
-    """First-match-wins when/otherwise ladder over ``rules`` -> (keep,
-    drop_rule). Requires signal columns from with_quality_signals (and
-    a perplexity column, via with_perplexity, when rules includes
-    PPL_RULE — a NULL signal falls through, like the py spec)."""
-    expr = F.lit(None).cast("string")
-    for rule_id, signal, op, thr in reversed(rules):
-        col = F.col(signal)
-        cond = (
-            col < thr if op == "<" else col > thr if op == ">" else col >= thr
-        )
-        expr = F.when(cond, F.lit(rule_id)).otherwise(expr)
-    df = df.withColumn("drop_rule", expr)
-    return df.withColumn("keep", F.col("drop_rule").isNull())
+def with_keep_drop(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """Append the quality signals plus (keep, drop_rule): py_signals +
+    py_keep_drop over Arrow batches. No url is passed, so the vendor
+    rule never fires; a NULL text gives NULL in every column."""
+    df = df.withColumn("_kd", _keep_drop_udf(F.col(text_col)))
+    for n in _KEEP_DROP_SCHEMA.fieldNames():
+        df = df.withColumn(n, F.col(f"_kd.{n}"))
+    return df.drop("_kd")

@@ -669,7 +669,7 @@ DISAMBIGUATION_RULES.update({
 # table for a known context and falls back to the per-language marker
 # filter otherwise (operators/cascade.py). Keying on the EXACT set
 # makes rule eligibility static (every rule's languages are within its
-# context — asserted below), so the column form is a pure when-ladder.
+# context — asserted below).
 RULE_CONTEXTS: dict[frozenset[str], str] = {
     frozenset(("es", "pt")): "iberian",
     frozenset(("de", "fr", "it")): "swiss",

@@ -13,48 +13,26 @@ Stage order and candidate-narrowing semantics mirror the reference:
      a web pipeline labels every document (classifier.rs:19-22 is the
      reference's own public-API behavior for empty candidate lists).
 
-Spark shape: stages 1-4 are pure column expressions + literal-map
-lookups (the broadcast-dim analog of the reference's compiled phf maps,
-X2) — they stay inside whole-stage codegen, nothing shuffles. Only the
-classifier leaves the JVM, as ONE Arrow-batched pandas UDF whose input
-text is masked to NULL for rows already resolved — the early-exit
-cascade X1: resolved rows never pay the expensive stage.
+Spark shape: this module is the per-document spec only. The production
+job runs detect_lang_py inside the fused Arrow label UDF
+(plans/pipeline.make_label_udf), where the classifier stage is reached
+only by rows stages 1-4 leave unresolved — the early-exit cascade X1:
+resolved rows never pay the expensive stage.
 """
 
 from __future__ import annotations
 
 import re
 
-from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-from ..functions.langdata import (
-    LANGUAGES,
-    MARKER_RULES,
-    META_LANG_CANDS,
-    TLD_LANGS,
-    URL_LANG_HINTS,
-)
-from ..functions.langid import (
-    classify_any,
-    classify_or_none_py,
-    make_classify_udf,
-)
+from ..functions.langdata import MARKER_RULES
+from ..functions.langid import classify_any, classify_or_none_py
 from ..functions.metadata import (
     filter_candidates,
     meta_lang_candidates,
     tld_candidates,
     url_hint_lang,
 )
-from ..functions.rules import (
-    And,
-    DISAMBIGUATION_RULES,
-    Negative,
-    Or,
-    Positive,
-    RULE_CONTEXTS,
-    apply_rules,
-)
+from ..functions.rules import DISAMBIGUATION_RULES, RULE_CONTEXTS, apply_rules
 
 _MARKERS_COMPILED = {l: re.compile(p) for l, p in MARKER_RULES.items()}
 
@@ -111,227 +89,3 @@ def detect_lang_py(
             return None, "unresolved"
         return lang, "classifier"
     return classify_any(text, cands, model), "classifier"
-
-
-# ======================================================================
-# Spark implementation
-# ======================================================================
-
-def _map_literal(d: dict[str, str]) -> Column:
-    pairs = []
-    for k, v in sorted(d.items()):
-        pairs.extend([F.lit(k), F.lit(v)])
-    return F.create_map(*pairs)
-
-
-def _array_map_literal(d: dict[str, tuple[str, ...]]) -> Column:
-    keys = sorted(d)
-    return F.map_from_arrays(
-        F.array(*[F.lit(k) for k in keys]),
-        F.array(*[F.array(*[F.lit(x) for x in d[k]]) for k in keys]),
-    )
-
-
-def filter_candidates_col(prev: Column, new: Column) -> Column:
-    """Column form of src/lib.rs:268-290: empty side -> other side;
-    empty intersection -> prev; else intersection, PREV order preserved
-    (F.array_intersect keeps left order, matching the Rust filter)."""
-    inter = F.array_intersect(prev, new)
-    return (
-        F.when(F.size(prev) == 0, new)
-        .when(F.size(new) == 0, prev)
-        .when(F.size(inter) == 0, prev)
-        .otherwise(inter)
-    )
-
-
-def _empty() -> Column:
-    return F.array().cast("array<string>")
-
-
-def _url_rest(url: Column) -> Column:
-    """Everything after an optional ``scheme://`` — mirrors the frozen
-    spec's ``url.split('://', 1)[-1]`` (metadata.url_host), so
-    scheme-less URLs parse identically in the column form."""
-    return F.element_at(F.split(url, "://", 2), -1)
-
-
-def url_hint_col(url: Column) -> Column:
-    """Stage 1, JVM-side: first path segment found in the hint map."""
-    hint_map = _map_literal(URL_LANG_HINTS)
-    segs = F.slice(F.split(_url_rest(url), "/"), 2, 1000)  # after host
-    mapped = F.filter(
-        F.transform(segs, lambda s: hint_map[F.lower(s)]),
-        lambda x: x.isNotNull(),
-    )
-    return F.get(mapped, 0)  # null-safe under ANSI
-
-
-def tld_cands_col(url: Column) -> Column:
-    """Stage 2, JVM-side longest-known-suffix scan over host labels
-    (extensions.rs:24-31 analog)."""
-    tld_map = _array_map_literal(TLD_LANGS)
-    host = F.lower(F.get(F.split(_url_rest(url), "/"), 0))
-    labels = F.split(host, r"\.")
-    n = F.size(labels)
-    # suffixes from longest to shortest, excluding the full host;
-    # sequence() descends when start > stop, so gate on n >= 2
-    suffixes = F.when(
-        n >= 2,
-        F.transform(
-            F.sequence(F.lit(2), n),
-            lambda i: F.array_join(F.slice(labels, i, 100), "."),
-        ),
-    ).otherwise(_empty())
-    hits = F.filter(
-        F.transform(suffixes, lambda s: tld_map[s]), lambda x: x.isNotNull()
-    )
-    return F.coalesce(F.get(hits, 0), _empty())
-
-
-def meta_cands_col(tag: Column) -> Column:
-    """Stage 3, JVM-side: exact tag, first-two-labels, then first label
-    (metadata.meta_lang_candidates semantics)."""
-    m = _array_map_literal(META_LANG_CANDS)
-    t = F.lower(tag)
-    parts = F.split(t, "-")
-    two = F.concat_ws("-", F.slice(parts, 1, 2))
-    first = F.get(parts, 0)
-    looked = F.coalesce(
-        m[t],
-        F.when(F.size(parts) > 2, m[two]),
-        m[first],
-    )
-    return F.when(tag.isNull(), _empty()).otherwise(F.coalesce(looked, _empty()))
-
-
-def _pattern_col(p, text: Column) -> Column:
-    """Compile a rules.Pattern combinator tree to a boolean Column:
-    Positive -> rlike, Negative -> ~rlike, And/Or -> &/|. The (?m)
-    prefix mirrors the spec's re.MULTILINE compile (Java defaults ^/$
-    to whole-input; Python's flag makes them per-line)."""
-    if isinstance(p, Positive):
-        return text.rlike("(?m)" + p.pattern)
-    if isinstance(p, Negative):
-        return ~text.rlike("(?m)" + p.pattern)
-    if isinstance(p, And):
-        expr = F.lit(True)
-        for q in p.patterns:
-            expr = expr & _pattern_col(q, text)
-        return expr
-    if isinstance(p, Or):
-        expr = F.lit(False)
-        for q in p.patterns:
-            expr = expr | _pattern_col(q, text)
-        return expr
-    raise TypeError(type(p))
-
-
-def heuristic_matches_col(text: Column, cands: Column) -> Column:
-    """Stage 4, JVM-side — heuristic_matches_py as column expressions:
-
-    - known candidate-set contexts (RULE_CONTEXTS, matched on the
-      sorted joined set) evaluate their ordered rule table as a
-      when/otherwise ladder — first matching rule's languages win, a
-      pattern-less default matches unconditionally. Eligibility is
-      static because every rule's languages lie within its context
-      (asserted at import), so no per-row set algebra is needed.
-    - unknown contexts fall back to the per-language marker filter:
-      filter(cands, l -> CASE l WHEN 'en' THEN text rlike .. END).
-    Everything is rlike/boolean logic, compiled once by Janino —
-    whole-stage codegen, no Python."""
-
-    def match_one(l: Column) -> Column:
-        expr = F.lit(False)
-        for lang, pattern in MARKER_RULES.items():
-            expr = F.when(l == lang, text.rlike(pattern)).otherwise(expr)
-        return expr
-
-    expr = F.filter(cands, match_one)
-    key_col = F.array_join(F.array_sort(cands), ",")
-    for fs, key in sorted(RULE_CONTEXTS.items(), key=lambda kv: kv[1]):
-        ladder = _empty()
-        for rule in reversed(DISAMBIGUATION_RULES[key]):
-            cond = (
-                F.lit(True)
-                if rule.pattern is None
-                else _pattern_col(rule.pattern, text)
-            )
-            ladder = F.when(
-                cond, F.array(*[F.lit(l) for l in rule.languages])
-            ).otherwise(ladder)
-        expr = F.when(
-            key_col == ",".join(sorted(fs)), ladder
-        ).otherwise(expr)
-    return expr
-
-
-def with_cascade(
-    df: DataFrame,
-    spark: SparkSession,
-    url_col: str = "url",
-    text_col: str = "text",
-    meta_col: str = "meta_tag",
-    model=None,
-    unresolved: bool = True,
-) -> DataFrame:
-    """Append (lang_pred, strategy) via the 5-stage cascade.
-
-    ``unresolved=True`` (default, matching detect_lang_py) lets the
-    terminal classifier return NULL with strategy 'unresolved' when
-    the NB decision is noise-like — the open-world outcome a real
-    crawl's language tail needs."""
-    url, text, meta = F.col(url_col), F.col(text_col), F.col(meta_col)
-
-    df = df.withColumn("_hint", url_hint_col(url))
-    df = df.withColumn("_c1", tld_cands_col(url))
-    df = df.withColumn(
-        "_c2", filter_candidates_col(F.col("_c1"), meta_cands_col(meta))
-    )
-    heur = heuristic_matches_col(text, F.col("_c2"))
-    df = df.withColumn(
-        "_c3",
-        F.when(
-            F.size("_c2") > 1, filter_candidates_col(F.col("_c2"), heur)
-        ).otherwise(F.col("_c2")),
-    )
-
-    resolved_pre = (
-        F.col("_hint").isNotNull()
-        | (F.size("_c1") == 1)
-        | (F.size("_c2") == 1)
-        | (F.size("_c3") == 1)
-    )
-    classify = make_classify_udf(spark, model, unresolved=unresolved)
-    # mask text to NULL for resolved rows -> the pandas UDF loop skips
-    # them (early-exit X1); candidates empty -> scores all languages
-    df = df.withColumn(
-        "_clf",
-        classify(
-            F.when(~resolved_pre, text).otherwise(F.lit(None)), F.col("_c3")
-        ),
-    )
-
-    strategy = (
-        F.when(F.col("_hint").isNotNull(), F.lit("urlhint"))
-        .when(F.size("_c1") == 1, F.lit("tld"))
-        .when(F.size("_c2") == 1, F.lit("meta"))
-        .when(F.size("_c3") == 1, F.lit("heuristics"))
-        # reached the classifier and it declined: the unresolved
-        # stratum (NULL lang_pred). Resolved rows never take this
-        # branch — the earlier whens claim them first.
-        .when(F.col("_clf").isNull(), F.lit("unresolved"))
-        .otherwise(F.lit("classifier"))
-    )
-    lang_pred = (
-        F.when(F.col("_hint").isNotNull(), F.col("_hint"))
-        .when(F.size("_c1") == 1, F.get("_c1", 0))
-        .when(F.size("_c2") == 1, F.get("_c2", 0))
-        .when(F.size("_c3") == 1, F.get("_c3", 0))
-        .otherwise(F.col("_clf"))
-    )
-    return (
-        df.withColumn("strategy", strategy)
-        .withColumn("lang_pred", lang_pred)
-        .drop("_hint", "_c1", "_c2", "_c3", "_clf")
-    )

@@ -95,36 +95,6 @@ def disposition_col(
         )
     return base.otherwise(F.lit("kept"))
 
-_EXTRACT_SCHEMA = T.StructType(
-    [
-        T.StructField("text", T.StringType()),
-        T.StructField("meta_tag", T.StringType()),
-    ]
-)
-
-
-@F.pandas_udf(_EXTRACT_SCHEMA)
-def _extract_udf(html: pd.Series) -> pd.DataFrame:
-    texts, metas = [], []
-    for h in html:
-        if h is None:
-            texts.append("")
-            metas.append(None)
-            continue
-        texts.append(extract_text(bytes(h)))
-        metas.append(meta_lang_tag(bytes(h)))
-    return pd.DataFrame({"text": texts, "meta_tag": metas})
-
-
-def with_extraction(df: DataFrame, html_col: str = "html") -> DataFrame:
-    e = _extract_udf(F.col(html_col))
-    return (
-        df.withColumn("_e", e)
-        .withColumn("extracted_text", F.col("_e.text"))
-        .withColumn("meta_tag", F.col("_e.meta_tag"))
-        .drop("_e")
-    )
-
 
 _LABEL_SCHEMA = T.StructType(
     [
@@ -174,9 +144,10 @@ def make_label_udf(
     JVM<->Python boundary: one hop, html in, labels out. The cascade is
     still early-exit (X1): NB scoring runs only on rows the cheap
     stages leave unresolved, scrub only on kept rows (X5).
-    The column-expression operators (operators/cascade.py,
-    functions/quality.py, functions/scrub.py) remain parity-tested and
-    drive the oracle queries — same frozen spec, different plan shape."""
+    There is no second implementation of the label spec: the oracle
+    queries run the same spec functions (quality.with_keep_drop,
+    scrub.with_scrub), and the generated DuckDB SQL is the independent
+    check (tests/test_spec_functions.py)."""
     from ..functions.langid import default_hashed_model
 
     from ..session import cached_broadcast

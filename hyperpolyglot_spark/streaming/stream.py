@@ -84,10 +84,10 @@ def host_quota_stream(labels: DataFrame, max_kept_per_host: int = 100) -> DataFr
             }
         )
 
-    from ..operators.cascade import _url_rest
-
+    # host = first path segment after an optional scheme://
+    rest = F.element_at(F.split(F.col("url"), "://", 2), -1)
     with_host = labels.withColumn(
-        "host", F.lower(F.get(F.split(_url_rest(F.col("url")), "/"), 0))
+        "host", F.lower(F.get(F.split(rest, "/"), 0))
     )
     return with_host.groupBy("host").applyInPandasWithState(
         update,

@@ -225,7 +225,7 @@ def test_training_mix_sample_is_shuffle_free(spark):
 def test_source_rule_rollup_is_partial_final(spark):
     """One hash aggregation with map-side combine: exactly one shuffle,
     partial+final HashAggregate pair, no Python in the agg itself (the
-    ladder columns are JVM expressions)."""
+    ladder runs in one Arrow UDF below it)."""
     import __spark_entry__ as entry
 
     plan = plan_of(entry.queries()["source_rule_rollup"](spark, SF))

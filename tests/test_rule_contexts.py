@@ -2,9 +2,9 @@
 contexts added on top of the round-2 table (72 total vs the
 reference's 69 heuristics.yml blocks). Each case is (context key,
 text, expected languages); the last case per context exercises the
-pattern-less default. Pure Python — the JVM column form is held to
-the same spec by tests/test_jvm_parity.py's row-by-row cascade
-parity."""
+pattern-less default. Pure Python: the tables run only inside
+operators/cascade.detect_lang_py, and the cascade cases below pin
+which language each context resolves to at the heuristics stage."""
 
 import pytest
 
@@ -13,6 +13,7 @@ from hyperpolyglot_spark.functions.rules import (
     RULE_CONTEXTS,
     apply_rules,
 )
+from hyperpolyglot_spark.operators.cascade import detect_lang_py
 
 CASES = [
     ("hellenic", "αυτό είναι ελληνικό κείμενο", ["el"]),
@@ -125,6 +126,112 @@ def test_decisive_sample(key, text, expected):
         next(fs for fs, k in RULE_CONTEXTS.items() if k == key)
     )
     assert apply_rules(DISAMBIGUATION_RULES[key], cands, text) == expected
+
+
+def _assert_resolves_at_heuristics(cases):
+    for url, text, meta, want_lang in cases:
+        got = detect_lang_py(url, text, meta)
+        assert got == (want_lang, "heuristics"), (url, got, want_lang)
+
+
+def test_rule_engine_contexts_in_cascade():
+    """The ordered combinator rule tables drive cascade stage 4: exact
+    candidate-set contexts dispatch to And/Or/Negative rule ladders."""
+    _assert_resolves_at_heuristics([
+        # .ch -> {de,fr,it}: swiss table; de rule is And(+und, -het)
+        ("https://site1.example.ch/p1", "alles und nichts hier", None, "de"),
+        # de rule blocked by Negative(het) -> fr rule fires
+        ("https://site1.example.ch/p2", "und het les amis dans", None, "fr"),
+        # .fi -> {fi,sv}: fi word wins
+        ("https://site1.example.fi/p3", "se on hyvä että tulit", None, "fi"),
+        # .fi with swedish text -> sv
+        ("https://site1.example.fi/p4", "det är bra och fint", None, "sv"),
+        # .in -> {hi,en}: devanagari script rule
+        ("https://site1.example.in/p5", "यह है एक परीक्षण", None, "hi"),
+        ("https://site1.example.in/p6", "the test with words", None, "en"),
+        # meta 'cjk' + neutral tld: kana -> ja, hangul -> ko, else zh
+        ("https://site1.example.com/p7", "これ は てすと です", "cjk", "ja"),
+        ("https://site1.example.com/p8", "이 것 은 테스트", "cjk", "ko"),
+        ("https://site1.example.com/p9", "这是的测试没有空格", "cjk", "zh"),
+        # meta 'scandinavian': da And(+og/af, -och)
+        ("https://site1.example.com/p10", "det er og af huset", "scandinavian", "da"),
+        ("https://site1.example.com/p11", "det och är huset", "scandinavian", "sv"),
+    ])
+
+
+def test_round3_rule_contexts_resolve():
+    """Round-3 breadth contexts: each case resolves at the heuristics
+    stage to the expected language."""
+    _assert_resolves_at_heuristics([
+        # dano: 'af' -> da, 'av' without 'af' -> no
+        ("https://s.example.com/p1", "det er og af huset", "dano", "da"),
+        ("https://s.example.com/p2", "det er av huset fra", "dano", "no"),
+        # czechoslovak
+        ("https://site1.example.sk/p3", "to je pretože sa robí aj", None, "sk"),
+        ("https://site1.example.sk/p4", "to se dělá protože ano", None, "cs"),
+        # balkan via meta: cyrillic -> sr, latin markers -> hr
+        ("https://s.example.com/p5", "ово је питање за владу", "balkan", "sr"),
+        ("https://s.example.com/p6", "to je pitanje jer kao što", "balkan", "hr"),
+        # east slavic via .ua TLD: ї -> uk, ы -> ru
+        ("https://site1.example.ua/p7", "це питання їжі та мови", None, "uk"),
+        ("https://site1.example.ua/p8", "это вопрос языка и рынка", None, "ru"),
+        # bulgarian vs macedonian via meta
+        ("https://s.example.com/p9", "въпрос за държавата и пазара", "balkanslavic", "bg"),
+        ("https://s.example.com/p10", "прашање за луѓето и јазикот", "balkanslavic", "mk"),
+        # baltic via meta: ė/ų/į -> lt, ņ/ļ/ķ -> lv
+        ("https://s.example.com/p11", "klausimas į žmonės ir kalbą", "baltic", "lt"),
+        ("https://s.example.com/p12", "jautājums par valdību un ķīmiju", "baltic", "lv"),
+        # malay vs indonesian via meta
+        ("https://s.example.com/p13", "soalan kerana kerajaan di bandar", "malay", "ms"),
+        ("https://s.example.com/p14", "pertanyaan karena pemerintah di kota", "malay", "id"),
+        # .in ccTLD full india8 context: scripts decide
+        ("https://site1.example.in/p15", "இது ஒரு கேள்வி மொழி", None, "ta"),
+        ("https://site1.example.in/p16", "ఇది ఒక ప్రశ్న భాష", None, "te"),
+        ("https://site1.example.in/p17", "ഇത് ഒരു ചോദ്യം ഭാഷ", None, "ml"),
+        ("https://site1.example.in/p18", "এটা একটি প্রশ্ন ভাষা", None, "bn"),
+        ("https://site1.example.in/p19", "आहे आणि मध्ये प्रश्न", None, "mr"),
+        ("https://site1.example.in/p20", "यह है और में प्रश्न", None, "hi"),
+        # turkic: ə -> az
+        ("https://s.example.com/p21", "bu şəhər üçün sual", "turkic", "az"),
+        ("https://s.example.com/p22", "bu şehir için soru ve cevap", "turkic", "tr"),
+        # afrikaans vs dutch: 'n decides
+        ("https://s.example.com/p23", "dit is 'n vraag oor taal", "kaaps", "af"),
+        ("https://s.example.com/p24", "dit is een vraag het niet", "kaaps", "nl"),
+        # hebrew vs arabic script split
+        ("https://s.example.com/p25", "זו שאלה על שפה ועל זמן", "levantine", "he"),
+        ("https://s.example.com/p26", "هذا سؤال في اللغة من السوق", "levantine", "ar"),
+        # iberia 3-way
+        ("https://s.example.com/p27", "és una pregunta amb els nens", "iberia", "ca"),
+        ("https://s.example.com/p28", "é unha pregunta para a xente", "iberia", "gl"),
+        ("https://s.example.com/p29", "es una pregunta porque los niños", "iberia", "es"),
+    ])
+
+
+def test_fixture_corpus_exercises_rule_contexts():
+    """The generated corpus must reach a combinator context (stage 4)
+    on at least five of its first 400 pages."""
+    from hyperpolyglot_spark.datagen.pages import gen_page
+    from hyperpolyglot_spark.functions.extract import meta_lang_tag
+    from hyperpolyglot_spark.functions.metadata import (
+        filter_candidates,
+        meta_lang_candidates,
+        tld_candidates,
+        url_hint_lang,
+    )
+
+    hit = 0
+    for i in range(400):
+        r = gen_page(i)
+        if url_hint_lang(r["url"]) is not None:
+            continue
+        cands = tld_candidates(r["url"])
+        if len(cands) == 1:
+            continue
+        meta = meta_lang_tag(r["html"])
+        cands = filter_candidates(cands, meta_lang_candidates(meta))
+        if frozenset(cands) in RULE_CONTEXTS:
+            hit += 1
+    assert hit >= 5, hit
 
 
 def test_every_context_has_reachable_outcome():

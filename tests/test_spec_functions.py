@@ -1,5 +1,7 @@
 """Unit tests for the pure-Python spec functions (oracle mode) —
-mirrors the reference's per-operator inline tests (SURVEY.md §5.1)."""
+mirrors the reference's per-operator inline tests (SURVEY.md §5.1) —
+plus the checks that hold each spec to its independent oracle (the
+generated DuckDB SQL) and its Spark runner."""
 
 import pytest
 
@@ -169,6 +171,101 @@ def test_scrub_idempotent_on_clean():
     s, counts = py_scrub("nothing personal here")
     assert s == "nothing personal here"
     assert all(v == 0 for v in counts.values())
+
+
+# --- quality + scrub spec vs its oracles --------------------------------
+N_PAGES = 300
+
+
+@pytest.fixture(scope="module")
+def page_texts():
+    """(doc_id, extracted text) of the first N_PAGES generated pages —
+    every stratum of the pages generator, extracted on the driver."""
+    from hyperpolyglot_spark.datagen.pages import gen_page
+
+    return [(i, extract_text(gen_page(i)["html"])) for i in range(N_PAGES)]
+
+
+def _duck_documents(source, page_texts):
+    """A DuckDB connection whose ``documents`` is either the sf0.01
+    table or the extracted pages."""
+    import duckdb
+    import pandas as pd
+
+    con = duckdb.connect()
+    if source == "sf0.01":
+        from tests.test_entry_oracle import SF
+
+        con.execute(
+            "CREATE VIEW documents AS SELECT doc_id, text "
+            f"FROM read_parquet('{SF}/documents.parquet')"
+        )
+    else:
+        pdf = pd.DataFrame(page_texts, columns=["doc_id", "text"])
+        con.register("documents", pdf)
+    return con
+
+
+@pytest.mark.parametrize("source", ["sf0.01", "pages"])
+def test_quality_and_scrub_spec_match_duckdb(source, page_texts):
+    """py_signals/py_keep_drop and py_scrub against the DuckDB SQL
+    generated from the same dims — the spec's independent oracle,
+    column by column. The SQL rounds ratios to 6 places."""
+    import __spark_entry__ as entry
+    from hyperpolyglot_spark.functions.scrub import SCRUB_NAMES
+
+    con = _duck_documents(source, page_texts)
+    texts = dict(con.execute("SELECT doc_id, text FROM documents").fetchall())
+    assert len(texts) >= N_PAGES
+
+    res = con.execute(entry._keep_drop_sql())
+    cols = [d[0] for d in res.description]
+    ratios = ("symbol_ratio", "rep3_ratio", "stop_density", "spaceless_ratio")
+    outcomes = set()
+    for row in res.fetchall():
+        got = dict(zip(cols, row))
+        text = texts[got["doc_id"]]
+        sig = py_signals(text)
+        keep, rule = py_keep_drop(text, signals=sig)
+        assert got["n_chars"] == sig["n_chars"], got["doc_id"]
+        assert got["n_words"] == sig["n_words"], got["doc_id"]
+        for n in ratios:
+            assert got[n] == pytest.approx(round(sig[n], 6), abs=1e-12), (
+                got["doc_id"],
+                n,
+            )
+        assert (got["keep"], got["drop_rule"]) == (keep, rule), got["doc_id"]
+        outcomes.add(rule or "kept")
+    if source == "pages":
+        assert len(outcomes) >= 6, outcomes
+
+    res = con.execute(entry._scrub_sql())
+    cols = [d[0] for d in res.description]
+    n_rows = 0
+    for row in res.fetchall():
+        got = dict(zip(cols, row))
+        scrubbed, counts = py_scrub(texts[got["doc_id"]])
+        assert got["scrubbed_text"] == scrubbed, got["doc_id"]
+        for n in SCRUB_NAMES:
+            assert got[f"scrub_{n}"] == counts[n], (got["doc_id"], n)
+        n_rows += 1
+    assert n_rows == len(texts)
+
+
+def test_jvm_scrub_udf_matches_spec(spark, page_texts):
+    """with_scrub (py_scrub over Arrow batches) returns the spec's
+    rewrite and counts row by row."""
+    from hyperpolyglot_spark.functions.scrub import SCRUB_NAMES, with_scrub
+
+    df = spark.createDataFrame(page_texts, "doc_id long, text string")
+    texts = dict(page_texts)
+    rows = with_scrub(df, text_col="text").collect()
+    assert len(rows) == len(page_texts)
+    for r in rows:
+        scrubbed, counts = py_scrub(texts[r["doc_id"]])
+        assert r["scrubbed_text"] == scrubbed, r["doc_id"]
+        for n in SCRUB_NAMES:
+            assert r[f"scrub_{n}"] == counts[n], (r["doc_id"], n)
 
 
 # --- langid classifier --------------------------------------------------
@@ -368,6 +465,39 @@ def test_canonical_url_py_vs_duckdb():
     for c in cases:
         got = con.execute(f"SELECT {sql} FROM (SELECT ? AS u)", [c]).fetchone()[0]
         assert got == py_canonical_url(c), c
+
+
+def test_jvm_canonical_url_matches_spec(spark):
+    """canonical_url_col (Spark dialect: $1 group refs, backslash-escaped
+    literals) must agree with the pure-Python spec char-for-char — the
+    JVM twin of test_canonical_url_py_vs_duckdb."""
+    from hyperpolyglot_spark.functions.urltools import (
+        canonical_url_col,
+        py_canonical_url,
+    )
+
+    cases = [
+        "HTTPS://WWW.Site.COM:443/articles//42/?utm_source=feed&ref=rss#top",
+        "https://www.site.com/articles/42?id=7&utm_medium=email&x=1",
+        "http://host.org:80/a//b///c/",
+        "https://a.com/p?utm_a=1&b=2",
+        "https://a.com/p?utm_a=1&utm_b=2&c=3",
+        "https://a.com/p?utm_a=1&utm_b=2",
+        "https://a.com/p?next=https://b//x",
+        "https://a.com/p?q=a/",
+        "https://a.com//p//q/?r=1",
+        "https://a.com/p&b=2",
+        "https://www.site.com/",
+        "https://www.site.com",
+        "",
+    ]
+    df = spark.createDataFrame([(u,) for u in cases], "url string")
+    got = {
+        r["url"]: r["canon"]
+        for r in df.withColumn("canon", canonical_url_col("url")).collect()
+    }
+    for u in cases:
+        assert got[u] == py_canonical_url(u), (u, got[u], py_canonical_url(u))
 
 
 def test_canonical_url_semantics():
