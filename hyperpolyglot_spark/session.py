@@ -48,9 +48,15 @@ def get_spark(
     # real master (yarn/k8s/standalone) — don't override it with local[N].
     # PYSPARK_GATEWAY_PORT is set only when spark-submit launched us.
     if "PYSPARK_GATEWAY_PORT" not in os.environ:
-        builder = builder.master(
-            os.environ.get("SPARK_GRAFT_MASTER", f"local[{cores}]")
-        )
+        master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cores}]")
+        builder = builder.master(master)
+        # local mode only: its workers import this package as the driver
+        # does. Not under spark-submit, whose --py-files zips reach a
+        # worker per task, after its daemon has started (pydaemon.py).
+        if master == "local" or master.startswith("local["):
+            builder = builder.config(
+                "spark.python.daemon.module", "hyperpolyglot_spark.pydaemon"
+            )
     builder = (
         builder.appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
