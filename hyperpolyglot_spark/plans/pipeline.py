@@ -85,15 +85,15 @@ def disposition_col(
     keep_col: str = "keep",
     lang_col: str = "lang_pred",
 ):
-    """JVM-side disposition (no UDF — derivable from two columns)."""
+    """JVM-side disposition (no UDF — derivable from two columns). Built
+    as one SQL string: the same CASE from column functions takes ~80
+    py4j calls, paid by every plan that uses it."""
     if policy not in UNRESOLVED_POLICIES:
         raise ValueError(f"unknown unresolved_policy {policy!r}")
-    base = F.when(~F.col(keep_col), F.lit("dropped"))
-    if policy == "quarantine":
-        base = base.when(
-            F.col(lang_col).isNull(), F.lit("quarantined")
-        )
-    return base.otherwise(F.lit("kept"))
+    quarantine = (
+        f"WHEN {lang_col} IS NULL THEN 'quarantined' " if policy == "quarantine" else ""
+    )
+    return F.expr(f"CASE WHEN NOT {keep_col} THEN 'dropped' {quarantine}ELSE 'kept' END")
 
 
 _LABEL_SCHEMA = T.StructType(
@@ -115,6 +115,61 @@ _LABEL_SCHEMA = T.StructType(
         T.StructField("perplexity", T.DoubleType()),
     ]
 )
+
+
+def make_label_fn(
+    spark: SparkSession,
+    model=None,
+    ppl_model=None,
+    unresolved_policy: str = DEFAULT_UNRESOLVED_POLICY,
+):
+    """The label loop the label UDFs run on each Arrow batch:
+    ``label(urls, html)`` calls py_label_page per row and returns the
+    label columns (``_LABEL_SCHEMA`` order) as lists. The models ship
+    as broadcasts; ``label`` reads them on the executor."""
+    from ..functions.langid import default_hashed_model
+
+    from ..session import cached_broadcast
+
+    if model is not None:
+        bc = spark.sparkContext.broadcast(model)
+    else:  # default model: one broadcast per application (session.py)
+        bc = cached_broadcast(
+            spark, "langid.default_hashed_model", default_hashed_model
+        )
+    # thresholds calibrate ONCE on the driver and ship with the model —
+    # otherwise every python worker would rerun the 60-language
+    # calibration pass on first use
+    if ppl_model is not None:
+        bc_ppl = spark.sparkContext.broadcast(
+            (ppl_model, ppl_thresholds_for(ppl_model))
+        )
+    else:
+        bc_ppl = cached_broadcast(
+            spark,
+            "pipeline.default_ppl_model+thresholds",
+            lambda: (
+                default_ppl_model(),
+                ppl_thresholds_for(default_ppl_model()),
+            ),
+        )
+
+    if unresolved_policy not in UNRESOLVED_POLICIES:
+        raise ValueError(f"unknown unresolved_policy {unresolved_policy!r}")
+
+    def label(urls, html) -> dict[str, list]:
+        m = bc.value
+        mp, thr = bc_ppl.value
+        out = {f.name: [] for f in _LABEL_SCHEMA.fields}
+        for url, h in zip(urls, html):
+            b = bytes(h) if h is not None else b""
+            row = py_label_page(url or "", b, m, mp, thr, unresolved_policy)
+            for k, v in row.items():
+                if k != "url":
+                    out[k].append(v)
+        return out
+
+    return label
 
 
 def make_label_udf(
@@ -148,48 +203,11 @@ def make_label_udf(
     queries run the same spec functions (quality.with_keep_drop,
     scrub.with_scrub), and the generated DuckDB SQL is the independent
     check (tests/test_spec_functions.py)."""
-    from ..functions.langid import default_hashed_model
-
-    from ..session import cached_broadcast
-
-    if model is not None:
-        bc = spark.sparkContext.broadcast(model)
-    else:  # default model: one broadcast per application (session.py)
-        bc = cached_broadcast(
-            spark, "langid.default_hashed_model", default_hashed_model
-        )
-    # thresholds calibrate ONCE on the driver and ship with the model —
-    # otherwise every python worker would rerun the 60-language
-    # calibration pass on first use
-    if ppl_model is not None:
-        bc_ppl = spark.sparkContext.broadcast(
-            (ppl_model, ppl_thresholds_for(ppl_model))
-        )
-    else:
-        bc_ppl = cached_broadcast(
-            spark,
-            "pipeline.default_ppl_model+thresholds",
-            lambda: (
-                default_ppl_model(),
-                ppl_thresholds_for(default_ppl_model()),
-            ),
-        )
-
-    if unresolved_policy not in UNRESOLVED_POLICIES:
-        raise ValueError(f"unknown unresolved_policy {unresolved_policy!r}")
+    label = make_label_fn(spark, model, ppl_model, unresolved_policy)
 
     @F.pandas_udf(_LABEL_SCHEMA)
     def label_udf(urls: pd.Series, html: pd.Series) -> pd.DataFrame:
-        m = bc.value
-        mp, thr = bc_ppl.value
-        out = {f.name: [] for f in _LABEL_SCHEMA.fields}
-        for url, h in zip(urls, html):
-            b = bytes(h) if h is not None else b""
-            row = py_label_page(url or "", b, m, mp, thr, unresolved_policy)
-            for k, v in row.items():
-                if k != "url":
-                    out[k].append(v)
-        return pd.DataFrame(out)
+        return pd.DataFrame(label(urls, html))
 
     return label_udf
 

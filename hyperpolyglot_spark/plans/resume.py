@@ -7,43 +7,53 @@ Streaming needed for a batch corpus):
   - the corpus is bucketed by pmod(xxhash64(url), n_buckets) — a pure
     function of the data, so bucket membership is stable across runs,
     executors, and cluster sizes (the Iceberg-partition analog);
-  - buckets are processed in groups, and each group is labelled ONCE:
-    the group's label rows (never its html) are repartitioned by bucket
-    and cached;
-  - commit 1, labels: the cached frame is written into output partition
+  - buckets are processed in groups, and each group is ONE Spark SQL
+    execution: scan, bucket filter, label, repartition by bucket, write.
+    Only label rows (never html) cross the shuffle;
+  - commit 1, labels: the Spark write puts them into output partition
     dirs (partitionBy("bucket"), dynamic partition overwrite ->
     idempotent: re-writing a bucket replaces it, never duplicates), one
     file per bucket;
   - commit 2, manifest: the per-bucket lineage row (bucket, docs, kept,
-    dropped-by-rule, scrub and unresolved-stratum counts) is aggregated
-    from the same cached frame — the written labels are never re-read —
-    and appended to the _manifest table, one row per bucket of the group,
-    zeros for empty buckets;
+    dropped-by-rule, scrub and unresolved-stratum counts) is counted by
+    the label tasks themselves, as per-task states in an accumulator
+    (the mergeable partition states of "Differential Data Quality
+    Verification on Partitioned Data", ICDE 2019). The driver sums
+    them into one row per bucket of the group, zeros for empty buckets,
+    writes the rows as one hidden parquet file under _manifest and
+    renames it visible. No second pass over the labels;
   - on startup the manifest is read and completed buckets are skipped —
     the scan never reads them again (pushed-down bucket filter).
 
-A run killed between the two commits leaves labels without manifest
-rows; rerunning the same command rewrites those buckets and commits
-their rows, so output equals a single uninterrupted run exactly
-(tests/test_resume.py asserts this).
+A run killed between the two commits, or before the manifest rename,
+leaves labels without manifest rows; rerunning the same command
+rewrites those buckets and commits their rows, so output equals a
+single uninterrupted run exactly (tests/test_resume.py asserts this).
 """
 
 from __future__ import annotations
 
 import os
+import uuid
+from typing import Iterator
 
+import pandas as pd
 import pyarrow as pa
-from pyspark import StorageLevel
-from pyspark.errors import AnalysisException
+import pyarrow.parquet as pq
+from pyspark import TaskContext
+from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.quality import RULES_WITH_PPL
 from .pipeline import (
+    _LABEL_SCHEMA,
     DEFAULT_UNRESOLVED_POLICY,
     UNRESOLVED_DROP_RULE,
-    run_pipeline,
+    disposition_col,
+    make_label_fn,
+    py_disposition,
 )
 
 MANIFEST_DIR = "_manifest"
@@ -68,54 +78,136 @@ MANIFEST_SCHEMA = T.StructType(
 )
 
 
-def bucket_col(url_col: str = "url", n_buckets: int = 32):
-    return F.pmod(F.xxhash64(F.col(url_col)), F.lit(n_buckets)).cast("int")
+def _hadoop_path(spark: SparkSession, path: str):
+    """The Hadoop ``FileSystem`` of ``path`` and ``path`` as a Hadoop
+    ``Path``: driver-side file operations that work on any Hadoop
+    filesystem (HDFS/S3/local), unlike os.path."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return jpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), jpath
 
 
 def completed_buckets(spark: SparkSession, out_dir: str) -> set[int]:
-    """Probe the manifest through Spark's reader (works on any Hadoop
-    filesystem — HDFS/S3/local — unlike a driver-local os.path check).
-    Only ``bucket`` is read, with a fixed schema: every engine version
-    wrote it as int, so no footer is sampled or merged."""
+    """The buckets with a manifest row. A missing manifest dir is a
+    fresh run, found by an existence test that runs no Spark job; any
+    error reading an existing manifest (permissions, corrupt footer,
+    transient FS) propagates: swallowing it would silently restart the
+    whole run and append duplicate manifest rows (ADVICE r2). Only
+    ``bucket`` is read, with a fixed schema: every engine version wrote
+    it as int, so no footer is sampled or merged."""
     path = os.path.join(out_dir, MANIFEST_DIR)
-    try:
-        rows = spark.read.schema("bucket int").parquet(path).collect()
-    except AnalysisException:  # path does not exist yet -> fresh run
+    fs, jpath = _hadoop_path(spark, path)
+    if not fs.exists(jpath):
         return set()
-    # any OTHER error (permissions, corrupt footer, transient FS) must
-    # propagate: swallowing it would silently restart the whole run and
-    # append duplicate manifest rows (ADVICE r2)
+    rows = spark.read.schema("bucket int").parquet(path).collect()
     return {r["bucket"] for r in rows}
 
 
-def _manifest_aggs():
-    """Per-bucket lineage aggregates over label rows, named as
-    MANIFEST_COLS."""
-    return [
-        F.count("*").alias("docs"),
-        F.sum(F.col("keep").cast("long")).alias("kept"),
-        F.sum(F.coalesce("scrub_email", F.lit(0))).alias("scrub_email"),
-        F.sum(F.coalesce("scrub_toxicity", F.lit(0))).alias("scrub_toxicity"),
-        *(
-            F.sum((F.col("drop_rule") == rule).cast("long")).alias(f"drop_{rule}")
-            for rule in _DROP_RULES
-        ),
-        *(
-            F.sum(
-                (F.col("lang_pred").isNull() & (F.col("disposition") == d)).cast(
-                    "long"
-                )
-            ).alias(f"unresolved_{d}")
-            for d in _UNRESOLVED_DISPOSITIONS
-        ),
-    ]
+class _MergeByTask(AccumulatorParam):
+    """Accumulator of per-task states keyed by Spark partition id. The
+    merge is ``dict.update``, so a re-executed task (stage retry,
+    speculation) overwrites its partition's state instead of adding to
+    it; Spark never merges the updates of a failed attempt."""
+
+    def zero(self, value):
+        return {}
+
+    def addInPlace(self, acc, update):
+        acc.update(update)
+        return acc
 
 
-def _append_manifest(spark: SparkSession, rows: list[tuple], path: str) -> None:
-    """Append lineage rows (MANIFEST_SCHEMA order) as one Arrow-built
-    local frame: no Python-runner round trip, one small file."""
-    table = pa.table(dict(zip(MANIFEST_SCHEMA.names, zip(*rows))))
-    spark.createDataFrame(table, MANIFEST_SCHEMA).write.mode("append").parquet(path)
+_COL_INDEX = {c: i for i, c in enumerate(MANIFEST_COLS)}
+
+
+def _count_labels(counts: dict, buckets, labels: dict, policy: str) -> None:
+    """Fold one batch of label columns into per-bucket lineage counts
+    (MANIFEST_COLS order)."""
+    for b, keep, drop_rule, lang, email, toxicity in zip(
+        buckets,
+        labels["keep"],
+        labels["drop_rule"],
+        labels["lang_pred"],
+        labels["scrub_email"],
+        labels["scrub_toxicity"],
+    ):
+        c = counts.setdefault(int(b), [0] * len(MANIFEST_COLS))
+        c[0] += 1
+        c[1] += keep
+        c[2] += email or 0
+        c[3] += toxicity or 0
+        if drop_rule is not None:
+            c[_COL_INDEX[f"drop_{drop_rule}"]] += 1
+        if lang is None:
+            c[_COL_INDEX[f"unresolved_{py_disposition(keep, lang, policy)}"]] += 1
+
+
+def _counting_label_udf(spark: SparkSession, counts, model, policy: str):
+    """The group's label UDF over (url, html, bucket): the labels of
+    make_label_fn, plus the task's per-bucket lineage counts added to
+    the ``counts`` accumulator once, when the task's last batch is
+    done."""
+    label = make_label_fn(spark, model, unresolved_policy=policy)
+
+    @F.pandas_udf(_LABEL_SCHEMA)
+    def label_udf(
+        batches: Iterator[tuple[pd.Series, pd.Series, pd.Series]],
+    ) -> Iterator[pd.DataFrame]:
+        state: dict = {}
+        for urls, html, buckets in batches:
+            out = label(urls, html)
+            _count_labels(state, buckets, out, policy)
+            yield pd.DataFrame(out)
+        counts.add({TaskContext.get().partitionId(): state})
+
+    return label_udf
+
+
+def _manifest_rows(group: list[int], states: dict) -> list[list[int]]:
+    """One lineage row (bucket, *MANIFEST_COLS) per bucket of the group:
+    the sum of the task states' counts, zeros where no task saw the
+    bucket."""
+    totals = {b: [0] * len(MANIFEST_COLS) for b in group}
+    for state in states.values():
+        for b, c in state.items():
+            totals[b] = [x + y for x, y in zip(totals[b], c)]
+    return [[b, *totals[b]] for b in group]
+
+
+def _manifest_parquet(rows: list[list[int]]) -> bytes:
+    """Lineage rows (bucket, *MANIFEST_COLS) as snappy parquet bytes with
+    MANIFEST_SCHEMA's physical types: bucket int32, counts int64."""
+    cols = list(zip(*rows))
+    table = pa.table(
+        [pa.array(cols[0], pa.int32())] + [pa.array(c, pa.int64()) for c in cols[1:]],
+        names=MANIFEST_SCHEMA.names,
+    )
+    sink = pa.BufferOutputStream()
+    pq.write_table(table, sink, compression="snappy")
+    return sink.getvalue().to_pybytes()
+
+
+def _rename(fs, src, dst) -> None:
+    """Hadoop's rename reports failure by returning false: raise."""
+    if not fs.rename(src, dst):
+        raise OSError(f"could not rename {src.toString()} to {dst.toString()}")
+
+
+def _commit_manifest(spark: SparkSession, rows: list[list[int]], path: str) -> None:
+    """Commit lineage rows as one manifest file from the driver: write
+    the parquet to a hidden ``.<name>.tmp`` under ``path``, then rename
+    it visible. Spark's reader ignores ``.``- and ``_``-prefixed files,
+    so a crash before the rename commits no row and the rerun redoes
+    the group."""
+    fs, jdir = _hadoop_path(spark, path)
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    name = f"part-{uuid.uuid4()}.snappy.parquet"
+    tmp = Path(jdir, f".{name}.tmp")
+    out = fs.create(tmp, False)
+    try:
+        out.write(_manifest_parquet(rows))
+    finally:
+        out.close()
+    _rename(fs, tmp, Path(jdir, name))
 
 
 def run_with_resume(
@@ -137,7 +229,6 @@ def run_with_resume(
     stratum's disposition per bucket (unresolved_kept /
     unresolved_quarantined / unresolved_dropped) so a 10^12-doc run
     can audit what the policy did without re-scanning the labels."""
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     done = completed_buckets(spark, out_dir)
     todo = [b for b in range(n_buckets) if b not in done]
     groups = [
@@ -148,39 +239,40 @@ def run_with_resume(
 
     labels_path = os.path.join(out_dir, LABELS_DIR)
     manifest_path = os.path.join(out_dir, MANIFEST_DIR)
+    bucket = f"CAST(pmod(xxhash64(url), {n_buckets}) AS INT)"
 
     for group in groups:
-        src = pages.filter(bucket_col(n_buckets=n_buckets).isin(group))
-        # only label rows cross the shuffle; each bucket lands in one
-        # partition, so the write below makes one file per bucket
-        labels = (
-            run_pipeline(spark, src, model=model, unresolved_policy=unresolved_policy)
-            .withColumn("bucket", bucket_col(n_buckets=n_buckets))
-            .repartition("bucket")
-            .persist(StorageLevel.MEMORY_AND_DISK)
+        counts = spark.sparkContext.accumulator({}, _MergeByTask())
+        label = _counting_label_udf(spark, counts, model, unresolved_policy)
+        src = pages.selectExpr("url", "warc_ts", "html", f"{bucket} AS bucket").where(
+            f"bucket IN ({', '.join(map(str, group))})"
         )
-        try:
-            # idempotent per-partition write: dynamic overwrite replaces
-            # exactly the bucket= dirs this group touches
-            labels.write.mode("overwrite").partitionBy("bucket").parquet(
-                labels_path
+        # only label rows cross the shuffle; each bucket lands in one
+        # partition, so the write makes one file per bucket. Dynamic
+        # overwrite replaces exactly the bucket= dirs this group touches:
+        # re-writing a bucket replaces it, never duplicates it
+        (
+            src.select("url", "warc_ts", label("url", "html", "bucket").alias("_l"), "bucket")
+            .select(
+                "url",
+                "warc_ts",
+                "_l.*",
+                disposition_col(unresolved_policy, "_l.keep", "_l.lang_pred").alias(
+                    "disposition"
+                ),
+                "bucket",
             )
-            stats = {
-                r["bucket"]: r.asDict()
-                for r in labels.groupBy("bucket").agg(*_manifest_aggs()).collect()
-            }
-            # lineage rows, appended only after the labels commit. Every
-            # bucket in the group gets a row — including empty buckets
-            # (which wrote no partition dir): an absent row would keep the
-            # bucket in `todo` forever and the run would never converge.
-            # A sum over only NULLs (no doc with a drop_rule) is NULL: 0.
-            rows = [
-                (b, *(stats.get(b, {}).get(c) or 0 for c in MANIFEST_COLS))
-                for b in group
-            ]
-            _append_manifest(spark, rows, manifest_path)
-        finally:
-            labels.unpersist()
+            .repartition("bucket")
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("bucket")
+            .parquet(labels_path)
+        )
+        # lineage rows, committed only after the labels. Every bucket in
+        # the group gets a row — including empty buckets (which wrote no
+        # partition dir): an absent row would keep the bucket in `todo`
+        # forever and the run would never converge.
+        _commit_manifest(spark, _manifest_rows(group, counts.value), manifest_path)
     return len(groups)
 
 

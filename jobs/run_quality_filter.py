@@ -17,11 +17,13 @@ the session also caps the parquet reader batch at 512 rows so a
 default-heap run degrades gracefully instead of OOMing the scan.)
 
 Resumable: re-running the same command continues from the bucket
-manifest (plans/resume.py). Each bucket group is labelled once and
-committed twice: first its labels under <output>/labels, one parquet
-file per bucket dir, then its per-bucket lineage + metrics rows under
-<output>/_manifest, aggregated from the same labels in memory. A run
-killed between the two commits redoes that group on rerun.
+manifest (plans/resume.py). Each bucket group is one Spark job that
+labels its pages once and is committed twice: first the Spark write
+commits its labels under <output>/labels, one parquet file per bucket
+dir; then its per-bucket lineage + metrics rows, counted by the label
+tasks themselves, are committed from the driver under
+<output>/_manifest by renaming a hidden temp file visible. A run killed
+before the rename redoes that group on rerun.
 
 With --synthesize N the job generates N deterministic synthetic pages
 instead of reading --input (self-contained smoke/bench runs).

@@ -1,7 +1,11 @@
 """Checkpoint/resume: kill-and-rerun must neither drop nor duplicate
 documents, and must skip completed buckets (BASELINE.md resumability)."""
 
+import json
 import os
+import shutil
+import subprocess
+import sys
 
 import pandas as pd
 import pytest
@@ -96,22 +100,30 @@ def test_resume_after_kill(spark, tmp_path):
     _assert_manifest_reconciles(spark, out_interrupted)
 
 
+def _executions(spark):
+    """Ids of the SQL executions the session has run so far."""
+    sql = spark._jsparkSession.sharedState().statusStore()
+    as_java = spark._jvm.scala.jdk.javaapi.CollectionConverters.asJava
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    return {int(e.executionId()) for e in as_java(sql.executionsList())}
+
+
 def test_group_writes_one_file_per_bucket_and_never_rereads_labels(spark, tmp_path):
-    """Each group is labelled once: its labels land as one parquet file
-    per bucket dir, and its manifest rows come from the cached labels.
-    The pages are in memory and the output dir starts empty, so any
-    parquet scan in the run would re-read what the run wrote."""
+    """Each group is one SQL execution: it labels its pages once and
+    writes one parquet file per bucket dir, and its manifest rows come
+    from the label tasks' counts. The pages are in memory and the output
+    dir starts empty, so the probe runs no execution and any parquet
+    scan in the run would re-read what the run wrote."""
     out = str(tmp_path / "once")
     sql = spark._jsparkSession.sharedState().statusStore()
     as_java = spark._jvm.scala.jdk.javaapi.CollectionConverters.asJava
 
-    def executions():
-        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-        return {int(e.executionId()) for e in as_java(sql.executionsList())}
-
-    before = executions()
-    run_with_resume(spark, _pages(spark), out, n_buckets=N_BUCKETS, group_size=4)
-    for eid in executions() - before:
+    pages = _pages(spark)
+    before = _executions(spark)
+    groups = run_with_resume(spark, pages, out, n_buckets=N_BUCKETS, group_size=4)
+    run = _executions(spark) - before
+    assert len(run) == groups == 2
+    for eid in run:
         for node in as_java(sql.planGraph(eid).allNodes()):
             assert not node.name().startswith("Scan parquet"), node.desc()
     for b in range(N_BUCKETS):
@@ -119,6 +131,119 @@ def test_group_writes_one_file_per_bucket_and_never_rereads_labels(spark, tmp_pa
                  if f.endswith(".parquet")]
         assert len(files) == 1, (b, files)
     _assert_manifest_reconciles(spark, out)
+
+
+def test_completed_buckets_fresh_dir_runs_no_spark_job(spark, tmp_path):
+    """A missing manifest is a fresh run, found without a Spark read, so
+    a fresh run logs no missing-path warning."""
+    before = _executions(spark)
+    assert completed_buckets(spark, str(tmp_path / "fresh")) == set()
+    assert _executions(spark) == before
+
+
+def test_completed_buckets_raises_on_corrupt_manifest(spark, tmp_path):
+    """Only a missing manifest means "nothing done": a manifest that
+    cannot be read fails the run instead of restarting it (ADVICE r2)."""
+    out = str(tmp_path / "corrupt")
+    run_with_resume(spark, _pages(spark), out, n_buckets=N_BUCKETS, max_groups=1)
+    with open(f"{out}/_manifest/part-corrupt.snappy.parquet", "wb") as f:
+        f.write(b"not a parquet file")
+    with pytest.raises(Exception, match="part-corrupt"):
+        completed_buckets(spark, out)
+
+
+def test_rerun_overwrites_only_its_buckets_and_keeps_session_conf(spark, tmp_path):
+    """The labels writer overwrites dynamically by its own option: the
+    session's partitionOverwriteMode is left as the caller set it, and
+    a rerun of buckets 0 and 1 leaves every other bucket dir as it was."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.set(key, "static")
+    try:
+        out = str(tmp_path / "rerun")
+        pages = _pages(spark)
+        run_with_resume(spark, pages, out, n_buckets=N_BUCKETS)
+        assert spark.conf.get(key) == "static"
+
+        def files(b):
+            return sorted(os.listdir(f"{out}/labels/bucket={b}"))
+
+        kept = {b: files(b) for b in range(2, N_BUCKETS)}
+        first = {b: files(b) for b in (0, 1)}
+        shutil.rmtree(f"{out}/_manifest")
+        run_with_resume(spark, pages, out, n_buckets=N_BUCKETS, group_size=2,
+                        max_groups=1)
+        assert spark.conf.get(key) == "static"
+        assert {b: files(b) for b in range(2, N_BUCKETS)} == kept
+        assert all(set(files(b)).isdisjoint(first[b]) for b in (0, 1))
+        assert len(_sorted_labels(spark, out)) == N
+    finally:
+        spark.conf.unset(key)
+
+
+def test_task_counts_merge_once_per_partition():
+    """A re-executed task's state replaces its partition's earlier one:
+    the manifest counts each partition once, however often it ran."""
+    merge = resume._MergeByTask()
+    states = merge.zero({})
+    ones = [1] * len(MANIFEST_COLS)
+    for update in ({0: {3: ones}}, {1: {3: ones, 5: ones}}, {0: {3: ones}}):
+        states = merge.addInPlace(states, update)
+    rows = resume._manifest_rows([3, 4, 5], states)
+    assert rows == [[3, *[2] * len(MANIFEST_COLS)],
+                    [4, *[0] * len(MANIFEST_COLS)],
+                    [5, *ones]]
+
+
+_RETRY_SCRIPT = """
+import json, sys
+import pandas as pd
+from pyspark import TaskContext
+from pyspark.sql import functions as F
+from hyperpolyglot_spark.session import get_spark
+from hyperpolyglot_spark.datagen.pages import gen_pages_pdf
+from hyperpolyglot_spark.plans.resume import run_with_resume
+from tests.test_resume import N, N_BUCKETS, _assert_manifest_reconciles
+
+out = sys.argv[1]
+spark = get_spark("resume_retry", cores=2)
+
+@F.pandas_udf("binary")
+def fail_first_attempt(html: pd.Series) -> pd.Series:
+    ctx = TaskContext.get()
+    if ctx.partitionId() == 0 and ctx.attemptNumber() == 0:
+        raise RuntimeError("injected label task failure")
+    return html
+
+pages = spark.createDataFrame(gen_pages_pdf(N))
+pages = pages.withColumn("html", fail_first_attempt("html"))
+groups = run_with_resume(spark, pages, out, n_buckets=N_BUCKETS,
+                         group_size=N_BUCKETS)
+tracker = spark.sparkContext.statusTracker()
+failed = sum(
+    tracker.getStageInfo(s).numFailedTasks
+    for j in tracker.getJobIdsForGroup()
+    for s in tracker.getJobInfo(j).stageIds
+)
+_assert_manifest_reconciles(spark, out)
+print(json.dumps({"groups": groups, "failed_tasks": failed}))
+"""
+
+
+def test_label_task_retry_counts_once(tmp_path):
+    """One label task fails its first attempt and is retried (a
+    ``local[2,2]`` master allows one retry): the job succeeds and every
+    manifest column still equals a group-by over the written labels, so
+    the failed attempt's counts were not merged."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, SPARK_GRAFT_MASTER="local[2,2]", SPARK_DRIVER_MEM="1g",
+               PYTHONPATH=os.pathsep.join(filter(None, [root, os.environ.get("PYTHONPATH")])))
+    proc = subprocess.run(
+        [sys.executable, "-c", _RETRY_SCRIPT, str(tmp_path / "retry")],
+        cwd=root, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    result = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert result == {"groups": 1, "failed_tasks": 1}
 
 
 def test_manifest_reconciles_under_drop_policy(spark, tmp_path):
@@ -139,29 +264,31 @@ def test_manifest_reconciles_under_drop_policy(spark, tmp_path):
     assert sum(r["drop_unresolved_lang"] for r in rows) >= 1
 
 
+def _persisted(spark):
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
 def test_crash_between_commits(spark, tmp_path, monkeypatch):
     """A run that dies after a group's labels commit but before its
-    manifest append leaves those buckets to do; the rerun rewrites them
+    manifest commit leaves those buckets to do; the rerun rewrites them
     (no duplicate labels) and commits each bucket's row once."""
     pages = _pages(spark)
     out = str(tmp_path / "crashed")
-    append = resume._append_manifest
+    commit = resume._commit_manifest
     calls = []
 
-    def persisted():
-        return spark.sparkContext._jsc.getPersistentRDDs().size()
-
-    def append_crashing_once(*args):
-        calls.append(persisted())
-        if len(calls) == 2:  # the second group's manifest append
+    def commit_crashing_once(*args):
+        calls.append(args)
+        if len(calls) == 2:  # the second group's manifest commit
             raise RuntimeError("killed between the labels and manifest commits")
-        append(*args)
+        commit(*args)
 
-    monkeypatch.setattr(resume, "_append_manifest", append_crashing_once)
+    persisted = _persisted(spark)
+    monkeypatch.setattr(resume, "_commit_manifest", commit_crashing_once)
     with pytest.raises(RuntimeError, match="killed between"):
         run_with_resume(spark, pages, out, n_buckets=N_BUCKETS, group_size=2)
-    # the crashed group's cached labels are released on the way out
-    assert persisted() == calls[-1] - 1
+    # the crashed run leaves no persisted RDD behind
+    assert _persisted(spark) == persisted
     assert completed_buckets(spark, out) == {0, 1}
     labelled = spark.read.parquet(f"{out}/labels").select("bucket").distinct()
     assert {r["bucket"] for r in labelled.collect()} >= {2, 3}
@@ -172,6 +299,32 @@ def test_crash_between_commits(spark, tmp_path, monkeypatch):
     rows = _sorted_labels(spark, out)
     assert len(rows) == N
     assert rows == _sorted_labels(spark, oneshot)
+    _assert_manifest_reconciles(spark, out)
+
+
+def test_crash_between_manifest_write_and_rename(spark, tmp_path, monkeypatch):
+    """A run that dies after writing the hidden manifest temp file but
+    before renaming it commits no manifest row; the rerun redoes the
+    group and equals an uninterrupted run."""
+    pages = _pages(spark)
+    out = str(tmp_path / "unrenamed")
+
+    def crash(*args):
+        raise RuntimeError("killed before the manifest rename")
+
+    with monkeypatch.context() as m:
+        m.setattr(resume, "_rename", crash)
+        with pytest.raises(RuntimeError, match="killed before"):
+            run_with_resume(spark, pages, out, n_buckets=N_BUCKETS, group_size=2)
+    hidden = os.listdir(f"{out}/_manifest")
+    assert hidden and all(f.startswith(".") for f in hidden), hidden
+    assert completed_buckets(spark, out) == set()
+    assert spark.read.schema(resume.MANIFEST_SCHEMA).parquet(f"{out}/_manifest").count() == 0
+
+    assert run_with_resume(spark, pages, out, n_buckets=N_BUCKETS, group_size=2) == 4
+    oneshot = str(tmp_path / "oneshot")
+    run_with_resume(spark, pages, oneshot, n_buckets=N_BUCKETS)
+    assert _sorted_labels(spark, out) == _sorted_labels(spark, oneshot)
     _assert_manifest_reconciles(spark, out)
 
 
