@@ -86,19 +86,34 @@ def _hadoop_path(spark: SparkSession, path: str):
     return jpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), jpath
 
 
+def _manifest_files(spark: SparkSession, out_dir: str) -> list[str]:
+    """The committed manifest files: the visible ``part-*`` files under
+    ``_manifest``, listed through the Hadoop ``FileSystem`` (no Spark
+    job); none for a fresh run. Spark is given these files, not the
+    dir: it would log "All paths were ignored" for a dir whose name
+    starts with ``_``, and a dir holding only a hidden temp file has no
+    schema to read."""
+    fs, jdir = _hadoop_path(spark, os.path.join(out_dir, MANIFEST_DIR))
+    if not fs.exists(jdir):
+        return []
+    # listed, not globbed: a glob would read glob characters in out_dir
+    # as a pattern and could find no file in an existing manifest
+    paths = spark._jvm.org.apache.hadoop.fs.FileUtil.stat2Paths(fs.listStatus(jdir))
+    return sorted(p.toString() for p in paths if p.getName().startswith("part-"))
+
+
 def completed_buckets(spark: SparkSession, out_dir: str) -> set[int]:
-    """The buckets with a manifest row. A missing manifest dir is a
-    fresh run, found by an existence test that runs no Spark job; any
-    error reading an existing manifest (permissions, corrupt footer,
-    transient FS) propagates: swallowing it would silently restart the
-    whole run and append duplicate manifest rows (ADVICE r2). Only
-    ``bucket`` is read, with a fixed schema: every engine version wrote
-    it as int, so no footer is sampled or merged."""
-    path = os.path.join(out_dir, MANIFEST_DIR)
-    fs, jpath = _hadoop_path(spark, path)
-    if not fs.exists(jpath):
+    """The buckets with a manifest row. A fresh run (no manifest file) is
+    found by a listing that runs no Spark job; any error reading an
+    existing manifest file (permissions, corrupt footer, transient FS)
+    propagates: swallowing it would silently restart the whole run and
+    append duplicate manifest rows (ADVICE r2). Only ``bucket`` is read,
+    with a fixed schema: every engine version wrote it as int, so no
+    footer is sampled or merged."""
+    files = _manifest_files(spark, out_dir)
+    if not files:
         return set()
-    rows = spark.read.schema("bucket int").parquet(path).collect()
+    rows = spark.read.schema("bucket int").parquet(*files).collect()
     return {r["bucket"] for r in rows}
 
 
@@ -285,8 +300,10 @@ def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame:
     would then depend on which file Spark picked (r6 ADVICE). This
     helper always merges schemas (union of all footers) and fills the
     numeric audit columns with 0 for rows written before the column
-    existed, so audits over mixed-version dirs are deterministic."""
-    df = spark.read.option("mergeSchema", "true").parquet(
-        os.path.join(out_dir, MANIFEST_DIR)
-    )
+    existed, so audits over mixed-version dirs are deterministic. With
+    no manifest file it is an empty frame of MANIFEST_SCHEMA."""
+    files = _manifest_files(spark, out_dir)
+    if not files:
+        return spark.createDataFrame([], MANIFEST_SCHEMA)
+    df = spark.read.option("mergeSchema", "true").parquet(*files)
     return df.na.fill(0, [c for c in MANIFEST_COLS if c in df.columns])

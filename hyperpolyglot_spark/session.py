@@ -5,13 +5,40 @@ would set on a real cluster (AQE, Arrow, shuffle partitions sized to
 cores). Parallelism is expressed through partitioning, never threads
 (reference src/lib.rs:228-254 uses a thread pool; our analog is Spark
 task parallelism — SURVEY.md §4 X4).
+
+A local session (a ``local``/``local[N]`` master picked here, not under
+spark-submit) gets two engine pieces:
+
+  - its Python workers run under ``pydaemon.py``;
+  - its ``file:`` filesystem is ``jvm/NioLocalFileSystem.java``. pyspark
+    ships no libhadoop, so Hadoop's local filesystem forks a ``chmod``
+    for every file and directory it creates (about 58 forks per bucket
+    group of the resumable write, ~6 ms each); this one sets the same
+    mode bits through java.nio. The class is compiled with the JDK's
+    ``javac`` once per source hash into a per-user cache dir and put on
+    the driver's class path. Without a ``javac`` the session keeps
+    Hadoop's filesystem and logs one WARN.
 """
 
 from __future__ import annotations
 
+import glob
+import hashlib
+import logging
 import os
+import shutil
+import subprocess
+import tempfile
 
+from py4j.protocol import Py4JJavaError
+from pyspark import SparkContext
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
+
+_log = logging.getLogger(__name__)
+
+NIO_FS_CLASS = "hyperpolyglot_spark.jvm.NioLocalFileSystem"
+NIO_FS_SOURCE = os.path.join(os.path.dirname(__file__), "jvm", "NioLocalFileSystem.java")
 
 
 def default_driver_memory(phys_bytes: int | None = None) -> str:
@@ -25,6 +52,89 @@ def default_driver_memory(phys_bytes: int | None = None) -> str:
     if phys_bytes is None:
         phys_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
     return f"{phys_bytes // 2**21}m"
+
+
+def _javac() -> str | None:
+    """The JDK's ``javac``: $JAVA_HOME's, else the first on PATH."""
+    home = os.environ.get("JAVA_HOME")
+    if home and os.access(os.path.join(home, "bin", "javac"), os.X_OK):
+        return os.path.join(home, "bin", "javac")
+    return shutil.which("javac")
+
+
+def _cache_root() -> str:
+    """Per-user cache of compiled engine classes. Not under the temp dir:
+    a caller may point TMPDIR at a work dir it deletes after each run."""
+    cache = os.environ.get("XDG_CACHE_HOME") or os.path.expanduser("~/.cache")
+    return os.path.join(cache, "hyperpolyglot_spark", "jvm")
+
+
+def nio_fs_classes(source: str = NIO_FS_SOURCE, cache_root: str | None = None) -> str:
+    """The class dir of ``source`` compiled against Spark's Hadoop client
+    jar: ``<cache_root>/<source hash>``, built on first use. The build
+    runs in a temp dir under ``cache_root`` that is renamed into place,
+    so a concurrent session sees no dir or a whole one. Raises OSError
+    or CalledProcessError when it cannot build (no ``javac``, say)."""
+    with open(source, "rb") as f:
+        digest = hashlib.sha256(f.read()).hexdigest()[:16]
+    root = cache_root or _cache_root()
+    out = os.path.join(root, digest)
+    if os.path.isdir(out):
+        return out
+    javac = _javac()
+    if javac is None:
+        raise FileNotFoundError("no javac on JAVA_HOME or PATH")
+    jars = glob.glob(os.path.join(_find_spark_home(), "jars", "hadoop-client-api-*.jar"))
+    os.makedirs(root, exist_ok=True)
+    tmp = tempfile.mkdtemp(prefix=".build-", dir=root)
+    try:
+        classes = os.path.join(tmp, "classes")
+        subprocess.run(
+            [javac, "--release", "17", "-cp", os.pathsep.join(jars), "-d", classes, source],
+            check=True, capture_output=True, text=True,
+        )
+        try:
+            os.rename(classes, out)
+        except OSError:
+            if not os.path.isdir(out):  # not a concurrent build's win
+                raise
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    return out
+
+
+def _jvm_loads(name: str) -> bool:
+    """Whether the running JVM's class path holds class ``name``."""
+    try:
+        SparkContext._jvm.java.lang.Class.forName(name)
+        return True
+    except Py4JJavaError:  # ClassNotFoundException
+        return False
+
+
+def _local_fs_conf(extra_conf: dict[str, str]) -> dict[str, str]:
+    """The confs that make a local session's ``file:`` filesystem
+    NioLocalFileSystem: its class dir appended to the caller's
+    ``spark.driver.extraClassPath`` and ``spark.hadoop.fs.file.impl``.
+    Nothing if the caller chose ``fs.file.impl``; nothing and one WARN
+    if the class cannot be built, or a JVM already runs without it (its
+    class path is fixed at launch)."""
+    if "spark.hadoop.fs.file.impl" in extra_conf:
+        return {}
+    try:
+        classes = nio_fs_classes()
+    except (OSError, subprocess.CalledProcessError) as e:
+        detail = getattr(e, "stderr", None) or e
+        _log.warning("keeping Hadoop's local filesystem, which forks chmod per file: %s", detail)
+        return {}
+    if SparkContext._gateway is not None and not _jvm_loads(NIO_FS_CLASS):
+        _log.warning("keeping Hadoop's local filesystem: the running JVM has no %s", NIO_FS_CLASS)
+        return {}
+    cp = extra_conf.get("spark.driver.extraClassPath")
+    return {
+        "spark.driver.extraClassPath": os.pathsep.join(filter(None, [cp, classes])),
+        "spark.hadoop.fs.file.impl": NIO_FS_CLASS,
+    }
 
 
 def get_spark(
@@ -43,6 +153,7 @@ def get_spark(
     cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     shuffle_partitions = shuffle_partitions or max(2 * cores, 8)
 
+    extra_conf = dict(extra_conf or {})
     builder = SparkSession.builder
     # Under spark-submit the gateway JVM already exists and carries the
     # real master (yarn/k8s/standalone) — don't override it with local[N].
@@ -52,11 +163,13 @@ def get_spark(
         builder = builder.master(master)
         # local mode only: its workers import this package as the driver
         # does. Not under spark-submit, whose --py-files zips reach a
-        # worker per task, after its daemon has started (pydaemon.py).
+        # worker per task, after its daemon has started (pydaemon.py),
+        # and whose driver class path is set on its command line.
         if master == "local" or master.startswith("local["):
             builder = builder.config(
                 "spark.python.daemon.module", "hyperpolyglot_spark.pydaemon"
             )
+            extra_conf.update(_local_fs_conf(extra_conf))
     builder = (
         builder.appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
@@ -91,7 +204,7 @@ def get_spark(
             "spark.serializer", "org.apache.spark.serializer.KryoSerializer"
         )
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -328,6 +328,35 @@ def test_crash_between_manifest_write_and_rename(spark, tmp_path, monkeypatch):
     _assert_manifest_reconciles(spark, out)
 
 
+def test_crash_before_first_rename_leaves_only_a_hidden_file(spark, tmp_path, monkeypatch):
+    """A crash before the first group's manifest rename leaves a manifest
+    dir holding only the hidden temp file (and its hidden checksum): a
+    rerun's probes read no rows and raise no error, and it redoes the
+    group."""
+    pages = _pages(spark)
+    out = str(tmp_path / "first")
+
+    def crash(*args):
+        raise RuntimeError("killed before the first manifest rename")
+
+    with monkeypatch.context() as m:
+        m.setattr(resume, "_rename", crash)
+        with pytest.raises(RuntimeError, match="killed before"):
+            run_with_resume(spark, pages, out, n_buckets=N_BUCKETS, group_size=2)
+    left = sorted(os.listdir(f"{out}/_manifest"))
+    (tmp,) = [f for f in left if not f.endswith(".crc")]
+    assert tmp.startswith(".part-") and tmp.endswith(".tmp")
+    assert left == sorted([tmp, f".{tmp}.crc"])
+    assert completed_buckets(spark, out) == set()
+    manifest = read_manifest(spark, out)
+    assert manifest.schema == resume.MANIFEST_SCHEMA
+    assert manifest.count() == 0
+
+    assert run_with_resume(spark, pages, out, n_buckets=N_BUCKETS, group_size=2, max_groups=1) == 1
+    assert completed_buckets(spark, out) == {0, 1}
+    assert read_manifest(spark, out).count() == 2
+
+
 def test_resume_converges_with_empty_buckets(spark, tmp_path):
     """More buckets than documents: empty buckets must still get a
     manifest row, or todo never drains (ADVICE round 1)."""
