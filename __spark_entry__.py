@@ -1,21 +1,27 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Oracle-checked query surface over the sf testdata tables.
 
-``queries()`` exposes the engine's operator surface (SURVEY.md §2 +
-the training-data-pipeline operators) over the driver testdata tables;
-``oracle_sql()`` gives a DuckDB oracle for EVERY query. Column
-names/types are aligned pairwise (the driver hashes values under
-sorted column names).
+``queries()`` maps each name to a Spark query over the ``documents``
+and ``embeddings`` tables; ``oracle_sql()`` gives every query a DuckDB
+oracle under the same key. Column names/types are aligned pairwise:
+results compare as order-insensitive rows under sorted column names
+(tests/test_entry_oracle.py).
 
-For the four queries whose semantics DuckDB cannot compute (blake2b
-simhash LSH, NB language prediction, IVF ANN probe, tokenizer UDTF)
-the oracle reads a
-FROZEN expected table computed driver-side from the pure-Python specs
-— independently of the Spark implementations — and cross-checked at
-generation time (tools/gen_expected.py, data/expected_sf0.01/).
+The queries cover what this system carries next to its label job: the
+label spec's quality ladder, scrub and perplexity, language ID, dedup
+and embedding similarity, plus document text statistics. The label
+spec's own oracle SQL lives in functions/spec_sql.py.
+
+For the queries whose semantics DuckDB cannot compute (blake2b simhash
+LSH, NB language prediction, IVF ANN probe, tokenizer UDTF, ...) the
+oracle reads a FROZEN expected table in data/expected_sf0.01/ beside
+this module, computed from the pure-Python specs — independently of
+the Spark implementations — and cross-checked at generation time
+(tools/gen_expected.py).
 """
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 import pandas as pd
@@ -23,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hyperpolyglot_spark.functions.langid import HASH_BUCKETS
+from hyperpolyglot_spark.functions.spec_sql import WORDS, keep_drop_sql, scrub_sql
 from hyperpolyglot_spark.session import local_rows_df
 from hyperpolyglot_spark.functions.textstats import (
     bpe_ish_token_count_col,
@@ -49,31 +56,32 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
+# source KB per core below which _spread_if_large keeps the scan as is
+_SPREAD_MIN_KB_PER_CORE = 64
+
+
 def _spread_if_large(spark: SparkSession, df: DataFrame) -> DataFrame:
-    """Size-gated _spread for DEEP multi-stage DAGs (the LM pipeline,
-    decontaminate): at sf0.1 (~0.6 MB of docs) spreading these
+    """Size-gated _spread for DEEP multi-stage DAGs (the LM pipeline
+    of doc_perplexity): at sf0.1 (~0.6 MB of docs) spreading it
     measured SLOWER (stage-latency bound — see _spread), but at 10x
-    the single-task explode dominates end-to-end (doc_perplexity
-    24-30 s unspread vs 7-14 s spread, r07 A/B on a replicated
-    single-row-group table). Gate: under-split for the cores AND at
-    least SPARK_GRAFT_SPREAD_KB_PER_CORE (default 64 KB) of source
-    bytes per core — below that a task holds under ~a few hundred
-    docs and the added exchange outweighs the parallelism; above it,
-    per-doc compute dominates. Per-core (not absolute), so the same
-    rule holds at any executor count; at corpus scale the
-    partitions-gate never fires at all.
+    the single-task explode dominates end-to-end (24-30 s unspread vs
+    7-14 s spread, r07 A/B on a replicated single-row-group table).
+    Gate: under-split for the cores AND at least
+    _SPREAD_MIN_KB_PER_CORE of source bytes per core — below that a
+    task holds under ~a few hundred docs and the added exchange
+    outweighs the parallelism; above it, per-doc compute dominates.
+    Per-core (not absolute), so the same rule holds at any executor
+    count; at corpus scale the partitions-gate never fires at all.
 
     The size is the optimized plan's estimate (private ``_jdf`` API). A
     relation without stats (not a file scan) reports
     ``spark.sql.defaultSizeInBytes`` (Long.MaxValue), so it passes the
     size gate and is spread whenever it under-splits the cores: the
-    gate fails open. Every caller passes a parquet scan."""
+    gate fails open. The caller passes a parquet scan."""
     cores = spark.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= cores:
         return df
-    min_bytes = cores * 1024 * int(
-        __import__("os").environ.get("SPARK_GRAFT_SPREAD_KB_PER_CORE", "64")
-    )
+    min_bytes = cores * 1024 * _SPREAD_MIN_KB_PER_CORE
     size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     if size >= min_bytes:
         return df.repartition(cores)
@@ -96,10 +104,10 @@ def _spread(spark: SparkSession, df: DataFrame) -> DataFrame:
     Applied ONLY where an A/B noop-sink measurement showed a win
     (OPTIMIZATION_r07.md): shallow plans whose per-row compute
     dominates (quality ladder, gram explode+agg, tokenizer scoring).
-    Deep multi-stage DAGs (minhash chains, decontaminate, the LM
-    pipeline) are stage-latency-bound at this scale — spreading them
-    multiplied per-stage task overhead and measured SLOWER, so they
-    keep their natural scan partitioning."""
+    Deep multi-stage DAGs (minhash chains, the LM pipeline) are
+    stage-latency-bound at this scale — spreading them multiplied
+    per-stage task overhead and measured SLOWER, so they keep their
+    natural scan partitioning."""
     cores = spark.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < cores:
         return df.repartition(cores)
@@ -141,302 +149,8 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 # ======================================================================
-# TPC-H-ish relational operators (S/P/J/A/O/E families)
+# documents: hyperpolyglot-analog text operators
 # ======================================================================
-
-def q1_pricing_summary(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem")
-    return (
-        li.filter(F.col("l_shipdate") <= "1998-09-02")
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.round(F.sum("l_quantity"), 4).alias("sum_qty"),
-            F.round(F.sum("l_extendedprice"), 4).alias("sum_base_price"),
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 4
-            ).alias("sum_disc_price"),
-            F.round(F.avg("l_quantity"), 6).alias("avg_qty"),
-            F.round(F.avg("l_extendedprice"), 6).alias("avg_price"),
-            F.count("*").alias("count_order"),
-        )
-    )
-
-
-def q3_shipping_priority(spark, sf_dir):
-    cust = _t(spark, sf_dir, "customer").filter(
-        F.col("c_mktsegment") == "BUILDING"
-    )
-    orders = _t(spark, sf_dir, "orders").filter(
-        F.col("o_orderdate") < "1995-03-15"
-    )
-    li = _t(spark, sf_dir, "lineitem").filter(
-        F.col("l_shipdate") > "1995-03-15"
-    )
-    return (
-        li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey"))
-        .groupBy("l_orderkey", "o_orderdate")
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 4
-            ).alias("revenue")
-        )
-        .orderBy(F.desc("revenue"), "l_orderkey")
-        .limit(10)
-    )
-
-
-def q5_region_revenue(spark, sf_dir):
-    region = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    nation = _t(spark, sf_dir, "nation")
-    cust = _t(spark, sf_dir, "customer")
-    sup = _t(spark, sf_dir, "supplier")
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    return (
-        li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(sup), F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(cust, (F.col("o_custkey") == F.col("c_custkey"))
-              & (F.col("c_nationkey") == F.col("s_nationkey")))
-        .join(F.broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey"))
-        .join(F.broadcast(region), F.col("n_regionkey") == F.col("r_regionkey"))
-        .groupBy("n_name")
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 4
-            ).alias("revenue")
-        )
-    )
-
-
-def top_suppliers(spark, sf_dir):
-    return (
-        _t(spark, sf_dir, "supplier")
-        .select("s_suppkey", "s_name", "s_acctbal")
-        .orderBy(F.desc("s_acctbal"), "s_suppkey")
-        .limit(5)
-    )
-
-
-def customers_without_orders(spark, sf_dir):
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders").select(
-        F.col("o_custkey").alias("c_custkey")
-    )
-    return (
-        cust.join(orders, "c_custkey", "left_anti")
-        .select("c_custkey", "c_name")
-    )
-
-
-def orders_with_heavy_items(spark, sf_dir):
-    orders = _t(spark, sf_dir, "orders")
-    heavy = _t(spark, sf_dir, "lineitem").filter(
-        F.col("l_quantity") > 49
-    ).select(F.col("l_orderkey").alias("o_orderkey"))
-    return (
-        orders.join(heavy, "o_orderkey", "left_semi")
-        .select("o_orderkey", "o_custkey", "o_totalprice")
-    )
-
-
-def top2_orders_per_customer(spark, sf_dir):
-    orders = _t(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy(
-        F.desc("o_totalprice"), "o_orderkey"
-    )
-    return (
-        orders.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 2)
-        .select("o_custkey", "o_orderkey", "o_totalprice", "rn")
-    )
-
-
-def revenue_pct_by_returnflag(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem")
-    per = li.groupBy("l_returnflag").agg(
-        F.sum("l_extendedprice").alias("rev")
-    )
-    total = per.agg(F.sum("rev").alias("_total"))
-    return per.crossJoin(F.broadcast(total)).select(
-        "l_returnflag",
-        F.round("rev", 4).alias("revenue"),
-        F.round(F.col("rev") * 100.0 / F.col("_total"), 6).alias("pct"),
-    )
-
-
-def rollup_order_priority(spark, sf_dir):
-    orders = _t(spark, sf_dir, "orders")
-    return (
-        orders.rollup("o_orderpriority", "o_orderstatus")
-        .agg(
-            F.count("*").alias("n_orders"),
-            F.round(F.sum("o_totalprice"), 4).alias("total_price"),
-        )
-    )
-
-
-def distinct_types_per_brand(spark, sf_dir):
-    part = _t(spark, sf_dir, "part")
-    return part.groupBy("p_brand").agg(
-        F.countDistinct("p_type").alias("n_types"),
-        F.countDistinct("p_size").alias("n_sizes"),
-        F.round(F.avg("p_retailprice"), 6).alias("avg_price"),
-    )
-
-
-def segment_set_ops(spark, sf_dir):
-    cust = _t(spark, sf_dir, "customer")
-    building = cust.filter(F.col("c_mktsegment") == "BUILDING").select(
-        "c_custkey"
-    )
-    rich = cust.filter(F.col("c_acctbal") > 5000).select("c_custkey")
-    machinery = cust.filter(F.col("c_mktsegment") == "MACHINERY").select(
-        "c_custkey"
-    )
-    return building.union(machinery).intersect(rich).subtract(
-        cust.filter(F.col("c_nationkey") == 3).select("c_custkey")
-    )
-
-
-def min_cost_supplier_per_nation(spark, sf_dir):
-    """Greatest-per-group (TPC-H q2 analog): cheapest-acctbal supplier
-    per nation via window rank — the decorrelated form of a correlated
-    subquery."""
-    sup = _t(spark, sf_dir, "supplier")
-    nation = _t(spark, sf_dir, "nation")
-    w = Window.partitionBy("s_nationkey").orderBy("s_acctbal", "s_suppkey")
-    best = sup.withColumn("rk", F.row_number().over(w)).filter(
-        F.col("rk") == 1
-    )
-    return best.join(
-        F.broadcast(nation), best.s_nationkey == nation.n_nationkey
-    ).select("n_name", "s_suppkey", "s_name", "s_acctbal")
-
-
-def nation_customer_supplier_counts(spark, sf_dir):
-    """FULL OUTER join: per nation, #customers and #suppliers, keeping
-    nations that have only one side."""
-    cust = (
-        _t(spark, sf_dir, "customer")
-        .groupBy(F.col("c_nationkey").alias("nationkey"))
-        .agg(F.count("*").alias("n_customers"))
-    )
-    sup = (
-        _t(spark, sf_dir, "supplier")
-        .groupBy(F.col("s_nationkey").alias("nationkey"))
-        .agg(F.count("*").alias("n_suppliers"))
-    )
-    return cust.join(sup, "nationkey", "full_outer").select(
-        "nationkey",
-        F.coalesce("n_customers", F.lit(0)).alias("n_customers"),
-        F.coalesce("n_suppliers", F.lit(0)).alias("n_suppliers"),
-    )
-
-
-def sql_api_revenue_by_priority(spark, sf_dir):
-    """Same engine through the SQL API surface (temp view + spark.sql):
-    Catalyst produces the identical plan either way."""
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("v_orders")
-    return spark.sql(
-        """
-        SELECT o_orderpriority,
-               count(*) AS n_orders,
-               round(sum(o_totalprice), 4) AS total_price,
-               round(avg(o_totalprice), 6) AS avg_price
-        FROM v_orders
-        GROUP BY o_orderpriority
-        """
-    )
-
-
-# ======================================================================
-# events: time windows, sessionization, pivot
-# ======================================================================
-
-def events_hourly(spark, sf_dir):
-    ev = _t(spark, sf_dir, "events")
-    return (
-        ev.groupBy(
-            F.date_trunc("hour", "ts").alias("hour"),
-            "event_type",
-        )
-        .agg(
-            F.count("*").alias("n"),
-            F.round(F.sum("value"), 4).alias("total_value"),
-        )
-    )
-
-
-def events_sessionization(spark, sf_dir):
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap = F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(w))
-    flagged = ev.withColumn(
-        "new_session",
-        F.when(gap.isNull() | (gap > 1800), F.lit(1)).otherwise(F.lit(0)),
-    )
-    return flagged.groupBy("user_id").agg(
-        F.sum("new_session").cast("long").alias("n_sessions"),
-        F.count("*").alias("n_events"),
-    )
-
-
-def events_type_pivot(spark, sf_dir):
-    ev = _t(spark, sf_dir, "events")
-    aggs = [
-        F.count(F.when(F.col("event_type") == t, 1)).alias(f"n_{t}")
-        for t in ("click", "view", "purchase", "signup", "error")
-    ]
-    return ev.groupBy("user_id").agg(*aggs)
-
-
-def events_value_stats(spark, sf_dir):
-    """Exact percentiles + dispersion per event_type (statistics agg
-    family)."""
-    ev = _t(spark, sf_dir, "events")
-    return ev.groupBy("event_type").agg(
-        F.round(F.expr("percentile(value, 0.5)"), 6).alias("p50"),
-        F.round(F.expr("percentile(value, 0.95)"), 6).alias("p95"),
-        F.round(F.stddev("value"), 6).alias("sd"),
-        F.round(F.min("value"), 4).alias("vmin"),
-        F.round(F.max("value"), 4).alias("vmax"),
-    )
-
-
-def events_salted_counts(spark, sf_dir):
-    """Two-phase salted aggregation (north-rule skew pattern): the 5
-    event types are hot keys, so phase 1 aggregates (key, salt) to
-    spread the combine across 16x more reducers, phase 2 merges the
-    partials. Result is identical to a direct groupBy — which is the
-    oracle."""
-    ev = _t(spark, sf_dir, "events")
-    salted = ev.withColumn("_salt", F.pmod(F.col("event_id"), F.lit(16)))
-    partial = salted.groupBy("event_type", "_salt").agg(
-        F.count("*").alias("pn"), F.sum("value").alias("pv")
-    )
-    return partial.groupBy("event_type").agg(
-        F.sum("pn").alias("n"),
-        F.round(F.sum("pv"), 4).alias("total_value"),
-    )
-
-
-def events_json_props(spark, sf_dir):
-    """JSON scalar-function surface: parse the props JSON column
-    (get_json_object / from_json), bucket by the extracted key, and
-    aggregate — the date/math/JSON built-ins row of SURVEY §2.7."""
-    ev = _t(spark, sf_dir, "events")
-    k = F.get_json_object("props", "$.k").cast("int")
-    return (
-        ev.select("event_type", k.alias("k"))
-        .withColumn("k_bucket", (F.col("k") / 10).cast("int"))
-        .groupBy("event_type", "k_bucket")
-        .agg(
-            F.count("*").alias("n"),
-            F.round(F.avg("k"), 6).alias("avg_k"),
-        )
-    )
-
 
 def source_langs_csv(spark, sf_dir):
     """Sorted collect_set rendered as a stable string (the per-strategy
@@ -449,82 +163,6 @@ def source_langs_csv(spark, sf_dir):
         F.count("*").alias("docs"),
     )
 
-
-def purchases_asof_click(spark, sf_dir):
-    """As-of join: each purchase matched to the user's most recent
-    prior (or simultaneous) click. Spark has no built-in as-of join —
-    operators/temporal.py composes it from union + window; the oracle
-    is DuckDB's native ASOF JOIN."""
-    from hyperpolyglot_spark.operators.temporal import asof_join
-
-    ev = _t(spark, sf_dir, "events")
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", "ts"
-    )
-    # unique per (user_id, ts): keep the max event_id (as-of matching
-    # is otherwise ambiguous — same rule in the oracle)
-    clicks = (
-        ev.filter(F.col("event_type") == "click")
-        .groupBy("user_id", F.col("ts").alias("click_ts"))
-        .agg(F.max("event_id").alias("click_event_id"))
-    )
-    return asof_join(
-        purchases,
-        clicks,
-        by="user_id",
-        left_ts="ts",
-        right_ts="click_ts",
-        payload_cols=["click_ts", "click_event_id"],
-        suffix="",
-    ).select("event_id", "user_id", "ts", "click_ts", "click_event_id")
-
-
-def clicks_in_purchase_windows(spark, sf_dir):
-    """RANGE join (no equi key): count clicks — from ANY user — inside
-    each purchase's 30-minute window. operators/temporal.range_join
-    buckets time so the plan is a hash equi-join on bucket + exact
-    range filter, never a nested-loop; the oracle is DuckDB's native
-    inequality join."""
-    from hyperpolyglot_spark.operators.temporal import range_join
-
-    ev = _t(spark, sf_dir, "events")
-    intervals = ev.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("interval_id"),
-        F.col("ts").alias("start_ts"),
-        (F.col("ts") + F.expr("INTERVAL 30 MINUTES")).alias("end_ts"),
-    )
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        F.col("event_id").alias("click_id"), "ts", "value"
-    )
-    j = range_join(clicks, intervals, "ts", "start_ts", "end_ts", 1800)
-    return j.groupBy("interval_id").agg(
-        F.count("*").alias("n_clicks"),
-        F.round(F.sum("value"), 4).alias("click_value"),
-    )
-
-
-def orders_cube(spark, sf_dir):
-    """CUBE over (priority, status): all grouping-set combinations."""
-    orders = _t(spark, sf_dir, "orders")
-    return orders.cube("o_orderpriority", "o_orderstatus").agg(
-        F.count("*").alias("n_orders"),
-        F.round(F.avg("o_totalprice"), 6).alias("avg_price"),
-    )
-
-
-def events_top_users(spark, sf_dir):
-    ev = _t(spark, sf_dir, "events")
-    return (
-        ev.groupBy("user_id")
-        .agg(F.round(F.sum("value"), 4).alias("total_value"))
-        .orderBy(F.desc("total_value"), "user_id")
-        .limit(10)
-    )
-
-
-# ======================================================================
-# documents: hyperpolyglot-analog text operators
-# ======================================================================
 
 def lang_breakdown(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
@@ -1049,44 +687,6 @@ def langid_unresolved(spark, sf_dir):
     )
 
 
-def audio_media_features(spark, sf_dir):
-    """Audio-column operator as a driver row: WAV payloads synthesized
-    deterministically from doc_id (datagen/audio — integer-math
-    samples wrapped in RIFF/PCM16), decoded DISTRIBUTED by the real
-    chunked WAV parser inside audio_features (mapInPandas), features
-    rounded for the hash gate. The frozen oracle recomputes the
-    features from the raw integer samples WITHOUT the WAV container —
-    so the row checks the RIFF encode/decode round-trip AND the
-    feature math, not one implementation against itself."""
-    import pandas as pd
-
-    from hyperpolyglot_spark.datagen.audio import synth_wav
-    from hyperpolyglot_spark.operators.multimodal import audio_features
-
-    @F.pandas_udf("binary")
-    def wav_udf(ids: pd.Series) -> pd.Series:
-        return ids.map(lambda i: synth_wav(int(i)))
-
-    docs = (
-        _t(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") < 50)
-        .select("doc_id")
-    )
-    media = docs.select(
-        F.col("doc_id").alias("media_id"), wav_udf("doc_id").alias("payload")
-    )
-    out = audio_features(media)
-    return out.select(
-        F.col("media_id").alias("doc_id"),
-        "sample_rate",
-        "n_samples",
-        "duration_ms",
-        F.round("rms", 6).alias("rms"),
-        F.round("zero_cross_rate", 6).alias("zero_cross_rate"),
-        F.round("peak", 6).alias("peak"),
-    )
-
-
 def langid_short_texts(spark, sf_dir):
     """Short-form (title/query-length) language ID: the 306-fragment
     stratum (datagen/realtext.short_texts — 5-15 words, all 102
@@ -1288,185 +888,6 @@ def _canon_dedup_sql() -> str:
     """
 
 
-def decontaminate_documents(spark, sf_dir):
-    """Benchmark decontamination (the GPT-3/PaLM-style n-gram-overlap
-    hygiene stage): an eval set is simulated by lifting a 20-word
-    window (words 11-30) out of every 50th document, then every
-    document sharing a verbatim 8-word n-gram with that set is flagged
-    with its distinct-overlap count. Corpus side: codegen'd int-seq
-    explode + slice/array_join; benchmark grams broadcast — no
-    corpus-sized shuffle (operators/decontaminate.py)."""
-    from hyperpolyglot_spark.operators.decontaminate import decontaminate
-
-    docs = _spread_if_large(
-        spark, _t(spark, sf_dir, "documents").select("doc_id", "text")
-    )
-    bench = docs.filter(F.col("doc_id") % 50 == 0).select(
-        F.array_join(
-            F.expr(r"slice(split(trim(text), '\\s+'), 11, 20)"), " "
-        ).alias("text")
-    )
-    return decontaminate(docs, bench, n=8)
-
-
-def decontaminate_spans(spark, sf_dir):
-    """Span-level decontamination (GPT-3 appendix-C semantics): the
-    contaminated region — first occurrence of each matched benchmark
-    8-gram ± pad chars, overlapping regions merged — is reported as
-    (span_start, span_len) in whitespace-normalized coordinates, so a
-    rewrite can REMOVE the leak instead of dropping the document.
-    Same simulated eval set as decontaminate_documents. Spark side is
-    pure JVM (locate + gaps-and-islands windows over output-sized
-    partitions); the DuckDB oracle runs the identical algorithm.
-    pad=30 here so sf0.01's ~100-word docs keep text either side;
-    the operator default is the GPT-3 window (PAD_CHARS=200)."""
-    from hyperpolyglot_spark.operators.decontaminate import (
-        contamination_spans,
-    )
-
-    docs = _spread_if_large(
-        spark, _t(spark, sf_dir, "documents").select("doc_id", "text")
-    )
-    bench = docs.filter(F.col("doc_id") % 50 == 0).select(
-        F.array_join(
-            F.expr(r"slice(split(trim(text), '\\s+'), 11, 20)"), " "
-        ).alias("text")
-    )
-    out = contamination_spans(docs, bench, n=8, pad=30)
-    return out.select(
-        "doc_id",
-        F.col("span_start").cast("long").alias("span_start"),
-        F.col("span_len").cast("long").alias("span_len"),
-    )
-
-
-def decontaminate_rewrite_docs(spark, sf_dir):
-    """The scrub-style companion of decontaminate_spans: contaminated
-    docs rewritten with the merged regions REMOVED (surviving pieces
-    joined by one space) instead of dropping the whole document —
-    GPT-3 appendix-C. Spark side: spans pipeline + piece stitching
-    over output-sized per-doc arrays; DuckDB oracle: the identical
-    islands merge + LAG piece extraction + ordered string_agg."""
-    from hyperpolyglot_spark.operators.decontaminate import (
-        decontaminate_rewrite,
-    )
-
-    docs = _spread_if_large(
-        spark, _t(spark, sf_dir, "documents").select("doc_id", "text")
-    )
-    bench = docs.filter(F.col("doc_id") % 50 == 0).select(
-        F.array_join(
-            F.expr(r"slice(split(trim(text), '\\s+'), 11, 20)"), " "
-        ).alias("text")
-    )
-    return decontaminate_rewrite(docs, bench, n=8, pad=30)
-
-
-_DECON_GRAMS = (
-    "(CASE WHEN len({w}) >= 8 THEN list_distinct("
-    "[array_to_string(({w})[i:i+7], ' ') for i in range(1, len({w}) - 6)]) "
-    "ELSE []::VARCHAR[] END)"
-)
-
-
-def _decontaminate_spans_sql(pad: int = 30) -> str:
-    """Identical algorithm in DuckDB: normalize, gram, locate the
-    first occurrence, pad, merge via gaps-and-islands windows."""
-    words = "string_split(t, ' ')"
-    return f"""
-        WITH nt AS (
-          SELECT doc_id,
-                 trim(regexp_replace(text, '[ \\t\\n\\r]+', ' ', 'g')) AS t
-          FROM documents),
-        w AS (SELECT doc_id, {words} AS w, t FROM nt),
-        bg AS (
-          SELECT DISTINCT g FROM (
-            SELECT unnest({_DECON_GRAMS.format(w='(w[11:30])')}) AS g
-            FROM w WHERE doc_id % 50 = 0)),
-        hits AS (
-          SELECT DISTINCT doc_id, g FROM (
-            SELECT doc_id, unnest({_DECON_GRAMS.format(w='w')}) AS g
-            FROM w) dg JOIN bg USING (g)),
-        raw AS (
-          SELECT h.doc_id,
-                 greatest(1, strpos(nt.t, h.g) - {pad}) AS s,
-                 least(length(nt.t) + 1,
-                       strpos(nt.t, h.g) + length(h.g) + {pad}) AS e
-          FROM hits h JOIN nt ON h.doc_id = nt.doc_id),
-        ord AS (
-          SELECT doc_id, s, e,
-                 CASE WHEN s <= max(e) OVER (
-                        PARTITION BY doc_id ORDER BY s, e
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-                      THEN 0 ELSE 1 END AS ni
-          FROM raw),
-        isl AS (
-          SELECT doc_id, s, e,
-                 sum(ni) OVER (PARTITION BY doc_id ORDER BY s, e
-                               ROWS UNBOUNDED PRECEDING) AS island
-          FROM ord)
-        SELECT doc_id, min(s)::BIGINT AS span_start,
-               (max(e) - min(s))::BIGINT AS span_len
-        FROM isl GROUP BY doc_id, island
-    """
-
-
-def _decontaminate_rewrite_sql(pad: int = 30) -> str:
-    """Cleaned text via the same islands merge + LAG piece extraction:
-    piece_i = substr(t, prev_end, start_i - prev_end), plus the tail
-    after the last span; non-empty pieces joined by one space."""
-    spans = _decontaminate_spans_sql(pad)
-    return f"""
-        WITH spans AS ({spans}),
-        nt AS (
-          SELECT doc_id,
-                 trim(regexp_replace(text, '[ \\t\\n\\r]+', ' ', 'g')) AS t
-          FROM documents),
-        merged AS (
-          SELECT doc_id, span_start AS s, span_start + span_len AS e
-          FROM spans),
-        withprev AS (
-          SELECT doc_id, s, e,
-                 lag(e, 1, 1) OVER (PARTITION BY doc_id ORDER BY s) AS pe
-          FROM merged),
-        pieces AS (
-          SELECT w.doc_id, w.s AS ord,
-                 substr(nt.t, w.pe::INT, (w.s - w.pe)::INT) AS piece
-          FROM withprev w JOIN nt ON w.doc_id = nt.doc_id
-          UNION ALL
-          SELECT m.doc_id, 2147483647 AS ord,
-                 substr(nt.t, max(m.e)::INT) AS piece
-          FROM merged m JOIN nt ON m.doc_id = nt.doc_id
-          GROUP BY m.doc_id, nt.t)
-        SELECT doc_id,
-               coalesce(string_agg(CASE WHEN piece <> '' THEN piece END,
-                                   ' ' ORDER BY ord), '') AS cleaned_text
-        FROM pieces GROUP BY doc_id
-    """
-
-
-def _decontaminate_sql() -> str:
-    words = (
-        "list_filter(string_split_regex(trim(text), '[ \\t\\n\\r]+'),"
-        " x -> x <> '')"
-    )
-    return f"""
-        WITH w AS (
-          SELECT doc_id, {words} AS w FROM documents),
-        bg AS (
-          SELECT DISTINCT g FROM (
-            SELECT unnest({_DECON_GRAMS.format(w='(w[11:30])')}) AS g
-            FROM w WHERE doc_id % 50 = 0)),
-        dg AS (
-          SELECT DISTINCT doc_id, g FROM (
-            SELECT doc_id, unnest({_DECON_GRAMS.format(w='w')}) AS g
-            FROM w))
-        SELECT doc_id, count(*)::BIGINT AS n_hits
-        FROM dg JOIN bg USING (g)
-        GROUP BY doc_id
-    """
-
-
 # ======================================================================
 # embeddings: similarity search
 # ======================================================================
@@ -1612,72 +1033,6 @@ def langid_noisy_texts(spark, sf_dir):
 # by the Spark query and the generated SQL oracle.
 _MIX_RATES = {"en": 0.25, "de": 0.5, "fr": 0.5, "es": 0.4}
 
-# boilerplate lines for the line-dedup query — injected identically by
-# the Spark builder and the DuckDB oracle (the _URL_VARIANTS pattern):
-# every doc gets B1/B2 repeated around its body, doc_id%3==0 gets B1 a
-# third time, doc_id%5==0 gets its own body repeated (dedupe must drop
-# the long content line too, not just short boilerplate).
-_BOILER = ("NAVIGATION MENU", "Subscribe to our newsletter",
-           "(c) example site 2026")
-
-
-def _boiler_messy_docs(spark, sf_dir):
-    """documents with boilerplate lines injected around each body —
-    the shared fixture both line-cleaning queries (and their SQL
-    oracles, via _boiler_messy_sql) operate on."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    b1, b2, b3 = [F.lit(x) for x in _BOILER]
-    nl = F.lit("\n")
-    base = F.concat_ws("\n", b1, b2, F.col("text"), b1, b2, b3)
-    messy = F.when(
-        F.col("doc_id") % 3 == 0, F.concat(base, nl, b1)
-    ).otherwise(base)
-    messy = F.when(
-        F.col("doc_id") % 5 == 0, F.concat(messy, nl, F.col("text"))
-    ).otherwise(messy)
-    return docs.select("doc_id", messy.alias("text"))
-
-
-def docs_common_line_filtered(spark, sf_dir):
-    """CROSS-doc boilerplate removal (the actual C4 rule: a line that
-    appears in >= 3 distinct documents is boilerplate): remove every
-    corpus-common line from every doc, order preserved; within-doc
-    duplicates of non-common lines survive (composes with
-    docs_line_deduped). Two shuffles, both inherent to a cross-doc
-    operator (line-count agg with map-side combine + per-doc rebuild);
-    the common set joins back as a BROADCAST anti-join, so the
-    corpus-sized side never shuffles for the join. Oracle = the same
-    two-phase computation in DuckDB over the identical injected
-    corpus."""
-    from hyperpolyglot_spark.functions.textclean import common_line_filter
-
-    out = common_line_filter(_boiler_messy_docs(spark, sf_dir), min_docs=3)
-    return out.select(
-        "doc_id",
-        F.md5("cleaned_text").alias("cleaned_md5"),
-        F.length("cleaned_text").alias("cleaned_len"),
-        "n_lines_removed",
-    )
-
-
-def docs_line_deduped(spark, sf_dir):
-    """C4-style within-doc duplicate-line removal
-    (functions/textclean.py): exact duplicate lines dropped, FIRST
-    occurrence kept in order — the boilerplate-stripping pass web
-    cleaning runs before dedup/langid. Pure per-row array expressions
-    (no shuffle, no Python); the oracle runs the SAME formulation in
-    DuckDB (list comprehension + list_position), so this is a
-    structural two-engine check, not a frozen table."""
-    from hyperpolyglot_spark.functions.textclean import with_deduped_lines
-
-    out = with_deduped_lines(_boiler_messy_docs(spark, sf_dir))
-    return out.select(
-        "doc_id",
-        F.md5("cleaned_text").alias("cleaned_md5"),
-        F.length("cleaned_text").alias("cleaned_len"),
-        "n_lines_removed",
-    )
-
 
 def training_mix_sample(spark, sf_dir):
     """Dataset-mixing stage: deterministic stratified down-sampling by
@@ -1713,46 +1068,6 @@ def source_rule_rollup(spark, sf_dir):
             F.coalesce(F.col("drop_rule"), F.lit("kept")).alias("outcome"),
         )
         .agg(F.count("*").alias("n"))
-    )
-
-
-def video_media_features(spark, sf_dir):
-    """Video-column operator as a driver row (VERDICT r5 #5, closing
-    the media triad): MJPEG-in-AVI clips synthesized deterministically
-    from doc_id (datagen/video — 8x8 block-constant frames with a unit
-    quant table, so baseline JPEG is EXACT), decoded DISTRIBUTED by
-    the real RIFF walk + per-frame T.81 JPEG decode inside
-    video_features (mapInPandas). The frozen oracle recomputes the
-    features from the RAW frames WITHOUT the AVI/JPEG container — so
-    the row checks container parse + entropy decode + feature math,
-    never one implementation against itself."""
-    import pandas as pd
-
-    from hyperpolyglot_spark.datagen.video import synth_avi
-    from hyperpolyglot_spark.operators.multimodal import video_features
-
-    @F.pandas_udf("binary")
-    def avi_udf(ids: pd.Series) -> pd.Series:
-        return ids.map(lambda i: synth_avi(int(i)))
-
-    docs = (
-        _t(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") < 50)
-        .select("doc_id")
-    )
-    media = docs.select(
-        F.col("doc_id").alias("media_id"), avi_udf("doc_id").alias("payload")
-    )
-    out = video_features(media)
-    return out.select(
-        F.col("media_id").alias("doc_id"),
-        "n_frames",
-        "width",
-        "height",
-        "fps",
-        "duration_ms",
-        "mean_luma",
-        "motion",
     )
 
 
@@ -1794,101 +1109,55 @@ def embedding_knn_blocked(spark, sf_dir):
 # ======================================================================
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # ORDER MATTERS: the driver's correctness gate checks the FIRST 50
-    # entries; the registry holds more, so the tail rotates each round
-    # (VERDICT r4 #2: no entry goes more than two rounds without a
-    # driver signal). Round-6 rotation: the 14 entries demoted in r05
-    # (docs_matching_regex .. events_top_users, last driver-green r04
-    # — r06 is their deadline) are promoted back into the window, and
-    # 18 entries that were driver-green in r05 AND whose specs did not
-    # change this round take the tail (they must return by r07).
-    # Every entry keeps its in-repo oracle coverage every pytest run
-    # (tests/test_entry_oracle.py runs ALL entries).
+    # tests/test_entry_oracle.py checks every entry against its oracle
     return {
-        # --- promoted back this round (absent from the driver window
-        # in r05 only; deadline rotation) ---
+        # --- document text operators ---
+        "lang_breakdown": lang_breakdown,
+        "source_lang_matrix": source_lang_matrix,
+        "source_langs_csv": source_langs_csv,
+        "doc_token_stats": doc_token_stats,
+        "doc_quality_scores": doc_quality_scores,
+        "regex_marker_counts": regex_marker_counts,
+        "family_breakdown": family_breakdown,
         "docs_matching_regex": docs_matching_regex,
         "lang_chars_zscore": lang_chars_zscore,
-        "regex_marker_counts": regex_marker_counts,
-        "source_lang_matrix": source_lang_matrix,
-        "orders_with_heavy_items": orders_with_heavy_items,
-        "top2_orders_per_customer": top2_orders_per_customer,
-        "revenue_pct_by_returnflag": revenue_pct_by_returnflag,
-        "min_cost_supplier_per_nation": min_cost_supplier_per_nation,
-        "nation_customer_supplier_counts": nation_customer_supplier_counts,
-        "events_value_stats": events_value_stats,
-        "events_salted_counts": events_salted_counts,
-        "events_json_props": events_json_props,
-        "events_hourly": events_hourly,
-        "events_top_users": events_top_users,
-        # --- standing window ---
-        "lang_breakdown": lang_breakdown,
-        "doc_token_stats": doc_token_stats,
-        "exact_dedup_documents": exact_dedup_documents,
-        "neardup_minhash_pairs": neardup_minhash_pairs,
-        "neardup_incremental": neardup_incremental,
-        "neardup_incremental_indexed": neardup_incremental_indexed,
-        "doc_token_nb": doc_token_nb,
-        "classifier_training_agg": classifier_training_agg,
-        "doc_perplexity": doc_perplexity,
-        "hashed_gram_buckets": hashed_gram_buckets,
+        "lang_median_chars": lang_median_chars,
+        "doc_script_mix": doc_script_mix,
+        "doc_tokens": doc_tokens,
         "per_strategy_report": per_strategy_report,
+        "canonical_url_dedup": canonical_url_dedup,
+        "training_mix_sample": training_mix_sample,
+        # --- the label spec: quality ladder, scrub, perplexity ---
         "docs_keep_drop": docs_keep_drop,
         "docs_scrubbed": docs_scrubbed,
-        "doc_tokens": doc_tokens,
+        "source_rule_rollup": source_rule_rollup,
+        "doc_perplexity": doc_perplexity,
+        "unresolved_disposition": unresolved_disposition,
+        # --- language ID ---
+        "classifier_training_agg": classifier_training_agg,
+        "hashed_gram_buckets": hashed_gram_buckets,
+        "doc_token_nb": doc_token_nb,
         "langid_predict_documents": langid_predict_documents,
         "langid_unresolved": langid_unresolved,
         "langid_short_texts": langid_short_texts,
-        "unresolved_disposition": unresolved_disposition,
-        "canonical_url_dedup": canonical_url_dedup,
-        "decontaminate_documents": decontaminate_documents,
-        "decontaminate_spans": decontaminate_spans,
-        "decontaminate_rewrite_docs": decontaminate_rewrite_docs,
-        "audio_media_features": audio_media_features,
+        "langid_code_switch_spans": langid_code_switch_spans,
+        "langid_noisy_texts": langid_noisy_texts,
+        # --- dedup ---
+        "exact_dedup_documents": exact_dedup_documents,
+        "neardup_jaccard_pairs": neardup_jaccard_pairs,
+        "neardup_minhash_pairs": neardup_minhash_pairs,
+        "neardup_simhash_pairs": neardup_simhash_pairs,
+        "neardup_incremental": neardup_incremental,
+        "neardup_incremental_indexed": neardup_incremental_indexed,
+        # --- embeddings ---
         "embedding_topk": embedding_topk,
         "embedding_neardup": embedding_neardup,
-        "embedding_knn": embedding_knn,
-        "embedding_ann_ivf": embedding_ann_ivf,
-        "embedding_knn_blocked": embedding_knn_blocked,
-        # --- round-6 new operators ---
-        "langid_code_switch_spans": langid_code_switch_spans,
-        "semantic_dedup_embeddings": semantic_dedup_embeddings,
-        "video_media_features": video_media_features,
-        "langid_noisy_texts": langid_noisy_texts,
-        "training_mix_sample": training_mix_sample,
-        "source_rule_rollup": source_rule_rollup,
-        "docs_line_deduped": docs_line_deduped,
-        "docs_common_line_filtered": docs_common_line_filtered,
-        # --- rotation tail (22 entries past the driver's 50-entry
-        # window this round; ALL driver-green in r05, specs untouched
-        # in r06, still oracled in-repo every pytest run; promote back
-        # in r07 — none may sit out two consecutive rounds) ---
-        "q1_pricing_summary": q1_pricing_summary,
-        "q3_shipping_priority": q3_shipping_priority,
-        "q5_region_revenue": q5_region_revenue,
-        "top_suppliers": top_suppliers,
-        "customers_without_orders": customers_without_orders,
-        "rollup_order_priority": rollup_order_priority,
-        "distinct_types_per_brand": distinct_types_per_brand,
-        "segment_set_ops": segment_set_ops,
-        "sql_api_revenue_by_priority": sql_api_revenue_by_priority,
-        "source_langs_csv": source_langs_csv,
-        "events_type_pivot": events_type_pivot,
-        "orders_cube": orders_cube,
-        "events_sessionization": events_sessionization,
-        "purchases_asof_click": purchases_asof_click,
-        "clicks_in_purchase_windows": clicks_in_purchase_windows,
-        "lang_median_chars": lang_median_chars,
-        "family_breakdown": family_breakdown,
-        "doc_quality_scores": doc_quality_scores,
-        "doc_script_mix": doc_script_mix,
         "embedding_label_centroids": embedding_label_centroids,
-        "neardup_jaccard_pairs": neardup_jaccard_pairs,
-        "neardup_simhash_pairs": neardup_simhash_pairs,
+        "embedding_knn": embedding_knn,
+        "embedding_knn_blocked": embedding_knn_blocked,
+        "embedding_ann_ivf": embedding_ann_ivf,
+        "semantic_dedup_embeddings": semantic_dedup_embeddings,
     }
-
-
-_WORDS = "list_filter(string_split_regex(text, '[ \\t\\n\\r]+'), x -> x <> '')"
 
 
 def _lang_info_values() -> str:
@@ -1914,158 +1183,6 @@ def _script_mix_sql() -> str:
     return f"SELECT doc_id, lang, {cols} FROM documents"
 
 
-def _keep_drop_sql() -> str:
-    """DuckDB form of the quality signals + rule ladder, generated from
-    the SAME dims (symbol class, spaceless class, stopword set, RULES
-    table) py_signals/py_keep_drop use — the spec's independent
-    oracle. A NULL gated signal never fires its rule (CASE WHEN NULL
-    falls through), matching py_keep_drop."""
-    from hyperpolyglot_spark.functions.langdata import ALL_STOPWORDS
-    from hyperpolyglot_spark.functions.langid import NORM_FROM, NORM_TO
-    from hyperpolyglot_spark.functions.quality import (
-        _HANGUL_PARTICLE_RE_S,
-        _REP_CHAR_CAP,
-        _REP_CHAR_N,
-        _SPACELESS_CLASS,
-        _SYMBOL_CLASS,
-        RULES,
-        SPACELESS_THRESHOLD,
-    )
-
-    # r6: same invisible-char normalization as py_signals
-    # (langid.normalize_scoring_text) — DuckDB translate() deletes chars
-    # beyond len(to) (SQL-standard rule)
-    _nf, _nt = NORM_FROM, NORM_TO
-    # Stopword membership as one substring probe: ' <w> ' occurs in
-    # ' <stopwords joined by spaces> ' exactly when w is a stopword, since
-    # no stopword is empty or holds a space and _WORDS splits on spaces.
-    # A list_contains over the 1,374 literals took 15.3 s, against 0.9 s,
-    # on the 300 extracted pages of tests/test_spec_functions.py.
-    # SQL-escape: the Afrikaans stopword 'n carries an apostrophe
-    if not all(w and " " not in w for w in ALL_STOPWORDS):
-        raise ValueError("a stopword is empty or holds a space")
-    stops = " ".join(sorted(ALL_STOPWORDS)).replace("'", "''")
-    ladder = "CASE"
-    for rule_id, signal, op, _thr in RULES:
-        if signal == "is_vendor_url":
-            continue  # documents carry no url; the rule can't fire
-        thr = repr(_thr)
-        ladder += f" WHEN {signal} {op} {thr} THEN '{rule_id}'"
-    ladder += " ELSE NULL END"
-    return f"""
-        WITH sig0 AS (
-          SELECT doc_id,
-                 length(text) AS n_chars,
-                 len(w) AS n_words,
-                 (length(text) - length(regexp_replace(text, '{_SYMBOL_CLASS}', '', 'g')))::DOUBLE
-                   / greatest(length(text), 1) AS symbol_ratio,
-                 CASE WHEN len(w) >= 3
-                      THEN 1.0 - len(list_distinct([array_to_string(w[i:i+2], ' ')
-                                                    for i in range(1, len(w) - 1)]))::DOUBLE
-                                 / (len(w) - 2)
-                      ELSE 0.0 END AS rep3_ratio,
-                 len(list_filter(w, x -> instr(' {stops} ', ' ' || lower(x) || ' ') > 0
-                                          OR regexp_matches(x, '{_HANGUL_PARTICLE_RE_S}')))::DOUBLE
-                   / greatest(len(w), 1) AS stop_density,
-                 (length(text) - length(regexp_replace(text, '{_SPACELESS_CLASS}', '', 'g')))::DOUBLE
-                   / greatest(length(text), 1) AS spaceless_ratio,
-                 substring(text, 1, {_REP_CHAR_CAP}) AS tc
-          FROM (SELECT doc_id, text, {_WORDS} AS w
-                FROM (SELECT doc_id,
-                             translate(text, '{_nf}', '{_nt}') AS text
-                      FROM documents))
-        ), sig AS (
-          SELECT *,
-                 spaceless_ratio > {SPACELESS_THRESHOLD} AS is_spaceless,
-                 CASE WHEN spaceless_ratio > {SPACELESS_THRESHOLD} THEN NULL
-                      ELSE n_chars::DOUBLE END AS n_chars_gated,
-                 CASE WHEN spaceless_ratio > {SPACELESS_THRESHOLD}
-                      THEN n_chars::DOUBLE ELSE NULL END AS n_chars_spaceless_gated,
-                 CASE WHEN spaceless_ratio > {SPACELESS_THRESHOLD} THEN NULL
-                      ELSE rep3_ratio END AS rep3_gated,
-                 CASE WHEN spaceless_ratio <= {SPACELESS_THRESHOLD} THEN NULL
-                      WHEN length(tc) >= {_REP_CHAR_N}
-                      THEN 1.0 - len(list_distinct([substring(tc, i, {_REP_CHAR_N})
-                                    for i in range(1, length(tc) - {_REP_CHAR_N - 1})]))::DOUBLE
-                                 / (length(tc) - {_REP_CHAR_N - 1})
-                      ELSE 0.0 END AS rep_char_gated,
-                 CASE WHEN spaceless_ratio > {SPACELESS_THRESHOLD} THEN NULL
-                      ELSE stop_density END AS stop_density_gated
-          FROM sig0
-        )
-        SELECT doc_id,
-               n_chars::BIGINT AS n_chars,
-               n_words::BIGINT AS n_words,
-               round(symbol_ratio, 6) AS symbol_ratio,
-               round(rep3_ratio, 6) AS rep3_ratio,
-               round(stop_density, 6) AS stop_density,
-               round(spaceless_ratio, 6) AS spaceless_ratio,
-               ({ladder}) IS NULL AS keep,
-               {ladder} AS drop_rule
-        FROM sig
-    """
-
-
-def _common_line_sql() -> str:
-    """Two-phase cross-doc boilerplate filter in DuckDB over the same
-    injected corpus: count distinct docs per line, materialize the
-    common set as ONE list, per-doc list-comprehension filter."""
-    messy = _boiler_messy_expr_sql()
-    return f"""
-        WITH src AS (SELECT doc_id, {messy} AS _m FROM documents),
-        l AS (SELECT doc_id, string_split(_m, chr(10)) AS ls FROM src),
-        lines AS (SELECT doc_id, unnest(ls) AS line FROM l),
-        common AS (
-          SELECT line FROM lines GROUP BY line
-          HAVING count(DISTINCT doc_id) >= 3),
-        cset AS (SELECT coalesce(list(line), []) AS cl FROM common)
-        SELECT doc_id,
-               md5(array_to_string(kept, chr(10))) AS cleaned_md5,
-               length(array_to_string(kept, chr(10))) AS cleaned_len,
-               len(ls) - len(kept) AS n_lines_removed
-        FROM (
-          SELECT doc_id, ls,
-                 [x for x in ls if NOT list_contains(cset.cl, x)] AS kept
-          FROM l, cset)
-    """
-
-
-def _boiler_messy_expr_sql() -> str:
-    """SQL form of _boiler_messy_docs' injected text expression."""
-    b1, b2, b3 = _BOILER
-    nl = "chr(10)"
-    base = (
-        f"'{b1}' || {nl} || '{b2}' || {nl} || text || {nl} || "
-        f"'{b1}' || {nl} || '{b2}' || {nl} || '{b3}'"
-    )
-    messy = (
-        f"CASE WHEN doc_id % 3 = 0 THEN {base} || {nl} || '{b1}' "
-        f"ELSE {base} END"
-    )
-    return (
-        f"CASE WHEN doc_id % 5 = 0 THEN ({messy}) || {nl} || text "
-        f"ELSE ({messy}) END"
-    )
-
-
-def _line_dedup_sql() -> str:
-    """Shared boilerplate injection + the shared DuckDB line-dedup
-    formulation (functions/textclean.dedupe_lines_sql)."""
-    from hyperpolyglot_spark.functions.textclean import dedupe_lines_sql
-
-    messy = _boiler_messy_expr_sql()
-    cleaned, removed = dedupe_lines_sql("_m")
-    return f"""
-        SELECT doc_id, md5(cleaned_text) AS cleaned_md5,
-               length(cleaned_text) AS cleaned_len,
-               {removed} AS n_lines_removed
-        FROM (
-          SELECT doc_id, _m,
-                 {cleaned} AS cleaned_text
-          FROM (SELECT doc_id, {messy} AS _m FROM documents))
-    """
-
-
 def _training_mix_sql() -> str:
     """Generated from the SAME rates table + threshold function the
     Spark query uses (operators/mixing.py) — the decision predicate is
@@ -2080,36 +1197,13 @@ def _source_rollup_sql() -> str:
     generated keep_drop SQL as a CTE (one source of truth for the
     ladder), join source back on, group."""
     return f"""
-        WITH kd AS ({_keep_drop_sql()})
+        WITH kd AS ({keep_drop_sql()})
         SELECT d.source,
                coalesce(kd.drop_rule, 'kept') AS outcome,
                count(*) AS n
         FROM kd JOIN documents d USING (doc_id)
         GROUP BY d.source, coalesce(kd.drop_rule, 'kept')
     """
-
-
-def _scrub_sql() -> str:
-    """Sequential scrub rewrites + counts, generated from
-    SCRUB_PATTERNS: count on the pre-rule text (like re.subn), then
-    nest the replacement for the next rule."""
-    from hyperpolyglot_spark.functions.scrub import SCRUB_PATTERNS
-
-    expr = "text"
-    counts = []
-    for name, pat, rep in SCRUB_PATTERNS:
-        ci = name.startswith("toxicity")
-        opts = "'gi'" if ci else "'g'"
-        copts = ", 0, 'i'" if ci else ""
-        counts.append(
-            f"len(regexp_extract_all({expr}, '{pat}'{copts}))::INT"
-            f" AS scrub_{name}"
-        )
-        expr = f"regexp_replace({expr}, '{pat}', '{rep}', {opts})"
-    return (
-        f"SELECT doc_id, {expr} AS scrubbed_text, {', '.join(counts)} "
-        "FROM documents"
-    )
 
 
 def _marker_case_sql() -> str:
@@ -2122,6 +1216,8 @@ def _marker_case_sql() -> str:
         for lang, pat in MARKER_RULES.items()
     )
     return f"(CASE lang {whens} ELSE false END)"
+
+
 # word-3-gram shingles, aligned with dedup.word_shingles /
 # _distinct_shingles_col: a doc with 1-2 words emits its whole text as a
 # single shingle (NOT the empty set), an empty doc emits none.
@@ -2135,7 +1231,7 @@ _GRAMS3 = (
 _INCREMENTAL_SQL = f"""
     WITH g AS (
       SELECT doc_id, {_GRAMS3} AS grams
-      FROM (SELECT doc_id, {_WORDS} AS w FROM documents)
+      FROM (SELECT doc_id, {WORDS} AS w FROM documents)
     )
     SELECT a.doc_id AS id_new, b.doc_id AS id_old,
            round(len(list_intersect(a.grams, b.grams))::DOUBLE
@@ -2150,215 +1246,26 @@ _INCREMENTAL_SQL = f"""
 """
 
 
+# frozen expected tables live beside this module, so a checkout's
+# oracles always read its own tables
+_EXPECTED_DIR = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "data", "expected_sf0.01"
+)
+
+
+def _frozen(name: str) -> str:
+    """DuckDB scan of the frozen expected table ``name``."""
+    path = os.path.join(_EXPECTED_DIR, f"{name}.parquet").replace("'", "''")
+    return f"read_parquet('{path}')"
+
+
 def oracle_sql() -> dict[str, str]:
     return {
-        "q1_pricing_summary": """
-            SELECT l_returnflag, l_linestatus,
-                   round(sum(l_quantity), 4) AS sum_qty,
-                   round(sum(l_extendedprice), 4) AS sum_base_price,
-                   round(sum(l_extendedprice * (1 - l_discount)), 4) AS sum_disc_price,
-                   round(avg(l_quantity), 6) AS avg_qty,
-                   round(avg(l_extendedprice), 6) AS avg_price,
-                   count(*) AS count_order
-            FROM lineitem
-            WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-            GROUP BY l_returnflag, l_linestatus
-        """,
-        "q3_shipping_priority": """
-            SELECT l_orderkey, o_orderdate,
-                   round(sum(l_extendedprice * (1 - l_discount)), 4) AS revenue
-            FROM lineitem
-            JOIN orders ON l_orderkey = o_orderkey
-            JOIN customer ON o_custkey = c_custkey
-            WHERE c_mktsegment = 'BUILDING'
-              AND o_orderdate < TIMESTAMP '1995-03-15 00:00:00'
-              AND l_shipdate > TIMESTAMP '1995-03-15 00:00:00'
-            GROUP BY l_orderkey, o_orderdate
-            ORDER BY revenue DESC, l_orderkey
-            LIMIT 10
-        """,
-        "q5_region_revenue": """
-            SELECT n_name,
-                   round(sum(l_extendedprice * (1 - l_discount)), 4) AS revenue
-            FROM lineitem
-            JOIN orders ON l_orderkey = o_orderkey
-            JOIN supplier ON l_suppkey = s_suppkey
-            JOIN customer ON o_custkey = c_custkey AND c_nationkey = s_nationkey
-            JOIN nation ON s_nationkey = n_nationkey
-            JOIN region ON n_regionkey = r_regionkey
-            WHERE r_name = 'ASIA'
-            GROUP BY n_name
-        """,
-        "top_suppliers": """
-            SELECT s_suppkey, s_name, s_acctbal
-            FROM supplier ORDER BY s_acctbal DESC, s_suppkey LIMIT 5
-        """,
-        "customers_without_orders": """
-            SELECT c_custkey, c_name FROM customer c
-            WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
-        """,
-        "orders_with_heavy_items": """
-            SELECT o_orderkey, o_custkey, o_totalprice FROM orders o
-            WHERE EXISTS (SELECT 1 FROM lineitem l
-                          WHERE l.l_orderkey = o.o_orderkey AND l.l_quantity > 49)
-        """,
-        "top2_orders_per_customer": """
-            SELECT o_custkey, o_orderkey, o_totalprice, rn FROM (
-              SELECT o_custkey, o_orderkey, o_totalprice,
-                     row_number() OVER (PARTITION BY o_custkey
-                                        ORDER BY o_totalprice DESC, o_orderkey) AS rn
-              FROM orders) WHERE rn <= 2
-        """,
-        "revenue_pct_by_returnflag": """
-            SELECT l_returnflag,
-                   round(rev, 4) AS revenue,
-                   round(rev * 100.0 / sum(rev) OVER (), 6) AS pct
-            FROM (SELECT l_returnflag, sum(l_extendedprice) AS rev
-                  FROM lineitem GROUP BY l_returnflag)
-        """,
-        "rollup_order_priority": """
-            SELECT o_orderpriority, o_orderstatus,
-                   count(*) AS n_orders,
-                   round(sum(o_totalprice), 4) AS total_price
-            FROM orders GROUP BY ROLLUP (o_orderpriority, o_orderstatus)
-        """,
-        "distinct_types_per_brand": """
-            SELECT p_brand,
-                   count(DISTINCT p_type) AS n_types,
-                   count(DISTINCT p_size) AS n_sizes,
-                   round(avg(p_retailprice), 6) AS avg_price
-            FROM part GROUP BY p_brand
-        """,
-        "segment_set_ops": """
-            SELECT c_custkey FROM (
-              (SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'
-               UNION
-               SELECT c_custkey FROM customer WHERE c_mktsegment = 'MACHINERY')
-              INTERSECT
-              SELECT c_custkey FROM customer WHERE c_acctbal > 5000
-              EXCEPT
-              SELECT c_custkey FROM customer WHERE c_nationkey = 3)
-        """,
-        "min_cost_supplier_per_nation": """
-            SELECT n_name, s_suppkey, s_name, s_acctbal FROM (
-              SELECT s.*, row_number() OVER (PARTITION BY s_nationkey
-                                             ORDER BY s_acctbal, s_suppkey) AS rk
-              FROM supplier s) b
-            JOIN nation ON b.s_nationkey = n_nationkey
-            WHERE rk = 1
-        """,
-        "nation_customer_supplier_counts": """
-            SELECT coalesce(c.nationkey, s.nationkey) AS nationkey,
-                   coalesce(n_customers, 0) AS n_customers,
-                   coalesce(n_suppliers, 0) AS n_suppliers
-            FROM (SELECT c_nationkey AS nationkey, count(*) AS n_customers
-                  FROM customer GROUP BY 1) c
-            FULL OUTER JOIN
-                 (SELECT s_nationkey AS nationkey, count(*) AS n_suppliers
-                  FROM supplier GROUP BY 1) s
-              USING (nationkey)
-        """,
-        "sql_api_revenue_by_priority": """
-            SELECT o_orderpriority, count(*) AS n_orders,
-                   round(sum(o_totalprice), 4) AS total_price,
-                   round(avg(o_totalprice), 6) AS avg_price
-            FROM orders GROUP BY o_orderpriority
-        """,
-        "events_value_stats": """
-            SELECT event_type,
-                   round(quantile_cont(value, 0.5), 6) AS p50,
-                   round(quantile_cont(value, 0.95), 6) AS p95,
-                   round(stddev_samp(value), 6) AS sd,
-                   round(min(value), 4) AS vmin,
-                   round(max(value), 4) AS vmax
-            FROM events GROUP BY event_type
-        """,
-        "events_salted_counts": """
-            SELECT event_type, count(*) AS n,
-                   round(sum(value), 4) AS total_value
-            FROM events GROUP BY event_type
-        """,
-        "events_json_props": """
-            SELECT event_type,
-                   -- // = integer division (a plain / then ::INT would
-                   -- ROUND in DuckDB while Spark's cast truncates)
-                   (json_extract(props, '$.k')::INT // 10) AS k_bucket,
-                   count(*) AS n,
-                   round(avg(json_extract(props, '$.k')::INT), 6) AS avg_k
-            FROM events GROUP BY 1, 2
-        """,
         "source_langs_csv": """
             SELECT source,
                    array_to_string(list_sort(list(DISTINCT lang)), ',') AS langs_csv,
                    count(*) AS docs
             FROM documents GROUP BY source
-        """,
-        "events_hourly": """
-            SELECT date_trunc('hour', ts) AS hour, event_type,
-                   count(*) AS n, round(sum(value), 4) AS total_value
-            FROM events GROUP BY 1, 2
-        """,
-        "events_sessionization": """
-            SELECT user_id,
-                   sum(new_session)::BIGINT AS n_sessions,
-                   count(*) AS n_events
-            FROM (
-              SELECT user_id,
-                     CASE WHEN prev_ts IS NULL
-                          OR epoch(ts) - epoch(prev_ts) > 1800
-                          THEN 1 ELSE 0 END AS new_session
-              FROM (SELECT user_id, ts,
-                           lag(ts) OVER (PARTITION BY user_id
-                                         ORDER BY ts, event_id) AS prev_ts
-                    FROM events))
-            GROUP BY user_id
-        """,
-        "events_type_pivot": """
-            SELECT user_id,
-                   count(CASE WHEN event_type = 'click' THEN 1 END) AS n_click,
-                   count(CASE WHEN event_type = 'view' THEN 1 END) AS n_view,
-                   count(CASE WHEN event_type = 'purchase' THEN 1 END) AS n_purchase,
-                   count(CASE WHEN event_type = 'signup' THEN 1 END) AS n_signup,
-                   count(CASE WHEN event_type = 'error' THEN 1 END) AS n_error
-            FROM events GROUP BY user_id
-        """,
-        "purchases_asof_click": """
-            WITH purchases AS (
-              SELECT event_id, user_id, ts FROM events
-              WHERE event_type = 'purchase'
-            ), clicks AS (
-              SELECT user_id, ts AS click_ts, max(event_id) AS click_event_id
-              FROM events WHERE event_type = 'click'
-              GROUP BY user_id, ts
-            )
-            SELECT p.event_id, p.user_id, p.ts, c.click_ts, c.click_event_id
-            FROM purchases p
-            ASOF LEFT JOIN clicks c
-              ON p.user_id = c.user_id AND p.ts >= c.click_ts
-        """,
-        "clicks_in_purchase_windows": """
-            WITH p AS (
-              SELECT event_id AS interval_id, ts AS start_ts,
-                     ts + INTERVAL 30 MINUTE AS end_ts
-              FROM events WHERE event_type = 'purchase'
-            ), c AS (
-              SELECT ts, value FROM events WHERE event_type = 'click'
-            )
-            SELECT interval_id, count(*) AS n_clicks,
-                   round(sum(c.value), 4) AS click_value
-            FROM p JOIN c ON c.ts >= p.start_ts AND c.ts <= p.end_ts
-            GROUP BY interval_id
-        """,
-        "orders_cube": """
-            SELECT o_orderpriority, o_orderstatus,
-                   count(*) AS n_orders,
-                   round(avg(o_totalprice), 6) AS avg_price
-            FROM orders GROUP BY CUBE (o_orderpriority, o_orderstatus)
-        """,
-        "events_top_users": """
-            SELECT user_id, round(sum(value), 4) AS total_value
-            FROM events GROUP BY user_id
-            ORDER BY total_value DESC, user_id LIMIT 10
         """,
         "lang_breakdown": """
             SELECT lang, count(*) AS docs, sum(n_chars)::BIGINT AS chars,
@@ -2380,7 +1287,7 @@ def oracle_sql() -> dict[str, str]:
                      list_prepend(0::BIGINT,
                        [unicode(c)::BIGINT for c in string_split(text, '') if c <> '']),
                      (acc, c) -> (acc * 31 + c) % 1000000007) AS fingerprint
-            FROM (SELECT doc_id, text, {_WORDS} AS w FROM documents)
+            FROM (SELECT doc_id, text, {WORDS} AS w FROM documents)
         """,
         "doc_quality_scores": f"""
             SELECT doc_id,
@@ -2389,7 +1296,7 @@ def oracle_sql() -> dict[str, str]:
                           + CASE WHEN length(text)::DOUBLE / greatest(len(w), 1)
                                       BETWEEN 3.0 AND 12.0
                                  THEN 1.0 ELSE 0.5 END) / 3.0, 6) AS quality_score
-            FROM (SELECT doc_id, text, {_WORDS} AS w FROM documents)
+            FROM (SELECT doc_id, text, {WORDS} AS w FROM documents)
         """,
         "regex_marker_counts": """
             SELECT doc_id,
@@ -2430,7 +1337,7 @@ def oracle_sql() -> dict[str, str]:
         "neardup_jaccard_pairs": f"""
             WITH g AS (
               SELECT doc_id, lang, {_GRAMS3} AS grams
-              FROM (SELECT doc_id, lang, {_WORDS} AS w FROM documents)
+              FROM (SELECT doc_id, lang, {WORDS} AS w FROM documents)
             )
             SELECT a.doc_id AS id_a, b.doc_id AS id_b,
                    round(len(list_intersect(a.grams, b.grams))::DOUBLE
@@ -2452,7 +1359,7 @@ def oracle_sql() -> dict[str, str]:
             -- exact (equality also asserted in tests/test_operators.py)
             WITH g AS (
               SELECT doc_id, {_GRAMS3} AS grams
-              FROM (SELECT doc_id, {_WORDS} AS w FROM documents)
+              FROM (SELECT doc_id, {WORDS} AS w FROM documents)
             )
             SELECT a.doc_id AS id_a, b.doc_id AS id_b,
                    round(len(list_intersect(a.grams, b.grams))::DOUBLE
@@ -2493,8 +1400,8 @@ def oracle_sql() -> dict[str, str]:
             WHERE rk <= 200
         """,
         "doc_script_mix": _script_mix_sql(),
-        "docs_keep_drop": _keep_drop_sql(),
-        "docs_scrubbed": _scrub_sql(),
+        "docs_keep_drop": keep_drop_sql(),
+        "docs_scrubbed": scrub_sql(),
         "per_strategy_report": f"""
             SELECT strategy, lang, count(*) AS docs,
                    array_to_string(list_sort(list(doc_id))[1:5], ',')
@@ -2569,79 +1476,65 @@ def oracle_sql() -> dict[str, str]:
             WHERE round(list_cosine_similarity(a.embedding::DOUBLE[],
                                                b.embedding::DOUBLE[]), 6) > 0.45
         """,
-        # --- frozen-expected oracles (tools/gen_expected.py): the three
-        # non-SQL-expressible queries (blake2b simhash, NB classify, IVF
-        # probe). Expected tables are computed from the pure-Python
-        # specs INDEPENDENTLY of Spark, cross-checked at generation
-        # time, and frozen at sf0.01 (the driver's correctness scale).
-        "neardup_simhash_pairs": """
+        # --- frozen-expected oracles (tools/gen_expected.py): the
+        # queries DuckDB cannot compute (blake2b simhash, NB classify,
+        # IVF probe, tokenizer UDTF, ...). Expected tables are computed
+        # from the pure-Python specs INDEPENDENTLY of Spark,
+        # cross-checked at generation time, and frozen at sf0.01 (the
+        # scale tests/test_entry_oracle.py runs at).
+        "neardup_simhash_pairs": f"""
             SELECT id_a, id_b, hamming
-            FROM read_parquet('/root/repo/data/expected_sf0.01/neardup_simhash_pairs.parquet')
+            FROM {_frozen("neardup_simhash_pairs")}
         """,
-        "langid_predict_documents": """
+        "langid_predict_documents": f"""
             SELECT doc_id, lang, lang_pred
-            FROM read_parquet('/root/repo/data/expected_sf0.01/langid_predict_documents.parquet')
+            FROM {_frozen("langid_predict_documents")}
         """,
-        "langid_unresolved": """
+        "langid_unresolved": f"""
             SELECT doc_id, lang_pred, strategy
-            FROM read_parquet('/root/repo/data/expected_sf0.01/langid_unresolved.parquet')
+            FROM {_frozen("langid_unresolved")}
         """,
-        "audio_media_features": """
-            SELECT doc_id, sample_rate, n_samples, duration_ms,
-                   rms, zero_cross_rate, peak
-            FROM read_parquet('/root/repo/data/expected_sf0.01/audio_media_features.parquet')
-        """,
-        "langid_short_texts": """
+        "langid_short_texts": f"""
             SELECT doc_id, lang, lang_pred, correct
-            FROM read_parquet('/root/repo/data/expected_sf0.01/langid_short_texts.parquet')
+            FROM {_frozen("langid_short_texts")}
         """,
-        "langid_code_switch_spans": """
+        "langid_code_switch_spans": f"""
             SELECT doc_id, span_idx, span_start, span_len, span_letters,
                    script, lang, dominant_lang, dominant_share, mixed
-            FROM read_parquet('/root/repo/data/expected_sf0.01/langid_code_switch_spans.parquet')
+            FROM {_frozen("langid_code_switch_spans")}
         """,
-        "semantic_dedup_embeddings": """
+        "semantic_dedup_embeddings": f"""
             SELECT vec_id, cell, keep, dup_of, dup_cosine
-            FROM read_parquet('/root/repo/data/expected_sf0.01/semantic_dedup_embeddings.parquet')
+            FROM {_frozen("semantic_dedup_embeddings")}
         """,
-        "video_media_features": """
-            SELECT doc_id, n_frames, width, height, fps, duration_ms,
-                   mean_luma, motion
-            FROM read_parquet('/root/repo/data/expected_sf0.01/video_media_features.parquet')
-        """,
-        "langid_noisy_texts": """
+        "langid_noisy_texts": f"""
             SELECT doc_id, lang, variant, lang_pred, keep, drop_rule,
                    kept_mislabel
-            FROM read_parquet('/root/repo/data/expected_sf0.01/langid_noisy_texts.parquet')
+            FROM {_frozen("langid_noisy_texts")}
         """,
         "training_mix_sample": _training_mix_sql(),
         "source_rule_rollup": _source_rollup_sql(),
-        "docs_line_deduped": _line_dedup_sql(),
-        "docs_common_line_filtered": _common_line_sql(),
-        "unresolved_disposition": """
+        "unresolved_disposition": f"""
             SELECT doc_id, lang_pred, keep, drop_rule, ppl_scored,
                    disposition, disposition_if_drop
-            FROM read_parquet('/root/repo/data/expected_sf0.01/unresolved_disposition.parquet')
+            FROM {_frozen("unresolved_disposition")}
         """,
         "canonical_url_dedup": _canon_dedup_sql(),
-        "decontaminate_documents": _decontaminate_sql(),
-        "decontaminate_spans": _decontaminate_spans_sql(),
-        "decontaminate_rewrite_docs": _decontaminate_rewrite_sql(),
-        "embedding_ann_ivf": """
+        "embedding_ann_ivf": f"""
             SELECT vec_id, round(cosine_raw, 6) AS cosine
-            FROM read_parquet('/root/repo/data/expected_sf0.01/embedding_ann_ivf.parquet')
+            FROM {_frozen("embedding_ann_ivf")}
         """,
-        "doc_tokens": """
+        "doc_tokens": f"""
             SELECT doc_id, pos, kind, token
-            FROM read_parquet('/root/repo/data/expected_sf0.01/doc_tokens.parquet')
+            FROM {_frozen("doc_tokens")}
         """,
-        "embedding_knn_blocked": """
+        "embedding_knn_blocked": f"""
             SELECT vec_id, neighbor_id, cosine, rk
-            FROM read_parquet('/root/repo/data/expected_sf0.01/embedding_knn_blocked.parquet')
+            FROM {_frozen("embedding_knn_blocked")}
         """,
-        "doc_token_nb": """
+        "doc_token_nb": f"""
             SELECT doc_id, lang, lang_pred
-            FROM read_parquet('/root/repo/data/expected_sf0.01/doc_token_nb.parquet')
+            FROM {_frozen("doc_token_nb")}
         """,
         "embedding_knn": """
             SELECT vec_id, neighbor_id, cosine, rk FROM (

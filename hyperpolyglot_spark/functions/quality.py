@@ -9,8 +9,8 @@ codegen.rs:329-336 / README.md:76-83, generalized — SURVEY.md §4 X5).
 
 py_signals/py_keep_drop are the one implementation (the spec); the
 pipeline's fused label UDF and with_keep_drop both run it, and the
-DuckDB SQL generated from the same dims (__spark_entry__._keep_drop_sql)
-is its independent oracle.
+DuckDB SQL generated from the same dims (spec_sql.keep_drop_sql) is its
+independent oracle.
 
 Word split spec: ASCII-whitespace runs (extraction output collapses all
 whitespace to single spaces).

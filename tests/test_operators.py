@@ -1,4 +1,4 @@
-"""Operator tests: dedup, similarity search, text stats, multimodal —
+"""Operator tests: dedup, similarity search, text stats —
 cross-checked against numpy/DuckDB ground truth on the driver testdata."""
 
 import duckdb
@@ -15,11 +15,6 @@ from hyperpolyglot_spark.operators.dedup import (
     simhash64,
     simhash_neardup_pairs,
     word_shingles,
-)
-from hyperpolyglot_spark.operators.multimodal import (
-    decode_image,
-    frame_sample_plan,
-    media_features,
 )
 from hyperpolyglot_spark.operators.similarity import (
     assign_cells,
@@ -286,70 +281,6 @@ def test_text_stats_vs_duckdb(spark, docs):
         assert g["fingerprint"] == fp, doc_id
 
 
-# --- multimodal -----------------------------------------------------------
-def test_decode_stub_contract():
-    with pytest.raises(NotImplementedError):
-        decode_image(b"xx")
-    img = decode_image(b"payload", fake=True)
-    assert img.shape == (4, 4, 3) and img.dtype == np.uint8
-    assert (img == decode_image(b"payload", fake=True)).all()
-
-
-def test_media_features_pipeline(spark, docs):
-    media = docs.limit(30).select(
-        F.col("doc_id").alias("media_id"),
-        F.lit("image").alias("kind"),
-        F.encode("text", "utf-8").alias("payload"),
-    )
-    feats = media_features(media).collect()
-    assert len(feats) == 30
-    for r in feats:
-        assert len(r["features"]) == 16
-        assert r["byte_len"] > 0 and len(r["sha"]) == 64
-    # deterministic across runs
-    feats2 = media_features(media).collect()
-    assert sorted(map(str, feats)) == sorted(map(str, feats2))
-
-
-def test_resize_image_math():
-    from hyperpolyglot_spark.operators.multimodal import resize_image
-
-    img = np.arange(4 * 4 * 3, dtype=np.uint8).reshape(4, 4, 3)
-    up = resize_image(img, 8, 8)
-    assert up.shape == (8, 8, 3)
-    # nearest-neighbor 2x upsample repeats each source pixel
-    assert (up[::2, ::2] == img).all() and (up[1::2, 1::2] == img).all()
-    down = resize_image(img, 2, 2)
-    assert down.shape == (2, 2, 3)
-    assert (down == img[::2, ::2]).all()  # floor-grid picks rows 0,2
-
-
-def test_media_resized_pipeline(spark, docs):
-    from hyperpolyglot_spark.operators.multimodal import media_resized
-
-    media = docs.limit(20).select(
-        F.col("doc_id").alias("media_id"),
-        F.encode("text", "utf-8").alias("payload"),
-    )
-    rows = media_resized(media, 8, 6).collect()
-    assert len(rows) == 20
-    for r in rows:
-        assert (r["height"], r["width"]) == (8, 6)
-        assert len(bytes(r["pixels"])) == 8 * 6 * 3  # fixed batch shape
-    # deterministic across runs
-    rows2 = media_resized(media, 8, 6).collect()
-    assert sorted(map(str, rows)) == sorted(map(str, rows2))
-
-
-def test_frame_sample_plan(spark):
-    df = spark.createDataFrame(
-        [(1, 3500), (2, 999), (3, 0)], "media_id long, duration_ms int"
-    )
-    rows = frame_sample_plan(df).groupBy("media_id").count().collect()
-    counts = {r["media_id"]: r["count"] for r in rows}
-    assert counts == {1: 4, 2: 1, 3: 1}
-
-
 def test_incremental_neardup_join(spark, docs):
     """New-vs-old LSH join: finds injected cross-side dups, never emits
     within-side pairs, and a cross-side identical K x M cluster costs
@@ -387,42 +318,6 @@ def test_incremental_neardup_join(spark, docs):
     )
     out = minhash_neardup_join(big_new, big_old, threshold=0.5)
     assert out.count() == K * M
-
-
-def test_range_join_exact(spark):
-    """Bucketed range join == naive range predicate, including
-    intervals spanning many buckets and boundary-inclusive matches."""
-    from hyperpolyglot_spark.operators.temporal import range_join
-
-    pts = spark.createDataFrame(
-        [(i, f"2024-01-01 00:{i:02d}:00") for i in range(60)],
-        "pid long, ts_s string",
-    ).select("pid", F.col("ts_s").cast("timestamp").alias("ts"))
-    iv = spark.createDataFrame(
-        [
-            (100, "2024-01-01 00:05:00", "2024-01-01 00:10:00"),  # 2 buckets
-            (101, "2024-01-01 00:00:00", "2024-01-01 00:59:00"),  # many
-            (102, "2024-01-01 00:30:30", "2024-01-01 00:30:40"),  # none
-        ],
-        "iid long, s string, e string",
-    ).select(
-        "iid",
-        F.col("s").cast("timestamp").alias("start_ts"),
-        F.col("e").cast("timestamp").alias("end_ts"),
-    )
-    got = {
-        (r["pid"], r["iid"])
-        for r in range_join(pts, iv, "ts", "start_ts", "end_ts", 300).collect()
-    }
-    naive = {
-        (r["pid"], r["iid"])
-        for r in pts.crossJoin(iv)
-        .filter((F.col("ts") >= F.col("start_ts")) & (F.col("ts") <= F.col("end_ts")))
-        .collect()
-    }
-    assert got == naive
-    assert (5, 100) in got and (10, 100) in got  # inclusive bounds
-    assert not any(i == 102 for _, i in got)
 
 
 def test_knn_join_blocked_recall(spark, emb):
@@ -464,990 +359,3 @@ def test_hash64_batch_is_padding_width_independent():
     tricky = ["a", "a\x00", "a\x00\x00", "ab"]
     hs = _hash64_batch(tricky)
     assert len(set(int(x) for x in hs)) == len(tricky)
-
-
-# --- real image decode (round 4) -----------------------------------------
-def _png_chunk(ctype: bytes, data: bytes) -> bytes:
-    import struct, zlib as z
-
-    return (
-        struct.pack(">I", len(data))
-        + ctype
-        + data
-        + struct.pack(">I", z.crc32(ctype + data) & 0xFFFFFFFF)
-    )
-
-
-def _filter_sub_image(rows, ch, filters):
-    """Filter one (sub-)image's byte rows (spec formulas): rows is
-    (h, stride) int64, ch is bytes-per-pixel; returns the filtered
-    stream including the per-row filter-type byte."""
-    import numpy as np
-
-    raw = bytearray()
-    prev = np.zeros(rows.shape[1], dtype=np.int64)
-    for y in range(rows.shape[0]):
-        row = rows[y]
-        ft = filters[y % len(filters)]
-        raw.append(ft)
-        if ft == 0:
-            out = row
-        elif ft == 1:
-            a = np.concatenate([np.zeros(ch, np.int64), row[:-ch]])
-            out = (row - a) % 256
-        elif ft == 2:
-            out = (row - prev) % 256
-        elif ft == 3:
-            a = np.concatenate([np.zeros(ch, np.int64), row[:-ch]])
-            out = (row - (a + prev) // 2) % 256
-        else:  # paeth
-            out = np.zeros(rows.shape[1], np.int64)
-            for x in range(rows.shape[1]):
-                a = row[x - ch] if x >= ch else 0
-                c = prev[x - ch] if x >= ch else 0
-                b = prev[x]
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                pr = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-                out[x] = (row[x] - pr) % 256
-        raw.extend(int(v) for v in out)
-        prev = row
-    return raw
-
-
-def _make_png(pixels, color_type, filters, plte=None, depth=8, interlace=0):
-    """Hand-rolled PNG encoder (spec formulas, independent of the
-    decoder): filter each scanline with the REQUESTED filter type so
-    the test exercises every unfilter branch. ``plte`` (Nx3 uint8)
-    emits a PLTE chunk for color type 3 (pixels are then (h,w,1)
-    palette indices). depth=16 serializes big-endian u2 samples and
-    filters at the doubled bytes-per-pixel, per spec 9.2.
-    interlace=1 emits Adam7: each pass extracted by the spec's pass
-    grid and filtered as its own sub-image."""
-    import struct, zlib as z
-
-    import numpy as np
-
-    arr = np.asarray(pixels, dtype=np.uint16 if depth == 16 else np.uint8)
-    h, w, nch = arr.shape
-    ch = nch * depth // 8  # filter unit: bytes per pixel
-
-    def byte_rows(sub):  # (hp, wp, nch) samples -> (hp, wp*ch) bytes
-        if depth == 16:
-            flat = np.frombuffer(sub.astype(">u2").tobytes(), np.uint8)
-        else:
-            flat = sub.reshape(-1)
-        return flat.astype(np.int64).reshape(sub.shape[0], -1)
-
-    if interlace:
-        passes = (
-            (0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
-            (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2),
-        )
-        raw = bytearray()
-        for x0, y0, dx, dy in passes:
-            sub = arr[y0::dy, x0::dx]
-            if sub.size:
-                raw.extend(_filter_sub_image(byte_rows(sub), ch, filters))
-    else:
-        raw = _filter_sub_image(byte_rows(arr), ch, filters)
-    ihdr = struct.pack(">IIBBBBB", w, h, depth, color_type, 0, 0, interlace)
-    plte_chunk = (
-        _png_chunk(b"PLTE", np.asarray(plte, np.uint8).tobytes())
-        if plte is not None
-        else b""
-    )
-    return (
-        b"\x89PNG\r\n\x1a\n"
-        + _png_chunk(b"IHDR", ihdr)
-        + plte_chunk
-        + _png_chunk(b"IDAT", z.compress(bytes(raw)))
-        + _png_chunk(b"IEND", b"")
-    )
-
-
-def test_decode_png_all_filters():
-    import numpy as np
-
-    rng = np.random.RandomState(7)
-    px = rng.randint(0, 256, size=(5, 4, 3), dtype=np.uint8)
-    for filters in ([0], [1], [2], [3], [4], [0, 1, 2, 3, 4]):
-        b = _make_png(px, color_type=2, filters=filters)
-        got = decode_image(b)
-        assert got.shape == (5, 4, 3) and (got == px).all(), filters
-
-
-def test_decode_png_16bit():
-    """16-bit PNG: filters run at bpp=2*ch byte granularity; decode
-    yields the high byte (spec sample-depth rescale). All filter
-    types exercised; grey and RGB."""
-    import numpy as np
-
-    rng = np.random.RandomState(11)
-    px16 = rng.randint(0, 65536, size=(6, 5, 3)).astype(np.uint16)
-    for filters in ([0], [1], [2], [3], [4], [4, 3, 2, 1, 0]):
-        b = _make_png(px16, color_type=2, filters=filters, depth=16)
-        got = decode_image(b)
-        assert got.shape == (6, 5, 3), filters
-        assert (got == (px16 >> 8).astype(np.uint8)).all(), filters
-    grey16 = rng.randint(0, 65536, size=(4, 7, 1)).astype(np.uint16)
-    g = decode_image(_make_png(grey16, color_type=0, filters=[1, 4], depth=16))
-    assert (g == (grey16 >> 8).astype(np.uint8)).all()
-
-
-def test_decode_png_adam7():
-    """Adam7 interlaced PNG: pass extraction/scatter round-trips for
-    sizes that leave some passes empty (w or h < pass origin), all
-    filter types, 8- and 16-bit, palette."""
-    import numpy as np
-
-    rng = np.random.RandomState(13)
-    for (h, w) in ((1, 1), (2, 3), (5, 4), (8, 8), (13, 11)):
-        px = rng.randint(0, 256, size=(h, w, 3), dtype=np.uint8)
-        for filters in ([0], [2], [4], [0, 1, 2, 3, 4]):
-            b = _make_png(px, color_type=2, filters=filters, interlace=1)
-            got = decode_image(b)
-            assert got.shape == (h, w, 3) and (got == px).all(), (h, w, filters)
-    # 16-bit interlaced
-    px16 = rng.randint(0, 65536, size=(9, 6, 1)).astype(np.uint16)
-    g = decode_image(
-        _make_png(px16, color_type=0, filters=[3, 4, 1], depth=16, interlace=1)
-    )
-    assert (g == (px16 >> 8).astype(np.uint8)).all()
-    # palette interlaced
-    plte = rng.randint(0, 256, size=(16, 3), dtype=np.uint8)
-    idx = rng.randint(0, 16, size=(7, 5, 1)).astype(np.uint8)
-    p = decode_image(
-        _make_png(idx, color_type=3, filters=[1, 2], plte=plte, interlace=1)
-    )
-    assert p.shape == (7, 5, 3) and (p == plte[idx[..., 0]]).all()
-
-
-def test_decode_ppm_16bit():
-    """16-bit netpbm: big-endian 2-byte samples scaled by maxval."""
-    import numpy as np
-
-    px16 = np.arange(24, dtype=np.uint16).reshape(2, 4, 3) * 2500
-    body = px16.astype(">u2").tobytes()
-    b = b"P6\n4 2\n65535\n" + body
-    got = decode_image(b)
-    exp = (px16.astype(np.uint32) * 255 // 65535).astype(np.uint8)
-    assert got.shape == (2, 4, 3) and (got == exp).all()
-
-
-def test_decode_png_grey_and_rgba():
-    import numpy as np
-
-    grey = np.arange(12, dtype=np.uint8).reshape(3, 4, 1)
-    assert (decode_image(_make_png(grey, 0, [0, 1, 2])) == grey).all()
-    rgba = np.arange(48, dtype=np.uint8).reshape(3, 4, 4)
-    assert (decode_image(_make_png(rgba, 6, [4, 3])) == rgba).all()
-
-
-def test_decode_ppm():
-    import numpy as np
-
-    px = np.arange(24, dtype=np.uint8).reshape(2, 4, 3)
-    b = b"P6\n# a comment\n4 2\n255\n" + px.tobytes()
-    assert (decode_image(b) == px).all()
-    grey = np.arange(8, dtype=np.uint8).reshape(2, 4, 1)
-    b5 = b"P5 4 2 255\n" + grey.tobytes()
-    assert (decode_image(b5) == grey).all()
-
-
-def test_media_features_real_png(spark):
-    """Distributed end-to-end: real PNG payloads decode natively inside
-    the mapInPandas feature extractor (fake path untouched for
-    non-image payloads)."""
-    import numpy as np
-
-    rows = []
-    for i in range(6):
-        rng = np.random.RandomState(i)
-        px = rng.randint(0, 256, size=(4, 4, 3), dtype=np.uint8)
-        rows.append((i, "image", bytearray(_make_png(px, 2, [i % 5])), 4, 4, None, None))
-    media = spark.createDataFrame(
-        rows,
-        "media_id long, kind string, payload binary, width int,"
-        " height int, sample_rate int, duration_ms int",
-    )
-    out = {r["media_id"]: r for r in media_features(media).collect()}
-    assert len(out) == 6
-    for i in range(6):
-        rng = np.random.RandomState(i)
-        px = rng.randint(0, 256, size=(4, 4, 3), dtype=np.uint8)
-        want = np.concatenate([px.mean(axis=(0, 1)), px.std(axis=(0, 1))])
-        got = np.array(out[i]["features"][:6])
-        assert np.allclose(got, want, atol=1e-4), i
-
-
-# --- decontamination (round 4) --------------------------------------------
-def test_decontaminate_known_overlap(spark):
-    """Docs sharing a verbatim 8-gram with the benchmark are flagged
-    with the DISTINCT overlap count; clean docs are absent."""
-    from hyperpolyglot_spark.operators.decontaminate import (
-        decontaminate,
-        py_word_ngrams,
-    )
-
-    leak = "the quick brown fox jumps over the lazy dog tonight"
-    docs = spark.createDataFrame(
-        [
-            (1, "intro words then " + leak + " and a long tail of filler text here"),
-            (2, "totally unrelated content about markets and weather patterns today ok fine"),
-            (3, leak + " " + leak),  # repeated leak: still distinct grams only
-            (4, "short doc"),
-        ],
-        "doc_id long, text string",
-    )
-    bench = spark.createDataFrame([(leak,)], "text string")
-    got = {r["doc_id"]: r["n_hits"] for r in decontaminate(docs, bench, n=8).collect()}
-    expected_grams = py_word_ngrams(leak, 8)
-    assert set(got) == {1, 3}
-    assert got[1] == len(expected_grams)  # full window present
-    assert got[3] == len(py_word_ngrams(leak + " " + leak, 8) & expected_grams)
-
-
-def test_doc_word_ngrams_matches_py_spec(spark):
-    from hyperpolyglot_spark.operators.decontaminate import (
-        doc_word_ngrams,
-        py_word_ngrams,
-    )
-
-    texts = [
-        "one two three four five six seven eight nine ten",
-        "exactly eight words are present in this one!",
-        "fewer than eight words here",
-        "",
-        # dirty whitespace: leading/trailing tabs+newlines must not
-        # produce empty tokens that shift the n-gram windows (F.trim
-        # strips only ASCII spaces; split keeps boundary empties)
-        "\t alpha beta gamma delta epsilon zeta eta theta iota \n",
-        "\n\nkappa\tlambda  mu\r\nnu xi omicron pi rho sigma\t\t",
-    ]
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
-    rows = doc_word_ngrams(df, n=8).collect()
-    got: dict[int, set] = {}
-    for r in rows:
-        got.setdefault(r["doc_id"], set()).add(r["gram"])
-    for i, t in enumerate(texts):
-        assert got.get(i, set()) == py_word_ngrams(t, 8), t
-
-
-def test_contamination_spans_and_rewrite_match_py_spec(spark):
-    """Span extraction (merged ±pad regions) and the scrub-style
-    rewrite must match the pure-python spec row-for-row — including
-    overlapping spans merging, span-at-start/end clamping, and dirty
-    whitespace normalization."""
-    from hyperpolyglot_spark.operators.decontaminate import (
-        contamination_spans,
-        decontaminate_rewrite,
-        py_contamination_spans,
-        py_decontaminate_rewrite,
-        py_norm,
-        py_word_ngrams,
-    )
-
-    leak = "LEAK one two three four five six seven"
-    leak2 = "six seven TAIL y0 y1 y2 y3 y4"
-    filler = lambda p, k: " ".join(f"{p}{i}" for i in range(k))
-    texts = [
-        # leak mid-doc
-        filler("a", 30) + " " + leak + " " + filler("b", 30),
-        # two overlapping leaks -> one merged span
-        filler("c", 25) + " " + leak + " TAIL y0 y1 y2 y3 y4 " + filler("d", 25),
-        # leak at the very start (clamp to 1) and dirty whitespace
-        "\t " + leak + "\n " + filler("e", 30),
-        # leak at the very end (clamp to len+1)
-        filler("f", 30) + " " + leak,
-        # clean doc: no spans, not in rewrite output
-        filler("g", 40),
-        # whole doc inside the pad -> everything removed
-        leak,
-    ]
-    bench_set = {
-        g
-        for t in (leak, leak2)
-        for g in py_word_ngrams(t, 8)
-    }
-    docs = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
-    bench = spark.createDataFrame(
-        [(leak,), (leak2,)], "text string"
-    )
-    pad = 20
-    got_spans: dict[int, list] = {}
-    for r in contamination_spans(docs, bench, n=8, pad=pad).collect():
-        got_spans.setdefault(r["doc_id"], []).append(
-            (r["span_start"], r["span_start"] + r["span_len"])
-        )
-    got_clean = {
-        r["doc_id"]: r["cleaned_text"]
-        for r in decontaminate_rewrite(docs, bench, n=8, pad=pad).collect()
-    }
-    for i, t in enumerate(texts):
-        want = py_contamination_spans(t, bench_set, n=8, pad=pad)
-        assert sorted(got_spans.get(i, [])) == want, (i, got_spans.get(i), want)
-        if want:
-            assert got_clean[i] == py_decontaminate_rewrite(t, want), i
-            assert "LEAK" not in got_clean[i], i
-        else:
-            assert i not in got_clean
-    # doc 1: the two leaks merged into ONE span
-    assert len(got_spans[1]) == 1
-    # doc 5: whole doc removed -> empty cleaned text
-    assert got_clean[5] == ""
-    # doc 2 leak starts at position 1 after normalization
-    assert got_spans[2][0][0] == 1
-    # rewrite result never contains the normalized leak region
-    assert py_norm(texts[2]).startswith(leak)
-
-
-# --- baseline JPEG decode (round 5) -------------------------------------
-# Test-side minimal baseline-JPEG ENCODER written from the public T.81
-# spec formulas (like the PNG test encoder): FDCT via the orthogonal
-# basis matrix, canonical huffman tables built fresh from the symbols
-# actually emitted, byte stuffing, optional chroma subsampling. The
-# decoder under test must round-trip it.
-
-def _jhuff(symbols):
-    syms = sorted(set(symbols))
-    L = 1
-    while (1 << L) - 1 < len(syms):
-        L += 1
-    bits = [0] * 16
-    bits[L - 1] = len(syms)
-    return bits, bytes(syms), {s: (i, L) for i, s in enumerate(syms)}
-
-
-class _JBits:
-    def __init__(self):
-        self.out = bytearray()
-        self.acc = 0
-        self.n = 0
-
-    def put(self, code, length):
-        for i in range(length - 1, -1, -1):
-            self.acc = (self.acc << 1) | ((code >> i) & 1)
-            self.n += 1
-            if self.n == 8:
-                self.out.append(self.acc)
-                if self.acc == 0xFF:
-                    self.out.append(0x00)
-                self.acc, self.n = 0, 0
-
-    def flush(self):
-        while self.n:
-            self.put(1, 1)
-        return bytes(self.out)
-
-    def restart(self, k):
-        while self.n:
-            self.put(1, 1)
-        self.out += bytes([0xFF, 0xD0 + (k % 8)])
-
-
-def _jcat(v):
-    return abs(v).bit_length()
-
-
-def _jpeg_block_syms(blocks, q):
-    """Per-plane: (dc_syms, ac_syms, per-block coded token lists)."""
-    from hyperpolyglot_spark.operators.multimodal import _IDCT_A, _ZIGZAG
-
-    A = _IDCT_A
-    toks, dcs, acs = [], [], []
-    pred = 0
-    for blk in blocks:
-        coef = A.T @ (blk.astype(np.float64) - 128.0) @ A
-        zz = np.round(coef.reshape(64)[_ZIGZAG] / q).astype(np.int64)
-        diff = int(zz[0]) - pred
-        pred = int(zz[0])
-        s = _jcat(diff)
-        dcs.append(s)
-        t = [("dc", s, diff)]
-        run = 0
-        last = 63
-        while last > 0 and zz[last] == 0:
-            last -= 1
-        for k in range(1, last + 1):
-            v = int(zz[k])
-            if v == 0:
-                run += 1
-                continue
-            while run > 15:
-                acs.append(0xF0)
-                t.append(("ac", 0xF0, 0))
-                run -= 16
-            ss = _jcat(v)
-            sym = (run << 4) | ss
-            acs.append(sym)
-            t.append(("ac", sym, v))
-            run = 0
-        if last < 63:
-            acs.append(0x00)
-            t.append(("ac", 0x00, 0))
-        toks.append(t)
-    return dcs, acs, toks
-
-
-def _encode_jpeg(img, sampling=None, q=None, ri=0):
-    """Minimal baseline JPEG: one quant table, one DC + one AC huffman
-    table shared by all components, interleaved single scan; ri > 0
-    emits DRI + RSTn markers every ri MCUs (DC predictors reset)."""
-    h, w, nc = img.shape
-    sampling = sampling or [(1, 1)] * nc
-    q = np.ones(64, np.int64) if q is None else np.asarray(q, np.int64)
-    if nc == 3:
-        r, g, b = (img[..., i].astype(np.float64) for i in range(3))
-        planes = [
-            0.299 * r + 0.587 * g + 0.114 * b,
-            128.0 - 0.168736 * r - 0.331264 * g + 0.5 * b,
-            128.0 + 0.5 * r - 0.418688 * g - 0.081312 * b,
-        ]
-    else:
-        planes = [img[..., 0].astype(np.float64)]
-    hmax = max(s[0] for s in sampling)
-    vmax = max(s[1] for s in sampling)
-    mcux, mcuy = -(-w // (8 * hmax)), -(-h // (8 * vmax))
-    plane_blocks = []
-    for (ch, cv), p in zip(sampling, planes):
-        # box-average subsample then pad (edge-replicate) to MCU grid
-        fy, fx = vmax // cv, hmax // ch
-        ph = -(-p.shape[0] // fy) * fy
-        pw = -(-p.shape[1] // fx) * fx
-        pp = np.pad(p, ((0, ph - p.shape[0]), (0, pw - p.shape[1])), "edge")
-        sub = pp.reshape(ph // fy, fy, pw // fx, fx).mean(axis=(1, 3))
-        th, tw = mcuy * cv * 8, mcux * ch * 8
-        sub = np.pad(
-            sub,
-            ((0, th - sub.shape[0]), (0, tw - sub.shape[1])),
-            "edge",
-        )
-        blocks = {}
-        for by in range(th // 8):
-            for bx in range(tw // 8):
-                blocks[(by, bx)] = np.clip(
-                    np.round(sub[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8]),
-                    0, 255,
-                )
-        plane_blocks.append(blocks)
-    # interleaved MCU block order per plane
-    ordered = [[] for _ in planes]
-    for my in range(mcuy):
-        for mx in range(mcux):
-            for ci, (ch, cv) in enumerate(sampling):
-                for v in range(cv):
-                    for u in range(ch):
-                        ordered[ci].append(
-                            plane_blocks[ci][(my * cv + v, mx * ch + u)]
-                        )
-    blocks_per_mcu = [ch * cv for ch, cv in sampling]
-    if ri:
-        # re-tokenize each restart segment independently (DC predictor
-        # resets at every RSTn)
-        nmcu = mcux * mcuy
-        all_dc, all_ac = [], []
-        toks = [[] for _ in planes]
-        for seg0 in range(0, nmcu, ri):
-            for ci in range(len(planes)):
-                k = blocks_per_mcu[ci]
-                segblocks = ordered[ci][seg0 * k : (seg0 + ri) * k]
-                d, a, t = _jpeg_block_syms(segblocks, q)
-                all_dc += d
-                all_ac += a
-                toks[ci] += t
-    else:
-        all_dc, all_ac, toks = [], [], []
-        for ci in range(len(planes)):
-            d, a, t = _jpeg_block_syms(ordered[ci], q)
-            all_dc += d
-            all_ac += a
-            toks.append(t)
-    dbits, dvals, dmap = _jhuff(all_dc)
-    abits, avals, amap = _jhuff(all_ac)
-    bw = _JBits()
-    # re-interleave token emission in MCU order
-    idx = [0] * len(planes)
-    mcu_no = 0
-    for my in range(mcuy):
-        for mx in range(mcux):
-            if ri and mcu_no and mcu_no % ri == 0:
-                bw.restart(mcu_no // ri - 1)
-            mcu_no += 1
-            for ci, (ch, cv) in enumerate(sampling):
-                for _ in range(ch * cv):
-                    for kind, sym, v in toks[ci][idx[ci]]:
-                        code, ln = (dmap if kind == "dc" else amap)[sym]
-                        bw.put(code, ln)
-                        s = sym if kind == "dc" else sym & 0xF
-                        if kind == "ac" and s == 0:
-                            continue
-                        if s:
-                            bw.put(v if v > 0 else v + (1 << s) - 1, s)
-                    idx[ci] += 1
-    data = bw.flush()
-
-    def seg(marker, payload):
-        return bytes([0xFF, marker]) + (len(payload) + 2).to_bytes(2, "big") + payload
-
-    sof = bytes([8]) + h.to_bytes(2, "big") + w.to_bytes(2, "big") + bytes([nc])
-    for ci, (ch, cv) in enumerate(sampling):
-        sof += bytes([ci + 1, (ch << 4) | cv, 0])
-    sos = bytes([nc])
-    for ci in range(nc):
-        sos += bytes([ci + 1, 0x00])
-    sos += bytes([0, 63, 0])
-    return (
-        b"\xff\xd8"
-        # DQT payload is in zigzag order — the same order the encoder
-        # divides in, so the array is written verbatim
-        + seg(0xDB, bytes([0]) + bytes(int(x) for x in q))
-        + seg(0xC0, sof)
-        + seg(0xC4, bytes([0x00]) + bytes(dbits) + dvals)
-        + seg(0xC4, bytes([0x10]) + bytes(abits) + avals)
-        + (seg(0xDD, int(ri).to_bytes(2, "big")) if ri else b"")
-        + seg(0xDA, sos)
-        + data
-        + b"\xff\xd9"
-    )
-
-
-def test_jpeg_roundtrip_grey_and_rgb():
-    rng = np.random.RandomState(11)
-    # smooth gradient + mild noise (quant table of ones -> near-lossless)
-    yy, xx = np.mgrid[0:16, 0:24]
-    grey = ((yy * 7 + xx * 5) % 256).astype(np.uint8)[..., None]
-    b = _encode_jpeg(grey)
-    got = decode_image(b)
-    assert got.shape == (16, 24, 1)
-    assert np.abs(got.astype(int) - grey.astype(int)).max() <= 2
-    rgb = np.stack(
-        [
-            (yy * 9 + xx * 3) % 256,
-            (yy * 2 + xx * 11) % 256,
-            np.clip(60 + yy * 4 + xx, 0, 255),
-        ],
-        axis=-1,
-    ).astype(np.uint8)
-    b3 = _encode_jpeg(rgb)
-    got3 = decode_image(b3)
-    assert got3.shape == (16, 24, 3)
-    # YCbCr forward+inverse rounding adds ~±2
-    assert np.abs(got3.astype(int) - rgb.astype(int)).max() <= 4
-
-
-def test_jpeg_roundtrip_420_subsampled():
-    yy, xx = np.mgrid[0:24, 0:40]
-    # LINEAR ramps so 2x2 chroma box-average ≈ the center value
-    rgb = np.stack(
-        [50 + 2 * yy + xx, 200 - yy - 2 * xx, 30 + yy + xx], axis=-1
-    ).astype(np.uint8)
-    b = _encode_jpeg(rgb, sampling=[(2, 2), (1, 1), (1, 1)])
-    got = decode_image(b)
-    assert got.shape == rgb.shape
-    err = np.abs(got.astype(int) - rgb.astype(int))
-    assert err.mean() <= 3 and err.max() <= 14, (err.mean(), err.max())
-
-
-def test_jpeg_nonuniform_quant_and_restart_unsupported_paths():
-    # non-trivial quant table still round-trips within quantization error
-    yy, xx = np.mgrid[0:8, 0:8]
-    img = ((yy * 16 + xx) * 3 % 256).astype(np.uint8)[..., None]
-    q = np.ones(64, np.int64)
-    q[1:] = 2
-    b = _encode_jpeg(img, q=q)
-    got = decode_image(b)
-    assert np.abs(got.astype(int) - img.astype(int)).max() <= 10
-    # progressive marker (SOF2) is a DECLARED NotImplementedError...
-    prog = b.replace(b"\xff\xc0", b"\xff\xc2", 1)
-    with pytest.raises(NotImplementedError):
-        decode_image(prog)
-    # ...and falls back to the deterministic fake under fake=True
-    img_fake = decode_image(prog, fake=True)
-    assert img_fake.shape == (4, 4, 3)
-
-
-def test_jpeg_restart_markers():
-    """DRI/RSTn: byte-realign + DC predictor reset every ri MCUs."""
-    yy, xx = np.mgrid[0:16, 0:48]
-    grey = ((yy * 5 + xx * 7) % 256).astype(np.uint8)[..., None]
-    b = _encode_jpeg(grey, ri=2)
-    assert b.count(b"\xff\xd0") >= 1  # restarts actually emitted
-    got = decode_image(b)
-    assert got.shape == grey.shape
-    assert np.abs(got.astype(int) - grey.astype(int)).max() <= 2
-
-
-def test_media_features_real_jpeg_distributed(spark):
-    """Distributed end-to-end: baseline JPEG payloads decode natively
-    (pure-numpy T.81 path) inside the mapInPandas feature extractor —
-    mixed with PNG payloads in the same batch."""
-    yy, xx = np.mgrid[0:8, 0:8]
-    rows, want = [], {}
-    for i in range(4):
-        px = np.stack(
-            [
-                (30 * i + 2 * yy + xx) % 256,
-                (200 - yy - 2 * xx - 10 * i) % 256,
-                (60 + yy + xx + 5 * i) % 256,
-            ],
-            axis=-1,
-        ).astype(np.uint8)
-        payload = _encode_jpeg(px)
-        rows.append((i, "image", bytearray(payload), 8, 8, None, None))
-        want[i] = decode_image(payload)  # driver-side reference decode
-    # one PNG in the same table to prove format dispatch per row
-    png_px = np.arange(8 * 8 * 3, dtype=np.uint8).reshape(8, 8, 3)
-    rows.append((99, "image", bytearray(_make_png(png_px, 2, [1])), 8, 8, None, None))
-    want[99] = png_px
-    media = spark.createDataFrame(
-        rows,
-        "media_id long, kind string, payload binary, width int,"
-        " height int, sample_rate int, duration_ms int",
-    )
-    out = {
-        r["media_id"]: r
-        for r in media_features(media, fake_decode=False).collect()
-    }
-    assert len(out) == 5
-    for i, px in want.items():
-        w = np.concatenate([px.mean(axis=(0, 1)), px.std(axis=(0, 1))])
-        got = np.array(out[i]["features"][: len(w)])
-        assert np.allclose(got, w, atol=1e-3), i
-
-
-# --- WAV audio decode (round 5) -----------------------------------------
-def _make_wav(samples, rate, bits=16, tag=1, extra_chunk=False):
-    """From-spec RIFF/WAVE writer (test-side), optionally with a LIST
-    chunk before data (chunked parsers must skip it)."""
-    import struct
-
-    nch = samples.shape[1]
-    if tag == 1 and bits == 16:
-        body = (np.clip(samples, -1, 1) * 32767).astype("<i2").tobytes()
-    elif tag == 1 and bits == 8:
-        body = (np.clip(samples, -1, 1) * 127 + 128).astype(np.uint8).tobytes()
-    elif tag == 3 and bits == 32:
-        body = samples.astype("<f4").tobytes()
-    elif tag in (6, 7) and bits == 8:
-        # G.711 encode-by-nearest-level against the 256-entry decode
-        # table (the decoder's levels ARE the codec's quantizer, so
-        # nearest-level is the optimal from-spec encoder)
-        from hyperpolyglot_spark.operators.multimodal import (
-            _ALAW_TABLE,
-            _ULAW_TABLE,
-        )
-
-        table = _ULAW_TABLE if tag == 7 else _ALAW_TABLE
-        flat = np.clip(samples, -1, 1).ravel()
-        body = np.abs(flat[:, None] - table[None, :]).argmin(axis=1).astype(
-            np.uint8
-        ).tobytes()
-    else:
-        raise ValueError
-    fmt = struct.pack(
-        "<HHIIHH", tag, nch, rate, rate * nch * bits // 8,
-        nch * bits // 8, bits,
-    )
-    chunks = b"fmt " + struct.pack("<I", len(fmt)) + fmt
-    if extra_chunk:
-        meta = b"INFOsoft"  # odd-ish content; length 8
-        chunks += b"LIST" + struct.pack("<I", len(meta)) + meta
-    chunks += b"data" + struct.pack("<I", len(body)) + body
-    if len(body) % 2:
-        chunks += b"\x00"
-    return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
-
-
-def test_wav_decode_roundtrip():
-    from hyperpolyglot_spark.operators.multimodal import decode_audio
-
-    t = np.arange(800) / 8000.0
-    stereo = np.stack(
-        [np.sin(2 * np.pi * 440 * t), 0.5 * np.cos(2 * np.pi * 220 * t)],
-        axis=1,
-    )
-    a, rate = decode_audio(_make_wav(stereo, 8000))
-    assert rate == 8000 and a.shape == (800, 2)
-    assert np.abs(a - stereo).max() < 1e-3  # 16-bit quantization
-    # 8-bit mono with an extra LIST chunk before data
-    mono = np.sin(2 * np.pi * 100 * t)[:, None]
-    a8, r8 = decode_audio(_make_wav(mono, 16000, bits=8, extra_chunk=True))
-    assert r8 == 16000 and a8.shape == (800, 1)
-    assert np.abs(a8 - mono).max() < 1e-1  # 8-bit quantization
-    # IEEE float is exact
-    af, _ = decode_audio(_make_wav(stereo, 44100, bits=32, tag=3))
-    assert np.abs(af - stereo).max() < 1e-7
-    # compressed codecs: declared gap + deterministic fake
-    with pytest.raises(NotImplementedError):
-        decode_audio(b"\xff\xfb\x90\x00 not really mp3")
-    fa, fr = decode_audio(b"\xff\xfb\x90\x00 not really mp3", fake=True)
-    assert fr == 16000 and fa.shape[1] == 1
-
-
-def test_g711_decode():
-    """G.711 µ-law/A-law: known spec values pin table correctness
-    independently of the round-trip (values from the ITU-T G.711
-    expansion, 16-bit full scale)."""
-    from hyperpolyglot_spark.operators.multimodal import (
-        _ALAW_TABLE,
-        _ULAW_TABLE,
-        decode_audio,
-    )
-
-    # µ-law: 0xFF is zero, 0x7F is negative zero, 0x00 is -32124
-    assert _ULAW_TABLE[0xFF] == 0.0 and _ULAW_TABLE[0x7F] == 0.0
-    assert _ULAW_TABLE[0x00] * 32768 == -32124
-    assert _ULAW_TABLE[0x80] * 32768 == 32124
-    # A-law: 0x55 is -8, 0xD5 is +8, 0x2A is -32256, 0xAA is +32256
-    assert _ALAW_TABLE[0x55] * 32768 == -8
-    assert _ALAW_TABLE[0xD5] * 32768 == 8
-    assert _ALAW_TABLE[0x2A] * 32768 == -32256
-    assert _ALAW_TABLE[0xAA] * 32768 == 32256
-    # logarithmic quantization: max step at full scale is ~1024 (µ)
-    # / ~2048 (A) of 32768 -> round-trip error bounds
-    t = np.arange(600) / 8000.0
-    wave = np.stack(
-        [np.sin(2 * np.pi * 440 * t), 0.3 * np.sin(2 * np.pi * 180 * t)],
-        axis=1,
-    )
-    au, ru = decode_audio(_make_wav(wave, 8000, bits=8, tag=7))
-    assert ru == 8000 and au.shape == (600, 2)
-    assert np.abs(au - wave).max() < 1024 / 32768
-    aa, _ = decode_audio(_make_wav(wave, 8000, bits=8, tag=6, extra_chunk=True))
-    assert np.abs(aa - wave).max() < 2048 / 32768
-    # encode-by-nearest over the table's own levels is byte-exact
-    for table, tag in ((_ULAW_TABLE, 7), (_ALAW_TABLE, 6)):
-        levels = np.sort(np.unique(table))[:, None]
-        dec, _ = decode_audio(_make_wav(levels, 8000, bits=8, tag=tag))
-        assert np.array_equal(dec, levels)
-
-
-def test_audio_features_distributed(spark):
-    from hyperpolyglot_spark.operators.multimodal import (
-        audio_features,
-        decode_audio,
-    )
-
-    t = np.arange(1600) / 16000.0
-    rows, want = [], {}
-    for i in range(4):
-        freq = 110 * (i + 1)
-        mono = (0.2 + 0.1 * i) * np.sin(2 * np.pi * freq * t)[:, None]
-        payload = _make_wav(mono, 16000)
-        rows.append((i, "audio", bytearray(payload), None, None, 16000, 100))
-        a, _ = decode_audio(payload)
-        m = a.mean(axis=1)
-        want[i] = (
-            float(np.sqrt(np.mean(m**2))),
-            float(np.mean(np.signbit(m[1:]) != np.signbit(m[:-1]))),
-        )
-    media = spark.createDataFrame(
-        rows,
-        "media_id long, kind string, payload binary, width int,"
-        " height int, sample_rate int, duration_ms int",
-    )
-    out = {r["media_id"]: r for r in audio_features(media).collect()}
-    assert len(out) == 4
-    for i, (rms, zcr) in want.items():
-        r = out[i]
-        assert r["sample_rate"] == 16000 and r["n_samples"] == 1600
-        assert r["duration_ms"] == 100
-        assert abs(r["rms"] - rms) < 1e-9
-        assert abs(r["zero_cross_rate"] - zcr) < 1e-9
-
-
-def test_decode_png_palette():
-    """Color type 3: one index byte per pixel, expanded via PLTE."""
-    import numpy as np
-
-    rng = np.random.RandomState(3)
-    plte = rng.randint(0, 256, size=(16, 3), dtype=np.uint8)
-    idx = rng.randint(0, 16, size=(6, 5, 1), dtype=np.uint8)
-    b = _make_png(idx, color_type=3, filters=[0, 1, 2, 3, 4], plte=plte)
-    got = decode_image(b)
-    assert got.shape == (6, 5, 3)
-    assert (got == plte[idx[..., 0]]).all()
-
-
-def test_malformed_media_raises_valueerror():
-    """Corrupt payloads of a SUPPORTED format must fail with the
-    module's documented ValueError — not NameError/KeyError/IndexError
-    leaking out of the decode internals (r6 ADVICE): a JPEG whose SOS
-    precedes SOF, and a palette PNG whose indices run past PLTE."""
-    import numpy as np
-
-    img = np.full((8, 8, 1), 128, np.uint8)
-    b = _encode_jpeg(img)
-    # move the SOF0 segment after SOS by renaming SOF0 -> COM (0xFE):
-    # the scan then hits SOS with no component metadata
-    bad = b.replace(b"\xff\xc0", b"\xff\xfe", 1)
-    with pytest.raises(ValueError, match="SOS before SOF"):
-        decode_image(bad)
-
-    # palette PNG: 4-entry PLTE but an index byte of 9
-    plte = np.arange(12, dtype=np.uint8).reshape(4, 3)
-    idx = np.array([[0, 1], [9, 2]], np.uint8)[..., None]
-    b = _make_png(idx, color_type=3, filters=[0, 0], plte=plte)
-    with pytest.raises(ValueError, match="PLTE"):
-        decode_image(b)
-
-
-# --- video: MJPEG-in-AVI (round 6) ---------------------------------------
-def test_decode_video_mjpeg_avi_exact():
-    """Block-constant frames + unit quant -> the MJPEG round-trip is
-    byte-exact, so the AVI parse + per-frame T.81 decode must
-    reproduce the raw frames identically."""
-    from hyperpolyglot_spark.datagen.video import synth_avi, synth_frames
-    from hyperpolyglot_spark.operators.multimodal import decode_video
-
-    for doc_id in (0, 7, 23):
-        frames, fps, w, h = decode_video(synth_avi(doc_id))
-        raw = synth_frames(doc_id)
-        assert (w, h, fps) == (16, 16, 10.0)
-        assert len(frames) == len(raw)
-        for got, want in zip(frames, raw):
-            assert got.shape == (16, 16, 1)
-            assert (got[..., 0] == want).all()
-
-
-def test_decode_video_error_contract():
-    from hyperpolyglot_spark.datagen.video import synth_avi
-    from hyperpolyglot_spark.operators.multimodal import decode_video
-
-    # non-AVI container: declared NotImplementedError + fake fallback
-    with pytest.raises(NotImplementedError):
-        decode_video(b"\x00\x01\x02notavideo")
-    frames, fps, w, h = decode_video(b"whatever", fake=True)
-    assert len(frames) == 2 and (w, h) == (4, 4)
-    # malformed: truncate the avih header away -> ValueError
-    b = synth_avi(1)
-    i = b.find(b"avih")
-    bad = b[: i - 8] + b[i + 64 :]  # drop the avih chunk wholesale
-    with pytest.raises(ValueError):
-        decode_video(bad)
-
-
-def test_video_features_distributed(spark):
-    """video_features through mapInPandas matches the raw-frame math
-    (the frozen-oracle relationship, asserted in-repo too)."""
-    import numpy as np
-
-    from hyperpolyglot_spark.datagen.video import (
-        FPS, N_FRAMES, synth_avi, synth_frames,
-    )
-    from hyperpolyglot_spark.operators.multimodal import video_features
-
-    rows = [(i, bytearray(synth_avi(i))) for i in range(12)]
-    df = spark.createDataFrame(rows, "media_id long, payload binary")
-    got = {r["media_id"]: r for r in video_features(df).collect()}
-    assert len(got) == 12
-    for i in range(12):
-        lum = [f.astype(np.float64) / 255.0 for f in synth_frames(i)]
-        mean_luma = round(float(np.mean([l.mean() for l in lum])), 6)
-        motion = round(
-            float(
-                np.mean(
-                    [
-                        np.abs(lum[k + 1] - lum[k]).mean()
-                        for k in range(len(lum) - 1)
-                    ]
-                )
-            ),
-            6,
-        )
-        r = got[i]
-        assert r["n_frames"] == N_FRAMES and r["fps"] == float(FPS)
-        assert r["duration_ms"] == 600
-        assert r["mean_luma"] == mean_luma
-        assert r["motion"] == motion
-
-
-def test_dedupe_lines_spark_matches_py(spark):
-    """Column form == python spec, including the empty-line and
-    all-duplicates edge cases, distributed."""
-    from hyperpolyglot_spark.functions.textclean import (
-        py_dedupe_lines,
-        with_deduped_lines,
-    )
-
-    texts = [
-        "a\nb\na\nc\nb", "x", "", "x\nx\nx", "a\n\nb\n\nc",
-        "menu\nbody text here\nmenu\nfooter",
-    ]
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    ).repartition(3)
-    got = {
-        r["doc_id"]: (r["cleaned_text"], r["n_lines_removed"])
-        for r in with_deduped_lines(df).collect()
-    }
-    for i, t in enumerate(texts):
-        assert got[i] == py_dedupe_lines(t), (i, got[i])
-
-
-def test_common_line_filter_cross_doc(spark):
-    """The C4 >= min_docs rule: corpus-common lines removed from every
-    doc, order preserved; within-doc dups of unique lines survive; a
-    doc made entirely of common lines still emits an (empty) row."""
-    from hyperpolyglot_spark.functions.textclean import common_line_filter
-
-    rows = [
-        (1, "menu\nalpha one\nfooter"),
-        (2, "menu\nbeta two\nbeta two\nfooter"),
-        (3, "menu\ngamma three\nfooter"),
-        (4, "menu\nfooter"),  # all-common doc
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string").repartition(2)
-    got = {
-        r["doc_id"]: (r["cleaned_text"], r["n_lines_removed"])
-        for r in common_line_filter(df, min_docs=3).collect()
-    }
-    assert got[1] == ("alpha one", 2)
-    assert got[2] == ("beta two\nbeta two", 2)  # within-doc dup survives
-    assert got[3] == ("gamma three", 2)
-    assert got[4] == ("", 2)
-
-
-def test_common_line_filter_plan_broadcasts_common_set(spark):
-    """The anti-join against the common set must be broadcast — the
-    corpus side never shuffles for the join (the two remaining
-    exchanges are the inherent count-agg and per-doc rebuild)."""
-    from hyperpolyglot_spark.functions.textclean import common_line_filter
-
-    df = spark.createDataFrame(
-        [(i, f"menu\nbody {i}\nfooter") for i in range(40)],
-        "doc_id long, text string",
-    )
-    out = common_line_filter(df, min_docs=3)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
-    out.count()
-
-
-def test_corrupt_png_idat_raises_valueerror():
-    """zlib garbage inside a structurally valid PNG must surface as
-    the module's ValueError, not zlib.error (r6 fuzz finding)."""
-    import struct
-    import zlib as z
-
-    from hyperpolyglot_spark.operators.multimodal import decode_image
-
-    def chunk(ctype, data):
-        return (
-            struct.pack(">I", len(data)) + ctype + data
-            + struct.pack(">I", z.crc32(ctype + data) & 0xFFFFFFFF)
-        )
-
-    png = (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", struct.pack(">IIBBBBB", 4, 4, 8, 0, 0, 0, 0))
-        + chunk(b"IDAT", b"\x99\x88\x77\x66")
-        + chunk(b"IEND", b"")
-    )
-    with pytest.raises(ValueError, match="IDAT"):
-        decode_image(png)

@@ -213,74 +213,3 @@ def test_hashed_classifier_candidate_subset_matches_reference(s, cands):
         if first or score > bs:
             best, bs, first = lang, score, False
     assert got == best
-
-
-@settings(max_examples=40, deadline=None)
-@given(
-    h=st.integers(1, 12),
-    w=st.integers(1, 12),
-    color=st.sampled_from([0, 2, 6]),
-    filters=st.lists(st.integers(0, 4), min_size=1, max_size=5),
-    seed=st.integers(0, 2**31 - 1),
-)
-def test_png_decode_roundtrip_property(h, w, color, filters, seed):
-    """decode(encode(pixels)) == pixels for arbitrary shapes, color
-    types, and per-row filter choices — the encoder applies the PNG
-    spec filter formulas independently of the decoder's unfilter."""
-    import numpy as np
-
-    from hyperpolyglot_spark.operators.multimodal import decode_image
-    from tests.test_operators import _make_png
-
-    ch = {0: 1, 2: 3, 6: 4}[color]
-    rng = np.random.RandomState(seed % (2**32 - 1))
-    px = rng.randint(0, 256, size=(h, w, ch), dtype=np.uint8)
-    got = decode_image(_make_png(px, color, filters))
-    assert got.shape == (h, w, ch)
-    assert (got == px).all()
-
-
-@settings(max_examples=200, deadline=None)
-@given(st.binary(min_size=0, max_size=400))
-def test_media_decoders_error_contract_on_fuzz(payload):
-    """The decode error contract (r6 ADVICE): arbitrary bytes must
-    raise ValueError (malformed supported format) or
-    NotImplementedError (unsupported format) — never NameError /
-    KeyError / IndexError / struct.error leaking from the internals.
-    Valid-decode results must honor the shape contracts."""
-    from hyperpolyglot_spark.operators.multimodal import (
-        decode_audio,
-        decode_image,
-        decode_video,
-    )
-
-    for fn in (decode_image, decode_audio, decode_video):
-        try:
-            fn(payload)
-        except (ValueError, NotImplementedError):
-            pass
-
-
-@settings(max_examples=60, deadline=None)
-@given(st.binary(min_size=0, max_size=300))
-def test_media_decoders_fuzz_with_real_magic(prefix):
-    """Same contract with VALID magic bytes prepended — exercises the
-    chunk walkers and header parsers on garbage bodies."""
-    from hyperpolyglot_spark.operators.multimodal import (
-        _PNG_SIG,
-        decode_audio,
-        decode_image,
-        decode_video,
-    )
-
-    cases = [
-        (decode_image, _PNG_SIG + prefix),
-        (decode_image, b"\xff\xd8" + prefix),
-        (decode_audio, b"RIFF\x10\x00\x00\x00WAVE" + prefix),
-        (decode_video, b"RIFF\x10\x00\x00\x00AVI " + prefix),
-    ]
-    for fn, payload in cases:
-        try:
-            fn(payload)
-        except (ValueError, NotImplementedError):
-            pass

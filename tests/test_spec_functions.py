@@ -211,14 +211,14 @@ def test_quality_and_scrub_spec_match_duckdb(source, page_texts):
     """py_signals/py_keep_drop and py_scrub against the DuckDB SQL
     generated from the same dims — the spec's independent oracle,
     column by column. The SQL rounds ratios to 6 places."""
-    import __spark_entry__ as entry
     from hyperpolyglot_spark.functions.scrub import SCRUB_NAMES
+    from hyperpolyglot_spark.functions.spec_sql import keep_drop_sql, scrub_sql
 
     con = _duck_documents(source, page_texts)
     texts = dict(con.execute("SELECT doc_id, text FROM documents").fetchall())
     assert len(texts) >= N_PAGES
 
-    res = con.execute(entry._keep_drop_sql())
+    res = con.execute(keep_drop_sql())
     cols = [d[0] for d in res.description]
     ratios = ("symbol_ratio", "rep3_ratio", "stop_density", "spaceless_ratio")
     outcomes = set()
@@ -239,7 +239,7 @@ def test_quality_and_scrub_spec_match_duckdb(source, page_texts):
     if source == "pages":
         assert len(outcomes) >= 6, outcomes
 
-    res = con.execute(entry._scrub_sql())
+    res = con.execute(scrub_sql())
     cols = [d[0] for d in res.description]
     n_rows = 0
     for row in res.fetchall():
@@ -522,19 +522,6 @@ def test_canonical_url_semantics():
     assert cu("https://a.b/p?next=https://c//x") == "https://a.b/p?next=https://c//x"
     assert cu("https://a.b/p?q=a/") == "https://a.b/p?q=a/"
     assert cu("https://a.b//p//q/?r=1") == "https://a.b/p/q?r=1"
-
-
-def test_dedupe_lines_spec():
-    """C4-style within-doc duplicate-line removal: first occurrence
-    wins, order preserved, count exact (functions/textclean.py)."""
-    from hyperpolyglot_spark.functions.textclean import py_dedupe_lines
-
-    assert py_dedupe_lines("a\nb\na\nc\nb") == ("a\nb\nc", 2)
-    assert py_dedupe_lines("x") == ("x", 0)
-    assert py_dedupe_lines("") == ("", 0)
-    assert py_dedupe_lines("x\nx\nx") == ("x", 2)
-    # empty lines are lines too: repeated blank lines collapse
-    assert py_dedupe_lines("a\n\nb\n\nc") == ("a\n\nb\nc", 1)
 
 
 def test_rate_threshold_zero_keeps_nothing():

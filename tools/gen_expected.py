@@ -1,6 +1,6 @@
-"""Freeze deterministic expected outputs for the three queries whose
+"""Freeze deterministic expected outputs for the queries whose
 semantics are not SQL-expressible (blake2b simhash, NB classify, IVF
-probe), closing the oracle gap to 47/47.
+probe, tokenizer UDTF, ...).
 
 Expected tables are computed DRIVER-SIDE from the pure-Python specs /
 numpy — independently of the Spark implementations — then cross-checked
@@ -133,81 +133,6 @@ def expected_langid_short_texts() -> pd.DataFrame:
     return pd.DataFrame(
         out, columns=["doc_id", "lang", "lang_pred", "correct"]
     ).astype({"doc_id": "int64"})
-
-
-def expected_audio_features() -> pd.DataFrame:
-    """Audio features recomputed from the RAW integer samples (no WAV
-    container): the Spark query must produce identical numbers after
-    its RIFF encode -> chunked decode round-trip."""
-    from hyperpolyglot_spark.datagen.audio import RATE, synth_samples
-
-    out = []
-    for doc_id in range(50):
-        s = synth_samples(doc_id).astype(np.float64) / 32768.0
-        n = len(s)
-        zc = float(np.mean(np.signbit(s[1:]) != np.signbit(s[:-1])))
-        out.append(
-            (
-                doc_id,
-                RATE,
-                n,
-                int(round(1000.0 * n / RATE)),
-                round(float(np.sqrt(np.mean(s**2))), 6),
-                round(zc, 6),
-                round(float(np.abs(s).max()), 6),
-            )
-        )
-    return pd.DataFrame(
-        out,
-        columns=[
-            "doc_id", "sample_rate", "n_samples", "duration_ms",
-            "rms", "zero_cross_rate", "peak",
-        ],
-    ).astype(
-        {"doc_id": "int64", "sample_rate": "int32", "n_samples": "int64",
-         "duration_ms": "int64"}
-    )
-
-
-def expected_video_features() -> pd.DataFrame:
-    """Video features recomputed from the RAW frames (no AVI/JPEG
-    container): block-constant frames + unit quant make the MJPEG
-    round-trip EXACT, so the Spark query's container-parse + T.81
-    decode must reproduce these numbers identically."""
-    from hyperpolyglot_spark.datagen.video import (
-        FPS,
-        HEIGHT,
-        N_FRAMES,
-        WIDTH,
-        synth_frames,
-    )
-
-    out = []
-    for doc_id in range(50):
-        lum = [f.astype(np.float64) / 255.0 for f in synth_frames(doc_id)]
-        mean_luma = float(np.mean([l.mean() for l in lum]))
-        motion = float(
-            np.mean(
-                [np.abs(lum[k + 1] - lum[k]).mean() for k in range(len(lum) - 1)]
-            )
-        )
-        out.append(
-            (
-                doc_id, N_FRAMES, WIDTH, HEIGHT, float(FPS),
-                int(round(1000.0 * N_FRAMES / FPS)),
-                round(mean_luma, 6), round(motion, 6),
-            )
-        )
-    return pd.DataFrame(
-        out,
-        columns=[
-            "doc_id", "n_frames", "width", "height", "fps",
-            "duration_ms", "mean_luma", "motion",
-        ],
-    ).astype(
-        {"doc_id": "int64", "n_frames": "int32", "width": "int32",
-         "height": "int32", "duration_ms": "int64"}
-    )
 
 
 def expected_langid_noisy_texts() -> pd.DataFrame:
@@ -543,8 +468,6 @@ def main():
         "langid_code_switch_spans": expected_code_switch_spans(),
         "langid_noisy_texts": expected_langid_noisy_texts(),
         "semantic_dedup_embeddings": expected_semantic_dedup(),
-        "video_media_features": expected_video_features(),
-        "audio_media_features": expected_audio_features(),
         "embedding_ann_ivf": expected_ivf_topk(),
         "embedding_knn_blocked": expected_knn_blocked(),
         "doc_token_nb": expected_token_nb(),
@@ -578,12 +501,8 @@ def main():
         tables["semantic_dedup_embeddings"],
     )
     crosscheck(
-        spark, "video_media_features", tables["video_media_features"]
-    )
-    crosscheck(
         spark, "langid_noisy_texts", tables["langid_noisy_texts"]
     )
-    crosscheck(spark, "audio_media_features", tables["audio_media_features"])
     crosscheck(
         spark,
         "embedding_ann_ivf",
