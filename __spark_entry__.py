@@ -1,15 +1,18 @@
 """Oracle-checked query surface over the sf testdata tables.
 
-``queries()`` maps each name to a Spark query over the ``documents``
-and ``embeddings`` tables; ``oracle_sql()`` gives every query a DuckDB
-oracle under the same key. Column names/types are aligned pairwise:
-results compare as order-insensitive rows under sorted column names
+``queries()`` maps each name to a Spark query over the sf testdata
+tables; ``oracle_sql()`` gives every query a DuckDB oracle under the
+same key. Column names/types are aligned pairwise: results compare as
+order-insensitive rows under sorted column names
 (tests/test_entry_oracle.py).
 
-The queries cover what this system carries next to its label job: the
-label spec's quality ladder, scrub and perplexity, language ID, dedup
-and embedding similarity, plus document text statistics. The label
-spec's own oracle SQL lives in functions/spec_sql.py.
+Most queries cover what this system carries next to its label job:
+the label spec's quality ladder, scrub and perplexity, language ID,
+dedup and embedding similarity, plus document text statistics over
+the ``documents`` and ``embeddings`` tables. The rest check relational
+operators (joins, windows, grouping sets, as-of and range joins) on
+the TPC-H and ``events`` tables. The label spec's own oracle SQL lives
+in functions/spec_sql.py.
 
 For the queries whose semantics DuckDB cannot compute (blake2b simhash
 LSH, NB language prediction, IVF ANN probe, tokenizer UDTF, ...) the
@@ -145,6 +148,376 @@ def entry(spark: SparkSession) -> DataFrame:
         .withColumn("pct", F.round(F.col("docs") * 100.0 / F.col("_total"), 6))
         .drop("_total")
         .orderBy(F.desc("docs"), "lang")
+    )
+
+
+# ======================================================================
+# TPC-H-ish relational operators (S/P/J/A/O/E families)
+# ======================================================================
+
+def q1_pricing_summary(spark, sf_dir):
+    li = _t(spark, sf_dir, "lineitem")
+    return (
+        li.filter(F.col("l_shipdate") <= "1998-09-02")
+        .groupBy("l_returnflag", "l_linestatus")
+        .agg(
+            F.round(F.sum("l_quantity"), 4).alias("sum_qty"),
+            F.round(F.sum("l_extendedprice"), 4).alias("sum_base_price"),
+            F.round(
+                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 4
+            ).alias("sum_disc_price"),
+            F.round(F.avg("l_quantity"), 6).alias("avg_qty"),
+            F.round(F.avg("l_extendedprice"), 6).alias("avg_price"),
+            F.count("*").alias("count_order"),
+        )
+    )
+
+
+def q3_shipping_priority(spark, sf_dir):
+    cust = _t(spark, sf_dir, "customer").filter(
+        F.col("c_mktsegment") == "BUILDING"
+    )
+    orders = _t(spark, sf_dir, "orders").filter(
+        F.col("o_orderdate") < "1995-03-15"
+    )
+    li = _t(spark, sf_dir, "lineitem").filter(
+        F.col("l_shipdate") > "1995-03-15"
+    )
+    return (
+        li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
+        .join(F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey"))
+        .groupBy("l_orderkey", "o_orderdate")
+        .agg(
+            F.round(
+                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 4
+            ).alias("revenue")
+        )
+        .orderBy(F.desc("revenue"), "l_orderkey")
+        .limit(10)
+    )
+
+
+def q5_region_revenue(spark, sf_dir):
+    region = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
+    nation = _t(spark, sf_dir, "nation")
+    cust = _t(spark, sf_dir, "customer")
+    sup = _t(spark, sf_dir, "supplier")
+    orders = _t(spark, sf_dir, "orders")
+    li = _t(spark, sf_dir, "lineitem")
+    return (
+        li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
+        .join(F.broadcast(sup), F.col("l_suppkey") == F.col("s_suppkey"))
+        .join(cust, (F.col("o_custkey") == F.col("c_custkey"))
+              & (F.col("c_nationkey") == F.col("s_nationkey")))
+        .join(F.broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey"))
+        .join(F.broadcast(region), F.col("n_regionkey") == F.col("r_regionkey"))
+        .groupBy("n_name")
+        .agg(
+            F.round(
+                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 4
+            ).alias("revenue")
+        )
+    )
+
+
+def top_suppliers(spark, sf_dir):
+    return (
+        _t(spark, sf_dir, "supplier")
+        .select("s_suppkey", "s_name", "s_acctbal")
+        .orderBy(F.desc("s_acctbal"), "s_suppkey")
+        .limit(5)
+    )
+
+
+def customers_without_orders(spark, sf_dir):
+    cust = _t(spark, sf_dir, "customer")
+    orders = _t(spark, sf_dir, "orders").select(
+        F.col("o_custkey").alias("c_custkey")
+    )
+    return (
+        cust.join(orders, "c_custkey", "left_anti")
+        .select("c_custkey", "c_name")
+    )
+
+
+def orders_with_heavy_items(spark, sf_dir):
+    orders = _t(spark, sf_dir, "orders")
+    heavy = _t(spark, sf_dir, "lineitem").filter(
+        F.col("l_quantity") > 49
+    ).select(F.col("l_orderkey").alias("o_orderkey"))
+    return (
+        orders.join(heavy, "o_orderkey", "left_semi")
+        .select("o_orderkey", "o_custkey", "o_totalprice")
+    )
+
+
+def top2_orders_per_customer(spark, sf_dir):
+    orders = _t(spark, sf_dir, "orders")
+    w = Window.partitionBy("o_custkey").orderBy(
+        F.desc("o_totalprice"), "o_orderkey"
+    )
+    return (
+        orders.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= 2)
+        .select("o_custkey", "o_orderkey", "o_totalprice", "rn")
+    )
+
+
+def revenue_pct_by_returnflag(spark, sf_dir):
+    li = _t(spark, sf_dir, "lineitem")
+    per = li.groupBy("l_returnflag").agg(
+        F.sum("l_extendedprice").alias("rev")
+    )
+    total = per.agg(F.sum("rev").alias("_total"))
+    return per.crossJoin(F.broadcast(total)).select(
+        "l_returnflag",
+        F.round("rev", 4).alias("revenue"),
+        F.round(F.col("rev") * 100.0 / F.col("_total"), 6).alias("pct"),
+    )
+
+
+def rollup_order_priority(spark, sf_dir):
+    orders = _t(spark, sf_dir, "orders")
+    return (
+        orders.rollup("o_orderpriority", "o_orderstatus")
+        .agg(
+            F.count("*").alias("n_orders"),
+            F.round(F.sum("o_totalprice"), 4).alias("total_price"),
+        )
+    )
+
+
+def distinct_types_per_brand(spark, sf_dir):
+    part = _t(spark, sf_dir, "part")
+    return part.groupBy("p_brand").agg(
+        F.countDistinct("p_type").alias("n_types"),
+        F.countDistinct("p_size").alias("n_sizes"),
+        F.round(F.avg("p_retailprice"), 6).alias("avg_price"),
+    )
+
+
+def segment_set_ops(spark, sf_dir):
+    cust = _t(spark, sf_dir, "customer")
+    building = cust.filter(F.col("c_mktsegment") == "BUILDING").select(
+        "c_custkey"
+    )
+    rich = cust.filter(F.col("c_acctbal") > 5000).select("c_custkey")
+    machinery = cust.filter(F.col("c_mktsegment") == "MACHINERY").select(
+        "c_custkey"
+    )
+    return building.union(machinery).intersect(rich).subtract(
+        cust.filter(F.col("c_nationkey") == 3).select("c_custkey")
+    )
+
+
+def min_cost_supplier_per_nation(spark, sf_dir):
+    """Greatest-per-group (TPC-H q2 analog): cheapest-acctbal supplier
+    per nation via window rank — the decorrelated form of a correlated
+    subquery."""
+    sup = _t(spark, sf_dir, "supplier")
+    nation = _t(spark, sf_dir, "nation")
+    w = Window.partitionBy("s_nationkey").orderBy("s_acctbal", "s_suppkey")
+    best = sup.withColumn("rk", F.row_number().over(w)).filter(
+        F.col("rk") == 1
+    )
+    return best.join(
+        F.broadcast(nation), best.s_nationkey == nation.n_nationkey
+    ).select("n_name", "s_suppkey", "s_name", "s_acctbal")
+
+
+def nation_customer_supplier_counts(spark, sf_dir):
+    """FULL OUTER join: per nation, #customers and #suppliers, keeping
+    nations that have only one side."""
+    cust = (
+        _t(spark, sf_dir, "customer")
+        .groupBy(F.col("c_nationkey").alias("nationkey"))
+        .agg(F.count("*").alias("n_customers"))
+    )
+    sup = (
+        _t(spark, sf_dir, "supplier")
+        .groupBy(F.col("s_nationkey").alias("nationkey"))
+        .agg(F.count("*").alias("n_suppliers"))
+    )
+    return cust.join(sup, "nationkey", "full_outer").select(
+        "nationkey",
+        F.coalesce("n_customers", F.lit(0)).alias("n_customers"),
+        F.coalesce("n_suppliers", F.lit(0)).alias("n_suppliers"),
+    )
+
+
+def sql_api_revenue_by_priority(spark, sf_dir):
+    """Same engine through the SQL API surface (temp view + spark.sql):
+    Catalyst produces the identical plan either way."""
+    _t(spark, sf_dir, "orders").createOrReplaceTempView("v_orders")
+    return spark.sql(
+        """
+        SELECT o_orderpriority,
+               count(*) AS n_orders,
+               round(sum(o_totalprice), 4) AS total_price,
+               round(avg(o_totalprice), 6) AS avg_price
+        FROM v_orders
+        GROUP BY o_orderpriority
+        """
+    )
+
+
+# ======================================================================
+# events: time windows, sessionization, pivot
+# ======================================================================
+
+def events_hourly(spark, sf_dir):
+    ev = _t(spark, sf_dir, "events")
+    return (
+        ev.groupBy(
+            F.date_trunc("hour", "ts").alias("hour"),
+            "event_type",
+        )
+        .agg(
+            F.count("*").alias("n"),
+            F.round(F.sum("value"), 4).alias("total_value"),
+        )
+    )
+
+
+def events_sessionization(spark, sf_dir):
+    ev = _t(spark, sf_dir, "events")
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    gap = F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(w))
+    flagged = ev.withColumn(
+        "new_session",
+        F.when(gap.isNull() | (gap > 1800), F.lit(1)).otherwise(F.lit(0)),
+    )
+    return flagged.groupBy("user_id").agg(
+        F.sum("new_session").cast("long").alias("n_sessions"),
+        F.count("*").alias("n_events"),
+    )
+
+
+def events_type_pivot(spark, sf_dir):
+    ev = _t(spark, sf_dir, "events")
+    aggs = [
+        F.count(F.when(F.col("event_type") == t, 1)).alias(f"n_{t}")
+        for t in ("click", "view", "purchase", "signup", "error")
+    ]
+    return ev.groupBy("user_id").agg(*aggs)
+
+
+def events_value_stats(spark, sf_dir):
+    """Exact percentiles + dispersion per event_type (statistics agg
+    family)."""
+    ev = _t(spark, sf_dir, "events")
+    return ev.groupBy("event_type").agg(
+        F.round(F.expr("percentile(value, 0.5)"), 6).alias("p50"),
+        F.round(F.expr("percentile(value, 0.95)"), 6).alias("p95"),
+        F.round(F.stddev("value"), 6).alias("sd"),
+        F.round(F.min("value"), 4).alias("vmin"),
+        F.round(F.max("value"), 4).alias("vmax"),
+    )
+
+
+def events_salted_counts(spark, sf_dir):
+    """Two-phase salted aggregation (north-rule skew pattern): the 5
+    event types are hot keys, so phase 1 aggregates (key, salt) to
+    spread the combine across 16x more reducers, phase 2 merges the
+    partials. Result is identical to a direct groupBy — which is the
+    oracle."""
+    ev = _t(spark, sf_dir, "events")
+    salted = ev.withColumn("_salt", F.pmod(F.col("event_id"), F.lit(16)))
+    partial = salted.groupBy("event_type", "_salt").agg(
+        F.count("*").alias("pn"), F.sum("value").alias("pv")
+    )
+    return partial.groupBy("event_type").agg(
+        F.sum("pn").alias("n"),
+        F.round(F.sum("pv"), 4).alias("total_value"),
+    )
+
+
+def events_json_props(spark, sf_dir):
+    """JSON scalar-function surface: parse the props JSON column
+    (get_json_object / from_json), bucket by the extracted key, and
+    aggregate — the date/math/JSON built-ins row of SURVEY §2.7."""
+    ev = _t(spark, sf_dir, "events")
+    k = F.get_json_object("props", "$.k").cast("int")
+    return (
+        ev.select("event_type", k.alias("k"))
+        .withColumn("k_bucket", (F.col("k") / 10).cast("int"))
+        .groupBy("event_type", "k_bucket")
+        .agg(
+            F.count("*").alias("n"),
+            F.round(F.avg("k"), 6).alias("avg_k"),
+        )
+    )
+
+
+def purchases_asof_click(spark, sf_dir):
+    """As-of join: each purchase matched to the user's most recent
+    prior (or simultaneous) click. Spark has no built-in as-of join —
+    operators/temporal.py composes it from union + window; the oracle
+    is DuckDB's native ASOF JOIN."""
+    from hyperpolyglot_spark.operators.temporal import asof_join
+
+    ev = _t(spark, sf_dir, "events")
+    purchases = ev.filter(F.col("event_type") == "purchase").select(
+        "event_id", "user_id", "ts"
+    )
+    # unique per (user_id, ts): keep the max event_id (as-of matching
+    # is otherwise ambiguous — same rule in the oracle)
+    clicks = (
+        ev.filter(F.col("event_type") == "click")
+        .groupBy("user_id", F.col("ts").alias("click_ts"))
+        .agg(F.max("event_id").alias("click_event_id"))
+    )
+    return asof_join(
+        purchases,
+        clicks,
+        by="user_id",
+        left_ts="ts",
+        right_ts="click_ts",
+        payload_cols=["click_ts", "click_event_id"],
+        suffix="",
+    ).select("event_id", "user_id", "ts", "click_ts", "click_event_id")
+
+
+def clicks_in_purchase_windows(spark, sf_dir):
+    """RANGE join (no equi key): count clicks — from ANY user — inside
+    each purchase's 30-minute window. operators/temporal.range_join
+    buckets time so the plan is a hash equi-join on bucket + exact
+    range filter, never a nested-loop; the oracle is DuckDB's native
+    inequality join."""
+    from hyperpolyglot_spark.operators.temporal import range_join
+
+    ev = _t(spark, sf_dir, "events")
+    intervals = ev.filter(F.col("event_type") == "purchase").select(
+        F.col("event_id").alias("interval_id"),
+        F.col("ts").alias("start_ts"),
+        (F.col("ts") + F.expr("INTERVAL 30 MINUTES")).alias("end_ts"),
+    )
+    clicks = ev.filter(F.col("event_type") == "click").select(
+        F.col("event_id").alias("click_id"), "ts", "value"
+    )
+    j = range_join(clicks, intervals, "ts", "start_ts", "end_ts", 1800)
+    return j.groupBy("interval_id").agg(
+        F.count("*").alias("n_clicks"),
+        F.round(F.sum("value"), 4).alias("click_value"),
+    )
+
+
+def orders_cube(spark, sf_dir):
+    """CUBE over (priority, status): all grouping-set combinations."""
+    orders = _t(spark, sf_dir, "orders")
+    return orders.cube("o_orderpriority", "o_orderstatus").agg(
+        F.count("*").alias("n_orders"),
+        F.round(F.avg("o_totalprice"), 6).alias("avg_price"),
+    )
+
+
+def events_top_users(spark, sf_dir):
+    ev = _t(spark, sf_dir, "events")
+    return (
+        ev.groupBy("user_id")
+        .agg(F.round(F.sum("value"), 4).alias("total_value"))
+        .orderBy(F.desc("total_value"), "user_id")
+        .limit(10)
     )
 
 
@@ -1157,6 +1530,32 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "embedding_knn_blocked": embedding_knn_blocked,
         "embedding_ann_ivf": embedding_ann_ivf,
         "semantic_dedup_embeddings": semantic_dedup_embeddings,
+        # --- TPC-H relational operators ---
+        "q1_pricing_summary": q1_pricing_summary,
+        "q3_shipping_priority": q3_shipping_priority,
+        "q5_region_revenue": q5_region_revenue,
+        "top_suppliers": top_suppliers,
+        "customers_without_orders": customers_without_orders,
+        "orders_with_heavy_items": orders_with_heavy_items,
+        "top2_orders_per_customer": top2_orders_per_customer,
+        "revenue_pct_by_returnflag": revenue_pct_by_returnflag,
+        "rollup_order_priority": rollup_order_priority,
+        "distinct_types_per_brand": distinct_types_per_brand,
+        "segment_set_ops": segment_set_ops,
+        "min_cost_supplier_per_nation": min_cost_supplier_per_nation,
+        "nation_customer_supplier_counts": nation_customer_supplier_counts,
+        "sql_api_revenue_by_priority": sql_api_revenue_by_priority,
+        "orders_cube": orders_cube,
+        # --- events: time windows, sessions, as-of and range joins ---
+        "events_hourly": events_hourly,
+        "events_sessionization": events_sessionization,
+        "events_type_pivot": events_type_pivot,
+        "events_value_stats": events_value_stats,
+        "events_salted_counts": events_salted_counts,
+        "events_json_props": events_json_props,
+        "events_top_users": events_top_users,
+        "purchases_asof_click": purchases_asof_click,
+        "clicks_in_purchase_windows": clicks_in_purchase_windows,
     }
 
 
@@ -1261,6 +1660,208 @@ def _frozen(name: str) -> str:
 
 def oracle_sql() -> dict[str, str]:
     return {
+        "q1_pricing_summary": """
+            SELECT l_returnflag, l_linestatus,
+                   round(sum(l_quantity), 4) AS sum_qty,
+                   round(sum(l_extendedprice), 4) AS sum_base_price,
+                   round(sum(l_extendedprice * (1 - l_discount)), 4) AS sum_disc_price,
+                   round(avg(l_quantity), 6) AS avg_qty,
+                   round(avg(l_extendedprice), 6) AS avg_price,
+                   count(*) AS count_order
+            FROM lineitem
+            WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
+            GROUP BY l_returnflag, l_linestatus
+        """,
+        "q3_shipping_priority": """
+            SELECT l_orderkey, o_orderdate,
+                   round(sum(l_extendedprice * (1 - l_discount)), 4) AS revenue
+            FROM lineitem
+            JOIN orders ON l_orderkey = o_orderkey
+            JOIN customer ON o_custkey = c_custkey
+            WHERE c_mktsegment = 'BUILDING'
+              AND o_orderdate < TIMESTAMP '1995-03-15 00:00:00'
+              AND l_shipdate > TIMESTAMP '1995-03-15 00:00:00'
+            GROUP BY l_orderkey, o_orderdate
+            ORDER BY revenue DESC, l_orderkey
+            LIMIT 10
+        """,
+        "q5_region_revenue": """
+            SELECT n_name,
+                   round(sum(l_extendedprice * (1 - l_discount)), 4) AS revenue
+            FROM lineitem
+            JOIN orders ON l_orderkey = o_orderkey
+            JOIN supplier ON l_suppkey = s_suppkey
+            JOIN customer ON o_custkey = c_custkey AND c_nationkey = s_nationkey
+            JOIN nation ON s_nationkey = n_nationkey
+            JOIN region ON n_regionkey = r_regionkey
+            WHERE r_name = 'ASIA'
+            GROUP BY n_name
+        """,
+        "top_suppliers": """
+            SELECT s_suppkey, s_name, s_acctbal
+            FROM supplier ORDER BY s_acctbal DESC, s_suppkey LIMIT 5
+        """,
+        "customers_without_orders": """
+            SELECT c_custkey, c_name FROM customer c
+            WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
+        """,
+        "orders_with_heavy_items": """
+            SELECT o_orderkey, o_custkey, o_totalprice FROM orders o
+            WHERE EXISTS (SELECT 1 FROM lineitem l
+                          WHERE l.l_orderkey = o.o_orderkey AND l.l_quantity > 49)
+        """,
+        "top2_orders_per_customer": """
+            SELECT o_custkey, o_orderkey, o_totalprice, rn FROM (
+              SELECT o_custkey, o_orderkey, o_totalprice,
+                     row_number() OVER (PARTITION BY o_custkey
+                                        ORDER BY o_totalprice DESC, o_orderkey) AS rn
+              FROM orders) WHERE rn <= 2
+        """,
+        "revenue_pct_by_returnflag": """
+            SELECT l_returnflag,
+                   round(rev, 4) AS revenue,
+                   round(rev * 100.0 / sum(rev) OVER (), 6) AS pct
+            FROM (SELECT l_returnflag, sum(l_extendedprice) AS rev
+                  FROM lineitem GROUP BY l_returnflag)
+        """,
+        "rollup_order_priority": """
+            SELECT o_orderpriority, o_orderstatus,
+                   count(*) AS n_orders,
+                   round(sum(o_totalprice), 4) AS total_price
+            FROM orders GROUP BY ROLLUP (o_orderpriority, o_orderstatus)
+        """,
+        "distinct_types_per_brand": """
+            SELECT p_brand,
+                   count(DISTINCT p_type) AS n_types,
+                   count(DISTINCT p_size) AS n_sizes,
+                   round(avg(p_retailprice), 6) AS avg_price
+            FROM part GROUP BY p_brand
+        """,
+        "segment_set_ops": """
+            SELECT c_custkey FROM (
+              (SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'
+               UNION
+               SELECT c_custkey FROM customer WHERE c_mktsegment = 'MACHINERY')
+              INTERSECT
+              SELECT c_custkey FROM customer WHERE c_acctbal > 5000
+              EXCEPT
+              SELECT c_custkey FROM customer WHERE c_nationkey = 3)
+        """,
+        "min_cost_supplier_per_nation": """
+            SELECT n_name, s_suppkey, s_name, s_acctbal FROM (
+              SELECT s.*, row_number() OVER (PARTITION BY s_nationkey
+                                             ORDER BY s_acctbal, s_suppkey) AS rk
+              FROM supplier s) b
+            JOIN nation ON b.s_nationkey = n_nationkey
+            WHERE rk = 1
+        """,
+        "nation_customer_supplier_counts": """
+            SELECT coalesce(c.nationkey, s.nationkey) AS nationkey,
+                   coalesce(n_customers, 0) AS n_customers,
+                   coalesce(n_suppliers, 0) AS n_suppliers
+            FROM (SELECT c_nationkey AS nationkey, count(*) AS n_customers
+                  FROM customer GROUP BY 1) c
+            FULL OUTER JOIN
+                 (SELECT s_nationkey AS nationkey, count(*) AS n_suppliers
+                  FROM supplier GROUP BY 1) s
+              USING (nationkey)
+        """,
+        "sql_api_revenue_by_priority": """
+            SELECT o_orderpriority, count(*) AS n_orders,
+                   round(sum(o_totalprice), 4) AS total_price,
+                   round(avg(o_totalprice), 6) AS avg_price
+            FROM orders GROUP BY o_orderpriority
+        """,
+        "events_value_stats": """
+            SELECT event_type,
+                   round(quantile_cont(value, 0.5), 6) AS p50,
+                   round(quantile_cont(value, 0.95), 6) AS p95,
+                   round(stddev_samp(value), 6) AS sd,
+                   round(min(value), 4) AS vmin,
+                   round(max(value), 4) AS vmax
+            FROM events GROUP BY event_type
+        """,
+        "events_salted_counts": """
+            SELECT event_type, count(*) AS n,
+                   round(sum(value), 4) AS total_value
+            FROM events GROUP BY event_type
+        """,
+        "events_json_props": """
+            SELECT event_type,
+                   -- // = integer division (a plain / then ::INT would
+                   -- ROUND in DuckDB while Spark's cast truncates)
+                   (json_extract(props, '$.k')::INT // 10) AS k_bucket,
+                   count(*) AS n,
+                   round(avg(json_extract(props, '$.k')::INT), 6) AS avg_k
+            FROM events GROUP BY 1, 2
+        """,
+        "events_hourly": """
+            SELECT date_trunc('hour', ts) AS hour, event_type,
+                   count(*) AS n, round(sum(value), 4) AS total_value
+            FROM events GROUP BY 1, 2
+        """,
+        "events_sessionization": """
+            SELECT user_id,
+                   sum(new_session)::BIGINT AS n_sessions,
+                   count(*) AS n_events
+            FROM (
+              SELECT user_id,
+                     CASE WHEN prev_ts IS NULL
+                          OR epoch(ts) - epoch(prev_ts) > 1800
+                          THEN 1 ELSE 0 END AS new_session
+              FROM (SELECT user_id, ts,
+                           lag(ts) OVER (PARTITION BY user_id
+                                         ORDER BY ts, event_id) AS prev_ts
+                    FROM events))
+            GROUP BY user_id
+        """,
+        "events_type_pivot": """
+            SELECT user_id,
+                   count(CASE WHEN event_type = 'click' THEN 1 END) AS n_click,
+                   count(CASE WHEN event_type = 'view' THEN 1 END) AS n_view,
+                   count(CASE WHEN event_type = 'purchase' THEN 1 END) AS n_purchase,
+                   count(CASE WHEN event_type = 'signup' THEN 1 END) AS n_signup,
+                   count(CASE WHEN event_type = 'error' THEN 1 END) AS n_error
+            FROM events GROUP BY user_id
+        """,
+        "purchases_asof_click": """
+            WITH purchases AS (
+              SELECT event_id, user_id, ts FROM events
+              WHERE event_type = 'purchase'
+            ), clicks AS (
+              SELECT user_id, ts AS click_ts, max(event_id) AS click_event_id
+              FROM events WHERE event_type = 'click'
+              GROUP BY user_id, ts
+            )
+            SELECT p.event_id, p.user_id, p.ts, c.click_ts, c.click_event_id
+            FROM purchases p
+            ASOF LEFT JOIN clicks c
+              ON p.user_id = c.user_id AND p.ts >= c.click_ts
+        """,
+        "clicks_in_purchase_windows": """
+            WITH p AS (
+              SELECT event_id AS interval_id, ts AS start_ts,
+                     ts + INTERVAL 30 MINUTE AS end_ts
+              FROM events WHERE event_type = 'purchase'
+            ), c AS (
+              SELECT ts, value FROM events WHERE event_type = 'click'
+            )
+            SELECT interval_id, count(*) AS n_clicks,
+                   round(sum(c.value), 4) AS click_value
+            FROM p JOIN c ON c.ts >= p.start_ts AND c.ts <= p.end_ts
+            GROUP BY interval_id
+        """,
+        "orders_cube": """
+            SELECT o_orderpriority, o_orderstatus,
+                   count(*) AS n_orders,
+                   round(avg(o_totalprice), 6) AS avg_price
+            FROM orders GROUP BY CUBE (o_orderpriority, o_orderstatus)
+        """,
+        "events_top_users": """
+            SELECT user_id, round(sum(value), 4) AS total_value
+            FROM events GROUP BY user_id
+            ORDER BY total_value DESC, user_id LIMIT 10
+        """,
         "source_langs_csv": """
             SELECT source,
                    array_to_string(list_sort(list(DISTINCT lang)), ',') AS langs_csv,

@@ -13,7 +13,10 @@ import pytest
 import __spark_entry__ as entry_mod
 
 SF = "/root/testdata/sf0.01"
-TABLES = ("documents", "embeddings")
+TABLES = (
+    "region nation customer supplier part orders lineitem events "
+    "documents embeddings"
+).split()
 
 
 @pytest.fixture(scope="module")

@@ -320,6 +320,42 @@ def test_incremental_neardup_join(spark, docs):
     assert out.count() == K * M
 
 
+def test_range_join_exact(spark):
+    """Bucketed range join == naive range predicate, including
+    intervals spanning many buckets and boundary-inclusive matches."""
+    from hyperpolyglot_spark.operators.temporal import range_join
+
+    pts = spark.createDataFrame(
+        [(i, f"2024-01-01 00:{i:02d}:00") for i in range(60)],
+        "pid long, ts_s string",
+    ).select("pid", F.col("ts_s").cast("timestamp").alias("ts"))
+    iv = spark.createDataFrame(
+        [
+            (100, "2024-01-01 00:05:00", "2024-01-01 00:10:00"),  # 2 buckets
+            (101, "2024-01-01 00:00:00", "2024-01-01 00:59:00"),  # many
+            (102, "2024-01-01 00:30:30", "2024-01-01 00:30:40"),  # none
+        ],
+        "iid long, s string, e string",
+    ).select(
+        "iid",
+        F.col("s").cast("timestamp").alias("start_ts"),
+        F.col("e").cast("timestamp").alias("end_ts"),
+    )
+    got = {
+        (r["pid"], r["iid"])
+        for r in range_join(pts, iv, "ts", "start_ts", "end_ts", 300).collect()
+    }
+    naive = {
+        (r["pid"], r["iid"])
+        for r in pts.crossJoin(iv)
+        .filter((F.col("ts") >= F.col("start_ts")) & (F.col("ts") <= F.col("end_ts")))
+        .collect()
+    }
+    assert got == naive
+    assert (5, 100) in got and (10, 100) in got  # inclusive bounds
+    assert not any(i == 102 for _, i in got)
+
+
 def test_knn_join_blocked_recall(spark, emb):
     """IVF-cell-blocked KNN join (the scale path) with MULTI-PROBE
     assignment must recover nearly all exact top-3 edges (boundary

@@ -1,9 +1,9 @@
 """Physical-plan quality gates — the .explain() audit as assertions.
 
-These guard the properties that matter at 100 TB: column pruning
-holds, small dims broadcast, the pages pipeline stays narrow with
-exactly one Python stage, and aggregations are partial+final (no
-raw-row shuffles).
+These guard the properties that matter at 100 TB: filters reach the
+parquet scan, column pruning holds, small dims broadcast, the pages
+pipeline stays narrow with exactly one Python stage, and aggregations
+are partial+final (no raw-row shuffles).
 """
 
 import pytest
@@ -20,8 +20,35 @@ def plan_of(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def test_q1_filter_pushdown_and_pruning(spark):
+    plan = plan_of(entry_mod.q1_pricing_summary(spark, SF))
+    assert "PushedFilters: [IsNotNull(l_shipdate), LessThanOrEqual(l_shipdate" in plan
+    # column pruning: projection must not read unused lineitem columns
+    assert "l_partkey" not in plan and "l_suppkey" not in plan
+
+
+def test_q3_broadcasts_customer_dim(spark):
+    plan = plan_of(entry_mod.q3_shipping_priority(spark, SF))
+    assert "BroadcastHashJoin" in plan
+    assert "PushedFilters" in plan and "EqualTo(c_mktsegment,BUILDING)" in plan
+
+
+def test_q5_broadcasts_small_dims(spark):
+    plan = plan_of(entry_mod.q5_region_revenue(spark, SF))
+    assert plan.count("BroadcastHashJoin") >= 3  # supplier, nation, region
+
+
+def test_semi_anti_join_strategies(spark):
+    semi = plan_of(entry_mod.orders_with_heavy_items(spark, SF))
+    anti = plan_of(entry_mod.customers_without_orders(spark, SF))
+    assert "LeftSemi" in semi
+    assert "LeftAnti" in anti
+    # quantity filter pushed into the lineitem scan of the semi side
+    assert "GreaterThan(l_quantity,49" in semi
+
+
 def test_topk_uses_heap_not_global_sort(spark):
-    plan = plan_of(entry_mod.embedding_topk(spark, SF))
+    plan = plan_of(entry_mod.top_suppliers(spark, SF))
     assert "TakeOrderedAndProject" in plan  # per-partition heap + merge
 
 
@@ -92,9 +119,19 @@ def test_neardup_expansion_is_equijoin_only(spark):
 def test_percent_of_total_has_no_global_window(spark):
     """pct queries use a broadcast scalar agg, not a partitionless
     window (which funnels rows through ONE partition)."""
-    plan = plan_of(entry_mod.lang_breakdown(spark, SF))
-    assert "Window" not in plan
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
+    for q in ("lang_breakdown", "revenue_pct_by_returnflag"):
+        plan = plan_of(entry_mod.queries()[q](spark, SF))
+        assert "Window" not in plan, q
+        assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
+
+
+def test_range_join_is_bucketed_equijoin(spark):
+    """The range join must compile to a hash/sort-merge EQUI-join on
+    the time bucket — never BroadcastNestedLoopJoin (the O(L*R) trap a
+    raw range predicate produces)."""
+    plan = plan_of(entry_mod.clicks_in_purchase_windows(spark, SF))
+    assert "BroadcastNestedLoopJoin" not in plan
+    assert "CartesianProduct" not in plan
 
 
 def test_indexed_incremental_join_plan(spark):
