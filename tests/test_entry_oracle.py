@@ -2,7 +2,6 @@
 at sf0.01 AND its oracle_sql() in DuckDB on the same parquet tables;
 compare row count, column names, and order-insensitive values."""
 
-import datetime
 import math
 import os
 import re
@@ -13,10 +12,7 @@ import pytest
 import __spark_entry__ as entry_mod
 
 SF = "/root/testdata/sf0.01"
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
+TABLES = ("documents", "embeddings")
 
 
 @pytest.fixture(scope="module")
@@ -36,8 +32,6 @@ def _norm(v):
         if math.isnan(v):
             return "nan"
         return round(v, 5)
-    if isinstance(v, datetime.datetime):
-        return v.replace(tzinfo=None).isoformat()
     return v
 
 
