@@ -13,10 +13,10 @@ the ``documents`` and ``embeddings`` tables. The label spec's own
 oracle SQL lives in functions/spec_sql.py.
 
 For the queries whose semantics DuckDB cannot compute (blake2b simhash
-LSH, NB language prediction, IVF ANN probe, tokenizer UDTF, ...) the
-oracle reads a FROZEN expected table in data/expected_sf0.01/ beside
-this module, computed from the pure-Python specs — independently of
-the Spark implementations — and cross-checked at generation time
+LSH, NB language prediction, IVF ANN probe, ...) the oracle reads a
+FROZEN expected table in data/expected_sf0.01/ beside this module,
+computed from the pure-Python specs — independently of the Spark
+implementations — and cross-checked at generation time
 (tools/gen_expected.py).
 """
 
@@ -104,7 +104,7 @@ def _spread(spark: SparkSession, df: DataFrame) -> DataFrame:
 
     Applied ONLY where an A/B noop-sink measurement showed a win
     (OPTIMIZATION_r07.md): shallow plans whose per-row compute
-    dominates (quality ladder, gram explode+agg, tokenizer scoring).
+    dominates (quality ladder, gram explode+agg).
     Deep multi-stage DAGs (minhash chains, the LM pipeline) are
     stage-latency-bound at this scale — spreading them multiplied
     per-stage task overhead and measured SLOWER, so they keep their
@@ -317,29 +317,6 @@ def neardup_incremental(spark, sf_dir):
     )
 
 
-def doc_token_nb(spark, sf_dir):
-    """The reference's ACTUAL classifier feature path (F2 tokenizer ->
-    F3 key tokens <=32B -> F4 token NB, classifier.rs:24-48), wired as
-    a selectable alternative to the char-gram production scorer:
-    train_token_spark on the corpus itself, then the same broadcast-
-    model classify UDF scoring over all languages. Oracle = frozen
-    numpy/py-spec table (tools/gen_expected.py) — the tokenizer state
-    machine is not SQL-expressible."""
-    from hyperpolyglot_spark.functions.langid import (
-        make_classify_udf,
-        train_token_spark,
-    )
-
-    docs = _spread(spark, _t(spark, sf_dir, "documents"))
-    model = train_token_spark(docs)
-    clf = make_classify_udf(spark, model)
-    return docs.select(
-        "doc_id",
-        "lang",
-        clf(F.col("text"), F.array().cast("array<string>")).alias("lang_pred"),
-    )
-
-
 def neardup_incremental_indexed(spark, sf_dir):
     """The PERSISTED-INDEX form of incremental dedup (the continuous-
     crawl scale path, VERDICT r2 #2): the 'existing corpus' is signed
@@ -468,24 +445,6 @@ def docs_scrubbed(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     return with_scrub(docs, "text").select(
         "doc_id", "scrubbed_text", *[f"scrub_{n}" for n in SCRUB_NAMES]
-    )
-
-
-def doc_tokens(spark, sf_dir):
-    """Python UDTF surface (SURVEY §2.8): LATERAL-join the polyglot
-    tokenizer over documents — one row per (doc, pos, kind, token).
-    Capped to doc_id < 50 (the frozen-expected oracle's slice)."""
-    from hyperpolyglot_spark.functions.tokenize_udtf import register
-
-    register(spark)
-    _t(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < 50
-    ).createOrReplaceTempView("v_docs_tok")
-    return spark.sql(
-        """
-        SELECT d.doc_id, t.pos, t.kind, t.token
-        FROM v_docs_tok d, LATERAL tokenize_udtf(d.text) t
-        """
     )
 
 
@@ -1124,7 +1083,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "lang_chars_zscore": lang_chars_zscore,
         "lang_median_chars": lang_median_chars,
         "doc_script_mix": doc_script_mix,
-        "doc_tokens": doc_tokens,
         "per_strategy_report": per_strategy_report,
         "canonical_url_dedup": canonical_url_dedup,
         "training_mix_sample": training_mix_sample,
@@ -1137,7 +1095,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # --- language ID ---
         "classifier_training_agg": classifier_training_agg,
         "hashed_gram_buckets": hashed_gram_buckets,
-        "doc_token_nb": doc_token_nb,
         "langid_predict_documents": langid_predict_documents,
         "langid_unresolved": langid_unresolved,
         "langid_short_texts": langid_short_texts,
@@ -1479,7 +1436,7 @@ def oracle_sql() -> dict[str, str]:
         """,
         # --- frozen-expected oracles (tools/gen_expected.py): the
         # queries DuckDB cannot compute (blake2b simhash, NB classify,
-        # IVF probe, tokenizer UDTF, ...). Expected tables are computed
+        # IVF probe, ...). Expected tables are computed
         # from the pure-Python specs INDEPENDENTLY of Spark,
         # cross-checked at generation time, and frozen at sf0.01 (the
         # scale tests/test_entry_oracle.py runs at).
@@ -1525,17 +1482,9 @@ def oracle_sql() -> dict[str, str]:
             SELECT vec_id, round(cosine_raw, 6) AS cosine
             FROM {_frozen("embedding_ann_ivf")}
         """,
-        "doc_tokens": f"""
-            SELECT doc_id, pos, kind, token
-            FROM {_frozen("doc_tokens")}
-        """,
         "embedding_knn_blocked": f"""
             SELECT vec_id, neighbor_id, cosine, rk
             FROM {_frozen("embedding_knn_blocked")}
-        """,
-        "doc_token_nb": f"""
-            SELECT doc_id, lang, lang_pred
-            FROM {_frozen("doc_token_nb")}
         """,
         "embedding_knn": """
             SELECT vec_id, neighbor_id, cosine, rk FROM (

@@ -227,11 +227,10 @@ def default_model() -> Model:
 # EMPTY candidate list now narrows to the languages whose script
 # covers >= 50% of the doc's letters before scoring — hangul -> ko,
 # greek -> el, han -> {zh, ja, ...}. Explicit candidates always win
-# (narrowing applies only where there was no evidence at all), the
-# token-NB path is exempt (code files are ASCII — script carries no
-# signal there), and the unresolved gate still keys off the ORIGINAL
-# candidate list. Measured on the realtext short stratum: hashed
-# 0.869 -> 0.889, dict 0.892 -> 0.899; full passages unchanged.
+# (narrowing applies only where there was no evidence at all), and
+# the unresolved gate still keys off the ORIGINAL candidate list.
+# Measured on the realtext short stratum: hashed 0.869 -> 0.889, dict
+# 0.892 -> 0.899; full passages unchanged.
 #
 # Scale shape: one int8 codepoint->script-component lookup (built
 # lazily once per worker) + np.bincount per doc — two gathers, no
@@ -421,19 +420,12 @@ def classify_margin_py(
     gate_cands = list(candidates) if candidates else list(LANGUAGES)
     if model is None:
         model = default_hashed_model()
-    if isinstance(model, TokenModel) or (
-        model and isinstance(next(iter(model.values()), None), dict)
-    ):
-        # dict-shaped scorers (char-gram dict NB / token NB): one pass
-        # over the gate set tracking top-2, plus the best within the
-        # (sub)set of winner candidates — same strict-> earlier-
-        # candidate order in both
-        if isinstance(model, TokenModel):
-            feats = Counter(text_tokens(text))
-        else:
-            # r6: same invisible-char cleanup as the scorers (tokens
-            # are ASCII code — exempt)
-            feats = Counter(text_grams(normalize_scoring_text(text)))
+    if model and isinstance(next(iter(model.values()), None), dict):
+        # dict-shaped scorer (char-gram dict NB): one pass over the
+        # gate set tracking top-2, plus the best within the (sub)set of
+        # winner candidates — same strict-> earlier-candidate order in
+        # both. r6: same invisible-char cleanup as the scorers
+        feats = Counter(text_grams(normalize_scoring_text(text)))
         n = sum(feats.values())
         narrow = set(cands)
         best, second = float("-inf"), float("-inf")
@@ -618,14 +610,11 @@ def classify_any(
     text: str, candidates: list[str] | None, model=None
 ) -> str:
     """Dispatch on model representation: None -> the default HASHED
-    model (the production scorer — bounded broadcast size); TokenModel
-    -> the tokenizer-feature NB (the reference's F2->F4 path); dict-of-
+    model (the production scorer — bounded broadcast size); dict-of-
     dicts -> the explicit-vocabulary char-gram NB; HashedModel ->
     hashed. Identical candidate/tie-break semantics in every case."""
     if model is None:
         return classify_hashed_py(text, candidates, default_hashed_model())
-    if isinstance(model, TokenModel):
-        return classify_tokens_py(text, candidates, model)
     first = next(iter(model.values()), None)
     if isinstance(first, dict):
         return classify_py(text, candidates, model)
@@ -962,103 +951,3 @@ def classify_hashed_py(
     rows = np.array([lidx.get(l, -1) for l in cands], dtype=np.int64)
     scores = np.where(rows >= 0, all_scores[np.maximum(rows, 0)], -np.inf)
     return cands[int(np.argmax(scores))]
-
-
-# ----------------------------------------------------------------------
-# token naive-Bayes: the reference's ACTUAL feature path (F2 tokenizer
-# -> F3 get_key_tokens <=32B -> F4 NB scorer, src/detectors/
-# classifier.rs:24-48) wired to the same train/score machinery. The
-# production cascade defaults to char-grams (documented north-star
-# choice); this closes the last semantic gap as a selectable option.
-# ----------------------------------------------------------------------
-
-class TokenModel(dict):
-    """Marker type: lang -> token -> logp trained on classifier tokens
-    (idents+symbols, <=32 UTF-8 bytes). Distinguishes the token model
-    from the char-gram dict model in classify_any dispatch."""
-
-
-def text_tokens(text: str) -> list[str]:
-    """F2 -> F3 on the capped text: tokenize, keep idents+symbols,
-    drop tokens over 32 UTF-8 bytes (classifier.rs:24-26)."""
-    from .tokenizer import get_classifier_tokens
-
-    return get_classifier_tokens(text[:MAX_SCORE_CHARS])
-
-
-def train_token_py(corpus: list[tuple[str, str]]) -> TokenModel:
-    """classifier.rs/codegen.rs:357-428 trainer over token features.
-    A language yielding ZERO classifier tokens (e.g. spaceless-CJK
-    prose lexes into idents over the 32-byte cap) is ABSENT from the
-    model, like train_ppl_py — it then scores -inf, never a spurious
-    tie winner. The token-NB is the reference's CODE-classifier path;
-    spaceless prose is outside its feature domain by construction."""
-    model = TokenModel()
-    for lang in sorted({l for l, _ in corpus}):
-        counts: Counter[str] = Counter()
-        for l, text in corpus:
-            if l == lang:
-                counts.update(text_tokens(text))
-        total = sum(counts.values())
-        if not total:
-            continue
-        model[lang] = {t: math.log(c / total) for t, c in counts.items()}
-    return model
-
-
-def _tokens_arr_udf():
-    """Arrow-batched (text) -> array<string> of classifier tokens. The
-    lexer is a stateful char machine — genuinely not expressible with
-    built-ins, the documented Pandas-UDF case."""
-
-    @F.pandas_udf(T.ArrayType(T.StringType()))
-    def tokens_udf(texts: pd.Series) -> pd.Series:
-        return pd.Series([text_tokens(t or "") for t in texts])
-
-    return tokens_udf
-
-
-def train_token_spark(
-    df: DataFrame, lang_col: str = "lang", text_col: str = "text"
-) -> TokenModel:
-    """Spark trainer: ONE tokenizer UDF pass -> explode -> two-level
-    hash agg -> log(cnt/total). Exact train_token_py parity
-    (tests/test_token_nb.py)."""
-    toks = df.select(
-        F.col(lang_col).alias("lang"),
-        F.explode(_tokens_arr_udf()(F.col(text_col))).alias("tok"),
-    )
-    counted = toks.groupBy("lang", "tok").agg(F.count("*").alias("cnt"))
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("lang")
-    scored = counted.withColumn(
-        "logp", F.log(F.col("cnt") / F.sum("cnt").over(w))
-    )
-    model = TokenModel()
-    for row in scored.collect():  # model table is dim-sized
-        model.setdefault(row["lang"], {})[row["tok"]] = row["logp"]
-    return model
-
-
-def classify_tokens_py(
-    text: str, candidates: list[str] | None, model: TokenModel
-) -> str:
-    """classifier.rs:18-49 semantics over token features: same missing-
-    token DEFAULT_LOG_PROB, same -inf for unknown langs, same stable
-    earlier-candidate tie-break as classify_py."""
-    cands = list(candidates) if candidates else list(LANGUAGES)
-    tok_counts = Counter(text_tokens(text))
-    best_lang, best_score = cands[0], float("-inf")
-    first = True
-    for lang in cands:
-        lp = model.get(lang)
-        if lp is None:
-            score = float("-inf")
-        else:
-            score = sum(
-                n * lp.get(t, DEFAULT_LOG_PROB) for t, n in tok_counts.items()
-            )
-        if first or score > best_score:
-            best_lang, best_score, first = lang, score, False
-    return best_lang

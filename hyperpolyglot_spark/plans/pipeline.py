@@ -119,40 +119,31 @@ _LABEL_SCHEMA = T.StructType(
 
 def make_label_fn(
     spark: SparkSession,
-    model=None,
-    ppl_model=None,
     unresolved_policy: str = DEFAULT_UNRESOLVED_POLICY,
 ):
     """The label loop the label UDFs run on each Arrow batch:
     ``label(urls, html)`` calls py_label_page per row and returns the
-    label columns (``_LABEL_SCHEMA`` order) as lists. The models ship
-    as broadcasts; ``label`` reads them on the executor."""
+    label columns (``_LABEL_SCHEMA`` order) as lists. The default models
+    ship as broadcasts, one per application (session.py); ``label``
+    reads them on the executor."""
     from ..functions.langid import default_hashed_model
 
     from ..session import cached_broadcast
 
-    if model is not None:
-        bc = spark.sparkContext.broadcast(model)
-    else:  # default model: one broadcast per application (session.py)
-        bc = cached_broadcast(
-            spark, "langid.default_hashed_model", default_hashed_model
-        )
+    bc = cached_broadcast(
+        spark, "langid.default_hashed_model", default_hashed_model
+    )
     # thresholds calibrate ONCE on the driver and ship with the model —
     # otherwise every python worker would rerun the 60-language
     # calibration pass on first use
-    if ppl_model is not None:
-        bc_ppl = spark.sparkContext.broadcast(
-            (ppl_model, ppl_thresholds_for(ppl_model))
-        )
-    else:
-        bc_ppl = cached_broadcast(
-            spark,
-            "pipeline.default_ppl_model+thresholds",
-            lambda: (
-                default_ppl_model(),
-                ppl_thresholds_for(default_ppl_model()),
-            ),
-        )
+    bc_ppl = cached_broadcast(
+        spark,
+        "pipeline.default_ppl_model+thresholds",
+        lambda: (
+            default_ppl_model(),
+            ppl_thresholds_for(default_ppl_model()),
+        ),
+    )
 
     if unresolved_policy not in UNRESOLVED_POLICIES:
         raise ValueError(f"unknown unresolved_policy {unresolved_policy!r}")
@@ -174,8 +165,6 @@ def make_label_fn(
 
 def make_label_udf(
     spark: SparkSession,
-    model=None,
-    ppl_model=None,
     unresolved_policy: str = DEFAULT_UNRESOLVED_POLICY,
 ):
     """ONE Arrow-batched UDF for ALL text-bound per-document work:
@@ -203,7 +192,7 @@ def make_label_udf(
     queries run the same spec functions (quality.with_keep_drop,
     scrub.with_scrub), and the generated DuckDB SQL is the independent
     check (tests/test_spec_functions.py)."""
-    label = make_label_fn(spark, model, ppl_model, unresolved_policy)
+    label = make_label_fn(spark, unresolved_policy)
 
     @F.pandas_udf(_LABEL_SCHEMA)
     def label_udf(urls: pd.Series, html: pd.Series) -> pd.DataFrame:
@@ -215,8 +204,6 @@ def make_label_udf(
 def run_pipeline(
     spark: SparkSession,
     pages: DataFrame,
-    model=None,
-    ppl_model=None,
     unresolved_policy: str = DEFAULT_UNRESOLVED_POLICY,
 ) -> DataFrame:
     """pages -> labels (+ disposition routing column). scan -> one
@@ -226,9 +213,7 @@ def run_pipeline(
     (keep, lang_pred) per the unresolved policy — see the policy note
     at the top of this module."""
     df = pages.select("url", "warc_ts", "html")
-    lbl = make_label_udf(spark, model, ppl_model, unresolved_policy)(
-        F.col("url"), F.col("html")
-    )
+    lbl = make_label_udf(spark, unresolved_policy)(F.col("url"), F.col("html"))
     df = df.withColumn("_l", lbl)
     cols = [F.col(f"_l.{f.name}").alias(f.name) for f in _LABEL_SCHEMA.fields]
     return df.select("url", "warc_ts", *cols).withColumn(

@@ -58,6 +58,10 @@ from .pipeline import (
 
 MANIFEST_DIR = "_manifest"
 LABELS_DIR = "labels"
+# the default bucket layout: the job's and the benchmark's. A cluster run
+# over a large crawl raises both (e.g. 4096 buckets, 256 per group)
+DEFAULT_N_BUCKETS = 64
+DEFAULT_GROUP_SIZE = 16
 
 # dropped-by-rule manifest columns, one per drop_rule a label can carry:
 # every ladder rule plus the unresolved-language drop, so that per bucket
@@ -156,12 +160,12 @@ def _count_labels(counts: dict, buckets, labels: dict, policy: str) -> None:
             c[_COL_INDEX[f"unresolved_{py_disposition(keep, lang, policy)}"]] += 1
 
 
-def _counting_label_udf(spark: SparkSession, counts, model, policy: str):
+def _counting_label_udf(spark: SparkSession, counts, policy: str):
     """The group's label UDF over (url, html, bucket): the labels of
     make_label_fn, plus the task's per-bucket lineage counts added to
     the ``counts`` accumulator once, when the task's last batch is
     done."""
-    label = make_label_fn(spark, model, unresolved_policy=policy)
+    label = make_label_fn(spark, policy)
 
     @F.pandas_udf(_LABEL_SCHEMA)
     def label_udf(
@@ -229,10 +233,9 @@ def run_with_resume(
     spark: SparkSession,
     pages: DataFrame,
     out_dir: str,
-    n_buckets: int = 32,
-    group_size: int = 8,
+    n_buckets: int = DEFAULT_N_BUCKETS,
+    group_size: int = DEFAULT_GROUP_SIZE,
     max_groups: int | None = None,
-    model=None,
     unresolved_policy: str = DEFAULT_UNRESOLVED_POLICY,
 ) -> int:
     """Run the pipeline bucket-group by bucket-group, committing a
@@ -258,7 +261,7 @@ def run_with_resume(
 
     for group in groups:
         counts = spark.sparkContext.accumulator({}, _MergeByTask())
-        label = _counting_label_udf(spark, counts, model, unresolved_policy)
+        label = _counting_label_udf(spark, counts, unresolved_policy)
         src = pages.selectExpr("url", "warc_ts", "html", f"{bucket} AS bucket").where(
             f"bucket IN ({', '.join(map(str, group))})"
         )

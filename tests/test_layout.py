@@ -4,8 +4,9 @@ Every module under hyperpolyglot_spark/ must be imported, directly or
 transitively, from one of two roots: the job and the benchmark
 (jobs/, perfbench/), or the oracle-checked query surface and its
 frozen-table generator (__spark_entry__.py, tools/), or be named in
-TEST_ONLY or LOADED_BY_NAME below. The imports are read with ``ast``,
-so the check starts no Spark and runs no module.
+TEST_ONLY or LOADED_BY_NAME below. The job's own closure is pinned
+exactly (JOB_CLOSURE). The imports are read with ``ast``, so the check
+starts no Spark and runs no module.
 """
 
 import ast
@@ -26,6 +27,28 @@ TEST_ONLY = {
 # Spark starts it by name through spark.python.daemon.module (session.py),
 # so no import statement names it
 LOADED_BY_NAME = {f"{PKG}.pydaemon"}
+# exactly what the job imports: one classifier (the hashed NB) and no
+# tokenizer; a module that creeps into the job's closure fails by name
+JOB_CLOSURE = {
+    PKG,
+    f"{PKG}.datagen",
+    f"{PKG}.datagen.pages",
+    f"{PKG}.functions",
+    f"{PKG}.functions.extract",
+    f"{PKG}.functions.langdata",
+    f"{PKG}.functions.langid",
+    f"{PKG}.functions.metadata",
+    f"{PKG}.functions.perplexity",
+    f"{PKG}.functions.quality",
+    f"{PKG}.functions.rules",
+    f"{PKG}.functions.scrub",
+    f"{PKG}.operators",
+    f"{PKG}.operators.cascade",
+    f"{PKG}.plans",
+    f"{PKG}.plans.pipeline",
+    f"{PKG}.plans.resume",
+    f"{PKG}.session",
+}
 
 
 def package_modules() -> dict[str, Path]:
@@ -90,3 +113,9 @@ def test_every_package_module_is_reached():
     assert not (TEST_ONLY | LOADED_BY_NAME) & reached
     session = mods[f"{PKG}.session"].read_text()
     assert all(f'"{m}"' in session for m in LOADED_BY_NAME)
+
+
+def test_job_closure_is_pinned():
+    reached = closure(("jobs",), package_modules())
+    assert not reached - JOB_CLOSURE, f"new in the job: {sorted(reached - JOB_CLOSURE)}"
+    assert not JOB_CLOSURE - reached, f"gone from the job: {sorted(JOB_CLOSURE - reached)}"

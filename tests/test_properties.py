@@ -18,26 +18,9 @@ from hyperpolyglot_spark.functions.metadata import (
 from hyperpolyglot_spark.functions.quality import py_keep_drop, py_signals
 from hyperpolyglot_spark.functions.scrub import py_scrub
 from hyperpolyglot_spark.functions.shebang import get_languages_from_shebang
-from hyperpolyglot_spark.functions.tokenizer import get_key_tokens, tokenize
 
 TEXT = st.text(max_size=400)
 BYTES = st.binary(max_size=800)
-
-
-@settings(max_examples=200, deadline=None)
-@given(TEXT)
-def test_tokenizer_total_and_lossless_order(s):
-    toks = tokenize(s)
-    # every lexeme is a substring of the input, appearing in order
-    pos = 0
-    for t in toks:
-        assert t.text, t
-        idx = s.find(t.text, pos)
-        assert idx >= 0, (t, s)
-        pos = idx + len(t.text)
-    assert get_key_tokens(s) == [
-        t.text for t in toks if t.kind in ("ident", "symbol")
-    ]
 
 
 @settings(max_examples=200, deadline=None)

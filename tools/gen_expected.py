@@ -1,6 +1,6 @@
 """Freeze deterministic expected outputs for the queries whose
 semantics are not SQL-expressible (blake2b simhash, NB classify, IVF
-probe, tokenizer UDTF, ...).
+probe, ...).
 
 Expected tables are computed DRIVER-SIDE from the pure-Python specs /
 numpy — independently of the Spark implementations — then cross-checked
@@ -302,24 +302,6 @@ def expected_ivf_topk() -> pd.DataFrame:
     )
 
 
-def expected_token_nb() -> pd.DataFrame:
-    """train_token_py on the corpus itself + classify_tokens_py over
-    all languages — the frozen spec for the F2->F4 token-NB query."""
-    from hyperpolyglot_spark.functions.langid import (
-        classify_tokens_py,
-        train_token_py,
-    )
-
-    rows = duckdb.sql(
-        f"SELECT doc_id, lang, text FROM read_parquet('{SF}/documents.parquet') ORDER BY doc_id"
-    ).fetchall()
-    model = train_token_py([(r[1], r[2]) for r in rows])
-    out = [(r[0], r[1], classify_tokens_py(r[2], [], model)) for r in rows]
-    return pd.DataFrame(out, columns=["doc_id", "lang", "lang_pred"]).astype(
-        {"doc_id": "int64"}
-    )
-
-
 def expected_semantic_dedup() -> pd.DataFrame:
     """numpy replication of semantic_dedup over the embeddings table:
     centroids = ivf_centroids(n_cells=8, one refinement pass), each
@@ -414,25 +396,6 @@ def expected_knn_blocked() -> pd.DataFrame:
     ).astype({"vec_id": "int64", "neighbor_id": "int64", "rk": "int32"})
 
 
-def expected_doc_tokens() -> pd.DataFrame:
-    """Pure-python tokenizer over the doc_id<50 slice — the oracle for
-    the UDTF query."""
-    from hyperpolyglot_spark.functions.tokenizer import tokenize
-
-    rows = duckdb.sql(
-        f"SELECT doc_id, text FROM read_parquet('{SF}/documents.parquet') "
-        "WHERE doc_id < 50 ORDER BY doc_id"
-    ).fetchall()
-    out = [
-        (doc_id, i, tok.kind, tok.text)
-        for doc_id, text in rows
-        for i, tok in enumerate(tokenize(text or ""))
-    ]
-    return pd.DataFrame(
-        out, columns=["doc_id", "pos", "kind", "token"]
-    ).astype({"doc_id": "int64", "pos": "int32"})
-
-
 def crosscheck(spark, name: str, pdf: pd.DataFrame, round_cols: dict | None = None):
     """Run the live Spark query and assert it equals the frozen table."""
     import __spark_entry__ as entry
@@ -470,8 +433,6 @@ def main():
         "semantic_dedup_embeddings": expected_semantic_dedup(),
         "embedding_ann_ivf": expected_ivf_topk(),
         "embedding_knn_blocked": expected_knn_blocked(),
-        "doc_token_nb": expected_token_nb(),
-        "doc_tokens": expected_doc_tokens(),
     }
     for name, pdf in tables.items():
         path = os.path.join(OUT, f"{name}.parquet")
@@ -510,8 +471,6 @@ def main():
         round_cols={"cosine_raw": "cosine"},
     )
     crosscheck(spark, "embedding_knn_blocked", tables["embedding_knn_blocked"])
-    crosscheck(spark, "doc_token_nb", tables["doc_token_nb"])
-    crosscheck(spark, "doc_tokens", tables["doc_tokens"])
     print("all frozen expected tables cross-checked OK")
 
 
