@@ -26,10 +26,9 @@ import os
 from collections.abc import Callable
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hyperpolyglot_spark.functions.langid import HASH_BUCKETS
 from hyperpolyglot_spark.functions.spec_sql import WORDS, keep_drop_sql, scrub_sql
 from hyperpolyglot_spark.session import local_rows_df
 from hyperpolyglot_spark.functions.textstats import (
@@ -57,44 +56,12 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-# source KB per core below which _spread_if_large keeps the scan as is
-_SPREAD_MIN_KB_PER_CORE = 64
-
-
-def _spread_if_large(spark: SparkSession, df: DataFrame) -> DataFrame:
-    """Size-gated _spread for DEEP multi-stage DAGs (the LM pipeline
-    of doc_perplexity): at sf0.1 (~0.6 MB of docs) spreading it
-    measured SLOWER (stage-latency bound — see _spread), but at 10x
-    the single-task explode dominates end-to-end (24-30 s unspread vs
-    7-14 s spread, r07 A/B on a replicated single-row-group table).
-    Gate: under-split for the cores AND at least
-    _SPREAD_MIN_KB_PER_CORE of source bytes per core — below that a
-    task holds under ~a few hundred docs and the added exchange
-    outweighs the parallelism; above it, per-doc compute dominates.
-    Per-core (not absolute), so the same rule holds at any executor
-    count; at corpus scale the partitions-gate never fires at all.
-
-    The size is the optimized plan's estimate (private ``_jdf`` API). A
-    relation without stats (not a file scan) reports
-    ``spark.sql.defaultSizeInBytes`` (Long.MaxValue), so it passes the
-    size gate and is spread whenever it under-splits the cores: the
-    gate fails open. The caller passes a parquet scan."""
-    cores = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= cores:
-        return df
-    min_bytes = cores * 1024 * _SPREAD_MIN_KB_PER_CORE
-    size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    if size >= min_bytes:
-        return df.repartition(cores)
-    return df
-
-
 def _spread(spark: SparkSession, df: DataFrame) -> DataFrame:
     """Right-size scan parallelism for COMPUTE-HEAVY per-row stages.
 
     The sf testdata tables are single parquet files with ONE row group
     (r07 audit), so every scan is one task no matter the split config —
-    a per-doc-heavy stage (gram explode, minhash UDF, quality ladder)
+    a per-doc-heavy stage (minhash UDF, quality ladder)
     then runs on 1 of 32 cores. The fix: shuffle the (small,
     under-split) input across the cores ONCE, only when the scan
     under-splits them. At corpus scale a real table has thousands of
@@ -104,8 +71,8 @@ def _spread(spark: SparkSession, df: DataFrame) -> DataFrame:
 
     Applied ONLY where an A/B noop-sink measurement showed a win
     (OPTIMIZATION_r07.md): shallow plans whose per-row compute
-    dominates (quality ladder, gram explode+agg).
-    Deep multi-stage DAGs (minhash chains, the LM pipeline) are
+    dominates (quality ladder).
+    Deep multi-stage DAGs (minhash chains) are
     stage-latency-bound at this scale — spreading them multiplied
     per-stage task overhead and measured SLOWER, so they keep their
     natural scan partitioning."""
@@ -354,39 +321,6 @@ def neardup_simhash_pairs(spark, sf_dir):
     return simhash_neardup_pairs(docs, max_hamming=3)
 
 
-def classifier_training_agg(spark, sf_dir):
-    """A4 analog: per-(lang, gram) counts + log-probabilities for the
-    200 most frequent char-3-grams per language."""
-    from hyperpolyglot_spark.functions.langid import exploded_grams
-
-    docs = _spread(spark, _t(spark, sf_dir, "documents"))
-    counted = (
-        exploded_grams(docs)  # int-seq explode + codegen substr (3.8x)
-        .groupBy("lang", "gram")
-        .agg(F.count("*").alias("cnt"))
-    )
-    # two consumers (per-lang totals + rank) -> materialize the
-    # aggregated table once; it is distinct (lang, gram) rows,
-    # corpus-independent in size. localCheckpoint, NOT persist: a
-    # persisted plan is cache-keyed by its analyzed plan and silently
-    # substitutes into OTHER queries sharing the same subtree
-    # (hashed_gram_buckets' raw-gram count scan — caught by
-    # test_plan_quality). Totals are one row per language -> broadcast
-    # join instead of an unbounded sum-window, which would materialize
-    # and sort every lang partition a second time (round-3 regression
-    # suspect; parallelism bounded by #langs).
-    counted = counted.localCheckpoint(eager=True)
-    totals = counted.groupBy("lang").agg(F.sum("cnt").alias("_total"))
-    wr = Window.partitionBy("lang").orderBy(F.desc("cnt"), "gram")
-    return (
-        counted.withColumn("rk", F.row_number().over(wr))
-        .filter(F.col("rk") <= 200)
-        .join(F.broadcast(totals), "lang")
-        .withColumn("logp", F.round(F.log(F.col("cnt") / F.col("_total")), 6))
-        .select("lang", "gram", "cnt", "logp", "rk")
-    )
-
-
 def doc_script_mix(spark, sf_dir):
     """Per-document script-mix ratios (latin/cjk/cyrillic/...): the
     standard multilingual-corpus signal for mixed-script boilerplate or
@@ -416,7 +350,7 @@ def docs_keep_drop(spark, sf_dir):
     py_signals/py_keep_drop spec the pipeline runs, checked against
     DuckDB SQL generated from the same dims. (No url column here, so
     the vendor rule can't fire; perplexity is oracled separately by
-    doc_perplexity.)"""
+    unresolved_disposition.)"""
     from hyperpolyglot_spark.functions.quality import with_keep_drop
 
     docs = _spread(spark, _t(spark, sf_dir, "documents"))
@@ -485,120 +419,6 @@ def per_strategy_report(spark, sf_dir):
     )
 
 
-def _hashed_gram_counts(spark, sf_dir):
-    """Pre-checkpoint subtree of hashed_gram_buckets, exposed so
-    test_plan_quality can assert the two-phase aggregation shape (the
-    checkpoint boundary hides it from the final query's plan).
-
-    Two-phase: count per RAW gram first (partial agg absorbs the
-    volume), md5 only the distinct (lang, gram) groups — ~30x fewer
-    hashes at sf0.1, and at corpus scale distinct grams plateau while
-    doc count grows, so hashing cost per doc goes to zero."""
-    from hyperpolyglot_spark.functions.langid import bucket_col, exploded_grams
-
-    docs = _spread(spark, _t(spark, sf_dir, "documents"))
-    return (
-        exploded_grams(docs)
-        .groupBy("lang", "gram")
-        .agg(F.count("*").alias("c1"))
-        .select("lang", bucket_col(F.col("gram")).alias("bucket"), "c1")
-        .groupBy("lang", "bucket")
-        .agg(F.sum("c1").alias("cnt"))
-    )
-
-
-def hashed_gram_buckets(spark, sf_dir):
-    """Hashed character-n-gram features (north-star): gram -> md5-prefix
-    bucket (JVM built-ins only), per-(lang, bucket) counts + log-probs —
-    the fixed-width fastText-style feature table whose size is bounded
-    by bucket count, not vocabulary. The production classifier scores
-    against exactly this table (functions/langid.py HashedModel)."""
-    counted = _hashed_gram_counts(spark, sf_dir)
-    # two consumers (per-lang totals + final projection): materialize
-    # the bounded (langs x 16384) table once, then broadcast-join the
-    # one-row-per-lang totals — the same shape fix as
-    # classifier_training_agg (an unbounded sum-window re-materializes
-    # and sorts every lang partition with parallelism bounded by
-    # #langs; localCheckpoint, NOT persist — a persisted plan cache-
-    # substitutes into other queries sharing the subtree).
-    counted = counted.localCheckpoint(eager=True)
-    totals = counted.groupBy("lang").agg(F.sum("cnt").alias("_total"))
-    return counted.join(F.broadcast(totals), "lang").select(
-        "lang",
-        F.col("bucket").cast("long").alias("bucket"),
-        "cnt",
-        F.round(F.log(F.col("cnt") / F.col("_total")), 6).alias("logp"),
-    )
-
-
-def doc_perplexity(spark, sf_dir):
-    """KenLM-style perplexity, fully in-query (north-star stage): train
-    a per-language char-3-gram LM with add-alpha smoothing ON the
-    corpus itself (one explode + hash agg), then score every doc under
-    its language's LM via broadcast joins — no cartesian, no UDF, and
-    therefore DuckDB-oracle-able end to end. The production pipeline
-    scores with the same spec under a broadcast pre-trained model
-    (functions/perplexity.py)."""
-    from hyperpolyglot_spark.functions.langid import exploded_grams
-    from hyperpolyglot_spark.functions.perplexity import PPL_ALPHA
-
-    docs = _spread_if_large(spark, _t(spark, sf_dir, "documents"))
-    tri = exploded_grams(docs, keep=("doc_id", "lang"), out="g")
-    # the event stream feeds BOTH the model aggregation and the scoring
-    # join; localCheckpoint materializes it once instead of re-running
-    # the explode per branch (measured 2.5x at sf0.1)
-    tri = tri.localCheckpoint(eager=False)
-    model = tri.groupBy("lang", "g").agg(F.count("*").alias("c3"))
-    ctx = model.groupBy(
-        "lang", F.substring("g", 1, 2).alias("cx")
-    ).agg(F.sum("c3").alias("c2"))
-    vocab = model.groupBy("lang").agg(
-        F.countDistinct(F.substring("g", 3, 1)).alias("v")
-    )
-    # r07: fold ctx/vocab into the MODEL side and precompute lp once
-    # per distinct (lang, gram) — the event stream then pays ONE
-    # broadcast join and zero per-event log10s instead of three joins
-    # + a log10 per occurrence (guide §2.3: shuffle/score metadata,
-    # not the volume). Same arithmetic on the same doubles, so the
-    # scored values are bit-identical to the per-event form.
-    lp_tab = (
-        model.withColumn("cx", F.substring("g", 1, 2))
-        .join(F.broadcast(ctx), ["lang", "cx"])
-        .join(F.broadcast(vocab), ["lang"])
-        .select(
-            "lang",
-            "g",
-            F.log10(
-                (F.col("c3") + F.lit(PPL_ALPHA))
-                / (F.col("c2") + F.lit(PPL_ALPHA) * F.col("v"))
-            ).alias("lp"),
-        )
-    )
-    scored = tri.join(F.broadcast(lp_tab), ["lang", "g"])
-    return scored.groupBy("doc_id").agg(
-        F.round(F.pow(F.lit(10.0), -F.avg("lp")), 6).alias("ppl")
-    )
-
-
-def langid_predict_documents(spark, sf_dir):
-    """Naive-Bayes language prediction over documents, model trained on
-    the same corpus (train==eval, like the reference; oracle = frozen
-    expected from the pure-python spec). Note the collected dict model
-    here is corpus-vocabulary-sized — convenient at test scale; the
-    production path trains offline on a bounded corpus and broadcasts
-    the FIXED-WIDTH hashed model (functions/langid.py HashedModel)."""
-    from hyperpolyglot_spark.functions.langid import make_classify_udf, train_spark
-
-    docs = _t(spark, sf_dir, "documents")
-    model = train_spark(docs, "lang", "text")
-    clf = make_classify_udf(spark, model)
-    return docs.select(
-        "doc_id",
-        "lang",
-        clf(F.col("text"), F.array().cast("array<string>")).alias("lang_pred"),
-    )
-
-
 def langid_unresolved(spark, sf_dir):
     """Open-world language ID (the reference's `detect -> None` analog,
     src/lib.rs:187-189): documents (in-universe) unioned with the
@@ -634,7 +454,7 @@ def langid_unresolved(spark, sf_dir):
         [(i, t) for i, _, t in fixture_rows()] + pool,
         "doc_id long, text string",
     )
-    clf = make_classify_udf(spark, None, unresolved=True)
+    clf = make_classify_udf(spark)
     both = docs.unionByName(fx).withColumn(
         "lang_pred", clf(F.col("text"), F.array().cast("array<string>"))
     )
@@ -666,7 +486,7 @@ def langid_short_texts(spark, sf_dir):
         for j, frag in enumerate(frags)
     ]
     df = local_rows_df(spark, rows, "doc_id long, lang string, text string")
-    clf = make_classify_udf(spark, None, unresolved=True)
+    clf = make_classify_udf(spark)
     df = df.withColumn(
         "lang_pred", clf(F.col("text"), F.array().cast("array<string>"))
     )
@@ -717,7 +537,7 @@ def unresolved_disposition(spark, sf_dir):
         [(i, t) for i, _, t in fixture_rows()] + pool,
         "doc_id long, text string",
     )
-    clf = make_classify_udf(spark, None, unresolved=True)
+    clf = make_classify_udf(spark)
     # right-size parallelism to the input: this is a ~450-row fixture
     # union, but the parquet scan contributes 32 near-empty partitions
     # — and the plan chains TWO dependent ArrowEvalPython stages
@@ -968,7 +788,7 @@ def langid_noisy_texts(spark, sf_dir):
         noisy_texts(),
         "doc_id long, lang string, variant string, text string",
     ).repartition(8)
-    clf = make_classify_udf(spark, None, unresolved=True)
+    clf = make_classify_udf(spark)
     df = df.withColumn(
         "lang_pred", clf(F.col("text"), F.array().cast("array<string>"))
     )
@@ -1090,12 +910,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "docs_keep_drop": docs_keep_drop,
         "docs_scrubbed": docs_scrubbed,
         "source_rule_rollup": source_rule_rollup,
-        "doc_perplexity": doc_perplexity,
         "unresolved_disposition": unresolved_disposition,
         # --- language ID ---
-        "classifier_training_agg": classifier_training_agg,
-        "hashed_gram_buckets": hashed_gram_buckets,
-        "langid_predict_documents": langid_predict_documents,
         "langid_unresolved": langid_unresolved,
         "langid_short_texts": langid_short_texts,
         "langid_code_switch_spans": langid_code_switch_spans,
@@ -1337,26 +1153,6 @@ def oracle_sql() -> dict[str, str]:
         # is output-identical by construction, hence the same oracle.
         "neardup_incremental": _INCREMENTAL_SQL,
         "neardup_incremental_indexed": _INCREMENTAL_SQL,
-        "classifier_training_agg": """
-            WITH grams AS (
-              SELECT lang, substring(t, i, 3) AS gram
-              FROM (SELECT lang, lower(substring(text, 1, 2000)) AS t
-                    FROM documents) d,
-                   LATERAL (SELECT unnest(generate_series(1, greatest(length(d.t) - 2, 0))) AS i)
-            ), counted AS (
-              SELECT lang, gram, count(*) AS cnt FROM grams GROUP BY lang, gram
-            ), scored AS (
-              -- logp over the FULL gram distribution, before the top-k cut
-              SELECT lang, gram, cnt,
-                     round(ln(cnt::DOUBLE / sum(cnt) OVER (PARTITION BY lang)), 6) AS logp
-              FROM counted
-            )
-            SELECT lang, gram, cnt, logp, rk
-            FROM (SELECT *, row_number() OVER (PARTITION BY lang
-                                               ORDER BY cnt DESC, gram) AS rk
-                  FROM scored)
-            WHERE rk <= 200
-        """,
         "doc_script_mix": _script_mix_sql(),
         "docs_keep_drop": keep_drop_sql(),
         "docs_scrubbed": scrub_sql(),
@@ -1371,51 +1167,6 @@ def oracle_sql() -> dict[str, str]:
               FROM documents
               WHERE regexp_matches(text, '(^| )(market|value)( |$)'))
             GROUP BY strategy, lang
-        """,
-        "hashed_gram_buckets": f"""
-            WITH grams AS (
-              SELECT lang, substring(t, i, 3) AS gram
-              FROM (SELECT lang, lower(substring(text, 1, 2000)) AS t
-                    FROM documents) d,
-                   LATERAL (SELECT unnest(generate_series(1,
-                            greatest(length(d.t) - 2, 0))) AS i)
-            ), counted AS (
-              SELECT lang,
-                     (('0x' || substr(md5(gram), 1, 15))::UBIGINT
-                      % {HASH_BUCKETS})::BIGINT AS bucket,
-                     count(*) AS cnt
-              FROM grams GROUP BY 1, 2
-            )
-            SELECT lang, bucket, cnt,
-                   round(ln(cnt::DOUBLE
-                            / sum(cnt) OVER (PARTITION BY lang)), 6) AS logp
-            FROM counted
-        """,
-        "doc_perplexity": """
-            WITH t AS (
-              SELECT doc_id, lang, lower(substring(text, 1, 2000)) AS t
-              FROM documents
-            ), tri AS (
-              SELECT doc_id, lang, substring(t, i, 3) AS g
-              FROM t, LATERAL (SELECT unnest(generate_series(1,
-                       greatest(length(t.t) - 2, 0))) AS i)
-            ), model AS (
-              SELECT lang, g, count(*) AS c3 FROM tri GROUP BY lang, g
-            ), ctx AS (
-              SELECT lang, substring(g, 1, 2) AS cx, sum(c3) AS c2
-              FROM model GROUP BY lang, cx
-            ), vocab AS (
-              SELECT lang, count(DISTINCT substring(g, 3, 1)) AS v
-              FROM model GROUP BY lang
-            )
-            SELECT tri.doc_id,
-                   round(pow(10, -avg(log10((m.c3 + 0.1)
-                                            / (c.c2 + 0.1 * v.v)))), 6) AS ppl
-            FROM tri
-            JOIN model m ON tri.lang = m.lang AND tri.g = m.g
-            JOIN ctx c ON tri.lang = c.lang AND substring(tri.g, 1, 2) = c.cx
-            JOIN vocab v ON tri.lang = v.lang
-            GROUP BY tri.doc_id
         """,
         "embedding_topk": """
             SELECT vec_id,
@@ -1443,10 +1194,6 @@ def oracle_sql() -> dict[str, str]:
         "neardup_simhash_pairs": f"""
             SELECT id_a, id_b, hamming
             FROM {_frozen("neardup_simhash_pairs")}
-        """,
-        "langid_predict_documents": f"""
-            SELECT doc_id, lang, lang_pred
-            FROM {_frozen("langid_predict_documents")}
         """,
         "langid_unresolved": f"""
             SELECT doc_id, lang_pred, strategy

@@ -17,17 +17,12 @@ Text prep is frozen: lowercase, first PPL_MAX_CHARS chars, events are
 all contiguous 3-char windows (no BOS/EOS padding). A doc with fewer
 than 3 chars has no events -> perplexity None (no rule fires).
 
-Three implementations with identical semantics:
+Two entry points share one spec:
   - train_ppl_py / perplexity_py: the pure-Python spec (oracle mode,
-    and the per-batch scorer inside the fused label UDF);
-  - train_ppl_spark: DataFrame aggregation trainer (explode trigrams ->
-    hash agg), the A4/codegen-analog offline fit job;
+    and the per-batch scorer inside the fused label UDF); the model is
+    trained once on the driver and broadcast;
   - with_perplexity: Arrow-batched scoring of a DataFrame under the
-    broadcast model — one python hop, no shuffle (the 10^12-doc path).
-
-The in-query, fully-SQL-expressible variant (train on the corpus being
-scored, score with built-in joins) lives in __spark_entry__.py's
-``doc_perplexity`` so DuckDB can oracle the whole computation.
+    broadcast default model — one python hop, no shuffle.
 """
 
 from __future__ import annotations
@@ -37,7 +32,7 @@ from collections import Counter
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -132,9 +127,9 @@ def logprob10_py(
     sc = _scorer(model).get(lang)
     if sc is None:
         return 0.0, 0
-    # r6: same invisible-char cleanup as the NB scorers (langid spec) —
+    # r6: same invisible-char cleanup as the NB scorer (langid spec) —
     # applied at SCORING time; training corpora are clean by
-    # construction and the in-query SQL LM keeps raw-text semantics
+    # construction
     from .langid import normalize_scoring_text
 
     t = normalize_scoring_text(text)[:PPL_MAX_CHARS].lower()
@@ -163,87 +158,6 @@ def perplexity_py(text: str, lang: str, model: PplModel) -> float | None:
     return 10.0 ** (-lp / n)
 
 
-def ppl_grams_col(text: Column | str, n: int = PPL_NGRAM, cap: int = PPL_MAX_CHARS) -> Column:
-    """JVM-side trigram-event array, length-gated (same guard as
-    langid.grams_col: sequence(1, 0) descends, so short texts must emit
-    an EMPTY array, not spurious grams)."""
-    c = F.col(text) if isinstance(text, str) else text
-    t = F.lower(F.substring(c, 1, cap))  # cap BEFORE lower = text[:cap].lower()
-    length = F.length(t)
-    return F.when(
-        length >= n,
-        F.transform(
-            F.sequence(F.lit(1), length - F.lit(n - 1)),
-            lambda i: t.substr(i, F.lit(n)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-
-
-def train_ppl_spark(
-    df: DataFrame, lang_col: str = "lang", text_col: str = "text"
-) -> PplModel:
-    """DataFrame trainer: explode trigrams -> one partial+final hash
-    agg -> collect the (small) model table driver-side. Parity with
-    train_ppl_py is exact (tests/test_perplexity.py)."""
-    from .langid import exploded_grams
-
-    tri_rows = (
-        exploded_grams(
-            df.select(
-                F.col(lang_col).alias("lang"), F.col(text_col).alias("text")
-            ),
-            n=PPL_NGRAM,
-            cap=PPL_MAX_CHARS,
-            out="g",
-        )
-        .groupBy("lang", "g")
-        .agg(F.count("*").alias("c3"))
-        .collect()
-    )
-    tri_by_lang: dict[str, dict[str, int]] = {}
-    for r in tri_rows:
-        tri_by_lang.setdefault(r["lang"], {})[r["g"]] = r["c3"]
-    model: PplModel = {}
-    for lang, tri in tri_by_lang.items():
-        ctx: Counter[str] = Counter()
-        vocab: set[str] = set()
-        for g, c in tri.items():
-            ctx[g[: PPL_NGRAM - 1]] += c
-            vocab.add(g[PPL_NGRAM - 1])
-        model[lang] = (tri, dict(ctx), len(vocab))
-    return model
-
-
-def save_ppl_model(spark: SparkSession, model: PplModel, path: str) -> None:
-    """Persist as a (lang, gram, cnt) trigram table — ctx counts and
-    vocab are derived on load, so the stored form is minimal."""
-    rows = [
-        (lang, g, int(c))
-        for lang, (tri, _, _) in sorted(model.items())
-        for g, c in sorted(tri.items())
-    ]
-    from ..session import local_rows_df
-
-    local_rows_df(
-        spark, rows, "lang string, gram string, cnt long", slices=4
-    ).coalesce(1).write.mode("overwrite").parquet(path)
-
-
-def load_ppl_model(spark: SparkSession, path: str) -> PplModel:
-    tri_by_lang: dict[str, dict[str, int]] = {}
-    for r in spark.read.parquet(path).collect():
-        tri_by_lang.setdefault(r["lang"], {})[r["gram"]] = r["cnt"]
-    model: PplModel = {}
-    for lang, tri in tri_by_lang.items():
-        ctx: Counter[str] = Counter()
-        vocab: set[str] = set()
-        for g, c in tri.items():
-            ctx[g[: PPL_NGRAM - 1]] += c
-            vocab.add(g[PPL_NGRAM - 1])
-        model[lang] = (tri, dict(ctx), len(vocab))
-    return model
-
-
 _DEFAULT_PPL_MODEL: PplModel | None = None
 
 
@@ -259,17 +173,15 @@ def default_ppl_model() -> PplModel:
     return _DEFAULT_PPL_MODEL
 
 
-def make_perplexity_udf(spark: SparkSession, model: PplModel | None = None):
-    """Arrow-batched (text, lang) -> perplexity under the broadcast
-    model. One python hop, no shuffle — the corpus-scale scorer."""
-    if model is not None:
-        bc = spark.sparkContext.broadcast(model)
-    else:  # default model: broadcast once per application, then reuse
-        from ..session import cached_broadcast
+def make_perplexity_udf(spark: SparkSession):
+    """Arrow-batched (text, lang) -> perplexity under the default
+    model, broadcast once per application. One python hop, no shuffle
+    — the corpus-scale scorer."""
+    from ..session import cached_broadcast
 
-        bc = cached_broadcast(
-            spark, "perplexity.default_ppl_model", default_ppl_model
-        )
+    bc = cached_broadcast(
+        spark, "perplexity.default_ppl_model", default_ppl_model
+    )
 
     @F.pandas_udf(T.DoubleType())
     def ppl_udf(texts: pd.Series, langs: pd.Series) -> pd.Series:
@@ -290,11 +202,10 @@ def with_perplexity(
     spark: SparkSession,
     lang_col: str = "lang_pred",
     text_col: str = "text",
-    model: PplModel | None = None,
     out_col: str = "perplexity",
 ) -> DataFrame:
     return df.withColumn(
-        out_col, make_perplexity_udf(spark, model)(F.col(text_col), F.col(lang_col))
+        out_col, make_perplexity_udf(spark)(F.col(text_col), F.col(lang_col))
     )
 
 

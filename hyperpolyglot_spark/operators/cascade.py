@@ -7,7 +7,7 @@ Stage order and candidate-narrowing semantics mirror the reference:
   3. meta lang  (shebang parse + intersect, :157-166)
   4. heuristics (rule engine + intersect, only if >1 candidate, :169-185)
   5. classifier (naive Bayes over remaining candidates, :187-194 —
-     by default the HASHED fixed-width n-gram model, langid.HashedModel);
+     the hashed fixed-width n-gram model, langid.HashedModel);
      deviation from the reference (documented): 0 candidates at the
      terminal classifies over ALL languages instead of returning None —
      a web pipeline labels every document (classifier.rs:19-22 is the
@@ -25,7 +25,7 @@ from __future__ import annotations
 import re
 
 from ..functions.langdata import MARKER_RULES
-from ..functions.langid import classify_any, classify_or_none_py
+from ..functions.langid import classify_or_none_py
 from ..functions.metadata import (
     filter_candidates,
     meta_lang_candidates,
@@ -54,17 +54,15 @@ def heuristic_matches_py(cands: list[str], text: str) -> list[str]:
 # ======================================================================
 
 def detect_lang_py(
-    url: str, text: str, meta_tag: str | None, model=None,
-    unresolved: bool = True,
+    url: str, text: str, meta_tag: str | None, model=None
 ) -> tuple[str | None, str]:
     """(lang, strategy) for one document. THE label spec.
 
-    The terminal classifier stage can now return (None, 'unresolved')
-    when the NB decision is noise-like (langid.classify_or_none_py) —
-    the analog of the reference's `detect` returning None at zero
+    The terminal classifier stage returns (None, 'unresolved') when
+    the NB decision is noise-like (langid.classify_or_none_py) — the
+    analog of the reference's `detect` returning None at zero
     candidates (src/lib.rs:187-189) generalized to an open-world
-    confidence cutoff. ``unresolved=False`` restores the historical
-    force-argmax terminal."""
+    confidence cutoff."""
     hint = url_hint_lang(url)
     if hint is not None:
         return hint, "urlhint"
@@ -83,9 +81,7 @@ def detect_lang_py(
     if len(cands) == 1:
         return cands[0], "heuristics"
 
-    if unresolved:
-        lang = classify_or_none_py(text, cands, model)
-        if lang is None:
-            return None, "unresolved"
-        return lang, "classifier"
-    return classify_any(text, cands, model), "classifier"
+    lang = classify_or_none_py(text, cands, model)
+    if lang is None:
+        return None, "unresolved"
+    return lang, "classifier"

@@ -5,8 +5,9 @@ transitively, from one of two roots: the job and the benchmark
 (jobs/, perfbench/), or the oracle-checked query surface and its
 frozen-table generator (__spark_entry__.py, tools/), or be named in
 TEST_ONLY or LOADED_BY_NAME below. The job's own closure is pinned
-exactly (JOB_CLOSURE). The imports are read with ``ast``, so the check
-starts no Spark and runs no module.
+exactly (JOB_CLOSURE), and so is every top-level name in it that the
+job and the benchmark do not reach (ENTRY_OR_TEST_NAMES). The sources
+are read with ``ast``, so the checks start no Spark and run no module.
 """
 
 import ast
@@ -48,6 +49,30 @@ JOB_CLOSURE = {
     f"{PKG}.plans.pipeline",
     f"{PKG}.plans.resume",
     f"{PKG}.session",
+}
+# top-level names of JOB_CLOSURE modules that only the query surface,
+# tools/ or the tests use; a name that neither the job nor the
+# benchmark reaches, and that is not listed here, fails by name
+ENTRY_OR_TEST_NAMES = {
+    f"{PKG}.__version__",
+    f"{PKG}.datagen.pages.gen_pages_pdf",
+    f"{PKG}.functions.langid.NORM_FROM",
+    f"{PKG}.functions.langid.NORM_TO",
+    # the spec scorer: functions/segments uses it, and the tests hold
+    # classify_margin_py's winner to it
+    f"{PKG}.functions.langid.classify_hashed_py",
+    f"{PKG}.functions.langid.make_classify_udf",
+    f"{PKG}.functions.perplexity.make_perplexity_udf",
+    f"{PKG}.functions.perplexity.with_perplexity",
+    f"{PKG}.functions.quality.with_keep_drop",
+    f"{PKG}.functions.quality._keep_drop_udf",
+    f"{PKG}.functions.quality._KEEP_DROP_SCHEMA",
+    f"{PKG}.functions.quality._SIGNAL_FIELDS",
+    f"{PKG}.functions.scrub.with_scrub",
+    f"{PKG}.functions.scrub._scrub_udf",
+    f"{PKG}.functions.scrub._SCRUB_SCHEMA",
+    f"{PKG}.plans.pipeline.breakdown",
+    f"{PKG}.session.local_rows_df",
 }
 
 
@@ -119,3 +144,70 @@ def test_job_closure_is_pinned():
     reached = closure(("jobs",), package_modules())
     assert not reached - JOB_CLOSURE, f"new in the job: {sorted(reached - JOB_CLOSURE)}"
     assert not JOB_CLOSURE - reached, f"gone from the job: {sorted(JOB_CLOSURE - reached)}"
+
+
+DEFINITIONS = (ast.FunctionDef, ast.ClassDef, ast.Assign, ast.AnnAssign)
+
+
+def top_level_names(tree: ast.Module):
+    """(name, node) for each top-level def, class and assignment."""
+    for node in tree.body:
+        if isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+            yield node.name, node
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            for target in targets:
+                for n in ast.walk(target):
+                    if isinstance(n, ast.Name):
+                        yield n.id, node
+
+
+def referenced(node: ast.AST) -> set[str]:
+    """Identifiers ``node`` uses: bare names and attribute names (an
+    import alone uses nothing)."""
+    out = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+    return out
+
+
+def unreached_names() -> set[str]:
+    """Dotted top-level names of JOB_CLOSURE modules that jobs/ and
+    perfbench/ do not reach, following uses by name through the
+    closure's own definitions. Statements that run on import (neither
+    a definition nor an import) count as reached."""
+    mods = package_modules()
+    defs: dict[str, list[tuple[str, ast.AST]]] = {}
+    todo = set()
+    for m in JOB_CLOSURE:
+        tree = ast.parse(mods[m].read_text(), str(mods[m]))
+        for name, node in top_level_names(tree):
+            defs.setdefault(name, []).append((m, node))
+        for node in tree.body:
+            if not isinstance(node, (*DEFINITIONS, ast.Import, ast.ImportFrom)):
+                todo |= referenced(node)
+    for root in JOB_ROOTS:
+        for path in (ROOT / root).rglob("*.py"):
+            todo |= referenced(ast.parse(path.read_text(), str(path)))
+    reached = set()
+    todo &= defs.keys()
+    while todo:
+        name = todo.pop()
+        reached.add(name)
+        for _, node in defs[name]:
+            todo |= (referenced(node) & defs.keys()) - reached
+    return {f"{m}.{name}" for name, ds in defs.items() if name not in reached for m, _ in ds}
+
+
+def test_job_module_names_are_reached():
+    unreached = unreached_names()
+    assert not unreached - ENTRY_OR_TEST_NAMES, (
+        f"not reached from the job or the benchmark: {sorted(unreached - ENTRY_OR_TEST_NAMES)}"
+    )
+    # the list stays exact: no entry is stale or reached anyway
+    assert not ENTRY_OR_TEST_NAMES - unreached, (
+        f"stale: {sorted(ENTRY_OR_TEST_NAMES - unreached)}"
+    )

@@ -1,18 +1,7 @@
-"""Model fit/persist roundtrip + IVF index partition pruning."""
+"""IVF index partition pruning."""
 
-import math
-
-import pytest
 from pyspark.sql import functions as F
 
-from hyperpolyglot_spark.functions.langid import (
-    classify_py,
-    load_model,
-    save_model,
-    train_py,
-    train_spark,
-    training_corpus,
-)
 from hyperpolyglot_spark.operators.similarity import (
     brute_force_topk,
     build_ivf_index,
@@ -20,33 +9,6 @@ from hyperpolyglot_spark.operators.similarity import (
 )
 
 SF = "/root/testdata/sf0.01"
-
-
-def test_train_spark_matches_train_py(spark):
-    corpus = training_corpus(docs_per_lang=8)
-    py_model = train_py(corpus)
-    df = spark.createDataFrame(corpus, "lang string, text string")
-    spark_model = train_spark(df)
-    assert set(spark_model) == set(py_model)
-    for lang in py_model:
-        assert set(spark_model[lang]) == set(py_model[lang])
-        for gram, lp in list(py_model[lang].items())[:200]:
-            assert spark_model[lang][gram] == pytest.approx(lp, abs=1e-9)
-
-
-def test_model_save_load_roundtrip_and_scoring(spark, tmp_path):
-    corpus = training_corpus(docs_per_lang=8)
-    model = train_py(corpus)
-    path = str(tmp_path / "model")
-    save_model(spark, model, path)
-    loaded = load_model(spark, path)
-    assert set(loaded) == set(model)
-    sample = "der die und das ist von mit den nicht ein haus wasser welt"
-    assert classify_py(sample, None, loaded) == classify_py(sample, None, model)
-    for lang in model:
-        for g in list(model[lang])[:50]:
-            assert loaded[lang][g] == pytest.approx(model[lang][g], abs=1e-12)
-        assert not math.isnan(next(iter(loaded[lang].values())))
 
 
 def test_ivf_indexed_search_prunes_partitions(spark, tmp_path):
@@ -70,17 +32,3 @@ def test_ivf_indexed_search_prunes_partitions(spark, tmp_path):
     assert full == exact
 
 
-def test_train_spark_short_text_parity(spark):
-    """Texts shorter than NGRAM chars contribute ZERO grams in both
-    trainers (ADVICE round 1: sequence(1, 0) descends in Spark and would
-    inject two spurious grams per short doc)."""
-    corpus = [("xx", "ab"), ("xx", "abcd"), ("yy", ""), ("yy", "q"), ("yy", "qrstu")]
-    py_model = train_py(corpus)
-    spark_model = train_spark(
-        spark.createDataFrame(corpus, "lang string, text string")
-    )
-    assert set(spark_model) == set(py_model)
-    for lang in py_model:
-        assert set(spark_model[lang]) == set(py_model[lang]), lang
-        for gram, lp in py_model[lang].items():
-            assert spark_model[lang][gram] == pytest.approx(lp, abs=1e-9)

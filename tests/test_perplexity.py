@@ -1,4 +1,4 @@
-"""KenLM-style perplexity: trainer parity, scoring spec, rule wiring,
+"""KenLM-style perplexity: training and scoring spec, rule wiring,
 and the quality separation the MAX_PPL threshold relies on."""
 
 import math
@@ -7,17 +7,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from hyperpolyglot_spark.datagen.pages import gen_page, gen_pages_pdf
-from hyperpolyglot_spark.functions.langid import training_corpus
 from hyperpolyglot_spark.functions.perplexity import (
     PPL_ALPHA,
     default_ppl_model,
-    load_ppl_model,
     logprob10_py,
     perplexity_py,
     ppl_events,
-    save_ppl_model,
     train_ppl_py,
-    train_ppl_spark,
     with_perplexity,
 )
 from hyperpolyglot_spark.functions.quality import MAX_PPL
@@ -48,40 +44,6 @@ def test_probabilities_normalize():
         n_seen = len(seen_next[cx])
         s_full = s + (v - n_seen) * PPL_ALPHA / (total + PPL_ALPHA * v)
         assert s_full == pytest.approx(1.0, abs=1e-12)
-
-
-def test_train_spark_matches_train_py(spark):
-    corpus = training_corpus(docs_per_lang=6)
-    py_model = train_ppl_py(corpus)
-    spark_model = train_ppl_spark(
-        spark.createDataFrame(corpus, "lang string, text string")
-    )
-    assert set(spark_model) == set(py_model)
-    for lang in py_model:
-        tri_p, ctx_p, v_p = py_model[lang]
-        tri_s, ctx_s, v_s = spark_model[lang]
-        assert tri_s == tri_p
-        assert ctx_s == ctx_p
-        assert v_s == v_p
-
-
-def test_train_spark_short_text_parity(spark):
-    corpus = [("xx", "ab"), ("xx", "abcd"), ("yy", "")]
-    assert train_ppl_spark(
-        spark.createDataFrame(corpus, "lang string, text string")
-    ) == train_ppl_py(corpus)
-
-
-def test_save_load_roundtrip(spark, tmp_path):
-    model = train_ppl_py(training_corpus(docs_per_lang=4))
-    path = str(tmp_path / "ppl")
-    save_ppl_model(spark, model, path)
-    loaded = load_ppl_model(spark, path)
-    assert set(loaded) == set(model)
-    for lang in model:
-        assert loaded[lang][0] == model[lang][0]
-        assert loaded[lang][1] == model[lang][1]
-        assert loaded[lang][2] == model[lang][2]
 
 
 def test_scoring_spec_by_hand():

@@ -65,15 +65,6 @@ def test_minhash_bucket_join_prunes_pairs(spark):
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
 
 
-def test_doc_perplexity_broadcasts_model(spark):
-    """In-query LM scoring joins model/ctx/vocab via broadcast — no
-    sort-merge shuffle of the event stream, no cartesian."""
-    plan = plan_of(entry_mod.doc_perplexity(spark, SF))
-    assert plan.count("BroadcastHashJoin") >= 3
-    assert "CartesianProduct" not in plan
-    assert "SortMergeJoin" not in plan
-
-
 def test_neardup_expansion_is_equijoin_only(spark):
     """Pre-collapse + expansion adds joins; all must stay hash
     equi-joins (no cartesian / nested-loop anywhere)."""
@@ -125,51 +116,6 @@ def test_indexed_incremental_join_plan(spark):
         assert "idx/banded" in plan  # the index scan feeds the bucket join
     finally:
         shutil.rmtree(root, ignore_errors=True)
-
-
-def test_hashed_gram_buckets_hashes_distinct_grams_only(spark):
-    """Two-phase gram aggregation: the md5 bucketing must sit ABOVE the
-    first (lang, gram) aggregate — i.e. run once per distinct group —
-    never in the projection under it (once per occurrence). At corpus
-    scale distinct grams plateau while occurrences grow linearly, so
-    the hash cost per document must amortize to zero."""
-    # the checkpoint boundary hides the aggregation subtree from the
-    # final query's plan, so assert it on the exposed pre-checkpoint
-    # builder: two partial/final aggregation PAIRS — (lang, gram) then
-    # (lang, bucket). Expression strings truncate in toString, so the
-    # aggregate structure is the reliable discriminator.
-    pre = plan_of(entry_mod._hashed_gram_counts(spark, SF))
-    assert pre.count("HashAggregate") >= 4
-    # two AGGREGATION shuffles at most ((lang, gram) then (lang,
-    # bucket)); the r07 _spread round-robin exchange (scan-parallelism
-    # fix for the single-row-group testdata files) is not an
-    # aggregation shuffle, so count hashpartitioning exchanges only
-    assert pre.count("Exchange hashpartitioning") <= 2
-    # per-lang totals come from a BROADCAST hash join on the bounded
-    # checkpointed table — never an unbounded-frame sum window (the
-    # classifier_training_agg round-3 regression shape): parallelism
-    # bounded by #langs and a second sort of every lang partition
-    plan = plan_of(entry_mod.hashed_gram_buckets(spark, SF))
-    assert "BroadcastHashJoin" in plan
-    assert "Window [" not in plan
-
-
-def test_classifier_training_agg_plan_shape(spark):
-    """Round-4 rewrite assertion: per-lang totals come from a BROADCAST
-    hash join (not an unbounded-frame sum window, which blocked the
-    rank-limit pushdown and re-sorted every lang partition), and the
-    top-200 filter is pushed below the exchange as partial+final
-    WindowGroupLimit — at scale only ~200 rows per language cross the
-    wire instead of every distinct (lang, gram)."""
-    import __spark_entry__ as entry
-
-    df = entry.queries()["classifier_training_agg"](
-        spark, "/root/testdata/sf0.01"
-    )
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-    assert "WindowGroupLimit" in plan
-    assert plan.count("Window [") == 1  # only the rank window remains
 
 
 def test_training_mix_sample_is_shuffle_free(spark):

@@ -9,7 +9,7 @@ from hyperpolyglot_spark.functions.extract import (
     extract_text,
     truncate_to_char_boundary,
 )
-from hyperpolyglot_spark.functions.langid import classify_py, text_grams
+from hyperpolyglot_spark.functions.langid import classify_hashed_py, text_grams
 from hyperpolyglot_spark.functions.metadata import (
     filter_candidates,
     tld_candidates,
@@ -82,7 +82,7 @@ def test_filter_candidates_laws(prev, new):
 @settings(max_examples=100, deadline=None)
 @given(TEXT)
 def test_classify_total(s):
-    lang = classify_py(s, None)
+    lang = classify_hashed_py(s, None)
     assert isinstance(lang, str) and lang
     assert len(text_grams(s)) <= 1998
 

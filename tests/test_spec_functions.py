@@ -3,6 +3,7 @@ mirrors the reference's per-operator inline tests (SURVEY.md §5.1) —
 plus the checks that hold each spec to its independent oracle (the
 generated DuckDB SQL) and its Spark runner."""
 
+import numpy as np
 import pytest
 
 from hyperpolyglot_spark.functions.extract import (
@@ -11,10 +12,12 @@ from hyperpolyglot_spark.functions.extract import (
     truncate_to_char_boundary,
 )
 from hyperpolyglot_spark.functions.langid import (
-    classify_py,
-    default_model,
+    DEFAULT_LOG_PROB,
+    HASH_BUCKETS,
+    classify_hashed_py,
+    default_hashed_model,
     text_grams,
-    train_py,
+    train_hashed_py,
     training_corpus,
 )
 from hyperpolyglot_spark.functions.metadata import (
@@ -272,34 +275,37 @@ def test_jvm_scrub_udf_matches_spec(spark, page_texts):
 def test_classifier_accuracy_on_corpus():
     """Golden-corpus accuracy == 1.0 (reference lib.rs:386-432 requires
     accuracy 1.0 on samples/; train==eval like the reference)."""
-    model = default_model()
+    model = default_hashed_model()
     corpus = training_corpus(docs_per_lang=10, seed=777)  # fresh draws
     correct = sum(
-        1 for lang, text in corpus if classify_py(text, None, model) == lang
+        1
+        for lang, text in corpus
+        if classify_hashed_py(text, None, model) == lang
     )
     assert correct / len(corpus) == 1.0
 
 
 def test_classifier_candidate_restriction():
-    model = default_model()
+    model = default_hashed_model()
     de_text = "der die und das ist von mit den nicht ein haus wasser"
-    assert classify_py(de_text, ["fr", "de"], model) == "de"
+    assert classify_hashed_py(de_text, ["fr", "de"], model) == "de"
     # restricted away from truth -> best among candidates, not 'de'
-    assert classify_py(de_text, ["fr", "it"], model) in ("fr", "it")
+    assert classify_hashed_py(de_text, ["fr", "it"], model) in ("fr", "it")
 
 
 def test_classifier_stable_tie_break():
     # unknown grams everywhere -> all candidates tie at default logprob;
     # earlier candidate must win (classifier.rs:42-48 stable sort)
-    model = {"aa": {}, "bb": {}}
-    assert classify_py("qqqq", ["bb", "aa"], model) == "bb"
+    empty = np.full(HASH_BUCKETS, DEFAULT_LOG_PROB)
+    model = {"aa": empty, "bb": empty.copy()}
+    assert classify_hashed_py("qqqq", ["bb", "aa"], model) == "bb"
     # language missing from model -> -inf, never wins over a known one
-    assert classify_py("qqqq", ["zz", "aa"], model) == "aa"
+    assert classify_hashed_py("qqqq", ["zz", "aa"], model) == "aa"
 
 
 def test_classifier_empty_candidates_scores_all():
-    model = default_model()
-    assert classify_py("的是了在和有这就不人", [], model) == "zh"
+    model = default_hashed_model()
+    assert classify_hashed_py("的是了在和有这就不人", [], model) == "zh"
 
 
 def test_text_grams_bounded():
@@ -308,10 +314,8 @@ def test_text_grams_bounded():
 
 
 def test_train_py_logprobs_normalize():
-    import math
-
-    model = train_py([("xx", "abcabc")])
-    total = sum(math.exp(p) for p in model["xx"].values())
+    vec = train_hashed_py([("xx", "abcabc")])["xx"]
+    total = np.exp(vec[vec != DEFAULT_LOG_PROB]).sum()
     assert total == pytest.approx(1.0)
 
 

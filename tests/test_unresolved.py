@@ -17,7 +17,7 @@ from hyperpolyglot_spark.datagen.unknown import (
     fixture_rows,
 )
 from hyperpolyglot_spark.functions.langid import (
-    classify_any,
+    classify_hashed_py,
     classify_margin_py,
     classify_or_none_py,
     default_hashed_model,
@@ -65,7 +65,7 @@ def test_unknown_script_ratio():
 
 
 def test_margin_agrees_with_argmax():
-    """classify_margin_py's winner must equal classify_any's on every
+    """classify_margin_py's winner must equal classify_hashed_py's on every
     training doc and fixture doc — the gate never changes WHO wins,
     only whether the win is trusted."""
     m = default_hashed_model()
@@ -73,7 +73,7 @@ def test_margin_agrees_with_argmax():
     texts += [t for _, t in fixture_rows_texts()]
     for t in texts:
         lang, margin, top1 = classify_margin_py(t, None, m)
-        assert lang == classify_any(t, None, m)
+        assert lang == classify_hashed_py(t, None, m)
         assert margin >= 0.0
 
 
@@ -101,11 +101,6 @@ def test_detect_lang_py_unresolved_strategy():
     alien = UNKNOWN_SCRIPT[0][1]
     lang, strategy = detect_lang_py("https://example.com/page", alien, None)
     assert lang is None and strategy == "unresolved"
-    # legacy force-argmax still available
-    lang2, strategy2 = detect_lang_py(
-        "https://example.com/page", alien, None, unresolved=False
-    )
-    assert lang2 is not None and strategy2 == "classifier"
 
 
 def test_cascade_unresolved_stratum():

@@ -57,22 +57,6 @@ def expected_simhash_pairs() -> pd.DataFrame:
     )
 
 
-def expected_langid_predictions() -> pd.DataFrame:
-    """train_py on the corpus itself + classify_py over all languages —
-    the frozen spec the Spark query (train_spark + classify UDF) must
-    reproduce row-for-row."""
-    from hyperpolyglot_spark.functions.langid import classify_py, train_py
-
-    rows = duckdb.sql(
-        f"SELECT doc_id, lang, text FROM read_parquet('{SF}/documents.parquet') ORDER BY doc_id"
-    ).fetchall()
-    model = train_py([(r[1], r[2]) for r in rows])
-    out = [(r[0], r[1], classify_py(r[2], [], model)) for r in rows]
-    return pd.DataFrame(out, columns=["doc_id", "lang", "lang_pred"]).astype(
-        {"doc_id": "int64"}
-    )
-
-
 def expected_langid_unresolved() -> pd.DataFrame:
     """classify_or_none_py (default hashed model, full universe) over
     doc_id<100 of documents plus the out-of-universe fixture — the
@@ -424,7 +408,6 @@ def main():
     os.makedirs(OUT, exist_ok=True)
     tables = {
         "neardup_simhash_pairs": expected_simhash_pairs(),
-        "langid_predict_documents": expected_langid_predictions(),
         "langid_unresolved": expected_langid_unresolved(),
         "unresolved_disposition": expected_unresolved_disposition(),
         "langid_short_texts": expected_langid_short_texts(),
@@ -443,9 +426,6 @@ def main():
 
     spark = get_spark("gen_expected", cores=8)
     crosscheck(spark, "neardup_simhash_pairs", tables["neardup_simhash_pairs"])
-    crosscheck(
-        spark, "langid_predict_documents", tables["langid_predict_documents"]
-    )
     crosscheck(spark, "langid_unresolved", tables["langid_unresolved"])
     crosscheck(
         spark, "unresolved_disposition", tables["unresolved_disposition"]
