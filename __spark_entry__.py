@@ -8,12 +8,11 @@ order-insensitive rows under sorted column names
 
 The queries cover what this system carries next to its label job:
 the label spec's quality ladder, scrub and perplexity, language ID,
-dedup and embedding similarity, plus document text statistics over
-the ``documents`` and ``embeddings`` tables. The label spec's own
-oracle SQL lives in functions/spec_sql.py.
+dedup, plus document text statistics over the ``documents`` table.
+The label spec's own oracle SQL lives in functions/spec_sql.py.
 
-For the queries whose semantics DuckDB cannot compute (blake2b simhash
-LSH, NB language prediction, IVF ANN probe, ...) the oracle reads a
+For the queries whose semantics DuckDB cannot compute (NB language
+prediction, code-switch segmentation, ...) the oracle reads a
 FROZEN expected table in data/expected_sf0.01/ beside this module,
 computed from the pure-Python specs — independently of the Spark
 implementations — and cross-checked at generation time
@@ -42,13 +41,6 @@ from hyperpolyglot_spark.operators.dedup import (
     exact_dedup_groups,
     minhash_neardup_pairs,
     ngram_jaccard_pairs,
-    simhash_neardup_pairs,
-)
-from hyperpolyglot_spark.operators.similarity import (
-    brute_force_topk,
-    cosine_neardup_pairs,
-    ivf_centroids,
-    ivf_topk,
 )
 
 
@@ -314,11 +306,6 @@ def neardup_incremental_indexed(spark, sf_dir):
     )
     save_dedup_index(spark, old, idx)
     return minhash_neardup_join_indexed(spark, new, idx, old, threshold=0.5)
-
-
-def neardup_simhash_pairs(spark, sf_dir):
-    docs = _t(spark, sf_dir, "documents")
-    return simhash_neardup_pairs(docs, max_hamming=3)
 
 
 def doc_script_mix(spark, sf_dir):
@@ -668,59 +655,6 @@ def _canon_dedup_sql() -> str:
     """
 
 
-# ======================================================================
-# embeddings: similarity search
-# ======================================================================
-
-def _query_vec(spark, sf_dir, vid=0):
-    row = (
-        _t(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") == vid)
-        .select("embedding")
-        .collect()[0]
-    )
-    return [float(x) for x in row["embedding"]]
-
-
-def embedding_topk(spark, sf_dir):
-    emb = _t(spark, sf_dir, "embeddings")
-    return brute_force_topk(emb, _query_vec(spark, sf_dir, 0), k=10)
-
-
-def embedding_neardup(spark, sf_dir):
-    emb = _t(spark, sf_dir, "embeddings")
-    return cosine_neardup_pairs(emb, 0.45, block_col="label")
-
-
-def embedding_label_centroids(spark, sf_dir):
-    emb = _t(spark, sf_dir, "embeddings")
-    v = F.col("embedding").cast("array<double>")
-    aggs = [
-        F.round(F.avg(F.element_at(v, i + 1)), 6).alias(f"c{i}")
-        for i in range(8)
-    ]
-    return emb.groupBy("label").agg(F.count("*").alias("n"), *aggs)
-
-
-def embedding_knn(spark, sf_dir):
-    """Exact top-3 neighbors per vector (KNN self-join). Unblocked here
-    (the oracle-able baseline at test scale); the operator takes an IVF
-    cell / SRP bucket as block_col for the candidates-only scale path
-    (recall asserted in tests)."""
-    from hyperpolyglot_spark.operators.similarity import knn_join
-
-    emb = _t(spark, sf_dir, "embeddings")
-    return knn_join(emb, k=3)
-
-
-def embedding_ann_ivf(spark, sf_dir):
-    """IVF-bucketed approximate top-k (rows-only check: ANN is not
-    SQL-expressible; accuracy vs brute force asserted in tests)."""
-    emb = _t(spark, sf_dir, "embeddings")
-    C = ivf_centroids(emb, n_cells=8)
-    return ivf_topk(emb, C, _query_vec(spark, sf_dir, 7), k=10, n_probe=4)
-
-
 def langid_code_switch_spans(spark, sf_dir):
     """Per-span language segmentation for code-switched documents
     (VERDICT r5 #2): the reference's single-``Detection`` outcome
@@ -851,39 +785,6 @@ def source_rule_rollup(spark, sf_dir):
     )
 
 
-def semantic_dedup_embeddings(spark, sf_dir):
-    """SemDedup-style embedding-cluster dedup decision (VERDICT r5 #6):
-    IVF cells (deterministic centroids: 8 lowest-id seeds + one k-means
-    pass) + within-cell cosine near-dup -> keep/drop per vector with
-    dup_of/dup_cosine audit columns (operators/dedup.semantic_dedup).
-    The semantic-dedup pass real LLM pipelines run after minhash.
-    Oracle = frozen numpy replication of the same clustering + drop
-    rule (tools/gen_expected.py), so the driver gate covers the
-    blocked decision itself — no all-pairs outside the oracle."""
-    from hyperpolyglot_spark.operators.dedup import semantic_dedup
-
-    emb = _t(spark, sf_dir, "embeddings")
-    C = ivf_centroids(emb, n_cells=8)
-    return semantic_dedup(emb, C, threshold=0.45)
-
-
-def embedding_knn_blocked(spark, sf_dir):
-    """The PRODUCTION form of the KNN self-join: multi-probe IVF cell
-    blocking (assign_cells_multi) makes the join candidates-only —
-    never all-pairs. Oracled against a frozen numpy replication of the
-    same blocking (tools/gen_expected.py), so the driver gate covers
-    the blocked plan itself, not just the quadratic baseline."""
-    from hyperpolyglot_spark.operators.similarity import (
-        assign_cells_multi,
-        knn_join,
-    )
-
-    emb = _t(spark, sf_dir, "embeddings")
-    C = ivf_centroids(emb, n_cells=8)
-    blocked = assign_cells_multi(emb, C, n_probe=3)
-    return knn_join(blocked, k=3, block_col="cell")
-
-
 # ======================================================================
 # registry
 # ======================================================================
@@ -920,17 +821,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "exact_dedup_documents": exact_dedup_documents,
         "neardup_jaccard_pairs": neardup_jaccard_pairs,
         "neardup_minhash_pairs": neardup_minhash_pairs,
-        "neardup_simhash_pairs": neardup_simhash_pairs,
         "neardup_incremental": neardup_incremental,
         "neardup_incremental_indexed": neardup_incremental_indexed,
-        # --- embeddings ---
-        "embedding_topk": embedding_topk,
-        "embedding_neardup": embedding_neardup,
-        "embedding_label_centroids": embedding_label_centroids,
-        "embedding_knn": embedding_knn,
-        "embedding_knn_blocked": embedding_knn_blocked,
-        "embedding_ann_ivf": embedding_ann_ivf,
-        "semantic_dedup_embeddings": semantic_dedup_embeddings,
     }
 
 
@@ -1168,33 +1060,12 @@ def oracle_sql() -> dict[str, str]:
               WHERE regexp_matches(text, '(^| )(market|value)( |$)'))
             GROUP BY strategy, lang
         """,
-        "embedding_topk": """
-            SELECT vec_id,
-                   round(list_cosine_similarity(embedding::DOUBLE[],
-                         (SELECT embedding::DOUBLE[] FROM embeddings WHERE vec_id = 0)),
-                         6) AS cosine
-            FROM embeddings
-            ORDER BY cosine DESC, vec_id LIMIT 10
-        """,
-        "embedding_neardup": """
-            SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-                   round(list_cosine_similarity(a.embedding::DOUBLE[],
-                                                b.embedding::DOUBLE[]), 6) AS cosine
-            FROM embeddings a JOIN embeddings b
-              ON a.label = b.label AND a.vec_id < b.vec_id
-            WHERE round(list_cosine_similarity(a.embedding::DOUBLE[],
-                                               b.embedding::DOUBLE[]), 6) > 0.45
-        """,
         # --- frozen-expected oracles (tools/gen_expected.py): the
-        # queries DuckDB cannot compute (blake2b simhash, NB classify,
-        # IVF probe, ...). Expected tables are computed
+        # queries DuckDB cannot compute (NB classify, code-switch
+        # segmentation, ...). Expected tables are computed
         # from the pure-Python specs INDEPENDENTLY of Spark,
         # cross-checked at generation time, and frozen at sf0.01 (the
         # scale tests/test_entry_oracle.py runs at).
-        "neardup_simhash_pairs": f"""
-            SELECT id_a, id_b, hamming
-            FROM {_frozen("neardup_simhash_pairs")}
-        """,
         "langid_unresolved": f"""
             SELECT doc_id, lang_pred, strategy
             FROM {_frozen("langid_unresolved")}
@@ -1207,10 +1078,6 @@ def oracle_sql() -> dict[str, str]:
             SELECT doc_id, span_idx, span_start, span_len, span_letters,
                    script, lang, dominant_lang, dominant_share, mixed
             FROM {_frozen("langid_code_switch_spans")}
-        """,
-        "semantic_dedup_embeddings": f"""
-            SELECT vec_id, cell, keep, dup_of, dup_cosine
-            FROM {_frozen("semantic_dedup_embeddings")}
         """,
         "langid_noisy_texts": f"""
             SELECT doc_id, lang, variant, lang_pred, keep, drop_rule,
@@ -1225,37 +1092,4 @@ def oracle_sql() -> dict[str, str]:
             FROM {_frozen("unresolved_disposition")}
         """,
         "canonical_url_dedup": _canon_dedup_sql(),
-        "embedding_ann_ivf": f"""
-            SELECT vec_id, round(cosine_raw, 6) AS cosine
-            FROM {_frozen("embedding_ann_ivf")}
-        """,
-        "embedding_knn_blocked": f"""
-            SELECT vec_id, neighbor_id, cosine, rk
-            FROM {_frozen("embedding_knn_blocked")}
-        """,
-        "embedding_knn": """
-            SELECT vec_id, neighbor_id, cosine, rk FROM (
-              SELECT a.vec_id, b.vec_id AS neighbor_id,
-                     round(list_cosine_similarity(a.embedding::DOUBLE[],
-                                                  b.embedding::DOUBLE[]), 6) AS cosine,
-                     row_number() OVER (
-                       PARTITION BY a.vec_id
-                       ORDER BY round(list_cosine_similarity(a.embedding::DOUBLE[],
-                                                             b.embedding::DOUBLE[]), 6) DESC,
-                                b.vec_id) AS rk
-              FROM embeddings a JOIN embeddings b ON a.vec_id <> b.vec_id)
-            WHERE rk <= 3
-        """,
-        "embedding_label_centroids": """
-            SELECT label, count(*) AS n,
-                   round(avg(embedding[1]::DOUBLE), 6) AS c0,
-                   round(avg(embedding[2]::DOUBLE), 6) AS c1,
-                   round(avg(embedding[3]::DOUBLE), 6) AS c2,
-                   round(avg(embedding[4]::DOUBLE), 6) AS c3,
-                   round(avg(embedding[5]::DOUBLE), 6) AS c4,
-                   round(avg(embedding[6]::DOUBLE), 6) AS c5,
-                   round(avg(embedding[7]::DOUBLE), 6) AS c6,
-                   round(avg(embedding[8]::DOUBLE), 6) AS c7
-            FROM embeddings GROUP BY label
-        """,
     }

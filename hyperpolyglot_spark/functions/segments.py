@@ -41,7 +41,6 @@ the per-application cached broadcast (session.cached_broadcast).
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F

@@ -1,6 +1,6 @@
 """Deduplication operators for training-data pipelines.
 
-Five families, each scale-designed:
+Two families, each scale-designed:
 
   - exact:    hash-groupBy on md5(text) — one shuffle of (hash, id),
               never the text itself.
@@ -8,12 +8,13 @@ Five families, each scale-designed:
               no k-times explode) -> band -> bucket join -> exact
               jaccard verify on candidates only. At 10^12 docs the
               bucket join is the only shuffle and candidates are a tiny
-              fraction of the corpus.
-  - simhash:  64-bit signature, 16-bit band blocking, hamming verify.
-  - ngram jaccard: exact all-pairs within a blocking key (for small
-              blocks / verification; the LSH path feeds it candidates
-              at scale).
-  - embedding cosine near-dup: see operators/similarity.py.
+              fraction of the corpus. The persisted-index form
+              (save_dedup_index + minhash_neardup_join_indexed) is the
+              continuous-crawl path; the re-signing forms stay as its
+              oracles.
+
+ngram_jaccard_pairs is the exact all-pairs jaccard within a blocking
+key: the truth the LSH path is held to.
 
 Determinism: all hashing is keyed blake2b / affine-permutation over a
 64-bit base hash — stable across processes, Python versions, and
@@ -23,7 +24,6 @@ cluster sizes (never builtin hash(), which is salted per process).
 from __future__ import annotations
 
 import hashlib
-import struct
 from contextlib import contextmanager
 
 import numpy as np
@@ -50,29 +50,11 @@ def _pin(df: DataFrame) -> DataFrame:
     union + anti-join + bucket join + two verification semi-joins).
     These tables are (id, band, bucket)-shaped — tiny next to the
     corpus. Each pin is recorded in _PINNED; wrap repeated batch runs
-    in ``pinned_scope()`` (or call ``unpersist_pinned()`` after the
-    consuming action) so disk-spilled blocks are actually freed."""
+    in ``pinned_scope()`` so disk-spilled blocks are actually freed
+    once the consuming action has run."""
     df = df.persist(StorageLevel.MEMORY_AND_DISK)
     _PINNED.append(df)
     return df
-
-
-def unpersist_pinned(blocking: bool = False) -> int:
-    """Unpersist every table recorded by _pin() since the last call.
-
-    Call AFTER the action that consumes the returned DataFrame — the
-    results are lazy, so unpersisting earlier silently reverts to the
-    re-evaluate-per-branch behavior _pin exists to prevent (correct,
-    just slow). Returns the number of tables released."""
-    n = 0
-    while _PINNED:
-        df = _PINNED.pop()
-        try:
-            df.unpersist(blocking)
-            n += 1
-        except Exception:  # session already stopped: nothing to free
-            pass
-    return n
 
 
 @contextmanager
@@ -95,8 +77,9 @@ def pinned_scope(blocking: bool = False):
             df = _PINNED.pop()
             try:
                 df.unpersist(blocking)
-            except Exception:
+            except Exception:  # session already stopped: nothing to free
                 pass
+
 
 # affine permutation params for minhash: deterministic, generated from
 # a fixed seed via blake2b of the permutation index
@@ -190,18 +173,6 @@ def _mod_mersenne(x: np.ndarray) -> np.ndarray:
     return x
 
 
-def minhash_signature(text: str, k: int, a: np.ndarray, b: np.ndarray) -> list[int]:
-    sh = word_shingles(text)
-    if not sh:
-        return [0] * k
-    h = _hash64_batch(list(sh))
-    # (a*h + b) wraps mod 2^64 (numpy uint64), then mod mersenne — not
-    # the textbook affine permutation, but deterministic and uniform,
-    # which is all LSH bucketing needs
-    vals = _mod_mersenne(a[:, None] * h[None, :] + b[:, None])
-    return vals.min(axis=1).astype(np.int64).tolist()
-
-
 def make_minhash_udf(k: int = 64, counter=None):
     """Arrow-batched minhash signature UDF. ALL shingles of a batch are
     hashed in ONE _hash64_batch pass; the k-permutation min-reduction
@@ -222,6 +193,9 @@ def make_minhash_udf(k: int = 64, counter=None):
             shingles.extend(word_shingles(t or ""))
             offsets.append(len(shingles))
         h = _hash64_batch(shingles)
+        # (a*h + b) wraps mod 2^64 (numpy uint64), then mod mersenne —
+        # not the textbook affine permutation, but deterministic and
+        # uniform, which is all LSH bucketing needs
         vals = _mod_mersenne(a[:, None] * h[None, :] + b[:, None])
         empty = [0] * k
         out = []
@@ -339,7 +313,7 @@ def _members_and_canon(
 ) -> tuple[DataFrame, DataFrame]:
     """(members, canon) sharing ONE pinned exact-dup group table.
 
-    Every minhash/simhash entry point needs both the member map
+    Every minhash entry point needs both the member map
     (dup_group_members) and the pre-collapsed corpus (exact_dedup);
     built independently they each recompute the md5 groupBy — two
     corpus-sized hash aggregations where one suffices (r07, guide
@@ -494,7 +468,7 @@ def _expand_group_pairs(
     """Expand canonical-level near-dup pairs back to member-level pairs.
 
     - cross-group: every (member of A) x (member of B) inherits the
-      canonical pair's payload (jaccard/hamming) — the join is sized by
+      canonical pair's payload (jaccard) — the join is sized by
       the OUTPUT, never by candidate blowup;
     - intra-group: all pairs inside one exact-dup group get the literal
       ``intra_value`` (identical texts), restricted to canonical ids in
@@ -726,10 +700,7 @@ def save_dedup_index(
                      expansion map;
       path/meta/     (k, bands) — validated at load so a probe with
                      mismatched signature params fails loudly instead
-                     of silently joining garbage.
-
-    The same pattern as similarity.build_ivf_index (persist the
-    partitioned index once, prune at probe time)."""
+                     of silently joining garbage."""
     from concurrent.futures import ThreadPoolExecutor
 
     from ..session import local_rows_df
@@ -828,186 +799,3 @@ def minhash_neardup_join_indexed(
         id_col, text_col, threshold, max_bucket, cap_stats,
     )
 
-
-# ----------------------------------------------------------------------
-# SimHash
-# ----------------------------------------------------------------------
-
-def simhash64(text: str) -> int:
-    """64-bit simhash over whitespace tokens (weighted bit majority).
-    Returns a SIGNED 64-bit int (Spark LongType-compatible). Token
-    hashing and the bit-majority are fully numpy-vectorized (one
-    _hash64_batch pass + one matrix reduction per doc)."""
-    words = text.split()
-    if not words:
-        return 0
-    from collections import Counter
-
-    c = Counter(words)
-    h = _hash64_batch(list(c.keys()))
-    cnts = np.fromiter(c.values(), count=len(c), dtype=np.int64)
-    shifts = np.arange(64, dtype=np.uint64)
-    bits = ((h[:, None] >> shifts[None, :]) & np.uint64(1)).astype(np.int64)
-    acc = ((2 * bits - 1) * cnts[:, None]).sum(axis=0)
-    val = int(((acc > 0).astype(np.uint64) << shifts).sum(dtype=np.uint64))
-    return val - (1 << 64) if val >= (1 << 63) else val
-
-
-@F.pandas_udf(T.LongType())
-def simhash_udf(texts: pd.Series) -> pd.Series:
-    return pd.Series([simhash64(t or "") for t in texts], dtype="int64")
-
-
-def simhash_neardup_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_hamming: int = 3,
-    max_bucket: int | None = 4096,
-) -> DataFrame:
-    """Near-dup pairs with hamming(simhash) <= max_hamming, blocked on
-    four 16-bit bands (a pair within distance 3 shares at least one
-    exact band — pigeonhole), verified with bit_count.
-
-    Same scale shape as minhash_neardup_pairs: exact-dup pre-collapse
-    (identical texts = hamming 0, emitted directly), banded self-join
-    over DISTINCT texts only, oversized chunks capped."""
-    members, canon = _members_and_canon(df, id_col, text_col)
-    sigs = canon.select(F.col(id_col), simhash_udf(F.col(text_col)).alias("sim"))
-    banded = sigs.select(
-        id_col,
-        "sim",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.shiftrightunsigned(F.col("sim"), i * 16)
-                        .bitwiseAND(F.lit(65535))
-                        .alias("chunk"),
-                    )
-                    for i in range(4)
-                ]
-            )
-        ).alias("bb"),
-    ).select(id_col, "sim", "bb.band", "bb.chunk")
-    if max_bucket is not None:
-        oversized = (
-            banded.groupBy("band", "chunk")
-            .agg(F.count("*").alias("_bn"))
-            .filter(F.col("_bn") > max_bucket)
-            .select("band", "chunk")
-        )
-        banded = banded.join(oversized, ["band", "chunk"], "left_anti")
-    a, b = banded.alias("a"), banded.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.bit_count(
-                F.col("a.sim").bitwiseXOR(F.col("b.sim"))
-            ).alias("hamming"),
-        )
-        .distinct()
-    )
-    canon_pairs = pairs.filter(F.col("hamming") <= max_hamming)
-    return _expand_group_pairs(
-        canon_pairs,
-        members,
-        id_col,
-        "hamming",
-        F.lit(0).cast("int"),
-    )
-
-
-# ----------------------------------------------------------------------
-# SemDedup-style embedding-cluster dedup (round 6)
-# ----------------------------------------------------------------------
-
-def semantic_dedup(
-    df: DataFrame,
-    centroids,
-    threshold: float = 0.92,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Embedding-cluster dedup DECISION (the semantic-dedup pass real
-    LLM pipelines run after minhash — SemDedup, Abbas et al. 2023,
-    arXiv:2303.09540): cluster the corpus coarsely (IVF cells,
-    operators/similarity.assign_cells), then within each cell drop a
-    row iff a LOWER-id member of its cell has cosine > threshold
-    (round-6, matching cosine_neardup_pairs). Emits one row per input:
-    (id, cell, keep, dup_of, dup_cosine) where dup_of is the lowest
-    qualifying lower id — the exact_dedup keep/drop shape, so the
-    pipeline can route on it the same way.
-
-    Spec note: the drop rule is "exists ANY similar lower id", not
-    greedy-leader clustering — a row similar only to an already-
-    dropped row still drops. That keeps the decision embarrassingly
-    parallel per cell (one join, no sequential sweep) and
-    deterministic under any partitioning; at threshold-sized
-    neighborhoods the two rules differ only inside tight clusters
-    where every member is a near-dup of the kept leader anyway.
-
-    Scale shape: the only quadratic term is per-cell (SemDedup's own
-    design point — cell count grows with the corpus so cells stay
-    ~constant-sized); each row shuffles ONCE on cell into a grouped
-    numpy kernel (one matmul per cell, applyInPandas), and the output
-    is corpus-sized — no pair-sized shuffle, no all-pairs join at any
-    cell count.
-    """
-    from .similarity import assign_cells
-
-    # single-consumer plan: the assignment feeds ONE grouped kernel,
-    # so no _pin (the pair-join form needed it against double UDF
-    # evaluation across join branches; persisting here would only
-    # hold cache blocks)
-    assigned = assign_cells(df, centroids, id_col, vec_col).select(
-        id_col, "cell", vec_col
-    )
-    # within-cell decision as ONE numpy matmul per cell (applyInPandas,
-    # the _knn_join_blocked pattern) — a pair self-join here spends its
-    # time in interpreted per-pair array lambdas (measured 6.9s -> this
-    # form ~1s at sf0.1) and shuffles candidate-sized rows; the grouped
-    # kernel shuffles each row once and emits output-sized rows only.
-    out_schema = (
-        f"{id_col} long, cell int, keep boolean, dup_of long,"
-        " dup_cosine double"
-    )
-
-    def decide(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = pdf[id_col].to_numpy()
-        order = np.argsort(ids)
-        ids = ids[order]
-        V = np.array(pdf[vec_col].to_numpy()[order].tolist(), dtype=np.float64)
-        Vn = V / np.maximum(np.linalg.norm(V, axis=1, keepdims=True), 1e-12)
-        S = np.round(Vn @ Vn.T, 6)  # round-6 = cosine_neardup_pairs spec
-        n = len(ids)
-        dup_of = np.full(n, -1, dtype=np.int64)
-        dup_cos = np.zeros(n, dtype=np.float64)
-        for j in range(1, n):  # ids sorted: partners are rows < j
-            hits = np.nonzero(S[:j, j] > threshold)[0]
-            if hits.size:
-                lo = int(hits[0])  # lowest id partner (sorted order)
-                dup_of[j] = ids[lo]
-                dup_cos[j] = S[lo, j]
-        keep = dup_of < 0
-        return pd.DataFrame(
-            {
-                id_col: ids,
-                "cell": pdf["cell"].to_numpy()[order],
-                "keep": keep,
-                "dup_of": [None if k else int(d) for k, d in zip(keep, dup_of)],
-                "dup_cosine": [
-                    None if k else float(c) for k, c in zip(keep, dup_cos)
-                ],
-            }
-        )
-
-    return assigned.groupBy("cell").applyInPandas(decide, out_schema)

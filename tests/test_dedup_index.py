@@ -149,72 +149,3 @@ def test_pinned_scope_releases_caches(spark):
     assert len(D._PINNED) == before
     assert all(not p.storageLevel.useMemory for p in pinned)
 
-
-def test_unpersist_pinned_counts(spark):
-    from hyperpolyglot_spark.operators import dedup as D
-
-    docs = spark.createDataFrame(
-        [(i, f"words for the second scope test {i}") for i in range(20)],
-        "doc_id long, text string",
-    )
-    D.unpersist_pinned()  # drain anything earlier tests left behind
-    minhash_neardup_pairs(docs, threshold=0.5).count()
-    assert D.unpersist_pinned() > 0
-    assert D.unpersist_pinned() == 0
-
-
-def test_semantic_dedup_decision(spark):
-    """SemDedup decision operator: within-cell lower-id cosine rule,
-    including the documented exists-ANY-lower-id semantics (a chain
-    a~b, b~c with a!~c drops BOTH b and c — b by a, c by b — unlike
-    greedy-leader which would keep c)."""
-    import numpy as np
-
-    from hyperpolyglot_spark.operators.dedup import semantic_dedup
-
-    # two well-separated clusters; inside cluster 0 a chain a~b~c
-    a = np.array([1.0, 0.0, 0.0, 0.0])
-    rot = np.array([0.92, 0.392, 0.0, 0.0])   # cos(a,rot) ~ 0.92
-    rot2 = np.array([0.70, 0.714, 0.0, 0.0])  # cos(rot,rot2) ~ .92, cos(a,rot2)=.70
-    far = np.array([0.0, 0.0, 1.0, 0.0])
-    far2 = np.array([0.0, 0.001, 0.999, 0.0])
-    rows = [
-        (0, a), (1, rot), (2, rot2), (10, far), (11, far2),
-    ]
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in v]) for i, v in rows],
-        "vec_id long, embedding array<double>",
-    )
-    C = np.stack([a, far])
-    out = {
-        r["vec_id"]: r
-        for r in semantic_dedup(df, C, threshold=0.9).collect()
-    }
-    assert len(out) == 5
-    assert out[0]["keep"] and out[0]["dup_of"] is None
-    assert not out[1]["keep"] and out[1]["dup_of"] == 0
-    # chain semantics: 2 is similar only to (dropped) 1 — still drops
-    assert not out[2]["keep"] and out[2]["dup_of"] == 1
-    assert out[10]["keep"]
-    assert not out[11]["keep"] and out[11]["dup_of"] == 10
-    assert out[11]["dup_cosine"] > 0.9
-
-
-def test_semantic_dedup_plan_is_cell_blocked(spark):
-    """The pair join must be an equi-join on cell (shuffle/broadcast
-    hash join) — never a cartesian/BNLJ all-pairs."""
-    import numpy as np
-
-    from hyperpolyglot_spark.operators.dedup import semantic_dedup
-
-    rng = np.random.RandomState(0)
-    V = rng.randn(64, 8)
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in V[i]]) for i in range(64)],
-        "vec_id long, embedding array<double>",
-    )
-    out = semantic_dedup(df, V[:4].copy(), threshold=0.5)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    out.count()  # executes

@@ -12,7 +12,7 @@ import pytest
 import __spark_entry__ as entry_mod
 
 SF = "/root/testdata/sf0.01"
-TABLES = ("documents", "embeddings")
+TABLES = ("documents",)
 
 
 @pytest.fixture(scope="module")

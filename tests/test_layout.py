@@ -5,9 +5,11 @@ transitively, from one of two roots: the job and the benchmark
 (jobs/, perfbench/), or the oracle-checked query surface and its
 frozen-table generator (__spark_entry__.py, tools/), or be named in
 TEST_ONLY or LOADED_BY_NAME below. The job's own closure is pinned
-exactly (JOB_CLOSURE), and so is every top-level name in it that the
-job and the benchmark do not reach (ENTRY_OR_TEST_NAMES). The sources
-are read with ``ast``, so the checks start no Spark and run no module.
+exactly (JOB_CLOSURE), so is the benchmark's (BENCH_CLOSURE: the job
+plus the near-dup operator), and so is every top-level name in them
+that the job and the benchmark do not reach (ENTRY_OR_TEST_NAMES). No
+file imports a name it never uses. The sources are read with ``ast``,
+so the checks start no Spark and run no module.
 """
 
 import ast
@@ -50,7 +52,10 @@ JOB_CLOSURE = {
     f"{PKG}.plans.resume",
     f"{PKG}.session",
 }
-# top-level names of JOB_CLOSURE modules that only the query surface,
+# the benchmark reaches the job plus the one operator beside it, the
+# persisted-index MinHash near-dup join
+BENCH_CLOSURE = JOB_CLOSURE | {f"{PKG}.operators.dedup"}
+# top-level names of BENCH_CLOSURE modules that only the query surface,
 # tools/ or the tests use; a name that neither the job nor the
 # benchmark reaches, and that is not listed here, fails by name
 ENTRY_OR_TEST_NAMES = {
@@ -72,7 +77,21 @@ ENTRY_OR_TEST_NAMES = {
     f"{PKG}.functions.scrub._scrub_udf",
     f"{PKG}.functions.scrub._SCRUB_SCHEMA",
     f"{PKG}.plans.pipeline.breakdown",
-    f"{PKG}.session.local_rows_df",
+    # dedup's oracles and entry queries, beside the indexed join:
+    # the scalar hash the padding-width test holds the batch hash to
+    f"{PKG}.operators.dedup._base_hash64",
+    # the exact all-pairs truth of the MinHash tests (neardup_jaccard_pairs)
+    f"{PKG}.operators.dedup.ngram_jaccard_pairs",
+    # the re-signing oracle of the indexed join (neardup_incremental)
+    f"{PKG}.operators.dedup.minhash_neardup_join",
+    # the self-join form of the megacluster test (neardup_minhash_pairs)
+    f"{PKG}.operators.dedup.minhash_neardup_pairs",
+    # the self-join's exact-dup group expansion
+    f"{PKG}.operators.dedup._expand_group_pairs",
+    # the self-join's candidates, held under all-pairs by the tests
+    f"{PKG}.operators.dedup.lsh_candidate_pairs",
+    # the bucket-size histogram of the bucket-cap test
+    f"{PKG}.operators.dedup.lsh_bucket_stats",
 }
 
 
@@ -146,6 +165,16 @@ def test_job_closure_is_pinned():
     assert not JOB_CLOSURE - reached, f"gone from the job: {sorted(JOB_CLOSURE - reached)}"
 
 
+def test_benchmark_closure_is_pinned():
+    reached = closure(("perfbench",), package_modules())
+    assert not reached - BENCH_CLOSURE, (
+        f"new in the benchmark: {sorted(reached - BENCH_CLOSURE)}"
+    )
+    assert not BENCH_CLOSURE - reached, (
+        f"gone from the benchmark: {sorted(BENCH_CLOSURE - reached)}"
+    )
+
+
 DEFINITIONS = (ast.FunctionDef, ast.ClassDef, ast.Assign, ast.AnnAssign)
 
 
@@ -175,14 +204,14 @@ def referenced(node: ast.AST) -> set[str]:
 
 
 def unreached_names() -> set[str]:
-    """Dotted top-level names of JOB_CLOSURE modules that jobs/ and
+    """Dotted top-level names of BENCH_CLOSURE modules that jobs/ and
     perfbench/ do not reach, following uses by name through the
     closure's own definitions. Statements that run on import (neither
     a definition nor an import) count as reached."""
     mods = package_modules()
     defs: dict[str, list[tuple[str, ast.AST]]] = {}
     todo = set()
-    for m in JOB_CLOSURE:
+    for m in BENCH_CLOSURE:
         tree = ast.parse(mods[m].read_text(), str(mods[m]))
         for name, node in top_level_names(tree):
             defs.setdefault(name, []).append((m, node))
@@ -211,3 +240,35 @@ def test_job_module_names_are_reached():
     assert not ENTRY_OR_TEST_NAMES - unreached, (
         f"stale: {sorted(ENTRY_OR_TEST_NAMES - unreached)}"
     )
+
+
+def source_files() -> list[Path]:
+    """The package (less its ``__init__`` files, which re-export), the
+    job, the tools, the query surface and the tests."""
+    files = [p for p in (ROOT / PKG).rglob("*.py") if p.name != "__init__.py"]
+    for d in ("jobs", "tools", "tests"):
+        files += (ROOT / d).rglob("*.py")
+    return sorted(files) + [ROOT / "__spark_entry__.py"]
+
+
+def unused_imports(path: Path) -> list[str]:
+    """Names a module-level import binds that the file never uses as a
+    name (``from __future__`` binds none)."""
+    tree = ast.parse(path.read_text(), str(path))
+    bound = []
+    for node in tree.body:
+        if isinstance(node, ast.Import):
+            bound += [a.asname or a.name.split(".")[0] for a in node.names]
+        elif isinstance(node, ast.ImportFrom) and node.module != "__future__":
+            bound += [a.asname or a.name for a in node.names]
+    used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+    return [name for name in bound if name not in used]
+
+
+def test_no_unused_imports():
+    unused = {
+        str(p.relative_to(ROOT)): names
+        for p in source_files()
+        if (names := unused_imports(p))
+    }
+    assert not unused, f"imported but never used: {unused}"

@@ -1,8 +1,7 @@
-"""Operator tests: dedup, similarity search, text stats —
+"""Operator tests: dedup and text stats —
 cross-checked against numpy/DuckDB ground truth on the driver testdata."""
 
 import duckdb
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -12,16 +11,7 @@ from hyperpolyglot_spark.operators.dedup import (
     lsh_candidate_pairs,
     minhash_neardup_pairs,
     ngram_jaccard_pairs,
-    simhash64,
-    simhash_neardup_pairs,
     word_shingles,
-)
-from hyperpolyglot_spark.operators.similarity import (
-    assign_cells,
-    brute_force_topk,
-    cosine_neardup_pairs,
-    ivf_centroids,
-    ivf_topk,
 )
 from hyperpolyglot_spark.functions.textstats import with_text_stats
 
@@ -31,22 +21,6 @@ SF = "/root/testdata/sf0.01"
 @pytest.fixture(scope="module")
 def docs(spark):
     return spark.read.parquet(f"{SF}/documents.parquet").cache()
-
-
-@pytest.fixture(scope="module")
-def emb(spark):
-    return spark.read.parquet(f"{SF}/embeddings.parquet").cache()
-
-
-@pytest.fixture(scope="module")
-def emb_np():
-    con = duckdb.connect()
-    rows = con.execute(
-        f"select vec_id, embedding from read_parquet('{SF}/embeddings.parquet') order by vec_id"
-    ).fetchall()
-    ids = np.array([r[0] for r in rows])
-    V = np.array([r[1] for r in rows], dtype=np.float64)
-    return ids, V
 
 
 # --- exact dedup -------------------------------------------------------
@@ -138,13 +112,6 @@ def test_lsh_megacluster_stays_linear(spark, docs):
     ).count()
     assert intra == K * (K - 1) // 2
 
-    # simhash: same collapse (all K rows share one signature)
-    sh = simhash_neardup_pairs(dup, max_hamming=3)
-    sh_intra = sh.filter(
-        (F.col("id_a") >= 100_000) & (F.col("hamming") == 0)
-    ).count()
-    assert sh_intra == K * (K - 1) // 2
-
 
 def test_lsh_bucket_cap_skips_oversized(spark, docs):
     """max_bucket=0 marks every bucket oversized -> zero candidates
@@ -170,91 +137,6 @@ def test_identical_empty_texts_are_not_jaccard_neardups(spark):
         for r in minhash_neardup_pairs(df, threshold=0.5).collect()
     }
     assert got == {(3, 4): 1.0}
-
-
-# --- simhash ------------------------------------------------------------
-def test_simhash_deterministic_and_near(spark):
-    a = "the quick brown fox jumps over the lazy dog " * 10
-    b = a.replace("lazy", "sleepy", 1)
-    sa, sb = simhash64(a), simhash64(b)
-    assert sa == simhash64(a)
-    ham = bin((sa ^ sb) & ((1 << 64) - 1)).count("1")
-    assert ham <= 12
-
-
-def test_simhash_pairs_on_injected_neardups(spark, docs):
-    base = docs.limit(20).select("doc_id", "text")
-    # exact copies (hamming 0): pigeonhole blocking guarantees recall 1
-    copies = base.select(
-        (F.col("doc_id") + 10_000).alias("doc_id"), F.col("text")
-    )
-    pairs = simhash_neardup_pairs(base.union(copies), max_hamming=3).collect()
-    found = {(r["id_a"], r["id_b"]) for r in pairs}
-    expected = {(i, i + 10_000) for i in range(20)}
-    assert expected <= found
-    # one-word edits land within a small hamming radius most of the time
-    tweaked = base.select(
-        (F.col("doc_id") + 20_000).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" extra")).alias("text"),
-    )
-    pairs2 = simhash_neardup_pairs(
-        base.union(tweaked), max_hamming=8
-    ).collect()
-    found2 = {(r["id_a"], r["id_b"]) for r in pairs2}
-    expected2 = {(i, i + 20_000) for i in range(20)}
-    hit = len(expected2 & found2) / len(expected2)
-    assert hit >= 0.7, hit
-
-
-# --- similarity search --------------------------------------------------
-def test_brute_force_topk_matches_numpy(spark, emb, emb_np):
-    ids, V = emb_np
-    q = V[0].tolist()
-    got = brute_force_topk(emb, q, k=10).collect()
-    Vn = V / np.linalg.norm(V, axis=1, keepdims=True)
-    qn = np.array(q) / np.linalg.norm(q)
-    sims = Vn @ qn
-    order = np.lexsort((ids, -np.round(sims, 6)))[:10]
-    assert [r["vec_id"] for r in got] == ids[order].tolist()
-    for r, i in zip(got, order):
-        assert r["cosine"] == pytest.approx(round(float(sims[i]), 6), abs=2e-6)
-
-
-def test_ivf_recall(spark, emb, emb_np):
-    ids, V = emb_np
-    q = V[7].tolist()
-    C = ivf_centroids(emb, n_cells=8)
-    exact = {r["vec_id"] for r in brute_force_topk(emb, q, k=10).collect()}
-    approx = {
-        r["vec_id"]
-        for r in ivf_topk(emb, C, q, k=10, n_probe=4).collect()
-    }
-    assert len(approx & exact) / 10 >= 0.7
-    # probing all cells == exact
-    full = {
-        r["vec_id"]
-        for r in ivf_topk(emb, C, q, k=10, n_probe=8).collect()
-    }
-    assert full == exact
-    cells = assign_cells(emb, C).select("cell").distinct().count()
-    assert cells == 8
-
-
-def test_cosine_neardup_pairs_vs_numpy(spark, emb, emb_np):
-    ids, V = emb_np
-    got = {
-        (r["id_a"], r["id_b"])
-        for r in cosine_neardup_pairs(emb, 0.45, block_col=None).collect()
-    }
-    Vn = V / np.linalg.norm(V, axis=1, keepdims=True)
-    S = Vn @ Vn.T
-    iu = np.triu_indices(len(V), 1)
-    expect = {
-        (int(ids[i]), int(ids[j]))
-        for i, j in zip(*iu)
-        if round(float(S[i, j]), 6) > 0.45
-    }
-    assert got == expect and len(expect) > 0
 
 
 # --- text stats ----------------------------------------------------------
@@ -318,29 +200,6 @@ def test_incremental_neardup_join(spark, docs):
     )
     out = minhash_neardup_join(big_new, big_old, threshold=0.5)
     assert out.count() == K * M
-
-
-def test_knn_join_blocked_recall(spark, emb):
-    """IVF-cell-blocked KNN join (the scale path) with MULTI-PROBE
-    assignment must recover nearly all exact top-3 edges (boundary
-    vectors appear in neighboring cells too); single-probe blocking
-    measured only ~0.3-0.6 recall on this near-uniform corpus."""
-    from hyperpolyglot_spark.operators.similarity import (
-        assign_cells_multi,
-        knn_join,
-    )
-
-    C = ivf_centroids(emb, n_cells=8)
-    blocked_src = assign_cells_multi(emb, C, n_probe=3)
-    exact = {
-        (r["vec_id"], r["neighbor_id"])
-        for r in knn_join(emb, k=3).collect()
-    }
-    blocked = {
-        (r["vec_id"], r["neighbor_id"])
-        for r in knn_join(blocked_src, k=3, block_col="cell").collect()
-    }
-    assert len(blocked & exact) / len(exact) >= 0.9
 
 
 def test_hash64_batch_is_padding_width_independent():

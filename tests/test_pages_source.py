@@ -1,8 +1,6 @@
 """Day-partitioned pages source: partition pruning must be visible in
 the scan, and the pipeline must run unchanged on the pruned source."""
 
-from pyspark.sql import functions as F
-
 from hyperpolyglot_spark.datagen.pages import gen_pages_pdf
 from hyperpolyglot_spark.plans.pipeline import run_pipeline
 from hyperpolyglot_spark.sources.pages import (

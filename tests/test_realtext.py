@@ -15,8 +15,6 @@ What this fixture already caught (round 3):
 
 import random
 
-import pytest
-
 from hyperpolyglot_spark.datagen.realtext import REAL_TEXT
 from hyperpolyglot_spark.functions.langid import (
     classify_hashed_py,

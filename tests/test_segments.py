@@ -4,8 +4,6 @@ Spec invariants, the CJK kana rule, the cross-script bilingual stratum
 floors (VERDICT r5 #2: pinned accuracy), and Spark/py parity through
 the posexplode shape."""
 
-import pytest
-
 from hyperpolyglot_spark.datagen.realtext import (
     CODE_SWITCH_PAIRS,
     code_switched_docs,

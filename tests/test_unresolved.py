@@ -7,7 +7,6 @@ margin/abs noise, script coherence) and its wiring through the Python
 spec and the fused pipeline."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from hyperpolyglot_spark.datagen.unknown import (
     ALIEN_LATIN,

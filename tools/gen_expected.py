@@ -1,6 +1,6 @@
 """Freeze deterministic expected outputs for the queries whose
-semantics are not SQL-expressible (blake2b simhash, NB classify, IVF
-probe, ...).
+semantics are not SQL-expressible (NB classify, code-switch
+segmentation, ...).
 
 Expected tables are computed DRIVER-SIDE from the pure-Python specs /
 numpy — independently of the Spark implementations — then cross-checked
@@ -15,12 +15,10 @@ spec change:  python tools/gen_expected.py
 
 from __future__ import annotations
 
-import itertools
 import os
 import sys
 
 import duckdb
-import numpy as np
 import pandas as pd
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -31,30 +29,6 @@ OUT = os.path.join(
     "data",
     "expected_sf0.01",
 )
-
-
-def expected_simhash_pairs() -> pd.DataFrame:
-    """All-pairs hamming <= 3 over py-spec simhash64. The LSH query's
-    16-bit pigeonhole blocking has recall 1.0 at distance 3, and the
-    exact-dup expansion preserves per-member pairs, so the blocked
-    result must equal this exhaustive one."""
-    from hyperpolyglot_spark.operators.dedup import simhash64
-
-    rows = duckdb.sql(
-        f"SELECT doc_id, text FROM read_parquet('{SF}/documents.parquet') ORDER BY doc_id"
-    ).fetchall()
-    ids = np.array([r[0] for r in rows], dtype=np.int64)
-    sigs = np.array([simhash64(r[1]) for r in rows], dtype=np.int64)
-    u = sigs.astype(np.uint64)
-    out = []
-    for i, j in itertools.combinations(range(len(ids)), 2):
-        ham = int(bin(int(u[i] ^ u[j])).count("1"))
-        if ham <= 3:
-            a, b = int(ids[i]), int(ids[j])
-            out.append((min(a, b), max(a, b), ham))
-    return pd.DataFrame(out, columns=["id_a", "id_b", "hamming"]).astype(
-        {"id_a": "int64", "id_b": "int64", "hamming": "int32"}
-    )
 
 
 def expected_langid_unresolved() -> pd.DataFrame:
@@ -246,141 +220,7 @@ def expected_unresolved_disposition() -> pd.DataFrame:
     ).astype({"doc_id": "int64"})
 
 
-def expected_ivf_topk() -> pd.DataFrame:
-    """numpy replication of ivf_centroids (seeds = 8 lowest ids, one
-    refinement pass) + 4-cell probe + exact top-10 within the probed
-    cells, query = vec_id 7. cosine_raw is stored UNROUNDED; the oracle
-    SQL applies round(,6) so the final rounding happens in one place."""
-    rows = duckdb.sql(
-        f"SELECT vec_id, embedding FROM read_parquet('{SF}/embeddings.parquet') ORDER BY vec_id"
-    ).fetchall()
-    ids = np.array([r[0] for r in rows], dtype=np.int64)
-    V = np.array([r[1] for r in rows], dtype=np.float64)
-
-    def normalize(M):
-        return M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
-
-    n_cells, n_probe, k = 8, 4, 10
-    C = V[np.argsort(ids)[:n_cells]].copy()  # seeds: lowest ids
-    cells = np.argmax(normalize(V) @ normalize(C).T, axis=1)
-    C2 = C.copy()
-    for c in range(n_cells):
-        members = V[cells == c]
-        if len(members):
-            C2[c] = members.mean(axis=0)
-
-    q = V[ids == 7][0]
-    qn = q / max(np.linalg.norm(q), 1e-12)
-    probe = set(np.argsort(-(normalize(C2) @ qn))[:n_probe].tolist())
-    cells2 = np.argmax(normalize(V) @ normalize(C2).T, axis=1)
-    mask = np.isin(cells2, list(probe))
-    sims = normalize(V[mask]) @ qn
-    sub_ids = ids[mask]
-    # Spark: ORDER BY round(cosine, 6) DESC, vec_id LIMIT k
-    order = np.lexsort((sub_ids, -np.round(sims, 6)))[:k]
-    return pd.DataFrame(
-        {
-            "vec_id": sub_ids[order].astype("int64"),
-            "cosine_raw": sims[order],
-        }
-    )
-
-
-def expected_semantic_dedup() -> pd.DataFrame:
-    """numpy replication of semantic_dedup over the embeddings table:
-    centroids = ivf_centroids(n_cells=8, one refinement pass), each
-    vector in its nearest cell, drop iff a lower-id cell-mate has
-    round(cosine, 6) > 0.45; dup_of = lowest such id, dup_cosine =
-    that partner's cosine."""
-    rows = duckdb.sql(
-        f"SELECT vec_id, embedding FROM read_parquet('{SF}/embeddings.parquet') ORDER BY vec_id"
-    ).fetchall()
-    ids = np.array([r[0] for r in rows], dtype=np.int64)
-    V = np.array([r[1] for r in rows], dtype=np.float64)
-
-    def normalize(M):
-        return M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
-
-    n_cells, thr = 8, 0.45
-    C = V[np.argsort(ids)[:n_cells]].copy()
-    cells1 = np.argmax(normalize(V) @ normalize(C).T, axis=1)
-    C2 = C.copy()
-    for c in range(n_cells):
-        members = V[cells1 == c]
-        if len(members):
-            C2[c] = members.mean(axis=0)
-    cells2 = np.argmax(normalize(V) @ normalize(C2).T, axis=1)
-    Vn = normalize(V)
-    S = np.round(Vn @ Vn.T, 6)
-    out = []
-    order = np.argsort(ids)
-    for j in order:
-        mates = np.where(
-            (cells2 == cells2[j]) & (ids < ids[j]) & (S[:, j] > thr)
-        )[0]
-        if len(mates):
-            lo = mates[np.argmin(ids[mates])]
-            out.append(
-                (int(ids[j]), int(cells2[j]), False, int(ids[lo]),
-                 float(S[lo, j]))
-            )
-        else:
-            out.append((int(ids[j]), int(cells2[j]), True, None, None))
-    df = pd.DataFrame(
-        out, columns=["vec_id", "cell", "keep", "dup_of", "dup_cosine"]
-    ).astype({"vec_id": "int64", "cell": "int32"})
-    # keep NULLs as python None (object dtype), not float NaN — the
-    # crosscheck compares raw tuples against Spark's None
-    df["dup_of"] = pd.Series([r[3] for r in out], dtype=object)
-    df["dup_cosine"] = pd.Series([r[4] for r in out], dtype=object)
-    return df
-
-
-def expected_knn_blocked() -> pd.DataFrame:
-    """numpy replication of the multi-probe IVF-blocked KNN self-join:
-    centroids = ivf_centroids(n_cells=8, 1 refinement pass), every
-    vector assigned to its 3 nearest cells, candidate pairs share >= 1
-    cell, exact cosine on candidates, top-3 per vector with ties broken
-    on neighbor id AFTER rounding to 6 (matching knn_join's order by
-    round(cosine,6) desc, neighbor_id)."""
-    rows = duckdb.sql(
-        f"SELECT vec_id, embedding FROM read_parquet('{SF}/embeddings.parquet') ORDER BY vec_id"
-    ).fetchall()
-    ids = np.array([r[0] for r in rows], dtype=np.int64)
-    V = np.array([r[1] for r in rows], dtype=np.float64)
-
-    def normalize(M):
-        return M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
-
-    n_cells, n_probe, k = 8, 3, 3
-    C = V[np.argsort(ids)[:n_cells]].copy()
-    cells1 = np.argmax(normalize(V) @ normalize(C).T, axis=1)
-    C2 = C.copy()
-    for c in range(n_cells):
-        members = V[cells1 == c]
-        if len(members):
-            C2[c] = members.mean(axis=0)
-    sims_to_c = normalize(V) @ normalize(C2).T
-    probes = np.argsort(-sims_to_c, axis=1)[:, :n_probe]  # (n, 3)
-
-    Vn = normalize(V)
-    S = np.round(Vn @ Vn.T, 6)
-    out = []
-    for i in range(len(ids)):
-        shared = (probes[:, None, :] == probes[i][None, :, None]).any(
-            axis=(1, 2)
-        )
-        shared[i] = False
-        cand = np.where(shared)[0]
-        order = cand[np.lexsort((ids[cand], -S[i, cand]))][:k]
-        for rk, j in enumerate(order, 1):
-            out.append((int(ids[i]), int(ids[j]), float(S[i, j]), rk))
-    return pd.DataFrame(
-        out, columns=["vec_id", "neighbor_id", "cosine", "rk"]
-    ).astype({"vec_id": "int64", "neighbor_id": "int64", "rk": "int32"})
-
-
-def crosscheck(spark, name: str, pdf: pd.DataFrame, round_cols: dict | None = None):
+def crosscheck(spark, name: str, pdf: pd.DataFrame):
     """Run the live Spark query and assert it equals the frozen table."""
     import __spark_entry__ as entry
 
@@ -388,13 +228,7 @@ def crosscheck(spark, name: str, pdf: pd.DataFrame, round_cols: dict | None = No
     got = sorted(
         tuple(r) for r in sdf.collect()
     )
-    exp = pdf.copy()
-    if round_cols:
-        for src, dst in round_cols.items():
-            exp[dst] = exp[src].round(6)
-            exp = exp.drop(columns=[src])
-        exp = exp[[c for c in sdf.columns]]
-    want = sorted(tuple(r) for r in exp.itertuples(index=False, name=None))
+    want = sorted(tuple(r) for r in pdf.itertuples(index=False, name=None))
     assert len(got) == len(want), (name, len(got), len(want))
     for g, w in zip(got, want):
         assert g == w or all(
@@ -407,15 +241,11 @@ def crosscheck(spark, name: str, pdf: pd.DataFrame, round_cols: dict | None = No
 def main():
     os.makedirs(OUT, exist_ok=True)
     tables = {
-        "neardup_simhash_pairs": expected_simhash_pairs(),
         "langid_unresolved": expected_langid_unresolved(),
         "unresolved_disposition": expected_unresolved_disposition(),
         "langid_short_texts": expected_langid_short_texts(),
         "langid_code_switch_spans": expected_code_switch_spans(),
         "langid_noisy_texts": expected_langid_noisy_texts(),
-        "semantic_dedup_embeddings": expected_semantic_dedup(),
-        "embedding_ann_ivf": expected_ivf_topk(),
-        "embedding_knn_blocked": expected_knn_blocked(),
     }
     for name, pdf in tables.items():
         path = os.path.join(OUT, f"{name}.parquet")
@@ -425,7 +255,6 @@ def main():
     from hyperpolyglot_spark.session import get_spark
 
     spark = get_spark("gen_expected", cores=8)
-    crosscheck(spark, "neardup_simhash_pairs", tables["neardup_simhash_pairs"])
     crosscheck(spark, "langid_unresolved", tables["langid_unresolved"])
     crosscheck(
         spark, "unresolved_disposition", tables["unresolved_disposition"]
@@ -437,20 +266,8 @@ def main():
         tables["langid_code_switch_spans"],
     )
     crosscheck(
-        spark,
-        "semantic_dedup_embeddings",
-        tables["semantic_dedup_embeddings"],
-    )
-    crosscheck(
         spark, "langid_noisy_texts", tables["langid_noisy_texts"]
     )
-    crosscheck(
-        spark,
-        "embedding_ann_ivf",
-        tables["embedding_ann_ivf"],
-        round_cols={"cosine_raw": "cosine"},
-    )
-    crosscheck(spark, "embedding_knn_blocked", tables["embedding_knn_blocked"])
     print("all frozen expected tables cross-checked OK")
 
 
