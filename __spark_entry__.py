@@ -7,12 +7,12 @@ order-insensitive rows under sorted column names
 (tests/test_entry_oracle.py).
 
 The queries cover what this system carries next to its label job:
-the label spec's quality ladder, scrub and perplexity, language ID,
-dedup, plus document text statistics over the ``documents`` table.
+the label spec's quality ladder, scrub and perplexity, language ID
+and dedup over the ``documents`` table.
 The label spec's own oracle SQL lives in functions/spec_sql.py.
 
 For the queries whose semantics DuckDB cannot compute (NB language
-prediction, code-switch segmentation, ...) the oracle reads a
+prediction under the unresolved gate) the oracle reads a
 FROZEN expected table in data/expected_sf0.01/ beside this module,
 computed from the pure-Python specs — independently of the Spark
 implementations — and cross-checked at generation time
@@ -30,13 +30,6 @@ from pyspark.sql import functions as F
 
 from hyperpolyglot_spark.functions.spec_sql import WORDS, keep_drop_sql, scrub_sql
 from hyperpolyglot_spark.session import local_rows_df
-from hyperpolyglot_spark.functions.textstats import (
-    bpe_ish_token_count_col,
-    distinct_token_ratio_col,
-    fingerprint_col,
-    quality_score_col,
-    token_count_col,
-)
 from hyperpolyglot_spark.operators.dedup import (
     exact_dedup_groups,
     minhash_neardup_pairs,
@@ -49,24 +42,17 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def _spread(spark: SparkSession, df: DataFrame) -> DataFrame:
-    """Right-size scan parallelism for COMPUTE-HEAVY per-row stages.
+    """Right-size scan parallelism for compute-heavy per-row stages.
 
-    The sf testdata tables are single parquet files with ONE row group
-    (r07 audit), so every scan is one task no matter the split config —
-    a per-doc-heavy stage (minhash UDF, quality ladder)
-    then runs on 1 of 32 cores. The fix: shuffle the (small,
-    under-split) input across the cores ONCE, only when the scan
-    under-splits them. At corpus scale a real table has thousands of
-    row groups, the gate never fires, and no corpus-sized shuffle is
-    added — this is the guide §2.5 'unsplittable input' repartition,
-    not a tuning constant.
-
-    Applied ONLY where an A/B noop-sink measurement showed a win
-    (OPTIMIZATION_r07.md): shallow plans whose per-row compute
-    dominates (quality ladder).
-    Deep multi-stage DAGs (minhash chains) are
-    stage-latency-bound at this scale — spreading them multiplied
-    per-stage task overhead and measured SLOWER, so they keep their
+    The sf testdata tables are single parquet files with one row group,
+    so every scan is one task no matter the split config, and a
+    per-doc-heavy stage (the quality ladder) then runs on one core. The
+    fix: shuffle the small, under-split input across the cores once,
+    only when the scan under-splits them. At corpus scale a real table
+    has thousands of row groups, the gate never fires, and no
+    corpus-sized shuffle is added. Used only by the shallow plans whose
+    per-row compute dominates; deep multi-stage plans (the minhash
+    chains) are stage-latency-bound at this scale and keep their
     natural scan partitioning."""
     cores = spark.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < cores:
@@ -79,33 +65,10 @@ def _spread(spark: SparkSession, df: DataFrame) -> DataFrame:
 # ======================================================================
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: text-quality profile of the documents corpus at
-    sf0.001 — token stats + quality score per doc, aggregated per
-    language with percent-of-total (A1/A2 analogs)."""
+    """Flagship: the per-language breakdown of the documents corpus at
+    sf0.001, with percent-of-total."""
     sf_dir = "/root/testdata/sf0.001"
-    docs = _t(spark, sf_dir, "documents")
-    t = F.col("text")
-    profiled = docs.select(
-        "lang",
-        token_count_col(t).alias("n_tokens"),
-        quality_score_col(t).alias("quality_score"),
-    )
-    agg = profiled.groupBy("lang").agg(
-        F.count("*").alias("docs"),
-        F.sum("n_tokens").alias("tokens"),
-        F.round(F.avg("quality_score"), 6).alias("avg_quality"),
-    )
-    # percent-of-total via a broadcast scalar agg, not a global window:
-    # WindowExec with no partition moves everything to ONE partition
-    # (and warns); a cross-joined one-row total is warning-free and
-    # shape-safe at any scale
-    total = agg.agg(F.sum("docs").alias("_total"))
-    return (
-        agg.crossJoin(F.broadcast(total))
-        .withColumn("pct", F.round(F.col("docs") * 100.0 / F.col("_total"), 6))
-        .drop("_total")
-        .orderBy(F.desc("docs"), "lang")
-    )
+    return lang_breakdown(spark, sf_dir).orderBy(F.desc("docs"), "lang")
 
 
 # ======================================================================
@@ -129,6 +92,10 @@ def lang_breakdown(spark, sf_dir):
     agg = docs.groupBy("lang").agg(
         F.count("*").alias("docs"), F.sum("n_chars").alias("chars")
     )
+    # percent-of-total via a broadcast scalar agg, not a global window:
+    # WindowExec with no partition moves everything to ONE partition
+    # (and warns); a cross-joined one-row total is warning-free and
+    # shape-safe at any scale
     total = agg.agg(F.sum("docs").alias("_total"))
     return (
         agg.crossJoin(F.broadcast(total))
@@ -144,25 +111,6 @@ def source_lang_matrix(spark, sf_dir):
     return docs.groupBy("source", "lang").agg(
         F.count("*").alias("docs"),
         F.round(F.avg("n_chars"), 6).alias("avg_chars"),
-    )
-
-
-def doc_token_stats(spark, sf_dir):
-    docs = _spread(spark, _t(spark, sf_dir, "documents"))
-    t = F.col("text")
-    return docs.select(
-        "doc_id",
-        token_count_col(t).alias("n_tokens"),
-        bpe_ish_token_count_col(t).alias("n_subtokens"),
-        F.round(distinct_token_ratio_col(t), 6).alias("ttr"),
-        fingerprint_col(t).alias("fingerprint"),
-    )
-
-
-def doc_quality_scores(spark, sf_dir):
-    docs = _t(spark, sf_dir, "documents")
-    return docs.select(
-        "doc_id", quality_score_col(F.col("text")).alias("quality_score")
     )
 
 
@@ -306,28 +254,6 @@ def neardup_incremental_indexed(spark, sf_dir):
     )
     save_dedup_index(spark, old, idx)
     return minhash_neardup_join_indexed(spark, new, idx, old, threshold=0.5)
-
-
-def doc_script_mix(spark, sf_dir):
-    """Per-document script-mix ratios (latin/cjk/cyrillic/...): the
-    standard multilingual-corpus signal for mixed-script boilerplate or
-    mislabeled docs. One scan, pure regexp_replace length arithmetic —
-    the same literal ranges compile under Java regex and DuckDB RE2."""
-    from hyperpolyglot_spark.functions.textstats import (
-        SCRIPT_CLASSES,
-        script_ratio_col,
-    )
-
-    docs = _t(spark, sf_dir, "documents")
-    t = F.col("text")
-    return docs.select(
-        "doc_id",
-        "lang",
-        *[
-            F.round(script_ratio_col(t, s), 6).alias(f"{s}_ratio")
-            for s in sorted(SCRIPT_CLASSES)
-        ],
-    )
 
 
 def docs_keep_drop(spark, sf_dir):
@@ -581,127 +507,6 @@ def unresolved_disposition(spark, sf_dir):
     )
 
 
-# messy-URL variants for canonical_url_dedup: five renderings across
-# TWO logical pages — variants 0/1/2 are the bare page (host-casing,
-# default port, tracking-only params, fragment, trailing/duplicate
-# slashes) and variants 3/4 are the ?page=2 form rendered with a
-# tracking param BEFORE vs AFTER the real param (the delimiter-repair
-# bug class: '?utm_…&page=2' must canonicalize to '?page=2', never
-# '&page=2'). Shared between the Spark builder and the DuckDB oracle
-# so the two sides construct identical input. (prefix, midfix,
-# suffix); url = prefix || h || midfix || g || suffix with
-# h = (doc_id/5)%7, g = doc_id/5 (integer division).
-_URL_VARIANTS = (
-    ("HTTPS://WWW.EXAMPLE", ".COM:443/articles//", "/?utm_source=feed&ref=rss#top"),
-    ("https://www.example", ".com:443/articles/", "/"),
-    ("https://www.example", ".com/articles/", "#section-2"),
-    ("https://www.example", ".com/articles/", "?utm_medium=email&page=2"),
-    ("https://www.example", ".com/articles/", "?page=2&fbclid=abc123"),
-)
-
-
-def canonical_url_dedup(spark, sf_dir):
-    """URL canonicalization + canonical-URL dedup — the crawl-dedup
-    stage upstream of content dedup (a CC-style pipeline collapses
-    recrawls of the same page by canonical URL before hashing any
-    content). Five messy renderings of each logical page are
-    synthesized deterministically from doc_id (the driver tables carry
-    no URL column), canonicalized with pure JVM regexp built-ins
-    (functions/urltools.py — no UDF, codegen'd, scan-projection cheap
-    at 10^12 urls), and grouped. The DuckDB oracle canonicalizes with
-    the SAME generated expression (one shared step table, dialect
-    differences handled by the generator)."""
-    from hyperpolyglot_spark.functions.urltools import canonical_url_col
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
-    h = (F.col("doc_id") / 5).cast("long") % 7
-    g = (F.col("doc_id") / 5).cast("long")
-    url = F.lit(None).cast("string")
-    for i, (p, m, s) in enumerate(_URL_VARIANTS):
-        url = F.when(
-            F.col("doc_id") % 5 == i,
-            F.concat(F.lit(p), h.cast("string"), F.lit(m),
-                     g.cast("string"), F.lit(s)),
-        ).otherwise(url)
-    messy = docs.withColumn("url", url)
-    return (
-        messy.withColumn("canon_url", canonical_url_col("url"))
-        .groupBy("canon_url")
-        .agg(
-            F.count("*").alias("dups"),
-            F.min("doc_id").alias("rep_doc_id"),
-        )
-    )
-
-
-def _canon_dedup_sql() -> str:
-    from hyperpolyglot_spark.functions.urltools import canonical_url_sql
-
-    whens = " ".join(
-        "WHEN {i} THEN '{p}' || CAST((doc_id // 5) % 7 AS VARCHAR) || "
-        "'{m}' || CAST(doc_id // 5 AS VARCHAR) || '{s}'".format(
-            i=i, p=p, m=m, s=s
-        )
-        for i, (p, m, s) in enumerate(_URL_VARIANTS)
-    )
-    canon = canonical_url_sql("url")
-    return f"""
-        SELECT {canon} AS canon_url, count(*) AS dups,
-               min(doc_id) AS rep_doc_id
-        FROM (
-          SELECT doc_id, CASE CAST(doc_id % 5 AS INT) {whens} END AS url
-          FROM documents)
-        GROUP BY canon_url
-    """
-
-
-def langid_code_switch_spans(spark, sf_dir):
-    """Per-span language segmentation for code-switched documents
-    (VERDICT r5 #2): the reference's single-``Detection`` outcome
-    (src/lib.rs:89-95) generalized to segment level. Script-run
-    boundaries (the r5 int8 codepoint->script table, one gather) split
-    the doc; each run with >= MIN_SPAN_LETTERS letters is classified
-    by the hashed NB restricted to script-compatible languages (CJK
-    runs decide zh/ja by kana presence); the doc gets a
-    letters-weighted dominant language + mixed flag for the keep
-    policy. Input = documents rows (mono-script negative controls:
-    mixed must stay false) + the cross-script bilingual stratum
-    (datagen/realtext.code_switched_docs — en-quote-inside-ru, fr/ar
-    bilingual, + pure controls). Oracle = frozen expected from the
-    pure-python spec (segments.classify_spans_py), cross-checked at
-    freeze time; floors pinned in tests/test_segments.py."""
-    from hyperpolyglot_spark.datagen.realtext import code_switched_docs
-    from hyperpolyglot_spark.functions.segments import (
-        span_rows,
-        with_segments,
-    )
-
-    docs = (
-        _t(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") < 60)
-        .select("doc_id", "text")
-    )
-    fx = local_rows_df(
-        spark,
-        [(d, t) for d, _a, _b, _l, t in code_switched_docs()],
-        "doc_id long, text string",
-    )
-    df = docs.unionByName(fx).repartition(8)
-    out = span_rows(with_segments(df, spark))
-    return out.select(
-        "doc_id",
-        "span_idx",
-        "span_start",
-        "span_len",
-        "span_letters",
-        "script",
-        "lang",
-        "dominant_lang",
-        F.round("dominant_share", 6).alias("dominant_share"),
-        "mixed",
-    )
-
-
 def langid_noisy_texts(spark, sf_dir):
     """Noisy-encoding robustness as a driver row (VERDICT r5 #4): the
     102-language stratum of mojibake / HTML-entity / percent-encoded /
@@ -742,27 +547,6 @@ def langid_noisy_texts(spark, sf_dir):
     )
 
 
-# target mix for the sampling query: down-sample the over-represented
-# strata (the crawl-reality case), keep the tail at full rate. Shared
-# by the Spark query and the generated SQL oracle.
-_MIX_RATES = {"en": 0.25, "de": 0.5, "fr": 0.5, "es": 0.4}
-
-
-def training_mix_sample(spark, sf_dir):
-    """Dataset-mixing stage: deterministic stratified down-sampling by
-    language (operators/mixing.py). Keep-decision = fixed-width
-    hex-string comparison on md5(id:salt) against a per-stratum
-    threshold — no rand() (resumable: every retry of every partition
-    makes the same decision), no shuffle (broadcast dim + map-side
-    filter), and the oracle evaluates the IDENTICAL predicate in
-    DuckDB (lowercase fixed-width hex compares lexicographically ==
-    numerically in both engines)."""
-    from hyperpolyglot_spark.operators.mixing import stratified_sample
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "lang", "source")
-    return stratified_sample(docs, spark, _MIX_RATES)
-
-
 def source_rule_rollup(spark, sf_dir):
     """Domain-level quality rollup (the blocklist-candidate report a
     crawl pipeline runs per host): docs per (source, outcome) where
@@ -796,17 +580,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "lang_breakdown": lang_breakdown,
         "source_lang_matrix": source_lang_matrix,
         "source_langs_csv": source_langs_csv,
-        "doc_token_stats": doc_token_stats,
-        "doc_quality_scores": doc_quality_scores,
         "regex_marker_counts": regex_marker_counts,
         "family_breakdown": family_breakdown,
         "docs_matching_regex": docs_matching_regex,
         "lang_chars_zscore": lang_chars_zscore,
         "lang_median_chars": lang_median_chars,
-        "doc_script_mix": doc_script_mix,
         "per_strategy_report": per_strategy_report,
-        "canonical_url_dedup": canonical_url_dedup,
-        "training_mix_sample": training_mix_sample,
         # --- the label spec: quality ladder, scrub, perplexity ---
         "docs_keep_drop": docs_keep_drop,
         "docs_scrubbed": docs_scrubbed,
@@ -815,7 +594,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # --- language ID ---
         "langid_unresolved": langid_unresolved,
         "langid_short_texts": langid_short_texts,
-        "langid_code_switch_spans": langid_code_switch_spans,
         "langid_noisy_texts": langid_noisy_texts,
         # --- dedup ---
         "exact_dedup_documents": exact_dedup_documents,
@@ -836,26 +614,6 @@ def _lang_info_values() -> str:
 
 
 _LANG_INFO_VALUES = _lang_info_values()
-
-
-def _script_mix_sql() -> str:
-    from hyperpolyglot_spark.functions.textstats import SCRIPT_CLASSES
-
-    cols = ", ".join(
-        f"round((length(text) - length(regexp_replace(text, '[{cls}]', '', 'g')))::DOUBLE"
-        f" / greatest(length(text), 1), 6) AS {s}_ratio"
-        for s, cls in sorted(SCRIPT_CLASSES.items())
-    )
-    return f"SELECT doc_id, lang, {cols} FROM documents"
-
-
-def _training_mix_sql() -> str:
-    """Generated from the SAME rates table + threshold function the
-    Spark query uses (operators/mixing.py) — the decision predicate is
-    string-identical across engines."""
-    from hyperpolyglot_spark.operators.mixing import stratified_sample_sql
-
-    return stratified_sample_sql(_MIX_RATES, columns="doc_id, lang, source")
 
 
 def _source_rollup_sql() -> str:
@@ -943,27 +701,6 @@ def oracle_sql() -> dict[str, str]:
                    round(avg(n_chars), 6) AS avg_chars
             FROM documents GROUP BY source, lang
         """,
-        "doc_token_stats": f"""
-            SELECT doc_id,
-                   len(w)::BIGINT AS n_tokens,
-                   len(regexp_extract_all(text,
-                       '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]'))::BIGINT AS n_subtokens,
-                   round(len(list_distinct(w))::DOUBLE / greatest(len(w), 1), 6) AS ttr,
-                   list_reduce(
-                     list_prepend(0::BIGINT,
-                       [unicode(c)::BIGINT for c in string_split(text, '') if c <> '']),
-                     (acc, c) -> (acc * 31 + c) % 1000000007) AS fingerprint
-            FROM (SELECT doc_id, text, {WORDS} AS w FROM documents)
-        """,
-        "doc_quality_scores": f"""
-            SELECT doc_id,
-                   round((least(length(text) / 500.0, 1.0)
-                          + len(list_distinct(w))::DOUBLE / greatest(len(w), 1)
-                          + CASE WHEN length(text)::DOUBLE / greatest(len(w), 1)
-                                      BETWEEN 3.0 AND 12.0
-                                 THEN 1.0 ELSE 0.5 END) / 3.0, 6) AS quality_score
-            FROM (SELECT doc_id, text, {WORDS} AS w FROM documents)
-        """,
         "regex_marker_counts": """
             SELECT doc_id,
                    len(regexp_extract_all(text, '\\bthe\\b'))::BIGINT AS n_the,
@@ -1045,7 +782,6 @@ def oracle_sql() -> dict[str, str]:
         # is output-identical by construction, hence the same oracle.
         "neardup_incremental": _INCREMENTAL_SQL,
         "neardup_incremental_indexed": _INCREMENTAL_SQL,
-        "doc_script_mix": _script_mix_sql(),
         "docs_keep_drop": keep_drop_sql(),
         "docs_scrubbed": scrub_sql(),
         "per_strategy_report": f"""
@@ -1061,8 +797,8 @@ def oracle_sql() -> dict[str, str]:
             GROUP BY strategy, lang
         """,
         # --- frozen-expected oracles (tools/gen_expected.py): the
-        # queries DuckDB cannot compute (NB classify, code-switch
-        # segmentation, ...). Expected tables are computed
+        # queries DuckDB cannot compute (NB classify under the
+        # unresolved gate). Expected tables are computed
         # from the pure-Python specs INDEPENDENTLY of Spark,
         # cross-checked at generation time, and frozen at sf0.01 (the
         # scale tests/test_entry_oracle.py runs at).
@@ -1074,22 +810,15 @@ def oracle_sql() -> dict[str, str]:
             SELECT doc_id, lang, lang_pred, correct
             FROM {_frozen("langid_short_texts")}
         """,
-        "langid_code_switch_spans": f"""
-            SELECT doc_id, span_idx, span_start, span_len, span_letters,
-                   script, lang, dominant_lang, dominant_share, mixed
-            FROM {_frozen("langid_code_switch_spans")}
-        """,
         "langid_noisy_texts": f"""
             SELECT doc_id, lang, variant, lang_pred, keep, drop_rule,
                    kept_mislabel
             FROM {_frozen("langid_noisy_texts")}
         """,
-        "training_mix_sample": _training_mix_sql(),
         "source_rule_rollup": _source_rollup_sql(),
         "unresolved_disposition": f"""
             SELECT doc_id, lang_pred, keep, drop_rule, ppl_scored,
                    disposition, disposition_if_drop
             FROM {_frozen("unresolved_disposition")}
         """,
-        "canonical_url_dedup": _canon_dedup_sql(),
     }

@@ -3,8 +3,8 @@
 Generalizes the staged-detection strategy of monkslc/hyperpolyglot
 (/root/reference, Rust) into a language-ID + quality-filter +
 PII/toxicity-scrub pipeline over Common-Crawl-style `pages` tables,
-plus the analytics operator surface (dedup, text stats) a large-scale
-training-data pipeline needs.
+plus the near-dup operator (dedup) a large-scale training-data
+pipeline needs.
 
 Design stance (SURVEY.md §7.0): every stage is a pure
 DataFrame -> DataFrame transform; static dimension data is compiled at

@@ -1173,68 +1173,6 @@ def short_texts() -> dict[str, tuple[str, str, str]]:
 
 
 # ----------------------------------------------------------------------
-# code-switched stratum (round 6): cross-script bilingual documents
-# ----------------------------------------------------------------------
-# Deterministic compositions of this module's own passages: a quote
-# from language B embedded inside language A prose, and an alternating
-# bilingual rendering — the two layouts real code-switched web pages
-# use (an English quote inside a Russian article; fr/ar bilingual
-# notices). Only CROSS-SCRIPT pairs: script runs are the segmentation
-# evidence, same-script switching (en/fr) is out of scope for the
-# span operator by design (functions/segments.py).
-
-CODE_SWITCH_PAIRS: tuple[tuple[str, str], ...] = (
-    ("ru", "en"),  # en quote inside ru article (the VERDICT example)
-    ("ja", "en"),
-    ("zh", "en"),
-    ("ar", "fr"),  # fr/ar bilingual (the VERDICT example)
-    ("el", "en"),
-    ("he", "en"),
-    ("ko", "en"),
-    ("hi", "en"),
-    ("th", "en"),
-    ("uk", "de"),
-)
-
-
-def _sentences(p: str) -> list[str]:
-    """Sentence-ish splits (keep it simple: period-class enders)."""
-    parts = [
-        s.strip()
-        for s in _re.split(r"(?<=[.!?。])\s+", p)
-        if s.strip()
-    ]
-    return parts or [p]
-
-
-def code_switched_docs() -> list[tuple[int, str, str, str, str]]:
-    """(doc_id, lang_a, lang_b, layout, text) rows, deterministic.
-
-    Layouts per pair:
-      * 'quote'      — A-sentence «B-sentence» A-sentence
-      * 'alternate'  — A1 B1 A2 B2 (bilingual page rendering)
-    plus one 'pure' control per pair's A language (no switching —
-    pins the mixed-flag false-positive side). doc_ids start at 40_000
-    (clear of documents/unknown/pool/short strata)."""
-    out = []
-    i = 0
-    for a, b in CODE_SWITCH_PAIRS:
-        pa, pb = REAL_TEXT[a], REAL_TEXT[b]
-        sa = _sentences(pa[0]) + _sentences(pa[1])
-        sb = _sentences(pb[0]) + _sentences(pb[1])
-        quote = f"{sa[0]} «{sb[0]}» {sa[1] if len(sa) > 1 else sa[0]}"
-        alternate = " ".join(
-            x
-            for pair in zip(sa[:2], sb[:2])
-            for x in pair
-        )
-        out.append((40_000 + i, a, b, "quote", quote)); i += 1
-        out.append((40_000 + i, a, b, "alternate", alternate)); i += 1
-        out.append((40_000 + i, a, a, "pure", pa[2])); i += 1
-    return out
-
-
-# ----------------------------------------------------------------------
 # noisy-encoding stratum (round 6): deterministic corruption variants
 # ----------------------------------------------------------------------
 # Real crawls deliver text whose ENCODING is damaged even when the

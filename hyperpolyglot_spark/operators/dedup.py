@@ -461,18 +461,16 @@ def _expand_group_pairs(
     canon_pairs: DataFrame,
     members: DataFrame,
     id_col: str,
-    payload_col: str,
-    intra_value,
-    intra_eligible: DataFrame | None = None,
+    intra_eligible: DataFrame,
 ) -> DataFrame:
     """Expand canonical-level near-dup pairs back to member-level pairs.
 
     - cross-group: every (member of A) x (member of B) inherits the
-      canonical pair's payload (jaccard) — the join is sized by
-      the OUTPUT, never by candidate blowup;
-    - intra-group: all pairs inside one exact-dup group get the literal
-      ``intra_value`` (identical texts), restricted to canonical ids in
-      ``intra_eligible`` when given.
+      canonical pair's jaccard — the join is sized by the OUTPUT,
+      never by candidate blowup;
+    - intra-group: all pairs inside one exact-dup group get jaccard
+      1.0 (identical texts), restricted to canonical ids in
+      ``intra_eligible``.
     """
     ma = members.select(
         F.col("canonical_id").alias("ca"), F.col(id_col).alias("ia")
@@ -488,7 +486,7 @@ def _expand_group_pairs(
         .select(
             F.least("ia", "ib").alias("id_a"),
             F.greatest("ia", "ib").alias("id_b"),
-            payload_col,
+            "jaccard",
         )
     )
     m1 = members.select(
@@ -497,13 +495,15 @@ def _expand_group_pairs(
     m2 = members.select(
         "canonical_id", F.col(id_col).alias("ib")
     )
-    intra = m1.join(m2, "canonical_id").filter(F.col("ia") < F.col("ib"))
-    if intra_eligible is not None:
-        intra = intra.join(intra_eligible, "canonical_id", "left_semi")
-    intra = intra.select(
-        F.col("ia").alias("id_a"),
-        F.col("ib").alias("id_b"),
-        intra_value.alias(payload_col),
+    intra = (
+        m1.join(m2, "canonical_id")
+        .filter(F.col("ia") < F.col("ib"))
+        .join(intra_eligible, "canonical_id", "left_semi")
+        .select(
+            F.col("ia").alias("id_a"),
+            F.col("ib").alias("id_b"),
+            F.round(F.lit(1.0), 6).cast("double").alias("jaccard"),
+        )
     )
     return cross.unionByName(intra)
 
@@ -557,14 +557,7 @@ def minhash_neardup_pairs(
     eligible = side.filter(F.size("grams") > 0).select(
         F.col(id_col).alias("canonical_id")
     )
-    return _expand_group_pairs(
-        canon_pairs,
-        members,
-        id_col,
-        "jaccard",
-        F.round(F.lit(1.0), 6).cast("double"),
-        intra_eligible=eligible,
-    )
+    return _expand_group_pairs(canon_pairs, members, id_col, eligible)
 
 
 def minhash_neardup_join(

@@ -6,7 +6,8 @@ transitively, from one of two roots: the job and the benchmark
 frozen-table generator (__spark_entry__.py, tools/), or be named in
 TEST_ONLY or LOADED_BY_NAME below. The job's own closure is pinned
 exactly (JOB_CLOSURE), so is the benchmark's (BENCH_CLOSURE: the job
-plus the near-dup operator), and so is every top-level name in them
+plus the near-dup operator), so is what the query surface reaches
+beyond them (ENTRY_CLOSURE), and so is every top-level name in them
 that the job and the benchmark do not reach (ENTRY_OR_TEST_NAMES). No
 file imports a name it never uses. The sources are read with ``ast``,
 so the checks start no Spark and run no module.
@@ -23,7 +24,6 @@ ENTRY_ROOTS = ("__spark_entry__.py", "tools")
 
 # reached from tests only; each is kept for a named reason (ROADMAP item 4)
 TEST_ONLY = {
-    f"{PKG}.functions.shebang",
     f"{PKG}.sources.pages",
     f"{PKG}.sources.bucketed",
 }
@@ -55,6 +55,14 @@ JOB_CLOSURE = {
 # the benchmark reaches the job plus the one operator beside it, the
 # persisted-index MinHash near-dup join
 BENCH_CLOSURE = JOB_CLOSURE | {f"{PKG}.operators.dedup"}
+# what the query surface and tools/ reach beyond the job and the
+# benchmark: the label spec's DuckDB SQL and the language-ID fixtures
+# its frozen oracles are computed from
+ENTRY_CLOSURE = {
+    f"{PKG}.functions.spec_sql",
+    f"{PKG}.datagen.realtext",
+    f"{PKG}.datagen.unknown",
+}
 # top-level names of BENCH_CLOSURE modules that only the query surface,
 # tools/ or the tests use; a name that neither the job nor the
 # benchmark reaches, and that is not listed here, fails by name
@@ -63,8 +71,7 @@ ENTRY_OR_TEST_NAMES = {
     f"{PKG}.datagen.pages.gen_pages_pdf",
     f"{PKG}.functions.langid.NORM_FROM",
     f"{PKG}.functions.langid.NORM_TO",
-    # the spec scorer: functions/segments uses it, and the tests hold
-    # classify_margin_py's winner to it
+    # the spec scorer: the tests hold classify_margin_py's winner to it
     f"{PKG}.functions.langid.classify_hashed_py",
     f"{PKG}.functions.langid.make_classify_udf",
     f"{PKG}.functions.perplexity.make_perplexity_udf",
@@ -172,6 +179,17 @@ def test_benchmark_closure_is_pinned():
     )
     assert not BENCH_CLOSURE - reached, (
         f"gone from the benchmark: {sorted(BENCH_CLOSURE - reached)}"
+    )
+
+
+def test_entry_closure_is_pinned():
+    mods = package_modules()
+    extra = closure(ENTRY_ROOTS, mods) - closure(JOB_ROOTS, mods)
+    assert not extra - ENTRY_CLOSURE, (
+        f"new in the query surface: {sorted(extra - ENTRY_CLOSURE)}"
+    )
+    assert not ENTRY_CLOSURE - extra, (
+        f"gone from the query surface: {sorted(ENTRY_CLOSURE - extra)}"
     )
 
 

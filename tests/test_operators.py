@@ -1,7 +1,6 @@
-"""Operator tests: dedup and text stats —
-cross-checked against numpy/DuckDB ground truth on the driver testdata."""
+"""Operator tests: dedup — cross-checked against exact pure-Python
+ground truth on the sf0.01 documents table."""
 
-import duckdb
 import pytest
 from pyspark.sql import functions as F
 
@@ -13,7 +12,6 @@ from hyperpolyglot_spark.operators.dedup import (
     ngram_jaccard_pairs,
     word_shingles,
 )
-from hyperpolyglot_spark.functions.textstats import with_text_stats
 
 SF = "/root/testdata/sf0.01"
 
@@ -140,29 +138,6 @@ def test_identical_empty_texts_are_not_jaccard_neardups(spark):
 
 
 # --- text stats ----------------------------------------------------------
-def test_text_stats_vs_duckdb(spark, docs):
-    got = {
-        r["doc_id"]: r
-        for r in with_text_stats(docs.limit(50)).collect()
-    }
-    con = duckdb.connect()
-    rows = con.execute(f"""
-        select doc_id,
-               len(list_filter(string_split_regex(text, '[ \t\n\r]+'), x -> x <> '')) as n_tokens,
-               len(list_distinct(list_filter(string_split_regex(text, '[ \t\n\r]+'), x -> x <> '')))::double
-                 / greatest(len(list_filter(string_split_regex(text, '[ \t\n\r]+'), x -> x <> '')), 1) as ttr,
-               list_reduce(list_prepend(0::bigint, [unicode(c) for c in string_split(text, '') if c <> '']),
-                           (acc, c) -> (acc * 31 + c) % 1000000007) as fingerprint
-        from read_parquet('{SF}/documents.parquet')
-        where doc_id < 500 order by doc_id limit 50
-    """).fetchall()
-    for doc_id, n_tokens, ttr, fp in rows:
-        g = got[doc_id]
-        assert g["n_tokens"] == n_tokens
-        assert g["ttr"] == pytest.approx(ttr, abs=1e-6)
-        assert g["fingerprint"] == fp, doc_id
-
-
 def test_incremental_neardup_join(spark, docs):
     """New-vs-old LSH join: finds injected cross-side dups, never emits
     within-side pairs, and a cross-side identical K x M cluster costs

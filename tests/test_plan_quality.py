@@ -108,17 +108,14 @@ def test_indexed_incremental_join_plan(spark):
         shutil.rmtree(root, ignore_errors=True)
 
 
-def test_training_mix_sample_is_shuffle_free(spark):
-    """The mixing sampler must be a map-side filter: broadcast of the
-    rates dim only — no Exchange hashpartitioning of the corpus, no
-    rand()/nondeterministic expressions (determinism is what makes the
-    sample retry-safe at scale)."""
-    import __spark_entry__ as entry
-
-    plan = plan_of(entry.queries()["training_mix_sample"](spark, SF))
+def test_small_dim_is_broadcast(spark):
+    """The language-info dim (102 rows) joins the corpus by broadcast:
+    a hash probe per row, no shuffle of the corpus to meet it and no
+    nested-loop or cartesian fallback."""
+    plan = plan_of(entry_mod.family_breakdown(spark, SF))
     assert "BroadcastHashJoin" in plan
-    assert "Exchange hashpartitioning" not in plan
-    assert "rand(" not in plan
+    assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
 
 
 def test_source_rule_rollup_is_partial_final(spark):

@@ -1,6 +1,6 @@
-"""Shebang detector + rule-engine combinator tests — transcribed from
-reference interpreters.rs:67-158 and heuristics.rs:74-171 (FIXTURES.md
-§5-6)."""
+"""Rule-engine combinator tests (functions/rules.py, which the job's
+heuristics stage runs) — transcribed from reference
+heuristics.rs:74-171 (FIXTURES.md §5)."""
 
 from hyperpolyglot_spark.functions.rules import (
     And,
@@ -10,44 +10,6 @@ from hyperpolyglot_spark.functions.rules import (
     Rule,
     apply_rules,
 )
-from hyperpolyglot_spark.functions.shebang import (
-    get_languages_from_shebang,
-    parse_shebang_interpreter,
-)
-
-
-# --- shebang (interpreters.rs:67-158) ---------------------------------
-def test_shebang_basic():
-    assert get_languages_from_shebang("#!/usr/bin/python") == ["Python"]
-
-
-def test_shebang_env():
-    assert get_languages_from_shebang("#!/usr/bin/env node") == ["JavaScript"]
-
-
-def test_shebang_multiple():
-    langs = sorted(get_languages_from_shebang("#!/usr/bin/parrot"))
-    assert langs == ["Parrot Assembly", "Parrot Internal Representation"]
-
-
-def test_shebang_minor_version():
-    assert get_languages_from_shebang("#!/usr/bin/python2.6") == ["Python"]
-    assert parse_shebang_interpreter("#!/usr/bin/python2.6.3") == "python"
-
-
-def test_shebang_empty_cases():
-    for content in ("#!/usr/bin/env", "#!", "", "aslkdfjas;ldk",
-                    " #!/usr/bin/python", " #!/usr/bin/ ", " #!/usr/bin"):
-        assert get_languages_from_shebang(content) == [], repr(content)
-
-
-def test_shebang_sh_exec_hack():
-    content = '#!/bin/sh\n   exec scala "$0" "$@"\n!#\n'
-    assert get_languages_from_shebang(content) == ["Scala"]
-
-
-def test_shebang_sh_plain():
-    assert get_languages_from_shebang("#!/bin/sh\necho hi\n") == ["Shell"]
 
 
 # --- rule engine combinators (heuristics.rs:74-171) --------------------

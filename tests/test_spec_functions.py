@@ -425,124 +425,3 @@ def test_fused_toxicity_equals_sequential():
     ]
     for t in cases:
         assert py_scrub(t) == sequential(t), t
-
-
-def test_canonical_url_py_vs_duckdb():
-    """The canonicalization expression is generated for both engines
-    from one step table — pin cross-engine parity on adversarial urls."""
-    import duckdb
-
-    from hyperpolyglot_spark.functions.urltools import (
-        canonical_url_sql,
-        py_canonical_url,
-    )
-
-    cases = [
-        "HTTPS://WWW.Site.COM:443/articles//42/?utm_source=feed&ref=rss#top",
-        "https://www.site.com/articles/42?id=7&utm_medium=email&x=1",
-        "http://host.org:80/a//b///c/",
-        "relative/path?utm_source=x",
-        "https://h.io/p?utm_a=1&utm_b=2&utm_c=3",
-        "https://h.io/p?a=1&ref=x&b=2",
-        "https://h.io/p?ref=x#f",
-        "https://CASE.Sensitive.Path.COM/Articles/Keep/Case",
-        "ftp://Weird.Scheme.ORG:443/x",
-        "https://www.site.com/",
-        "https://www.site.com",
-        "",
-        # leading tracking param followed by a real param (the
-        # delimiter-consumption bug class)
-        "https://a.com/p?utm_a=1&b=2",
-        "https://a.com/p?utm_a=1&utm_b=2&c=3",
-        "https://a.com/p?utm_a=1&utm_b=2",
-        # query content is opaque: embedded urls / trailing slash in a
-        # value must survive; slashes collapse in the PATH only
-        "https://a.com/p?next=https://b//x",
-        "https://a.com/p?next=https:/b/x",
-        "https://a.com/p?q=a/",
-        "https://a.com//p//q/?r=1",
-        # literal '&' in a path must NOT merge with a query form
-        "https://a.com/p&b=2",
-    ]
-    con = duckdb.connect()
-    sql = canonical_url_sql("u")
-    for c in cases:
-        got = con.execute(f"SELECT {sql} FROM (SELECT ? AS u)", [c]).fetchone()[0]
-        assert got == py_canonical_url(c), c
-
-
-def test_jvm_canonical_url_matches_spec(spark):
-    """canonical_url_col (Spark dialect: $1 group refs, backslash-escaped
-    literals) must agree with the pure-Python spec char-for-char — the
-    JVM twin of test_canonical_url_py_vs_duckdb."""
-    from hyperpolyglot_spark.functions.urltools import (
-        canonical_url_col,
-        py_canonical_url,
-    )
-
-    cases = [
-        "HTTPS://WWW.Site.COM:443/articles//42/?utm_source=feed&ref=rss#top",
-        "https://www.site.com/articles/42?id=7&utm_medium=email&x=1",
-        "http://host.org:80/a//b///c/",
-        "https://a.com/p?utm_a=1&b=2",
-        "https://a.com/p?utm_a=1&utm_b=2&c=3",
-        "https://a.com/p?utm_a=1&utm_b=2",
-        "https://a.com/p?next=https://b//x",
-        "https://a.com/p?q=a/",
-        "https://a.com//p//q/?r=1",
-        "https://a.com/p&b=2",
-        "https://www.site.com/",
-        "https://www.site.com",
-        "",
-    ]
-    df = spark.createDataFrame([(u,) for u in cases], "url string")
-    got = {
-        r["url"]: r["canon"]
-        for r in df.withColumn("canon", canonical_url_col("url")).collect()
-    }
-    for u in cases:
-        assert got[u] == py_canonical_url(u), (u, got[u], py_canonical_url(u))
-
-
-def test_canonical_url_semantics():
-    from hyperpolyglot_spark.functions.urltools import py_canonical_url as cu
-
-    # authority lowercased, path case preserved
-    assert cu("HTTPS://A.B/Path/Case") == "https://a.b/Path/Case"
-    # default ports dropped, non-default kept
-    assert cu("https://a.b:443/x") == "https://a.b/x"
-    assert cu("https://a.b:8443/x") == "https://a.b:8443/x"
-    # real params survive in order, tracking removed anywhere
-    assert cu("https://a.b/x?p=1&utm_c=2&q=3") == "https://a.b/x?p=1&q=3"
-    # bare root slash kept
-    assert cu("https://a.b/") == "https://a.b/"
-    # LEADING tracking param: the next real param takes over the '?'
-    assert cu("https://a.b/p?utm_a=1&b=2") == "https://a.b/p?b=2"
-    assert cu("https://a.b/p?utm_a=1&utm_b=2&c=3") == "https://a.b/p?c=3"
-    assert cu("https://a.b/p?utm_a=1&utm_b=2") == "https://a.b/p"
-    # ...and a literal '&' path stays distinct from the query form
-    assert cu("https://a.b/p&b=2") == "https://a.b/p&b=2"
-    # slash handling is PATH-only: query values keep their slashes
-    assert cu("https://a.b/p?next=https://c//x") == "https://a.b/p?next=https://c//x"
-    assert cu("https://a.b/p?q=a/") == "https://a.b/p?q=a/"
-    assert cu("https://a.b//p//q/?r=1") == "https://a.b/p/q?r=1"
-
-
-def test_rate_threshold_zero_keeps_nothing():
-    """ADVICE r6: rate<=0 must keep NOTHING. The old '00000000'
-    threshold leaked rows whose 8-hex md5 prefix was exactly zero
-    through the <= comparison (p=2^-32/row — hundreds of rows at
-    10^12-doc scale). The empty-string threshold sorts before every
-    hex hash in Python, Spark, and DuckDB collation alike."""
-    import duckdb
-
-    from hyperpolyglot_spark.operators.mixing import rate_threshold_hex
-
-    assert rate_threshold_hex(0.0) == ""
-    assert rate_threshold_hex(-1.0) == ""
-    # unchanged for in-range rates (oracle SQL text stability)
-    assert rate_threshold_hex(0.25) == f"{int(0.25 * 0xFFFFFFFF):08x}"
-    assert rate_threshold_hex(1.0) == "ffffffff"
-    # the adversarial row: an 8-hex prefix of exactly 00000000
-    assert not ("00000000" <= rate_threshold_hex(0.0))
-    assert duckdb.sql("SELECT '00000000' <= ''").fetchone()[0] is False

@@ -1,6 +1,6 @@
 """Freeze deterministic expected outputs for the queries whose
-semantics are not SQL-expressible (NB classify, code-switch
-segmentation, ...).
+semantics are not SQL-expressible (NB classify under the unresolved
+gate).
 
 Expected tables are computed DRIVER-SIDE from the pure-Python specs /
 numpy — independently of the Spark implementations — then cross-checked
@@ -124,44 +124,6 @@ def expected_langid_noisy_texts() -> pd.DataFrame:
     ).astype({"doc_id": "int64"})
 
 
-def expected_code_switch_spans() -> pd.DataFrame:
-    """Pure-python spec of the per-span code-switch segmentation
-    (segments.classify_spans_py) over documents(doc_id<60) + the
-    cross-script bilingual stratum — one row per span with the
-    doc-level dominant/mixed columns repeated (the Spark query's
-    posexplode shape)."""
-    import duckdb
-
-    from hyperpolyglot_spark.datagen.realtext import code_switched_docs
-    from hyperpolyglot_spark.functions.segments import classify_spans_py
-
-    rows = duckdb.sql(
-        f"SELECT doc_id, text FROM read_parquet('{SF}/documents.parquet') "
-        "WHERE doc_id < 60 ORDER BY doc_id"
-    ).fetchall()
-    rows += [(d, t) for d, _a, _b, _l, t in code_switched_docs()]
-    out = []
-    for doc_id, text in rows:
-        r = classify_spans_py(text)
-        for i, (st, ln, nl, script, lang) in enumerate(r["spans"]):
-            out.append(
-                (
-                    doc_id, i, st, ln, nl, script, lang,
-                    r["dominant_lang"], round(r["dominant_share"], 6),
-                    r["mixed"],
-                )
-            )
-    return pd.DataFrame(
-        out,
-        columns=[
-            "doc_id", "span_idx", "span_start", "span_len",
-            "span_letters", "script", "lang", "dominant_lang",
-            "dominant_share", "mixed",
-        ],
-    ).astype({"doc_id": "int64", "span_idx": "int32", "span_start": "int32",
-              "span_len": "int32", "span_letters": "int32"})
-
-
 def expected_unresolved_disposition() -> pd.DataFrame:
     """Pure-python spec of the unresolved-policy query: classify with
     the gate, keep/drop ladder (no url -> vendor rule can't fire),
@@ -244,7 +206,6 @@ def main():
         "langid_unresolved": expected_langid_unresolved(),
         "unresolved_disposition": expected_unresolved_disposition(),
         "langid_short_texts": expected_langid_short_texts(),
-        "langid_code_switch_spans": expected_code_switch_spans(),
         "langid_noisy_texts": expected_langid_noisy_texts(),
     }
     for name, pdf in tables.items():
@@ -260,11 +221,6 @@ def main():
         spark, "unresolved_disposition", tables["unresolved_disposition"]
     )
     crosscheck(spark, "langid_short_texts", tables["langid_short_texts"])
-    crosscheck(
-        spark,
-        "langid_code_switch_spans",
-        tables["langid_code_switch_spans"],
-    )
     crosscheck(
         spark, "langid_noisy_texts", tables["langid_noisy_texts"]
     )
