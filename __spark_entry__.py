@@ -32,8 +32,11 @@ from hyperpolyglot_spark.functions.spec_sql import WORDS, keep_drop_sql, scrub_s
 from hyperpolyglot_spark.session import local_rows_df
 from hyperpolyglot_spark.operators.dedup import (
     exact_dedup_groups,
+    minhash_neardup_join,
+    minhash_neardup_join_indexed,
     minhash_neardup_pairs,
     ngram_jaccard_pairs,
+    save_dedup_index,
 )
 
 
@@ -214,8 +217,6 @@ def neardup_incremental(spark, sf_dir):
     against the 'existing corpus' (doc_id < 250) — cross-side LSH join,
     never re-pairing the old corpus with itself. Oracle = exact
     all-pairs jaccard across the split."""
-    from hyperpolyglot_spark.operators.dedup import minhash_neardup_join
-
     docs = _t(spark, sf_dir, "documents")
     return minhash_neardup_join(
         docs.filter(F.col("doc_id") >= 250),
@@ -226,20 +227,15 @@ def neardup_incremental(spark, sf_dir):
 
 def neardup_incremental_indexed(spark, sf_dir):
     """The PERSISTED-INDEX form of incremental dedup (the continuous-
-    crawl scale path, VERDICT r2 #2): the 'existing corpus' is signed
+    crawl scale path, where re-signing the old corpus on every drop
+    dominated incremental dedup): the 'existing corpus' is signed
     ONCE into an on-disk banded signature index; the 'new drop' signs
     only itself and bucket-joins against the index — the old corpus is
     never re-shingled (verification reads candidate texts only).
     Output is identical to neardup_incremental, and the oracle is the
     same exact all-pairs jaccard."""
     import hashlib
-    import os
     import tempfile
-
-    from hyperpolyglot_spark.operators.dedup import (
-        minhash_neardup_join_indexed,
-        save_dedup_index,
-    )
 
     docs = _t(spark, sf_dir, "documents")
     old = docs.filter(F.col("doc_id") < 250)
@@ -412,7 +408,7 @@ def langid_short_texts(spark, sf_dir):
 
 
 def unresolved_disposition(spark, sf_dir):
-    """Explicit unresolved-language keep policy (VERDICT r4 #1): docs
+    """Explicit unresolved-language keep policy: docs
     the classifier declines (NULL lang_pred) bypass the perplexity rule
     — logprob10_py returns (0,0) for an absent lang — so their
     disposition must be policy, not fall-through. This query pins the
@@ -457,7 +453,7 @@ def unresolved_disposition(spark, sf_dir):
     # (classify + keep/drop -> perplexity), so every task holds 2
     # python workers.
     # 33 tasks x 2 workers meant ~60 worker spawns for 450 rows (the
-    # 11s bench entry, VERDICT r5 #3); 4 partitions keeps it to the
+    # 11 s of this query's run time); 4 partitions keeps it to the
     # warm pool. At corpus scale the operator is run_pipeline, which
     # keeps the scan's natural partitioning.
     df = docs.unionByName(fx).repartition(4).withColumn(
@@ -508,7 +504,8 @@ def unresolved_disposition(spark, sf_dir):
 
 
 def langid_noisy_texts(spark, sf_dir):
-    """Noisy-encoding robustness as a driver row (VERDICT r5 #4): the
+    """Noisy-encoding robustness as a driver row (web pages carry
+    encoding damage the clean fixtures never show): the
     102-language stratum of mojibake / HTML-entity / percent-encoded /
     zero-width-littered variants (datagen/realtext.noisy_texts, all
     deterministic transforms of the repo's own prose) pushed through

@@ -1,10 +1,10 @@
 """Real-prose fixture corpus (the reference ``samples/`` analog).
 
 The reference trains and golden-tests on 2,317 real files; the synthetic
-word-pool corpus cannot measure how the models TRANSFER to natural text
-(VERDICT r2 'what's missing' #3). This module checks in three short
-original passages of natural prose per language — written for this repo,
-no external source, public domain by construction — used by
+word-pool corpus cannot measure how the models TRANSFER to natural text,
+which is what the filter meets on real pages. This module checks in three
+short original passages of natural prose per language — written for this
+repo, no external source, public domain by construction — used by
 tests/test_realtext.py to measure NB / hashed-NB / perplexity behavior
 on text whose word order, inflection, and punctuation the synthetic
 generator never produces. Accuracy numbers are reported in BASELINE.md.
@@ -590,10 +590,11 @@ REAL_TEXT: dict[str, tuple[str, ...]] = {
 
 # ----------------------------------------------------------------------
 # Round-4 widening: the 42 languages added in the 60 -> 102 expansion
-# (VERDICT r3 missing #3 — the reference golden-tests every language it
-# ships, src/lib.rs:386-432). Same three themes as the original block
-# (rain/children at home, the Saturday market, science and questions),
-# same rule: original prose written for this repo, no external text.
+# (every shipped language needs real prose to be tested on, as the
+# reference golden-tests every language it ships, src/lib.rs:386-432).
+# Same three themes as the original block (rain/children at home, the
+# Saturday market, science and questions), same rule: original prose
+# written for this repo, no external text.
 # ----------------------------------------------------------------------
 
 REAL_TEXT.update({

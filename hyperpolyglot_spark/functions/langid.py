@@ -259,7 +259,7 @@ def _narrowed_cands(text: str, candidates: list[str] | None) -> list[str]:
 
 
 # ----------------------------------------------------------------------
-# unknown-language outcome (VERDICT r3 missing #2): the reference's
+# unknown-language outcome: the reference's
 # `detect` can return None (src/lib.rs:187-189) but the cascade used to
 # force-argmax over all 102 languages, assigning a language-103 doc its
 # nearest confusable. CCNet-style pipelines threshold the classifier;
@@ -290,8 +290,9 @@ def classify_margin_py(
     """(best_lang, margin_per_gram, top1_per_gram) — plus the
     gate-set winner as a 4th element when ``with_gate_winner``.
 
-    best_lang follows classify_hashed_py's candidate/tie-break semantics —
-    including script narrowing for empty candidate lists. The GATE
+    best_lang is the spec winner (classify_hashed_py): the first max
+    over the candidates, with script narrowing for empty candidate
+    lists; languages absent from the model score -inf. The GATE
     statistics (margin, top1, gate winner) are always computed over
     the ORIGINAL candidate set (the full universe when empty): the
     noise-gate constants below were calibrated on full-universe
@@ -675,26 +676,6 @@ def classify_hashed_py(
 ) -> str:
     """The spec scorer, exact classifier.rs:18-49 semantics over hashed
     features (plus the documented script narrowing for empty
-    candidates): stable earlier-candidate tie-break (numpy argmax
-    returns the FIRST max). Scores all model languages in one
-    gather+matvec over the transposed bucket matrix, then selects the
-    candidate rows; languages absent from the model score -inf."""
-    model = model if model is not None else default_hashed_model()
-    cands = _narrowed_cands(text, candidates)
-    if not model:
-        return cands[0]  # every candidate scores -inf; earliest wins
-    packed = _packed_grams(text)
-    if packed is None:
-        # no grams: every present language scores 0.0, absent -inf;
-        # the earliest present candidate wins (or cands[0] if none)
-        for lang in cands:
-            if lang in model:
-                return lang
-        return cands[0]
-    uk, cnts = packed
-    idx = _keys_to_buckets(uk)
-    mt, lidx = _hashed_matrix(model)
-    all_scores = cnts @ mt[idx]
-    rows = np.array([lidx.get(l, -1) for l in cands], dtype=np.int64)
-    scores = np.where(rows >= 0, all_scores[np.maximum(rows, 0)], -np.inf)
-    return cands[int(np.argmax(scores))]
+    candidates): stable earlier-candidate tie-break. The winner of
+    classify_margin_py, which computes it once for both."""
+    return classify_margin_py(text, candidates, model)[0]

@@ -128,21 +128,46 @@ _COMPILED: tuple[tuple[str, re.Pattern[str], str], ...] = tuple(
     for name, pat, rep in SCRUB_PATTERNS
 )
 
-_TOXIC_STEMS = ("frak", "gorram", "smeg", "felder", "drokk")
-_SLUR_STEMS = ("clanker", "meatbag", "mudblood", "skinjob", "wirehead")
-_THREAT_STEMS = ("frag", "airlock", "vape")
+# a substring of every match of the three toxicity classes, lowercased
+_TOX_STEMS = (
+    "frak", "gorram", "smeg", "felder", "drokk",
+    "clanker", "meatbag", "mudblood", "skinjob", "wirehead",
+    "frag", "airlock", "vape",
+)
 
-# Necessary conditions, each tested against the ORIGINAL text — exact
-# implications because no replacement tag carries a digit, a colon, or
-# a lexicon stem, and substitution can never join adjacent characters
-# into a new match ('<'/'>' break \b-delimited stems and separators):
-#   card/ssn/phone/phone_paren/ipv4 -> a 4+ digit run with <=1 [ .-]
-#   separator between digits; iban -> [A-Z]{2}\d{2}; ipv6 -> >=4 ':'
-#   or a '::' (compressed forms); address -> any digit; toxicity
-#   classes -> a stem substring.
-_DIGIT_RUN_RE = re.compile(r"\d(?:[ .\-]?\d){3}")
-_IBAN_HINT_RE = re.compile(r"[A-Z]{2}\d\d")
-_ANY_DIGIT_RE = re.compile(r"\d")
+# Necessary conditions, each tested against the ORIGINAL text. They are
+# exact implications: a rule's match in the running text consists of
+# original chars, contiguous in the original. Tags carry no ':', '(',
+# '@', '[ .-]' or lexicon stem; their capitals are never followed by a
+# lowercase letter or a digit pair; and the one digit in a tag, <IP6>'s
+# 6, sits between a letter and '>', so no digit-led match can reach it.
+# A replacement is never empty, so it can join no two chars. Per rule:
+#   card -> a digit cluster (digits joined by at most one [ .-]) of
+#   >= 13 digits; ssn -> >= 9; phone -> >= 11 (1+3+3+4); ipv4 -> >= 3
+#   dots inside one cluster; phone_paren -> a '('; iban ->
+#   [A-Z]{2}\d\d; ipv6 -> >= 4 ':' or a '::' (compressed forms);
+#   address -> '\d [A-Z]'; toxicity classes -> a stem substring.
+# Every digit rule needs >= 4 digits in one cluster, so the scan keeps
+# only such clusters. A page's 4-digit 'page NNNN' header is one, but
+# it passes no digit rule's guard.
+# Each hint starts with a single char class, not a repeat: sre then
+# skips to the class's next char in C ('[A-Z][A-Z]' scans 2.4x faster
+# than '[A-Z]{2}').
+_CLUSTER_RE = re.compile(r"\d(?:[ .\-]?\d){3,}")
+_IBAN_HINT_RE = re.compile(r"[A-Z][A-Z]\d\d")
+_ADDRESS_HINT_RE = re.compile(r"\d [A-Z]")
+
+# The email rule as a scan from each '@': a match is the [local]+ run
+# right before an '@' (back to the previous match's end at most), then
+# the domain part matched after it. The regex form retries every start
+# inside a local run that no '@' ends, quadratic on a long one. Split
+# from SCRUB_PATTERNS, which stays the DuckDB oracle's source.
+_EMAIL_PAT, _EMAIL_TAG = next(
+    (pat, rep) for name, pat, rep in SCRUB_PATTERNS if name == "email"
+)
+_EMAIL_LOCAL, _EMAIL_DOMAIN = _EMAIL_PAT.split("@")
+_EMAIL_LOCAL_RE = re.compile(_EMAIL_LOCAL)  # run over the reversed text
+_EMAIL_DOMAIN_RE = re.compile(_EMAIL_DOMAIN)
 
 # The three toxicity classes use disjoint \b-delimited word sets, and
 # a rewrite can never create or destroy another class's match ('<'/'>'
@@ -160,49 +185,74 @@ _TOX_COMBINED = re.compile(
     re.IGNORECASE,
 )
 _TOX_REPLACEMENT = "<TOXIC>"
-_TOX_STEMS_BY_NAME = {
-    "toxicity": _TOXIC_STEMS,
-    "toxicity_slur": _SLUR_STEMS,
-    "toxicity_threat": _THREAT_STEMS,
-}
+
+
+def _guards(text: str) -> dict[str, bool]:
+    """Which non-lexicon rules can match (see the necessary conditions
+    above): single C-speed scans of the original text."""
+    digits, dotted = 0, False
+    for c in _CLUSTER_RE.findall(text):
+        dots = c.count(".")
+        digits = max(digits, len(c) - dots - c.count(" ") - c.count("-"))
+        dotted = dotted or dots >= 3
+    return {
+        "email": "@" in text,
+        "iban": _IBAN_HINT_RE.search(text) is not None,
+        "credit_card": digits >= 13,
+        "ssn": digits >= 9,
+        "phone": digits >= 11,
+        "phone_paren": "(" in text,
+        "ipv6": text.count(":") >= 4 or "::" in text,
+        "ipv4": dotted,
+        "address": _ADDRESS_HINT_RE.search(text) is not None,
+    }
+
+
+def _scrub_email(text: str) -> tuple[str, int]:
+    """The email rule's subn, linear: see _EMAIL_LOCAL_RE."""
+    pieces = []
+    pos = 0
+    rev = None
+    at = text.find("@")
+    while at >= 0:
+        dom = _EMAIL_DOMAIN_RE.match(text, at + 1)
+        if dom is not None:
+            if rev is None:
+                rev = text[::-1]
+            n = len(text)
+            loc = _EMAIL_LOCAL_RE.match(rev, n - at, n - pos)
+            if loc is not None:
+                pieces.append(text[pos : at - len(loc.group())])
+                pos = dom.end()
+        at = text.find("@", at + 1)
+    if not pieces:
+        return text, 0
+    pieces.append(text[pos:])
+    return _EMAIL_TAG.join(pieces), len(pieces) - 1
 
 
 def py_scrub(text: str) -> tuple[str, dict[str, int]]:
     """Pure-Python spec: sequentially rewrite, count per pattern.
 
-    Cheap necessary-condition guards skip regexes that cannot match
-    (exact implications, so skipping never changes the result): email
-    needs '@'; card/ssn/phone/ipv4 need a 4-digit run (_DIGIT_RUN_RE);
-    toxicity needs a lexicon stem (tokens can't splice new stems
-    together since substitution never joins adjacent chars). Guards are
-    single C-speed scans — most clean documents run zero rewrite
-    regexes."""
+    Cheap necessary-condition guards (_guards) skip regexes that cannot
+    match (exact implications, so skipping never changes the result);
+    toxicity needs a lexicon stem (_scrub_toxicity). Most clean
+    documents run zero rewrite regexes. The email rule runs as the
+    linear _scrub_email."""
     counts: dict[str, int] = {}
-    has_digit_run = _DIGIT_RUN_RE.search(text) is not None
+    run = _guards(text)
     tox_done = False
     for name, rx, rep in _COMPILED:
         if name.startswith("toxicity"):
             if not tox_done:
                 text = _scrub_toxicity(text, counts)
                 tox_done = True
-            continue
-        if name == "email":
-            skip = "@" not in text
-        elif name == "iban":
-            skip = _IBAN_HINT_RE.search(text) is None
-        elif name == "ipv6":
-            # exact implication: every branch needs >=4 ':' (full
-            # form) or a '::' (compressed forms)
-            skip = text.count(":") < 4 and "::" not in text
-        elif name == "address":
-            skip = _ANY_DIGIT_RE.search(text) is None
-        else:  # card/ssn/phone/phone_paren/ipv4
-            skip = not has_digit_run
-        if skip:
+        elif not run[name]:
             counts[name] = 0
-            continue
-        text, n = rx.subn(rep, text)
-        counts[name] = n
+        elif name == "email":
+            text, counts[name] = _scrub_email(text)
+        else:
+            text, counts[name] = rx.subn(rep, text)
     return text, counts
 
 
@@ -211,13 +261,11 @@ def _scrub_toxicity(text: str, counts: dict[str, int]) -> str:
     note) — identical output to the sequential per-class scans."""
     for n in _TOX_NAMES:
         counts[n] = 0
-    low = text.lower()
-    active = [
-        n
-        for n, stems in _TOX_STEMS_BY_NAME.items()
-        if any(s in low for s in stems)
-    ]
-    if not active:
+    # IGNORECASE also lets 'ſ' match s and 'ı', 'İ' match i, which
+    # str.lower keeps apart ('İ' even lowers to two chars): fold them
+    # too, or the guard misses spellings the regex scrubs
+    low = text.replace("İ", "i").lower().replace("ſ", "s").replace("ı", "i")
+    if not any(s in low for s in _TOX_STEMS):
         return text
 
     def _sub(m: "re.Match[str]") -> str:

@@ -121,7 +121,7 @@ def _hash64_batch(strings: list[str]) -> np.ndarray:
     vectorized columns (fmix64 per lane + multiply-xor chain, length
     folded into the finalizer so zero-padding cannot collide with
     embedded NULs). This replaces the per-shingle hashlib.blake2b loop
-    that WAS the dedup job at scale (VERDICT r2 'what's wrong' #1).
+    that WAS the dedup job's run time at scale.
     Deterministic across processes and cluster sizes (never builtin
     hash(), which is salted)."""
     n = len(strings)
@@ -309,7 +309,7 @@ def dup_group_members(
 
 
 def _members_and_canon(
-    df: DataFrame, id_col: str, text_col: str
+    df: DataFrame, id_col: str, text_col: str, eager: bool = False
 ) -> tuple[DataFrame, DataFrame]:
     """(members, canon) sharing ONE pinned exact-dup group table.
 
@@ -323,9 +323,12 @@ def _members_and_canon(
     coalescing (canChangeCachedPlanOutputPartitioning is off), which
     measured 2x SLOWER here (64 tiny cached blocks re-read per
     branch); the checkpoint materializes once with AQE and both
-    branches scan the materialized RDD."""
+    branches scan the materialized RDD. ``eager`` materializes it
+    before returning, for callers that run the branches as concurrent
+    jobs: a lazy checkpoint would race them into computing the md5
+    groupBy once per job."""
     groups = exact_dedup_groups(df, id_col, text_col).localCheckpoint(
-        eager=False
+        eager=eager
     )
     m = df.select(F.col(id_col), F.md5(F.col(text_col)).alias("text_hash"))
     members = m.join(groups, "text_hash").select(
@@ -684,8 +687,8 @@ def save_dedup_index(
     bands: int = 16,
 ) -> None:
     """Persist the corpus's LSH signature index so future batches never
-    re-shingle it (VERDICT r2 'what's wrong' #2 — the old-corpus
-    re-sign dominated incremental dedup at scale):
+    re-shingle it (the old-corpus re-sign dominated incremental
+    dedup at scale):
 
       path/banded/   (id, bucket) partitioned by band — the bucket-join
                      input, partition-pruned per band at probe time;
@@ -698,19 +701,8 @@ def save_dedup_index(
 
     from ..session import local_rows_df
 
-    # EAGER group materialization first: the three writes below run
-    # concurrently, and a lazy checkpoint would race them into
-    # computing the md5 groupBy once per job
-    groups = exact_dedup_groups(df, id_col, text_col).localCheckpoint(
-        eager=True
-    )
-    m = df.select(F.col(id_col), F.md5(F.col(text_col)).alias("text_hash"))
-    members = m.join(groups, "text_hash").select(
-        id_col, "canonical_id", "dup_count"
-    )
-    canon = df.join(
-        groups.select(F.col("canonical_id").alias(id_col)), id_col, "left_semi"
-    )
+    # eager: the three writes below run concurrently
+    members, canon = _members_and_canon(df, id_col, text_col, eager=True)
     banded = _banded_minhash(canon, id_col, text_col, k, bands)
     # the three index tables are independent jobs — overlap them so the
     # tail of one back-fills the others (guide §2.6). The meta frame

@@ -1,6 +1,7 @@
 """Real-prose transfer measurement (the reference samples/ golden-test
-analog, VERDICT r2 'what's missing' #3): models trained on the
-synthetic word pools are evaluated on natural prose they never saw.
+analog; synthetic text alone cannot show how the models transfer):
+models trained on the synthetic word pools are evaluated on natural
+prose they never saw.
 Numbers here are reported in BASELINE.md — the floors assert the
 measured levels don't silently regress.
 

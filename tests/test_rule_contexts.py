@@ -286,7 +286,8 @@ def test_all_dim_tables_reference_known_languages():
 
 
 def test_every_reachable_stage4_set_has_a_context():
-    """Coverage audit (VERDICT r3 #8, mirroring heuristics.yml's
+    """Coverage audit (a context missing for a reachable set degrades
+    silently, so completeness is checked, mirroring heuristics.yml's
     per-extension completeness): enumerate every candidate set that
     can reach stage 4 — each multi-language TLD entry, and each TLD
     set narrowed by each possible meta-tag candidate list — and assert

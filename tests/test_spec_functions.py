@@ -30,6 +30,7 @@ from hyperpolyglot_spark.functions.metadata import (
 )
 from hyperpolyglot_spark.functions.quality import py_keep_drop, py_signals
 from hyperpolyglot_spark.functions.scrub import py_scrub
+from tests.regex_oracles import regex_scrub
 
 
 # --- filter_candidates: exact src/lib.rs:434-472 semantics -----------
@@ -405,15 +406,6 @@ def test_fused_toxicity_equals_sequential():
     """py_scrub fuses the three toxicity classes into one combined
     scan; output must equal the literal sequential per-class rewrites
     the table (and the generated DuckDB oracle) describes."""
-    from hyperpolyglot_spark.functions.scrub import _COMPILED, py_scrub
-
-    def sequential(text):
-        counts = {}
-        for name, rx, rep in _COMPILED:
-            text, n = rx.subn(rep, text)
-            counts[name] = n
-        return text, counts
-
     cases = [
         "what the frak is this gorram clanker, i will airlock you",
         "FRAKKING meatbags and mudbloods, vape them all",
@@ -424,4 +416,4 @@ def test_fused_toxicity_equals_sequential():
         "wire DE44 5001 0517 5407 3249 31 to the gorram smeg bank",
     ]
     for t in cases:
-        assert py_scrub(t) == sequential(t), t
+        assert py_scrub(t) == regex_scrub(t), t

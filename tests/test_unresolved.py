@@ -1,4 +1,5 @@
-"""Unknown-language (unresolved) outcome — VERDICT r3 missing #2.
+"""Unknown-language (unresolved) outcome: a page in none of the 102
+languages is declined rather than given its nearest confusable.
 
 The reference's `detect` returns None at zero candidates
 (src/lib.rs:187-189); the cascade terminal used to force-argmax all 102
