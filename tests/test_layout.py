@@ -71,7 +71,7 @@ ENTRY_OR_TEST_NAMES = {
     f"{PKG}.datagen.pages.gen_pages_pdf",
     f"{PKG}.functions.langid.NORM_FROM",
     f"{PKG}.functions.langid.NORM_TO",
-    # the spec scorer: the tests hold classify_margin_py's winner to it
+    # the spec scorer the tests call: classify_margin_py's winner alone
     f"{PKG}.functions.langid.classify_hashed_py",
     f"{PKG}.functions.langid.make_classify_udf",
     f"{PKG}.functions.perplexity.make_perplexity_udf",

@@ -76,7 +76,8 @@ def test_block_closer_follows_sre_backref(name):
     "html",
     [
         "<!--->a-->b",  # '-->' must start after '<!--'
-        "<script <style>a</style>b</script>c",  # unclosed outer opener
+        "<script <style>a</style>b</script>c",  # one block, to </script>
+        "<script <style>a</style>b",  # no </script>: the style block goes
         "<nav>a<nav>b</nav>c</nav>d",  # nearest closer wins
         "<style>a</style\n\t >b<style>c",
     ],
