@@ -504,8 +504,8 @@ def unresolved_disposition(spark, sf_dir):
 
 
 def langid_noisy_texts(spark, sf_dir):
-    """Noisy-encoding robustness as a driver row (web pages carry
-    encoding damage the clean fixtures never show): the
+    """Noisy-encoding robustness (web pages carry encoding damage the
+    clean fixtures never show): the
     102-language stratum of mojibake / HTML-entity / percent-encoded /
     zero-width-littered variants (datagen/realtext.noisy_texts, all
     deterministic transforms of the repo's own prose) pushed through
