@@ -31,10 +31,6 @@ import random
 import re
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from .langdata import LANGUAGES, STOPWORDS, WORDS
 
@@ -86,11 +82,10 @@ def normalize_scoring_text(text: str) -> str:
     return text.translate(_NORM_TABLE)
 
 
-# translate()-form of the same table for the Spark column and DuckDB
-# SQL implementations: chars in NORM_FROM beyond len(NORM_TO) are
-# DELETED — identical semantics in Spark's translate and DuckDB's
-# (both follow the SQL-standard deletion rule), so all three engines
-# share one normalization spec.
+# translate()-form of the same table for the DuckDB oracle SQL
+# (spec_sql.py): chars in NORM_FROM beyond len(NORM_TO) are DELETED
+# (the SQL-standard deletion rule), so the oracle shares the spec's
+# normalization.
 NORM_FROM = _SPACE_CHARS + _STRIP_CHARS
 NORM_TO = " " * len(_SPACE_CHARS)
 
@@ -473,37 +468,6 @@ def classify_or_none_py(
             if hits / n_alpha < PRED_SCRIPT_MIN_RATIO:
                 return None
     return lang
-
-
-def make_classify_udf(spark: SparkSession):
-    """Arrow-batched pandas UDF (text, candidates) -> lang.
-
-    The default hashed model ships to executors via sc.broadcast, once
-    per application — one copy per worker, the broadcast-variable
-    analog of the reference's compiled-in map. Rows whose candidate
-    list is already a singleton are passed through without scoring
-    (early-exit X1 inside the batch). A noise-like decision returns
-    NULL (classify_or_none_py) instead of a forced argmax.
-    """
-    from ..session import cached_broadcast
-
-    bc = cached_broadcast(
-        spark, "langid.default_hashed_model", default_hashed_model
-    )
-
-    @F.pandas_udf(T.StringType())
-    def classify_udf(texts: pd.Series, cands: pd.Series) -> pd.Series:
-        m = bc.value
-        out = []
-        for text, cand in zip(texts, cands):
-            cand_list = list(cand) if cand is not None else []
-            if len(cand_list) == 1:
-                out.append(cand_list[0])
-            else:
-                out.append(classify_or_none_py(text or "", cand_list, m))
-        return pd.Series(out, dtype=object)
-
-    return classify_udf
 
 
 # ----------------------------------------------------------------------

@@ -17,12 +17,10 @@ Text prep is frozen: lowercase, first PPL_MAX_CHARS chars, events are
 all contiguous 3-char windows (no BOS/EOS padding). A doc with fewer
 than 3 chars has no events -> perplexity None (no rule fires).
 
-Two entry points share one spec:
-  - train_ppl_py / perplexity_py: the pure-Python spec (oracle mode,
-    and the per-batch scorer inside the fused label UDF); the model is
-    trained once on the driver and broadcast;
-  - with_perplexity: Arrow-batched scoring of a DataFrame under the
-    broadcast default model — one python hop, no shuffle.
+train_ppl_py / perplexity_py are the pure-Python spec, plain Python
+and numpy. The model is trained once on the driver and broadcast; the
+pipeline's fused label UDF (plans/pipeline.py) is the only Spark runner
+and scores each kept row with perplexity_py.
 """
 
 from __future__ import annotations
@@ -31,10 +29,6 @@ import math
 from collections import Counter
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 PPL_NGRAM = 3
 PPL_ALPHA = 0.1
@@ -171,42 +165,6 @@ def default_ppl_model() -> PplModel:
 
         _DEFAULT_PPL_MODEL = train_ppl_py(training_corpus())
     return _DEFAULT_PPL_MODEL
-
-
-def make_perplexity_udf(spark: SparkSession):
-    """Arrow-batched (text, lang) -> perplexity under the default
-    model, broadcast once per application. One python hop, no shuffle
-    — the corpus-scale scorer."""
-    from ..session import cached_broadcast
-
-    bc = cached_broadcast(
-        spark, "perplexity.default_ppl_model", default_ppl_model
-    )
-
-    @F.pandas_udf(T.DoubleType())
-    def ppl_udf(texts: pd.Series, langs: pd.Series) -> pd.Series:
-        m = bc.value
-        return pd.Series(
-            [
-                perplexity_py(t or "", l, m) if l is not None else None
-                for t, l in zip(texts, langs)
-            ],
-            dtype="float64",
-        )
-
-    return ppl_udf
-
-
-def with_perplexity(
-    df: DataFrame,
-    spark: SparkSession,
-    lang_col: str = "lang_pred",
-    text_col: str = "text",
-    out_col: str = "perplexity",
-) -> DataFrame:
-    return df.withColumn(
-        out_col, make_perplexity_udf(spark)(F.col(text_col), F.col(lang_col))
-    )
 
 
 # ----------------------------------------------------------------------

@@ -7,10 +7,10 @@ default (keep) at the end. Cheap rules run first so expensive stages
 never see dropped docs (the `.h -> C` classifier-dodge trick,
 codegen.rs:329-336 / README.md:76-83, generalized — SURVEY.md §4 X5).
 
-py_signals/py_keep_drop are the one implementation (the spec); the
-pipeline's fused label UDF and with_keep_drop both run it, and the
-DuckDB SQL generated from the same dims (spec_sql.keep_drop_sql) is its
-independent oracle.
+py_signals/py_keep_drop are the one implementation (the spec), plain
+Python and numpy; the pipeline's fused label UDF (plans/pipeline.py) is
+its only Spark runner, and the DuckDB SQL generated from the same dims
+(spec_sql.keep_drop_sql) is its independent oracle.
 
 Word split spec: ASCII-whitespace runs (extraction output collapses all
 whitespace to single spaces).
@@ -19,11 +19,6 @@ whitespace to single spaces).
 from __future__ import annotations
 
 import re
-
-import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from .langdata import ALL_STOPWORDS
 from .langid import normalize_scoring_text
@@ -410,47 +405,3 @@ def py_keep_drop(
         if val is not None and _cmp(val, op, thr):
             return False, rule_id
     return True, None
-
-
-# ======================================================================
-# Spark runner: the spec over Arrow batches
-# ======================================================================
-
-_KEEP_DROP_SCHEMA = T.StructType(
-    [
-        T.StructField("n_chars", T.LongType()),
-        T.StructField("n_words", T.LongType()),
-        T.StructField("symbol_ratio", T.DoubleType()),
-        T.StructField("rep3_ratio", T.DoubleType()),
-        T.StructField("stop_density", T.DoubleType()),
-        T.StructField("spaceless_ratio", T.DoubleType()),
-        T.StructField("keep", T.BooleanType()),
-        T.StructField("drop_rule", T.StringType()),
-    ]
-)
-# every field but (keep, drop_rule)
-_SIGNAL_FIELDS = _KEEP_DROP_SCHEMA.fieldNames()[:-2]
-
-
-@F.pandas_udf(_KEEP_DROP_SCHEMA)
-def _keep_drop_udf(texts: pd.Series) -> pd.DataFrame:
-    rows = []
-    for t in texts:
-        if t is None:
-            rows.append((None,) * len(_KEEP_DROP_SCHEMA.fields))
-            continue
-        sig = py_signals(t)
-        keep, rule = py_keep_drop(t, signals=sig)
-        rows.append((*(sig[n] for n in _SIGNAL_FIELDS), keep, rule))
-    df = pd.DataFrame(rows, columns=_KEEP_DROP_SCHEMA.fieldNames())
-    return df.astype({"n_chars": "Int64", "n_words": "Int64"})
-
-
-def with_keep_drop(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Append the quality signals plus (keep, drop_rule): py_signals +
-    py_keep_drop over Arrow batches. No url is passed, so the vendor
-    rule never fires; a NULL text gives NULL in every column."""
-    df = df.withColumn("_kd", _keep_drop_udf(F.col(text_col)))
-    for n in _KEEP_DROP_SCHEMA.fieldNames():
-        df = df.withColumn(n, F.col(f"_kd.{n}"))
-    return df.drop("_kd")

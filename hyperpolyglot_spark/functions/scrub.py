@@ -5,26 +5,21 @@ Positive patterns) into rewrite rules. The pattern table is ORDERED and
 applied sequentially to the running text — order is part of the spec
 (e.g. credit-card before phone, so a card number is never half-eaten by
 the phone rule). All patterns are RE2/Java/Python-compatible (no
-lookaround, no backrefs) so the same table drives the Spark pipeline,
-the pure-Python oracle, and DuckDB oracle SQL.
+lookaround, no backrefs) so the same table drives py_scrub and the
+DuckDB oracle SQL (spec_sql.scrub_sql).
 
 Regexes are compiled once at module import — once per Python worker —
 not per call (the reference recompiles PCRE per match call,
 heuristics.rs:24-39; SURVEY.md §4 X7 says do better, so we do).
 
-Spark side: one Arrow-batched pandas UDF returning a struct of
-(scrubbed_text, counts...) — counting + rewriting in a single pass per
-batch instead of 2xN regexp passes over the text column.
+Spark side: the pipeline's fused label UDF (plans/pipeline.py) is the
+only runner; it calls py_scrub on kept rows, counting and rewriting in
+one pass per text instead of 2xN regexp passes over a text column.
 """
 
 from __future__ import annotations
 
 import re
-
-import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 # A hextet (1-4 hex chars) that contains at least one DIGIT — used by
 # the compressed-ipv6 branches so a bare all-letter token before '::'
@@ -273,42 +268,3 @@ def _scrub_toxicity(text: str, counts: dict[str, int]) -> str:
         return _TOX_REPLACEMENT
 
     return _TOX_COMBINED.sub(_sub, text)
-
-
-_SCRUB_SCHEMA = T.StructType(
-    [T.StructField("scrubbed_text", T.StringType())]
-    + [T.StructField(f"scrub_{n}", T.IntegerType()) for n in SCRUB_NAMES]
-)
-
-
-@F.pandas_udf(_SCRUB_SCHEMA)
-def _scrub_udf(texts: pd.Series) -> pd.DataFrame:
-    out_text = []
-    out_counts: list[list[int]] = []
-    for t in texts:
-        if t is None:
-            out_text.append(None)
-            out_counts.append([0] * len(SCRUB_NAMES))
-            continue
-        s, c = py_scrub(t)
-        out_text.append(s)
-        out_counts.append([c[n] for n in SCRUB_NAMES])
-    df = pd.DataFrame({"scrubbed_text": out_text})
-    for i, n in enumerate(SCRUB_NAMES):
-        df[f"scrub_{n}"] = [row[i] for row in out_counts]
-    return df
-
-
-def with_scrub(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Append scrubbed_text + scrub_<pattern> count columns.
-
-    Runs AFTER keep/drop so dropped docs never pay for it: callers pass
-    only kept rows, or we mask here — scrub only where keep, else pass
-    text through untouched (cheap branch, no Python for dropped rows).
-    """
-    s = _scrub_udf(F.col(text_col))
-    df = df.withColumn("_scrub", s)
-    df = df.withColumn("scrubbed_text", F.col("_scrub.scrubbed_text"))
-    for n in SCRUB_NAMES:
-        df = df.withColumn(f"scrub_{n}", F.col(f"_scrub.scrub_{n}"))
-    return df.drop("_scrub")

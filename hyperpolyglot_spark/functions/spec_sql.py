@@ -6,9 +6,8 @@ Both queries read a ``documents`` relation with ``doc_id`` and ``text``
 columns and are generated from the same dims the Python spec uses
 (symbol and spaceless classes, stopword set, RULES, SCRUB_PATTERNS),
 but evaluated by a different engine. tests/test_spec_functions.py
-checks the spec against them column by column; the
-``docs_keep_drop``, ``docs_scrubbed`` and ``source_rule_rollup``
-queries of __spark_entry__.py use them as their oracles.
+checks the spec against them column by column. ``WORDS`` is also the
+word split of __spark_entry__.py's dedup oracles.
 """
 
 from __future__ import annotations
@@ -108,6 +107,14 @@ def keep_drop_sql() -> str:
     """
 
 
+# Python's IGNORECASE matches 'ſ' for s and 'ı', 'İ' for i; RE2's 'i'
+# flag does not, so the toxicity patterns spell those letters out.
+# RE2's \b and \d stay ASCII-only, unlike Python's: a stem next to a
+# non-ASCII letter or starting with 'ſ', or a card number in non-ASCII
+# digits, still differs between the two engines.
+_RE2_FOLD = str.maketrans({"s": "[sſ]", "i": "[iıİ]"})
+
+
 def scrub_sql() -> str:
     """Sequential scrub rewrites + counts, generated from
     SCRUB_PATTERNS: count on the pre-rule text (like re.subn), then
@@ -118,6 +125,8 @@ def scrub_sql() -> str:
     counts = []
     for name, pat, rep in SCRUB_PATTERNS:
         ci = name.startswith("toxicity")
+        if ci:
+            pat = pat.translate(_RE2_FOLD)
         opts = "'gi'" if ci else "'g'"
         copts = ", 0, 'i'" if ci else ""
         counts.append(

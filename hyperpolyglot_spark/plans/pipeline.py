@@ -188,10 +188,10 @@ def make_label_udf(
     JVM<->Python boundary: one hop, html in, labels out. The cascade is
     still early-exit (X1): NB scoring runs only on rows the cheap
     stages leave unresolved, scrub only on kept rows (X5).
-    There is no second implementation of the label spec: the oracle
-    queries run the same spec functions (quality.with_keep_drop,
-    scrub.with_scrub), and the generated DuckDB SQL is the independent
-    check (tests/test_spec_functions.py)."""
+    This is the label spec's only Spark runner: the spec modules
+    (functions/) are plain Python and numpy, and the generated DuckDB
+    SQL (functions/spec_sql.py) is their independent check
+    (tests/test_spec_functions.py)."""
     label = make_label_fn(spark, unresolved_policy)
 
     @F.pandas_udf(_LABEL_SCHEMA)

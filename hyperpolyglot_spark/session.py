@@ -234,13 +234,13 @@ def local_rows_df(spark: SparkSession, rows, schema: str, slices: int | None = N
 # ----------------------------------------------------------------------
 # per-application broadcast cache for frozen singletons
 # ----------------------------------------------------------------------
-# The default NB/LM models are immutable per-process singletons, but
-# every make_*_udf call used to broadcast a FRESH copy: the driver
-# re-pickles ~10MB and all N python workers re-unpickle it on first
-# touch — measured 4-9s of the unresolved_disposition wall time at
-# local[32], and at cluster scale it is one more multi-MB shuffle-free
-# transfer per query per executor. Broadcasting ONCE per Spark
-# application and reusing the handle makes every later query hit the
+# The default NB/LM models are immutable per-process singletons, but a
+# fresh broadcast per label UDF built makes the driver re-pickle ~10MB
+# and all N python workers re-unpickle it on first touch — measured
+# 4-9s of one oracle query's wall time at local[32], and at cluster
+# scale it is one more multi-MB transfer per plan per executor.
+# Broadcasting ONCE per Spark application and reusing the handle makes
+# every later plan (each bucket group of the resumable job) hit the
 # executor-side broadcast block cache. Keyed by applicationId (not
 # id(sc)) so a restarted session can never alias a dead broadcast.
 

@@ -3,8 +3,6 @@ at sf0.01 AND its oracle_sql() in DuckDB on the same parquet tables;
 compare row count, column names, and order-insensitive values."""
 
 import math
-import os
-import re
 
 import duckdb
 import pytest
@@ -48,22 +46,6 @@ QUERIES = entry_mod.queries()
 
 def test_every_oracle_has_query():
     assert set(ORACLES) == set(QUERIES)
-
-
-def test_frozen_oracles_read_their_own_checkout():
-    """Every frozen table an oracle reads sits in data/expected_sf0.01/
-    beside the entry module, so a second checkout compares its queries
-    with its own tables; and every table there is read by an oracle."""
-    root = os.path.dirname(os.path.abspath(entry_mod.__file__))
-    expected = os.path.join(root, "data", "expected_sf0.01")
-    paths = [
-        p
-        for sql in ORACLES.values()
-        for p in re.findall(r"read_parquet\('([^']*)'\)", sql)
-    ]
-    for p in paths:
-        assert os.path.dirname(p) == expected and os.path.isfile(p), p
-    assert sorted(map(os.path.basename, paths)) == sorted(os.listdir(expected))
 
 
 @pytest.mark.parametrize("name", sorted(ORACLES))

@@ -4,13 +4,14 @@ Every module under hyperpolyglot_spark/ must be imported, directly or
 transitively, from one of two roots: the job and the benchmark
 (jobs/, perfbench/), or the oracle-checked query surface and its
 frozen-table generator (__spark_entry__.py, tools/), or be named in
-TEST_ONLY or LOADED_BY_NAME below. The job's own closure is pinned
-exactly (JOB_CLOSURE), so is the benchmark's (BENCH_CLOSURE: the job
-plus the near-dup operator), so is what the query surface reaches
-beyond them (ENTRY_CLOSURE), and so is every top-level name in them
-that the job and the benchmark do not reach (ENTRY_OR_TEST_NAMES). No
-file imports a name it never uses. The sources are read with ``ast``,
-so the checks start no Spark and run no module.
+LOADED_BY_NAME below. The job's own closure is pinned exactly
+(JOB_CLOSURE), so is the benchmark's (BENCH_CLOSURE: the job plus the
+near-dup operator), so is what the query surface reaches beyond them
+(ENTRY_CLOSURE), and so is every top-level name in them that the job
+and the benchmark do not reach (ENTRY_OR_TEST_NAMES). No file imports
+a name it never uses, and the label spec's modules (functions/) import
+neither pyspark nor pandas. The sources are read with ``ast``, so the
+checks start no Spark and run no module.
 """
 
 import ast
@@ -22,11 +23,6 @@ PKG = "hyperpolyglot_spark"
 JOB_ROOTS = ("jobs", "perfbench")
 ENTRY_ROOTS = ("__spark_entry__.py", "tools")
 
-# reached from tests only; each is kept for a named reason (ROADMAP item 4)
-TEST_ONLY = {
-    f"{PKG}.sources.pages",
-    f"{PKG}.sources.bucketed",
-}
 # Spark starts it by name through spark.python.daemon.module (session.py),
 # so no import statement names it
 LOADED_BY_NAME = {f"{PKG}.pydaemon"}
@@ -57,7 +53,7 @@ JOB_CLOSURE = {
 BENCH_CLOSURE = JOB_CLOSURE | {f"{PKG}.operators.dedup"}
 # what the query surface and tools/ reach beyond the job and the
 # benchmark: the label spec's DuckDB SQL and the language-ID fixtures
-# its frozen oracles are computed from
+# tools/gen_expected.py computes the frozen tables from
 ENTRY_CLOSURE = {
     f"{PKG}.functions.spec_sql",
     f"{PKG}.datagen.realtext",
@@ -73,16 +69,6 @@ ENTRY_OR_TEST_NAMES = {
     f"{PKG}.functions.langid.NORM_TO",
     # the spec scorer the tests call: classify_margin_py's winner alone
     f"{PKG}.functions.langid.classify_hashed_py",
-    f"{PKG}.functions.langid.make_classify_udf",
-    f"{PKG}.functions.perplexity.make_perplexity_udf",
-    f"{PKG}.functions.perplexity.with_perplexity",
-    f"{PKG}.functions.quality.with_keep_drop",
-    f"{PKG}.functions.quality._keep_drop_udf",
-    f"{PKG}.functions.quality._KEEP_DROP_SCHEMA",
-    f"{PKG}.functions.quality._SIGNAL_FIELDS",
-    f"{PKG}.functions.scrub.with_scrub",
-    f"{PKG}.functions.scrub._scrub_udf",
-    f"{PKG}.functions.scrub._SCRUB_SCHEMA",
     f"{PKG}.plans.pipeline.breakdown",
     # dedup's oracles and entry queries, beside the indexed join:
     # the scalar hash the padding-width test holds the batch hash to
@@ -157,11 +143,11 @@ def closure(roots: tuple[str, ...], mods: dict[str, Path]) -> set[str]:
 def test_every_package_module_is_reached():
     mods = package_modules()
     reached = closure(JOB_ROOTS, mods) | closure(ENTRY_ROOTS, mods)
-    orphans = set(mods) - with_parents(reached | TEST_ONLY | LOADED_BY_NAME)
+    orphans = set(mods) - with_parents(reached | LOADED_BY_NAME)
     assert not orphans, f"modules no job, benchmark or query imports: {sorted(orphans)}"
-    # the exception lists stay exact: no entry is stale or reached anyway
-    assert TEST_ONLY | LOADED_BY_NAME <= set(mods)
-    assert not (TEST_ONLY | LOADED_BY_NAME) & reached
+    # the exception list stays exact: no entry is stale or reached anyway
+    assert LOADED_BY_NAME <= set(mods)
+    assert not LOADED_BY_NAME & reached
     session = mods[f"{PKG}.session"].read_text()
     assert all(f'"{m}"' in session for m in LOADED_BY_NAME)
 
@@ -290,3 +276,17 @@ def test_no_unused_imports():
         if (names := unused_imports(p))
     }
     assert not unused, f"imported but never used: {unused}"
+
+
+def test_label_spec_modules_import_no_spark():
+    """The label spec (functions/) is plain Python and numpy, so
+    plans/pipeline.py stays its only Spark runner."""
+    spark_imports = {
+        m: sorted(names)
+        for m, path in package_modules().items()
+        if m.startswith(f"{PKG}.functions")
+        and (names := {
+            n for n in imported_names(path, m) if n.split(".")[0] in ("pyspark", "pandas")
+        })
+    }
+    assert not spark_imports, f"the label spec imports Spark or pandas: {spark_imports}"

@@ -14,7 +14,6 @@ from hyperpolyglot_spark.functions.perplexity import (
     perplexity_py,
     ppl_events,
     train_ppl_py,
-    with_perplexity,
 )
 from hyperpolyglot_spark.functions.quality import MAX_PPL
 from hyperpolyglot_spark.plans.pipeline import py_label_page
@@ -65,27 +64,6 @@ def test_scoring_spec_by_hand():
     # no events / unknown lang -> None
     assert perplexity_py("ab", "xx", model) is None
     assert perplexity_py("abcdef", "nope", model) is None
-
-
-def test_with_perplexity_matches_spec(spark):
-    model = default_ppl_model()
-    rows = [
-        ("the house of the world", "en"),
-        ("der welt haus und wasser", "de"),
-        ("qxjz vkwpq zzzz xqxq jjjj", "en"),
-        ("ab", "en"),
-    ]
-    df = spark.createDataFrame(rows, "text string, lang string")
-    got = {
-        (r["text"]): r["perplexity"]
-        for r in with_perplexity(df, spark, "lang", "text").collect()
-    }
-    for text, lang in rows:
-        want = perplexity_py(text, lang, model)
-        if want is None:
-            assert got[text] is None
-        else:
-            assert got[text] == pytest.approx(want, rel=1e-12)
 
 
 def test_quality_separation_and_rule():

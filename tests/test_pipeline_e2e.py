@@ -96,6 +96,8 @@ def test_signals_match(oracle_labels, spark_labels):
         assert s["symbol_ratio"] == pytest.approx(o["symbol_ratio"]), url
         assert s["rep3_ratio"] == pytest.approx(o["rep3_ratio"]), url
         assert s["stop_density"] == pytest.approx(o["stop_density"]), url
+        # equal floats, or None on both sides (dropped or unscored rows)
+        assert s["perplexity"] == o["perplexity"], url
 
 
 def test_strata_all_exercised(oracle_labels):

@@ -116,14 +116,3 @@ def test_small_dim_is_broadcast(spark):
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
-
-
-def test_source_rule_rollup_is_partial_final(spark):
-    """One hash aggregation with map-side combine: exactly one shuffle,
-    partial+final HashAggregate pair, no Python in the agg itself (the
-    ladder runs in one Arrow UDF below it)."""
-    import __spark_entry__ as entry
-
-    plan = plan_of(entry.queries()["source_rule_rollup"](spark, SF))
-    assert plan.count("Exchange hashpartitioning") == 1
-    assert plan.count("HashAggregate") >= 2

@@ -1,7 +1,7 @@
 """Unit tests for the pure-Python spec functions (oracle mode) —
 mirrors the reference's per-operator inline tests (SURVEY.md §5.1) —
 plus the checks that hold each spec to its independent oracle (the
-generated DuckDB SQL) and its Spark runner."""
+generated DuckDB SQL)."""
 
 import numpy as np
 import pytest
@@ -256,20 +256,24 @@ def test_quality_and_scrub_spec_match_duckdb(source, page_texts):
     assert n_rows == len(texts)
 
 
-def test_jvm_scrub_udf_matches_spec(spark, page_texts):
-    """with_scrub (py_scrub over Arrow batches) returns the spec's
-    rewrite and counts row by row."""
-    from hyperpolyglot_spark.functions.scrub import SCRUB_NAMES, with_scrub
+@pytest.mark.parametrize("text", ["skınjob", "aİrlock you", "wİrehead"])
+def test_scrub_sql_folds_like_ignorecase(text):
+    """IGNORECASE lets 'ı' and 'İ' match i and 'ſ' match s; the DuckDB
+    scrub spells them out, so it scrubs these spellings as py_scrub
+    does."""
+    import duckdb
+    import pandas as pd
 
-    df = spark.createDataFrame(page_texts, "doc_id long, text string")
-    texts = dict(page_texts)
-    rows = with_scrub(df, text_col="text").collect()
-    assert len(rows) == len(page_texts)
-    for r in rows:
-        scrubbed, counts = py_scrub(texts[r["doc_id"]])
-        assert r["scrubbed_text"] == scrubbed, r["doc_id"]
-        for n in SCRUB_NAMES:
-            assert r[f"scrub_{n}"] == counts[n], (r["doc_id"], n)
+    from hyperpolyglot_spark.functions.scrub import SCRUB_NAMES
+    from hyperpolyglot_spark.functions.spec_sql import scrub_sql
+
+    con = duckdb.connect()
+    con.register("documents", pd.DataFrame({"doc_id": [0], "text": [text]}))
+    res = con.execute(scrub_sql())
+    got = dict(zip([d[0] for d in res.description], res.fetchone()))
+    scrubbed, counts = py_scrub(text)
+    assert got["scrubbed_text"] == scrubbed == "<TOXIC>"
+    assert all(got[f"scrub_{n}"] == counts[n] for n in SCRUB_NAMES)
 
 
 # --- langid classifier --------------------------------------------------
