@@ -115,6 +115,7 @@ _LABEL_SCHEMA = T.StructType(
         T.StructField("perplexity", T.DoubleType()),
     ]
 )
+LABEL_FIELDS = tuple(f.name for f in _LABEL_SCHEMA.fields)
 
 
 def make_label_fn(
@@ -151,7 +152,7 @@ def make_label_fn(
     def label(urls, html) -> dict[str, list]:
         m = bc.value
         mp, thr = bc_ppl.value
-        out = {f.name: [] for f in _LABEL_SCHEMA.fields}
+        out = {f: [] for f in LABEL_FIELDS}
         for url, h in zip(urls, html):
             b = bytes(h) if h is not None else b""
             row = py_label_page(url or "", b, m, mp, thr, unresolved_policy)
