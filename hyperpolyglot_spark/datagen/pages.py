@@ -320,9 +320,20 @@ PAGES_SCHEMA = (
 )
 
 
-def pages_df(spark, n_rows: int, seed: int = 42, partitions: int = 32):
+ROWS_PER_PARTITION = 256
+
+
+def pages_df(spark, n_rows: int, seed: int = 42, partitions: int | None = None):
     """Distributed generation: spark.range -> mapInPandas. Each task
-    generates its id slice independently — the 100TB-scale path."""
+    generates its id slice independently — the 100TB-scale path. By
+    default about one partition per ROWS_PER_PARTITION rows, at most
+    defaultParallelism: a row is gen_page(id, seed) whatever the
+    partitioning, so the count only sizes the tasks."""
+    if partitions is None:
+        partitions = max(
+            1,
+            min(spark.sparkContext.defaultParallelism, -(-n_rows // ROWS_PER_PARTITION)),
+        )
 
     def gen_batches(batches):
         for batch in batches:
@@ -336,5 +347,7 @@ def pages_df(spark, n_rows: int, seed: int = 42, partitions: int = 32):
     return rng_df.mapInPandas(gen_batches, schema=PAGES_SCHEMA)
 
 
-def write_pages(spark, path: str, n_rows: int, seed: int = 42, partitions: int = 32) -> None:
+def write_pages(
+    spark, path: str, n_rows: int, seed: int = 42, partitions: int | None = None
+) -> None:
     pages_df(spark, n_rows, seed, partitions).write.mode("overwrite").parquet(path)

@@ -7,10 +7,13 @@ default (keep) at the end. Cheap rules run first so expensive stages
 never see dropped docs (the `.h -> C` classifier-dodge trick,
 codegen.rs:329-336 / README.md:76-83, generalized — SURVEY.md §4 X5).
 
-py_signals/py_keep_drop are the one implementation (the spec), plain
-Python and numpy; the pipeline's fused label UDF (plans/pipeline.py) is
-its only Spark runner, and the DuckDB SQL generated from the same dims
-(spec_sql.keep_drop_sql) is its independent oracle.
+py_signals/py_keep_drop are the per-row spec, plain Python and numpy;
+the DuckDB SQL generated from the same dims (spec_sql.keep_drop_sql) is
+its independent oracle. batch_signals/batch_keep_drop compute the same
+values for a whole Arrow batch with numpy and pyarrow; the pipeline's
+batch labeller (plans/pipeline.label_batch) runs them, and every value
+equals py_signals/py_keep_drop's on the same row
+(tests/test_label_digest.py, tests/test_properties.py).
 
 Word split spec: ASCII-whitespace runs (extraction output collapses all
 whitespace to single spaces).
@@ -19,6 +22,10 @@ whitespace to single spaces).
 from __future__ import annotations
 
 import re
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from .langdata import ALL_STOPWORDS
 from .langid import normalize_scoring_text
@@ -239,8 +246,6 @@ def _alphabet() -> str:
 def char_mask(rx: "re.Pattern[str]"):
     """Boolean codepoint-lookup for a compiled single-char-class regex,
     derived from the regex itself (findall over the alphabet)."""
-    import numpy as np
-
     key = (rx.pattern, rx.flags)
     got = _MASK_CACHE.get(key)
     if got is None:
@@ -256,8 +261,6 @@ def alpha_mask():
     """Codepoint lookup for str.isalpha (langid's letter counting)."""
     global _ALPHA_MASK
     if _ALPHA_MASK is None:
-        import numpy as np
-
         a = _alphabet()
         m = np.zeros(0x110000, dtype=bool)
         hit = "".join(c for c in a if c.isalpha())
@@ -269,8 +272,6 @@ def alpha_mask():
 def text_codes(text: str):
     """Codepoint array of ``text``, or None when the text cannot be
     utf-32-encoded (lone surrogates — regex fallback path)."""
-    import numpy as np
-
     try:
         return np.frombuffer(text.encode("utf-32-le"), dtype="<u4")
     except UnicodeEncodeError:
@@ -405,3 +406,190 @@ def py_keep_drop(
         if val is not None and _cmp(val, op, thr):
             return False, rule_id
     return True, None
+
+
+# ======================================================================
+# batch form (the pipeline's label_batch)
+# ======================================================================
+# py_signals + py_keep_drop over a whole batch: one UTF-32 encode and
+# one class-table gather for the char counts, one pyarrow split and
+# dictionary encode for the words, str.lower and the stopword test once
+# per distinct word, one np.unique for the distinct word triples, and
+# the ladder as array comparisons. Counts are exact integers and each
+# ratio is one float64 division of them, as in py_signals, so every
+# value is bit-identical to the per-row spec.
+
+_SYMBOL_BIT, _SPACELESS_BIT, _HANGUL_BIT = 1, 2, 4
+_CLASS_TABLE = None
+_LADDER_OPS = {"<": np.less, ">": np.greater, ">=": np.greater_equal}
+
+
+def _class_table():
+    """uint8 codepoint table: symbol | spaceless << 1 | hangul << 2."""
+    global _CLASS_TABLE
+    if _CLASS_TABLE is None:
+        t = char_mask(_SYMBOL_RE).astype(np.uint8)
+        t |= char_mask(_SPACELESS_RE).astype(np.uint8) << 1
+        t |= char_mask(_HANGUL_ANY_RE).astype(np.uint8) << 2
+        _CLASS_TABLE = t
+    return _CLASS_TABLE
+
+
+def segment_sums(flags, lens):
+    """Sum of ``flags`` over each of the consecutive segments of
+    lengths ``lens`` (np.add.reduceat over the non-empty ones)."""
+    out = np.zeros(len(lens), dtype=np.int64)
+    nonempty = lens > 0
+    if nonempty.any():
+        starts = np.cumsum(lens) - lens
+        out[nonempty] = np.add.reduceat(flags, starts[nonempty], dtype=np.int64)
+    return out
+
+
+def _encodable_rows(norm: list[str]):
+    """(rows, code points): the rows batch_signals computes itself, and
+    their texts' concatenated UTF-32 code points."""
+    rows = list(range(len(norm)))
+    joined = "".join(norm)
+    if _WS_OTHER_RE.search(joined) is not None:
+        rows = [i for i in rows if _WS_OTHER_RE.search(norm[i]) is None]
+        joined = "".join(norm[i] for i in rows)
+    try:
+        return rows, np.frombuffer(joined.encode("utf-32-le"), "<u4")
+    except UnicodeEncodeError:
+        rows = [i for i in rows if text_codes(norm[i]) is not None]
+        return rows, np.frombuffer("".join(norm[i] for i in rows).encode("utf-32-le"), "<u4")
+
+
+def _distinct_triples(ids, doc, n_docs: int):
+    """Distinct (id, id, id) triples of consecutive words per doc: one
+    np.unique over ((id1*V + id2)*V + id3)*n_docs + doc, or a set per
+    doc when that key could overflow int64."""
+    same = doc[:-2] == doc[2:]
+    v = int(ids.max()) + 1 if len(ids) else 1
+    if v**3 * n_docs < 2**62:
+        a = ids.astype(np.int64)
+        key = ((a[:-2] * v + a[1:-1]) * v + a[2:]) * n_docs + doc[:-2]
+        return np.bincount(np.unique(key[same]) % n_docs, minlength=n_docs)
+    out = np.zeros(n_docs, dtype=np.int64)
+    bounds = np.searchsorted(doc, np.arange(n_docs + 1))
+    for d in range(n_docs):
+        w = ids[bounds[d] : bounds[d + 1]].tolist()
+        out[d] = len(set(zip(w, w[1:], w[2:])))
+    return out
+
+
+def _rep_char(codes) -> float:
+    """py_signals' char-trigram repetition of a spaceless text's
+    codepoints (already capped at _REP_CHAR_CAP)."""
+    n = len(codes) - _REP_CHAR_N + 1
+    if n <= 0:
+        return 0.0
+    a = codes.astype(np.int64)
+    keys = (a[:-2] << 42) | (a[1:-1] << 21) | a[2:]
+    return 1.0 - len(np.unique(keys)) / n
+
+
+def batch_signals(texts: list[str], urls: list[str]) -> dict[str, np.ndarray]:
+    """py_signals of every (text, url) pair, as one float64 array per
+    signal, NaN where py_signals gives None. Rows that py_words splits
+    on more than spaces, or that UTF-32 cannot encode (lone
+    surrogates), take py_signals itself; extraction output has
+    neither."""
+    n = len(texts)
+    sig = {k: np.full(n, np.nan) for k in py_signals("")}
+    sig["is_vendor_url"] = np.array(
+        [_VENDOR_URL_COMPILED.search(u) is not None for u in urls], dtype=np.float64
+    )
+    norm = texts
+    # normalize_scoring_text returns its input when it has nothing to
+    # normalize, so one call over the joined batch tells
+    joined = "".join(texts)
+    if normalize_scoring_text(joined) is not joined:
+        norm = [normalize_scoring_text(t) for t in texts]
+    fast, codes = _encodable_rows(norm)
+    for i in sorted(set(range(n)) - set(fast)):
+        for k, v in py_signals(texts[i], urls[i]).items():
+            sig[k][i] = np.nan if v is None else v
+    m = len(fast)
+    if not m:
+        return sig
+
+    lens = np.fromiter((len(norm[i]) for i in fast), dtype=np.int64, count=m)
+    cls = _class_table()[codes]
+    n_sym = segment_sums(cls & _SYMBOL_BIT, lens)
+    n_spaceless = segment_sums((cls & _SPACELESS_BIT) != 0, lens)
+    has_hangul = segment_sums((cls & _HANGUL_BIT) != 0, lens) > 0
+
+    split = pc.split_pattern(pa.array([norm[i] for i in fast], pa.large_string()), " ")
+    tokens = pc.list_flatten(split)
+    nonempty = np.asarray(pc.binary_length(tokens)) > 0
+    tokens = tokens.filter(pa.array(nonempty))
+    doc = np.asarray(pc.list_parent_indices(split))[nonempty]
+    enc = pc.dictionary_encode(tokens)
+    ids = np.asarray(enc.indices)
+    words = enc.dictionary.to_numpy(zero_copy_only=False)
+    n_words = np.bincount(doc, minlength=m)
+
+    is_stop = np.fromiter(
+        (w.lower() in ALL_STOPWORDS for w in words), dtype=bool, count=len(words)
+    )
+    stop = is_stop[ids]
+    # the particle suffix counts for non-stopwords of docs with Hangul
+    # syllables; the regex runs once per such distinct word
+    cand = ~stop & has_hangul[doc]
+    if cand.any():
+        particle = np.zeros(len(words), dtype=bool)
+        for j in np.unique(ids[cand]).tolist():
+            particle[j] = _HANGUL_PARTICLE_RE.search(words[j]) is not None
+        stop = stop | (cand & particle[ids])
+    n_stop = np.bincount(doc[stop], minlength=m)
+
+    n_grams = np.maximum(0, n_words - 2)
+    rep3 = np.where(
+        n_grams > 0,
+        1.0 - _distinct_triples(ids, doc, m) / np.maximum(1, n_grams),
+        0.0,
+    )
+    n_chars = lens.astype(np.float64)
+    spaceless_ratio = n_spaceless / np.maximum(1, lens)
+    spaceless = spaceless_ratio > SPACELESS_THRESHOLD
+    stop_density = n_stop / np.maximum(1, n_words)
+    rep_char = np.full(m, np.nan)
+    starts = np.cumsum(lens) - lens
+    for j in np.flatnonzero(spaceless).tolist():
+        rep_char[j] = _rep_char(codes[starts[j] : starts[j] + min(lens[j], _REP_CHAR_CAP)])
+
+    rows = np.array(fast)
+    for k, v in (
+        ("n_chars", n_chars),
+        ("n_words", n_words),
+        ("symbol_ratio", n_sym / np.maximum(1, lens)),
+        ("rep3_ratio", rep3),
+        ("stop_density", stop_density),
+        ("spaceless_ratio", spaceless_ratio),
+        ("n_chars_gated", np.where(spaceless, np.nan, n_chars)),
+        ("n_chars_spaceless_gated", np.where(spaceless, n_chars, np.nan)),
+        ("rep3_gated", np.where(spaceless, np.nan, rep3)),
+        ("rep_char_gated", rep_char),
+        ("stop_density_gated", np.where(spaceless, np.nan, stop_density)),
+    ):
+        sig[k][rows] = v
+    return sig
+
+
+def batch_keep_drop(
+    sig: dict[str, np.ndarray],
+    rules: tuple[tuple[str, str, str, float], ...] = RULES,
+) -> tuple[np.ndarray, np.ndarray]:
+    """py_keep_drop over batch_signals' arrays: (keep, drop_rule), the
+    first matching rule per row; NaN never fires a rule, as None never
+    does in py_keep_drop."""
+    n = len(sig["n_chars"])
+    keep = np.ones(n, dtype=bool)
+    drop_rule = np.full(n, None, dtype=object)
+    for rule_id, signal, op, thr in rules:
+        hit = keep & _LADDER_OPS[op](sig[signal], thr)
+        drop_rule[hit] = rule_id
+        keep &= ~hit
+    return keep, drop_rule

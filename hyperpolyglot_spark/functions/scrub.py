@@ -21,6 +21,10 @@ from __future__ import annotations
 
 import re
 
+import numpy as np
+
+from .quality import char_mask
+
 # A hextet (1-4 hex chars) that contains at least one DIGIT — used by
 # the compressed-ipv6 branches so a bare all-letter token before '::'
 # ('DB::Fetch', 'a::b in perl', 'dead::', 'fe::') is never scrubbed:
@@ -151,6 +155,7 @@ _TOX_STEMS = (
 _CLUSTER_RE = re.compile(r"\d(?:[ .\-]?\d){3,}")
 _IBAN_HINT_RE = re.compile(r"[A-Z][A-Z]\d\d")
 _ADDRESS_HINT_RE = re.compile(r"\d [A-Z]")
+_DIGIT_RE = re.compile(r"\d")
 
 # The email rule as a scan from each '@': a match is the [local]+ run
 # right before an '@' (back to the previous match's end at most), then
@@ -190,17 +195,97 @@ def _guards(text: str) -> dict[str, bool]:
         dots = c.count(".")
         digits = max(digits, len(c) - dots - c.count(" ") - c.count("-"))
         dotted = dotted or dots >= 3
+    return _char_guards(
+        text,
+        _IBAN_HINT_RE.search(text) is not None,
+        _ADDRESS_HINT_RE.search(text) is not None,
+        digits,
+        dotted,
+        _has_stem(_fold(text)),
+    )
+
+
+def _fold(text: str) -> str:
+    """``text`` lowercased with the folds IGNORECASE adds: 'ſ' matches
+    s and 'ı', 'İ' match i, which str.lower keeps apart. Length is
+    kept: 'İ', the one char str.lower lengthens, is replaced first."""
+    return text.replace("İ", "i").lower().replace("ſ", "s").replace("ı", "i")
+
+
+def _has_stem(folded: str) -> bool:
+    return any(s in folded for s in _TOX_STEMS)
+
+
+def _char_guards(
+    text: str, iban: bool, address: bool, digits: int, dotted: bool, stem: bool
+) -> dict[str, bool]:
     return {
         "email": "@" in text,
-        "iban": _IBAN_HINT_RE.search(text) is not None,
+        "iban": iban,
         "credit_card": digits >= 13,
         "ssn": digits >= 9,
         "phone": digits >= 11,
         "phone_paren": "(" in text,
         "ipv6": text.count(":") >= 4 or "::" in text,
         "ipv4": dotted,
-        "address": _ADDRESS_HINT_RE.search(text) is not None,
+        "address": address,
+        "toxicity": stem,
     }
+
+
+def batch_guards(texts: list[str]) -> list[dict[str, bool]]:
+    """_guards of each text. The IBAN and address hints and the digit
+    clusters are computed over the whole batch joined by NUL, which no
+    hint or cluster spans: the hints as shifted code-point masks, the
+    clusters from the digit positions. Clusters: a digit links to the next digit right after it or
+    after one [ .-]; a maximal linked run is a _CLUSTER_RE match when
+    it holds >= 4 digits, and only runs of >= 9 digits or >= 3 dots
+    (which imply >= 4 digits) pass a guard. The stem test stays per
+    text: str.find over one joined, mostly four-byte-wide string was
+    slower than over each text in its own narrow form."""
+    try:
+        codes = np.frombuffer("\0".join(texts).encode("utf-32-le"), "<u4")
+    except UnicodeEncodeError:
+        return [_guards(t) for t in texts]
+    n = len(texts)
+    starts = np.cumsum([0] + [len(t) + 1 for t in texts[:-1]])
+
+    def doc_of(pos):
+        return np.searchsorted(starts, pos, side="right") - 1
+
+    def docs_with(hits):
+        out = np.zeros(n, dtype=bool)
+        out[doc_of(np.flatnonzero(hits))] = True
+        return out
+
+    digit = char_mask(_DIGIT_RE)[codes]
+    upper = (codes >= 65) & (codes <= 90)
+    iban = docs_with(upper[:-3] & upper[1:-2] & digit[2:-1] & digit[3:])
+    address = docs_with(digit[:-2] & (codes[1:-1] == 32) & upper[2:])
+
+    digits = np.zeros(n, dtype=np.int64)
+    dotted = np.zeros(n, dtype=bool)
+    pos = np.flatnonzero(digit)
+    if len(pos):
+        gap = np.diff(pos)
+        mid = codes[pos[:-1] + 1]
+        link = (gap == 1) | ((gap == 2) & ((mid == 32) | (mid == 46) | (mid == 45)))
+        run = np.concatenate(([0], np.cumsum(~link)))
+        run_digits = np.bincount(run)
+        run_dots = np.bincount(
+            run[1:][link & (gap == 2) & (mid == 46)], minlength=len(run_digits)
+        )
+        run_doc = doc_of(pos[np.searchsorted(run, np.arange(len(run_digits)))])
+        np.maximum.at(digits, run_doc, run_digits)
+        dotted[run_doc[run_dots >= 3]] = True
+
+    return [
+        _char_guards(
+            t, bool(iban[i]), bool(address[i]), int(digits[i]), bool(dotted[i]),
+            _has_stem(_fold(t)),
+        )
+        for i, t in enumerate(texts)
+    ]
 
 
 def _scrub_email(text: str) -> tuple[str, int]:
@@ -231,16 +316,23 @@ def py_scrub(text: str) -> tuple[str, dict[str, int]]:
 
     Cheap necessary-condition guards (_guards) skip regexes that cannot
     match (exact implications, so skipping never changes the result);
-    toxicity needs a lexicon stem (_scrub_toxicity). Most clean
+    toxicity needs a lexicon stem. Most clean
     documents run zero rewrite regexes. The email rule runs as the
     linear _scrub_email."""
+    return scrub_guarded(text, _guards(text))
+
+
+def scrub_guarded(text: str, run: dict[str, bool]) -> tuple[str, dict[str, int]]:
+    """py_scrub with the guards ``run`` already computed (_guards, or
+    batch_guards for a whole batch)."""
     counts: dict[str, int] = {}
-    run = _guards(text)
     tox_done = False
     for name, rx, rep in _COMPILED:
         if name.startswith("toxicity"):
             if not tox_done:
-                text = _scrub_toxicity(text, counts)
+                counts.update(dict.fromkeys(_TOX_NAMES, 0))
+                if run["toxicity"]:
+                    text = _scrub_toxicity(text, counts)
                 tox_done = True
         elif not run[name]:
             counts[name] = 0
@@ -254,14 +346,6 @@ def py_scrub(text: str) -> tuple[str, dict[str, int]]:
 def _scrub_toxicity(text: str, counts: dict[str, int]) -> str:
     """One combined scan for all toxicity classes (see _TOX_COMBINED
     note) — identical output to the sequential per-class scans."""
-    for n in _TOX_NAMES:
-        counts[n] = 0
-    # IGNORECASE also lets 'ſ' match s and 'ı', 'İ' match i, which
-    # str.lower keeps apart ('İ' even lowers to two chars): fold them
-    # too, or the guard misses spellings the regex scrubs
-    low = text.replace("İ", "i").lower().replace("ſ", "s").replace("ı", "i")
-    if not any(s in low for s in _TOX_STEMS):
-        return text
 
     def _sub(m: "re.Match[str]") -> str:
         counts[m.lastgroup] += 1

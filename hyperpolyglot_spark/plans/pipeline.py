@@ -21,11 +21,15 @@ documents: shuffle only the tiny aggregate, never the corpus.
 
 py_label_page() is the frozen single-node oracle — the Spark pipeline
 must reproduce it per url with keep/drop F1 >= 0.99 (BASELINE.json;
-ours is exact by construction and the tests assert F1 == 1.0).
+ours is exact by construction and the tests assert F1 == 1.0). The UDF
+runs label_batch, which labels a whole Arrow batch at a time and equals
+py_label_page row by row (tests/test_label_digest.py holds both to a
+frozen digest).
 """
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -37,8 +41,14 @@ from ..functions.perplexity import (
     perplexity_py,
     ppl_thresholds_for,
 )
-from ..functions.quality import MAX_PPL, py_keep_drop, py_signals
-from ..functions.scrub import SCRUB_NAMES, py_scrub
+from ..functions.quality import (
+    MAX_PPL,
+    batch_keep_drop,
+    batch_signals,
+    py_keep_drop,
+    py_signals,
+)
+from ..functions.scrub import SCRUB_NAMES, batch_guards, py_scrub, scrub_guarded
 from ..operators.cascade import detect_lang_py
 
 # ----------------------------------------------------------------------
@@ -118,13 +128,77 @@ _LABEL_SCHEMA = T.StructType(
 LABEL_FIELDS = tuple(f.name for f in _LABEL_SCHEMA.fields)
 
 
+def label_batch(
+    urls,
+    html,
+    model,
+    ppl_model,
+    ppl_thr: dict[str, float],
+    unresolved_policy: str = DEFAULT_UNRESOLVED_POLICY,
+) -> pd.DataFrame:
+    """py_label_page over a whole batch of (url, html) pairs, as one
+    frame of the label columns (``_LABEL_SCHEMA`` order). Each row
+    equals py_label_page's (tests/test_label_digest.py); a NULL url or
+    html reads as empty, and a None perplexity is NaN (NULL in Arrow).
+
+    Stages: extraction and the cascade per row; quality signals and
+    the keep/drop ladder over the batch (quality.batch_signals); the
+    LM and the unresolved policy per cheap-kept row; scrub guards over
+    the kept rows (scrub.batch_guards), then each kept row's
+    rewrites."""
+    urls = [u or "" for u in urls]
+    raw = [bytes(h) if h is not None else b"" for h in html]
+    n = len(urls)
+    texts = [extract_text(h) for h in raw]
+    langs = np.empty(n, dtype=object)
+    strategies = np.empty(n, dtype=object)
+    for i, (url, text, h) in enumerate(zip(urls, texts, raw)):
+        langs[i], strategies[i] = detect_lang_py(url, text, meta_lang_tag(h), model)
+    sig = batch_signals(texts, urls)
+    keep, drop_rule = batch_keep_drop(sig)
+    ppl = np.full(n, np.nan)
+    for i in np.flatnonzero(keep).tolist():
+        p = perplexity_py(texts[i], langs[i], ppl_model)
+        if p is not None:
+            ppl[i] = p
+            if p > ppl_thr.get(langs[i], MAX_PPL):
+                keep[i], drop_rule[i] = False, "perplexity"
+    if unresolved_policy == "drop":
+        unresolved = keep & np.fromiter((lang is None for lang in langs), bool, n)
+        keep[unresolved], drop_rule[unresolved] = False, UNRESOLVED_DROP_RULE
+    kept = np.flatnonzero(keep).tolist()
+    scrubbed = np.full(n, None, dtype=object)
+    counts = {name: np.zeros(n, dtype=np.int32) for name in SCRUB_NAMES}
+    for i, run in zip(kept, batch_guards([texts[i] for i in kept])):
+        scrubbed[i], got = scrub_guarded(texts[i], run)
+        for name, c in got.items():
+            counts[name][i] = c
+    return pd.DataFrame(
+        {
+            "text": texts,
+            "lang_pred": langs,
+            "strategy": strategies,
+            "keep": keep,
+            "drop_rule": drop_rule,
+            "scrubbed_text": scrubbed,
+            **{f"scrub_{name}": counts[name] for name in SCRUB_NAMES},
+            "n_chars": sig["n_chars"].astype(np.int64),
+            "n_words": sig["n_words"].astype(np.int64),
+            "symbol_ratio": sig["symbol_ratio"],
+            "rep3_ratio": sig["rep3_ratio"],
+            "stop_density": sig["stop_density"],
+            "perplexity": ppl,
+        },
+        columns=LABEL_FIELDS,
+    )
+
+
 def make_label_fn(
     spark: SparkSession,
     unresolved_policy: str = DEFAULT_UNRESOLVED_POLICY,
 ):
-    """The label loop the label UDFs run on each Arrow batch:
-    ``label(urls, html)`` calls py_label_page per row and returns the
-    label columns (``_LABEL_SCHEMA`` order) as lists. The default models
+    """The label function the label UDFs run on each Arrow batch:
+    ``label(urls, html)`` is label_batch with the default models, which
     ship as broadcasts, one per application (session.py); ``label``
     reads them on the executor."""
     from ..functions.langid import default_hashed_model
@@ -149,17 +223,9 @@ def make_label_fn(
     if unresolved_policy not in UNRESOLVED_POLICIES:
         raise ValueError(f"unknown unresolved_policy {unresolved_policy!r}")
 
-    def label(urls, html) -> dict[str, list]:
-        m = bc.value
+    def label(urls, html) -> pd.DataFrame:
         mp, thr = bc_ppl.value
-        out = {f: [] for f in LABEL_FIELDS}
-        for url, h in zip(urls, html):
-            b = bytes(h) if h is not None else b""
-            row = py_label_page(url or "", b, m, mp, thr, unresolved_policy)
-            for k, v in row.items():
-                if k != "url":
-                    out[k].append(v)
-        return out
+        return label_batch(urls, html, bc.value, mp, thr, unresolved_policy)
 
     return label
 
@@ -171,7 +237,7 @@ def make_label_udf(
     """ONE Arrow-batched UDF for ALL text-bound per-document work:
     html decode + extraction + the 5-stage cascade (broadcast model) +
     quality signals + first-match-wins keep/drop + scrub of kept rows —
-    i.e. py_label_page vectorized over Arrow batches.
+    i.e. label_batch over each Arrow batch.
 
     Why one fused stage, with measurements (50k pages, local[32], warm):
       - column-expression cascade/signals: Catalyst's projection
@@ -190,14 +256,14 @@ def make_label_udf(
     still early-exit (X1): NB scoring runs only on rows the cheap
     stages leave unresolved, scrub only on kept rows (X5).
     This is the label spec's only Spark runner: the spec modules
-    (functions/) are plain Python and numpy, and the generated DuckDB
+    (functions/) are plain Python, numpy and pyarrow, and the generated DuckDB
     SQL (functions/spec_sql.py) is their independent check
     (tests/test_spec_functions.py)."""
     label = make_label_fn(spark, unresolved_policy)
 
     @F.pandas_udf(_LABEL_SCHEMA)
     def label_udf(urls: pd.Series, html: pd.Series) -> pd.DataFrame:
-        return pd.DataFrame(label(urls, html))
+        return label(urls, html)
 
     return label_udf
 

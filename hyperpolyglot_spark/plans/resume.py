@@ -138,7 +138,7 @@ class _MergeByTask(AccumulatorParam):
 _COL_INDEX = {c: i for i, c in enumerate(MANIFEST_COLS)}
 
 
-def _count_labels(counts: dict, buckets, labels: dict, policy: str) -> None:
+def _count_labels(counts: dict, buckets, labels: pd.DataFrame, policy: str) -> None:
     """Fold one batch of label columns into per-bucket lineage counts
     (MANIFEST_COLS order)."""
     for b, keep, drop_rule, lang, email, toxicity in zip(
@@ -175,7 +175,7 @@ def _counting_label_udf(spark: SparkSession, counts, policy: str):
         for urls, html, buckets in batches:
             out = label(urls, html)
             _count_labels(state, buckets, out, policy)
-            yield pd.DataFrame(out)
+            yield out
         counts.add({TaskContext.get().partitionId(): state})
 
     return label_udf

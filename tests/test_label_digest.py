@@ -14,6 +14,7 @@ intended label change only:  python tools/gen_expected.py
 
 import datetime
 import importlib.util
+import math
 from pathlib import Path
 
 import pandas as pd
@@ -25,12 +26,14 @@ from hyperpolyglot_spark.plans.pipeline import (
     LABEL_FIELDS,
     UNRESOLVED_DROP_RULE,
     UNRESOLVED_POLICIES,
+    label_batch,
     run_pipeline,
 )
 
 GEN = Path(__file__).resolve().parent.parent / "tools" / "gen_expected.py"
 KEYS = ["case", "policy", "url"]
 SPARK_COMPACT = 300  # compact pages the Spark run labels under the default policy
+BATCH = 256  # rows per label_batch call
 
 
 def load_gen():
@@ -51,6 +54,16 @@ def frozen():
 @pytest.fixture(scope="module")
 def runs():
     return gen.digest_runs()
+
+
+def frame_rows(frame: pd.DataFrame) -> list[dict]:
+    """label_batch's frame as label rows; a NaN perplexity is None, as
+    it is NULL once in Arrow."""
+    rows = frame.to_dict("records")
+    for r in rows:
+        if isinstance(r["perplexity"], float) and math.isnan(r["perplexity"]):
+            r["perplexity"] = None
+    return rows
 
 
 def digest_mismatches(got: pd.DataFrame, frozen: pd.DataFrame) -> list:
@@ -84,6 +97,27 @@ def test_spec_matches_frozen_digest(frozen, runs):
     for n in SCRUB_NAMES:
         assert any(r[f"scrub_{n}"] for r in labels), n
     assert {policy for _, policy, *_ in rows} == set(UNRESOLVED_POLICIES)
+
+
+def test_label_batch_matches_frozen_digest(frozen, runs):
+    from hyperpolyglot_spark.functions.langid import default_hashed_model
+    from hyperpolyglot_spark.functions.perplexity import (
+        default_ppl_model,
+        ppl_thresholds_for,
+    )
+
+    model, pm = default_hashed_model(), default_ppl_model()
+    thr = ppl_thresholds_for(pm)
+    rows = []
+    for case, policy, calibrated, pages in runs:
+        for k in range(0, len(pages), BATCH):
+            urls, html = zip(*pages[k : k + BATCH])
+            frame = label_batch(urls, html, model, pm, thr if calibrated else {}, policy)
+            rows += [(case, policy, u, r) for u, r in zip(urls, frame_rows(frame))]
+    got = gen.label_digest(rows)
+    bad = digest_mismatches(got, frozen)
+    assert not bad, f"{len(bad)} label fields differ, first: {bad[:20]}"
+    assert len(got) == len(frozen)
 
 
 def test_run_pipeline_matches_frozen_digest(spark, frozen, runs):

@@ -290,3 +290,14 @@ def test_label_spec_modules_import_no_spark():
         })
     }
     assert not spark_imports, f"the label spec imports Spark or pandas: {spark_imports}"
+
+
+def test_job_labels_through_the_batch_labeller():
+    """make_label_fn, which every label UDF calls, runs label_batch and
+    never py_label_page: the per-row function stays the oracle only."""
+    path = ROOT / PKG / "plans" / "pipeline.py"
+    tree = ast.parse(path.read_text(), str(path))
+    (fn,) = [n for n in tree.body if isinstance(n, ast.FunctionDef) and n.name == "make_label_fn"]
+    names = referenced(fn)
+    assert "label_batch" in names
+    assert "py_label_page" not in names
