@@ -13,7 +13,7 @@ its independent oracle. batch_signals/batch_keep_drop compute the same
 values for a whole Arrow batch with numpy and pyarrow; the pipeline's
 batch labeller (plans/pipeline.label_batch) runs them, and every value
 equals py_signals/py_keep_drop's on the same row
-(tests/test_label_digest.py, tests/test_properties.py).
+(tests/test_label_digest.py, tests/test_label_batch.py).
 
 Word split spec: ASCII-whitespace runs (extraction output collapses all
 whitespace to single spaces).
@@ -440,7 +440,7 @@ def _class_table():
     return _CLASS_TABLE
 
 
-def segment_sums(flags, lens):
+def _segment_sums(flags, lens):
     """Sum of ``flags`` over each of the consecutive segments of
     lengths ``lens`` (np.add.reduceat over the non-empty ones)."""
     out = np.zeros(len(lens), dtype=np.int64)
@@ -508,7 +508,7 @@ def batch_signals(texts: list[str], urls: list[str]) -> dict[str, np.ndarray]:
             for k in range(0, n, BLOCK_ROWS)
         ]
         return {key: np.concatenate([b[key] for b in blocks]) for key in blocks[0]}
-    sig = {k: np.full(n, np.nan) for k in py_signals("")}
+    sig = {k: np.full(n, np.nan) for k in py_signals("")}  # every signal name
     sig["is_vendor_url"] = np.array(
         [_VENDOR_URL_COMPILED.search(u) is not None for u in urls], dtype=np.float64
     )
@@ -528,9 +528,9 @@ def batch_signals(texts: list[str], urls: list[str]) -> dict[str, np.ndarray]:
 
     lens = np.fromiter((len(norm[i]) for i in fast), dtype=np.int64, count=m)
     cls = _class_table()[codes]
-    n_sym = segment_sums(cls & _SYMBOL_BIT, lens)
-    n_spaceless = segment_sums((cls & _SPACELESS_BIT) != 0, lens)
-    has_hangul = segment_sums((cls & _HANGUL_BIT) != 0, lens) > 0
+    n_sym = _segment_sums(cls & _SYMBOL_BIT, lens)
+    n_spaceless = _segment_sums((cls & _SPACELESS_BIT) != 0, lens)
+    has_hangul = _segment_sums((cls & _HANGUL_BIT) != 0, lens) > 0
 
     split = pc.split_pattern(pa.array([norm[i] for i in fast], pa.large_string()), " ")
     tokens = pc.list_flatten(split)

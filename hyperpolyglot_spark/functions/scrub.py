@@ -321,9 +321,8 @@ def py_scrub(text: str) -> tuple[str, dict[str, int]]:
 
     Cheap necessary-condition guards (_guards) skip regexes that cannot
     match (exact implications, so skipping never changes the result);
-    toxicity needs a lexicon stem. Most clean
-    documents run zero rewrite regexes. The email rule runs as the
-    linear _scrub_email."""
+    toxicity needs a lexicon stem. Most clean documents run zero
+    rewrite regexes. The email rule runs as the linear _scrub_email."""
     return scrub_guarded(text, _guards(text))
 
 

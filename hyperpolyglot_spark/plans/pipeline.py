@@ -256,8 +256,8 @@ def make_label_udf(
     still early-exit (X1): NB scoring runs only on rows the cheap
     stages leave unresolved, scrub only on kept rows (X5).
     This is the label spec's only Spark runner: the spec modules
-    (functions/) are plain Python, numpy and pyarrow, and the generated DuckDB
-    SQL (functions/spec_sql.py) is their independent check
+    (functions/) are plain Python, numpy and pyarrow, and the generated
+    DuckDB SQL (functions/spec_sql.py) is their independent check
     (tests/test_spec_functions.py)."""
     label = make_label_fn(spark, unresolved_policy)
 
