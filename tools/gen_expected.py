@@ -247,7 +247,7 @@ SCRUB_PAYLOADS = (
     "12 Main Street and 3 Elm Rd, 7 Oak Way",
     "a.b@c.de.fgh@i.jk x@y mail: bob+x@ex-ample.org.",
     "fe80::1 std::f1 2001:db8::1 a:b:c:d:e",
-    "ſmeg, aİrlock them, skınjobs and fraKking",
+    "ſmeg, aİrlock them, skınjobs and fra\u212aking",
     "wire DE44 5001 0517 5407 3249 31 and GB29NWBK60161331926819 today",
     "card ٤١١١ ١١١١ ١١١١ ١١١١ and é4111 1111 1111 1111",
 )
