@@ -323,17 +323,15 @@ PAGES_SCHEMA = (
 ROWS_PER_PARTITION = 256
 
 
-def pages_df(spark, n_rows: int, seed: int = 42, partitions: int | None = None):
+def pages_df(spark, n_rows: int, seed: int = 42):
     """Distributed generation: spark.range -> mapInPandas. Each task
-    generates its id slice independently — the 100TB-scale path. By
-    default about one partition per ROWS_PER_PARTITION rows, at most
+    generates its id slice independently — the 100TB-scale path. About
+    one partition per ROWS_PER_PARTITION rows, at most
     defaultParallelism: a row is gen_page(id, seed) whatever the
     partitioning, so the count only sizes the tasks."""
-    if partitions is None:
-        partitions = max(
-            1,
-            min(spark.sparkContext.defaultParallelism, -(-n_rows // ROWS_PER_PARTITION)),
-        )
+    partitions = max(
+        1, min(spark.sparkContext.defaultParallelism, -(-n_rows // ROWS_PER_PARTITION))
+    )
 
     def gen_batches(batches):
         for batch in batches:
@@ -345,9 +343,3 @@ def pages_df(spark, n_rows: int, seed: int = 42, partitions: int | None = None):
 
     rng_df = spark.range(0, n_rows, 1, partitions)
     return rng_df.mapInPandas(gen_batches, schema=PAGES_SCHEMA)
-
-
-def write_pages(
-    spark, path: str, n_rows: int, seed: int = 42, partitions: int | None = None
-) -> None:
-    pages_df(spark, n_rows, seed, partitions).write.mode("overwrite").parquet(path)

@@ -419,11 +419,6 @@ def py_keep_drop(
 # ratio is one float64 division of them, as in py_signals, so every
 # value is bit-identical to the per-row spec.
 
-# Rows per block: the batch stages hold some 40 bytes per char of a
-# block at once (code points, class bits, Arrow words), so blocks bound
-# that whatever the Arrow batch size (Spark's default is 10,000 rows:
-# ~60 MB per 1,500 compact pages unblocked, measured).
-BLOCK_ROWS = 256
 _SYMBOL_BIT, _SPACELESS_BIT, _HANGUL_BIT = 1, 2, 4
 _CLASS_TABLE = None
 _LADDER_OPS = {"<": np.less, ">": np.greater, ">=": np.greater_equal}
@@ -500,14 +495,8 @@ def batch_signals(texts: list[str], urls: list[str]) -> dict[str, np.ndarray]:
     signal, NaN where py_signals gives None. Rows that py_words splits
     on more than spaces, or that UTF-32 cannot encode (lone
     surrogates), take py_signals itself; extraction output has
-    neither. Computed BLOCK_ROWS rows at a time."""
+    neither."""
     n = len(texts)
-    if n > BLOCK_ROWS:
-        blocks = [
-            batch_signals(texts[k : k + BLOCK_ROWS], urls[k : k + BLOCK_ROWS])
-            for k in range(0, n, BLOCK_ROWS)
-        ]
-        return {key: np.concatenate([b[key] for b in blocks]) for key in blocks[0]}
     sig = {k: np.full(n, np.nan) for k in py_signals("")}  # every signal name
     sig["is_vendor_url"] = np.array(
         [_VENDOR_URL_COMPILED.search(u) is not None for u in urls], dtype=np.float64

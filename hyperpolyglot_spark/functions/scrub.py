@@ -23,7 +23,7 @@ import re
 
 import numpy as np
 
-from .quality import BLOCK_ROWS, char_mask
+from .quality import char_mask
 
 # A hextet (1-4 hex chars) that contains at least one DIGIT — used by
 # the compressed-ipv6 branches so a bare all-letter token before '::'
@@ -234,21 +234,17 @@ def _char_guards(
 
 
 def batch_guards(texts: list[str]) -> list[dict[str, bool]]:
-    """_guards of each text, BLOCK_ROWS texts at a time. The IBAN and
-    address hints and the digit clusters are computed over a block
-    joined by NUL, which no hint or cluster spans: the hints as shifted
-    code-point masks, the clusters from the digit positions. A digit
-    links to the next digit right after it or after one [ .-]; a
-    maximal linked run is a _CLUSTER_RE match when it holds >= 4
-    digits, and only runs of >= 9 digits or >= 3 dots (which imply >= 4
-    digits) pass a guard. The stem test stays per text: str.find over
-    one joined, mostly four-byte-wide string was slower than over each
-    text in its own narrow form."""
+    """_guards of each text. The IBAN and address hints and the digit
+    clusters are computed over the batch joined by NUL, which no hint
+    or cluster spans: the hints as shifted code-point masks, the
+    clusters from the digit positions. A digit links to the next digit
+    right after it or after one [ .-]; a maximal linked run is a
+    _CLUSTER_RE match when it holds >= 4 digits, and only runs of >= 9
+    digits or >= 3 dots (which imply >= 4 digits) pass a guard. The
+    stem test stays per text: str.find over one joined, mostly
+    four-byte-wide string was slower than over each text in its own
+    narrow form."""
     n = len(texts)
-    if n > BLOCK_ROWS:
-        return [
-            g for k in range(0, n, BLOCK_ROWS) for g in batch_guards(texts[k : k + BLOCK_ROWS])
-        ]
     try:
         codes = np.frombuffer("\0".join(texts).encode("utf-32-le"), "<u4")
     except UnicodeEncodeError:

@@ -33,7 +33,9 @@ from hyperpolyglot_spark.plans.pipeline import (
 GEN = Path(__file__).resolve().parent.parent / "tools" / "gen_expected.py"
 KEYS = ["case", "policy", "url"]
 SPARK_COMPACT = 300  # compact pages the Spark run labels under the default policy
-BATCH = 256  # rows per label_batch call
+# rows per label_batch call: more than the job's 256-row Arrow batches
+# and no divisor of the 3,000 compact pages, so last batches are partial
+BATCH = 1024
 
 
 def load_gen():
