@@ -25,9 +25,7 @@ from hyperpolyglot_spark.functions.spec_sql import WORDS
 from hyperpolyglot_spark.session import local_rows_df
 from hyperpolyglot_spark.operators.dedup import (
     exact_dedup_groups,
-    minhash_neardup_join,
     minhash_neardup_join_indexed,
-    minhash_neardup_pairs,
     ngram_jaccard_pairs,
     save_dedup_index,
 )
@@ -171,43 +169,23 @@ def lang_median_chars(spark, sf_dir):
 
 def exact_dedup_documents(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
-    return exact_dedup_groups(docs, "doc_id", "text")
+    return exact_dedup_groups(docs)
 
 
 def neardup_jaccard_pairs(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
-    return ngram_jaccard_pairs(
-        docs, block_col="lang", n=3, threshold=0.5
-    )
-
-
-def neardup_minhash_pairs(spark, sf_dir):
-    docs = _t(spark, sf_dir, "documents")
-    return minhash_neardup_pairs(docs, threshold=0.5)
-
-
-def neardup_incremental(spark, sf_dir):
-    """Incremental dedup: the 'new crawl drop' (doc_id >= 250) deduped
-    against the 'existing corpus' (doc_id < 250) — cross-side LSH join,
-    never re-pairing the old corpus with itself. Oracle = exact
-    all-pairs jaccard across the split."""
-    docs = _t(spark, sf_dir, "documents")
-    return minhash_neardup_join(
-        docs.filter(F.col("doc_id") >= 250),
-        docs.filter(F.col("doc_id") < 250),
-        threshold=0.5,
-    )
+    return ngram_jaccard_pairs(docs, block_col="lang", threshold=0.5)
 
 
 def neardup_incremental_indexed(spark, sf_dir):
-    """The PERSISTED-INDEX form of incremental dedup (the continuous-
+    """Incremental dedup through the persisted index (the continuous-
     crawl scale path, where re-signing the old corpus on every drop
-    dominated incremental dedup): the 'existing corpus' is signed
-    ONCE into an on-disk banded signature index; the 'new drop' signs
-    only itself and bucket-joins against the index — the old corpus is
-    never re-shingled (verification reads candidate texts only).
-    Output is identical to neardup_incremental, and the oracle is the
-    same exact all-pairs jaccard."""
+    dominated incremental dedup): the 'existing corpus' (doc_id < 250)
+    is signed ONCE into an on-disk banded signature index; the 'new
+    drop' (doc_id >= 250) signs only itself and bucket-joins against
+    the index — the old corpus is never re-shingled (verification
+    reads candidate texts only). Oracle = exact all-pairs jaccard
+    across the split."""
     import hashlib
     import tempfile
 
@@ -283,8 +261,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # --- dedup ---
         "exact_dedup_documents": exact_dedup_documents,
         "neardup_jaccard_pairs": neardup_jaccard_pairs,
-        "neardup_minhash_pairs": neardup_minhash_pairs,
-        "neardup_incremental": neardup_incremental,
         "neardup_incremental_indexed": neardup_incremental_indexed,
     }
 
@@ -322,23 +298,6 @@ _GRAMS3 = (
     "WHEN len(w) > 0 THEN [array_to_string(w, ' ')] "
     "ELSE []::VARCHAR[] END)"
 )
-
-_INCREMENTAL_SQL = f"""
-    WITH g AS (
-      SELECT doc_id, {_GRAMS3} AS grams
-      FROM (SELECT doc_id, {WORDS} AS w FROM documents)
-    )
-    SELECT a.doc_id AS id_new, b.doc_id AS id_old,
-           round(len(list_intersect(a.grams, b.grams))::DOUBLE
-                 / greatest(len(a.grams) + len(b.grams)
-                            - len(list_intersect(a.grams, b.grams)), 1),
-                 6) AS jaccard
-    FROM g a JOIN g b ON a.doc_id >= 250 AND b.doc_id < 250
-    WHERE round(len(list_intersect(a.grams, b.grams))::DOUBLE
-                / greatest(len(a.grams) + len(b.grams)
-                           - len(list_intersect(a.grams, b.grams)), 1),
-                6) >= 0.5
-"""
 
 
 def oracle_sql() -> dict[str, str]:
@@ -412,34 +371,26 @@ def oracle_sql() -> dict[str, str]:
                                    - len(list_intersect(a.grams, b.grams)), 1),
                         6) >= 0.5
         """,
-        "neardup_minhash_pairs": f"""
-            -- oracle = exact all-pairs jaccard (unblocked): the LSH
-            -- candidates are exactly verified, and at this corpus's
-            -- similarity distribution (true pairs ~0.99, next <=0.03)
-            -- the 16x4-band S-curve recall is ~1, so LSH+verify ==
-            -- exact (equality also asserted in tests/test_operators.py)
+        # exact all-pairs jaccard across the new/old split; the LSH
+        # join's recall at this corpus's similarity profile is 1 (true
+        # pairs ~0.99 — pinned by tests/test_dedup_index.py's fixture-
+        # property test), so LSH+verify == exact
+        "neardup_incremental_indexed": f"""
             WITH g AS (
               SELECT doc_id, {_GRAMS3} AS grams
               FROM (SELECT doc_id, {WORDS} AS w FROM documents)
             )
-            SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+            SELECT a.doc_id AS id_new, b.doc_id AS id_old,
                    round(len(list_intersect(a.grams, b.grams))::DOUBLE
                          / greatest(len(a.grams) + len(b.grams)
                                     - len(list_intersect(a.grams, b.grams)), 1),
                          6) AS jaccard
-            FROM g a JOIN g b ON a.doc_id < b.doc_id
+            FROM g a JOIN g b ON a.doc_id >= 250 AND b.doc_id < 250
             WHERE round(len(list_intersect(a.grams, b.grams))::DOUBLE
                         / greatest(len(a.grams) + len(b.grams)
                                    - len(list_intersect(a.grams, b.grams)), 1),
                         6) >= 0.5
         """,
-        # exact all-pairs jaccard across the new/old split; the LSH
-        # join's recall at this corpus's similarity profile is 1 (true
-        # pairs ~0.99 — pinned by tests/test_dedup_index.py's fixture-
-        # property test), so LSH+verify == exact. The indexed variant
-        # is output-identical by construction, hence the same oracle.
-        "neardup_incremental": _INCREMENTAL_SQL,
-        "neardup_incremental_indexed": _INCREMENTAL_SQL,
         "per_strategy_report": f"""
             SELECT strategy, lang, count(*) AS docs,
                    array_to_string(list_sort(list(doc_id))[1:5], ',')

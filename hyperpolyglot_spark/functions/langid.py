@@ -276,14 +276,8 @@ UNRESOLVED_MARGIN = 0.15
 UNRESOLVED_ABS = -15.0
 
 
-def classify_margin_py(
-    text: str,
-    candidates: list[str] | None,
-    model=None,
-    with_gate_winner: bool = False,
-):
-    """(best_lang, margin_per_gram, top1_per_gram) — plus the
-    gate-set winner as a 4th element when ``with_gate_winner``.
+def classify_margin_py(text: str, candidates: list[str] | None, model=None):
+    """(best_lang, margin_per_gram, top1_per_gram, gate_lang).
 
     best_lang is the spec winner (classify_hashed_py): the first max
     over the candidates, with script narrowing for empty candidate
@@ -305,24 +299,19 @@ def classify_margin_py(
     reports +inf margin (never gated); an empty feature set returns
     margin 0.0 / top1 -inf only when there is genuinely no evidence."""
 
-    def out(lang, margin, top1, gate_lang):
-        if with_gate_winner:
-            return lang, margin, top1, gate_lang
-        return lang, margin, top1
-
     if candidates and len(candidates) == 1:
-        return out(candidates[0], float("inf"), 0.0, candidates[0])
+        return candidates[0], float("inf"), 0.0, candidates[0]
     cands = _narrowed_cands(text, candidates)  # winner set
     gate_cands = list(candidates) if candidates else list(LANGUAGES)
     if model is None:
         model = default_hashed_model()
     if not model:
-        return out(cands[0], 0.0, float("-inf"), gate_cands[0])
+        return cands[0], 0.0, float("-inf"), gate_cands[0]
     packed = _packed_grams(text)
     if packed is None:
         lang = next((l for l in cands if l in model), cands[0])
         glang = next((l for l in gate_cands if l in model), gate_cands[0])
-        return out(lang, 0.0, float("-inf"), glang)
+        return lang, 0.0, float("-inf"), glang
     # winner from the narrowed rows, top-2 and gate winner from the
     # gate rows, one matvec
     uk, cnts = packed
@@ -338,15 +327,11 @@ def classify_margin_py(
     n = float(cnts.sum())
     finite = gscores[np.isfinite(gscores)]
     if finite.size == 0 or not n:
-        return out(cands[bi], 0.0, float("-inf"), gate_lang)
+        return cands[bi], 0.0, float("-inf"), gate_lang
     if finite.size == 1:
-        return out(
-            cands[bi], float("inf"), float(np.max(gscores)) / n, gate_lang
-        )
+        return cands[bi], float("inf"), float(np.max(gscores)) / n, gate_lang
     top2 = np.partition(finite, -2)[-2:]
-    return out(
-        cands[bi], float(top2[1] - top2[0]) / n, float(top2[1]) / n, gate_lang
-    )
+    return cands[bi], float(top2[1] - top2[0]) / n, float(top2[1]) / n, gate_lang
 
 
 # Unknown-script gate, checked BEFORE the margin gate: a doc whose
@@ -441,9 +426,7 @@ def classify_or_none_py(
         n_alpha, ratio = known_script_ratio(text)
         if n_alpha >= MIN_SCRIPT_LETTERS and ratio < KNOWN_SCRIPT_MIN_RATIO:
             return None
-    lang, margin, top1, gate_lang = classify_margin_py(
-        text, candidates, model, with_gate_winner=True
-    )
+    lang, margin, top1, gate_lang = classify_margin_py(text, candidates, model)
     if margin < margin_thr and top1 < abs_thr:
         return None
     if gate and n_alpha >= MIN_SCRIPT_LETTERS:

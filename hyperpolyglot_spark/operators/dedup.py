@@ -1,20 +1,26 @@
-"""Deduplication operators for training-data pipelines.
+"""Near-duplicate pairs between a new crawl drop and a standing corpus.
 
-Two families, each scale-designed:
+The operator is a persisted-index MinHash join:
 
-  - exact:    hash-groupBy on md5(text) — one shuffle of (hash, id),
-              never the text itself.
-  - minhash:  shingle -> k minhashes (ONE vectorized numpy pandas UDF,
-              no k-times explode) -> band -> bucket join -> exact
-              jaccard verify on candidates only. At 10^12 docs the
-              bucket join is the only shuffle and candidates are a tiny
-              fraction of the corpus. The persisted-index form
-              (save_dedup_index + minhash_neardup_join_indexed) is the
-              continuous-crawl path; the re-signing forms stay as its
-              oracles.
+  - save_dedup_index writes the corpus's signature index once and
+    update_dedup_index appends each drop to it;
+  - minhash_neardup_join_indexed returns (id_new, id_old, jaccard) for
+    a new batch against the index, signing only the new batch.
 
-ngram_jaccard_pairs is the exact all-pairs jaccard within a blocking
-key: the truth the LSH path is held to.
+Both sides are collapsed to one canonical row per exact text first
+(md5 groupBy, shuffling only (hash, id)). Canonical texts are shingled
+into word 3-grams and signed with K minhashes in ONE vectorized numpy
+pandas UDF, split into BANDS band hashes, bucket-joined across sides
+with oversized buckets capped, verified by exact jaccard on candidates
+only, and expanded back through each side's exact-dup groups.
+
+Its oracles: minhash_neardup_join (the same relation, re-signing the
+old side on every call), ngram_jaccard_pairs (exact all-pairs jaccard
+within a blocking key) and exact_dedup_groups (the md5 groups).
+
+The signature parameters are module constants. The index records them
+in meta, and a probe or update against an index built with others
+fails instead of joining incomparable signatures.
 
 Determinism: all hashing is keyed blake2b / affine-permutation over a
 64-bit base hash — stable across processes, Python versions, and
@@ -24,6 +30,7 @@ cluster sizes (never builtin hash(), which is salted per process).
 from __future__ import annotations
 
 import hashlib
+from concurrent.futures import ThreadPoolExecutor
 from contextlib import contextmanager
 
 import numpy as np
@@ -33,6 +40,16 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark import StorageLevel
 
+from ..session import local_rows_df
+
+ID_COL = "doc_id"
+TEXT_COL = "text"
+# K minhashes in BANDS bands of K // BANDS rows: detection probability
+# ~64% at jaccard 0.5, ~99.98% at 0.8
+K = 64
+BANDS = 16
+# word n-gram length of the shingles
+SHINGLE_N = 3
 
 # Every table pinned by _pin(), in pin order. Memory blocks are
 # LRU-evicted under pressure but DISK-spilled blocks are not, so a
@@ -58,11 +75,11 @@ def _pin(df: DataFrame) -> DataFrame:
 
 
 @contextmanager
-def pinned_scope(blocking: bool = False):
+def pinned_scope():
     """Scope dedup pin lifetime to a block::
 
         with pinned_scope():
-            pairs = minhash_neardup_pairs(batch).collect()
+            pairs = minhash_neardup_join_indexed(spark, batch, idx, corpus).collect()
         # signature/candidate caches for THIS batch are now released
 
     Only tables pinned inside the block are unpersisted, so nested or
@@ -76,7 +93,7 @@ def pinned_scope(blocking: bool = False):
         while len(_PINNED) > mark:
             df = _PINNED.pop()
             try:
-                df.unpersist(blocking)
+                df.unpersist()
             except Exception:  # session already stopped: nothing to free
                 pass
 
@@ -86,9 +103,9 @@ def pinned_scope(blocking: bool = False):
 _MERSENNE = (1 << 61) - 1
 
 
-def _perm_params(k: int) -> tuple[np.ndarray, np.ndarray]:
+def _perm_params() -> tuple[np.ndarray, np.ndarray]:
     a, b = [], []
-    for i in range(k):
+    for i in range(K):
         d = hashlib.blake2b(f"minhash-perm:{i}".encode(), digest_size=16).digest()
         ai = (int.from_bytes(d[:8], "little") % (_MERSENNE - 1)) + 1
         bi = int.from_bytes(d[8:], "little") % _MERSENNE
@@ -153,11 +170,11 @@ def _base_hash64(s: str) -> int:
     return int(_hash64_batch([s])[0])
 
 
-def word_shingles(text: str, n: int = 3) -> set[str]:
+def word_shingles(text: str) -> set[str]:
     w = text.split()
-    if len(w) < n:
+    if len(w) < SHINGLE_N:
         return {" ".join(w)} if w else set()
-    return {" ".join(w[i : i + n]) for i in range(len(w) - n + 1)}
+    return {" ".join(w[i : i + SHINGLE_N]) for i in range(len(w) - SHINGLE_N + 1)}
 
 
 def _mod_mersenne(x: np.ndarray) -> np.ndarray:
@@ -173,7 +190,7 @@ def _mod_mersenne(x: np.ndarray) -> np.ndarray:
     return x
 
 
-def make_minhash_udf(k: int = 64, counter=None):
+def make_minhash_udf(counter=None):
     """Arrow-batched minhash signature UDF. ALL shingles of a batch are
     hashed in ONE _hash64_batch pass; the k-permutation min-reduction
     is a segment-min over the shared value matrix. ``counter`` is an
@@ -183,7 +200,7 @@ def make_minhash_udf(k: int = 64, counter=None):
     inside the task, so task retries and speculative execution
     double-count — treat the value as a debug/lower-bound signal (its
     test role), never as an exact production 'docs signed' metric."""
-    a, b = _perm_params(k)
+    a, b = _perm_params()
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def minhash_udf(texts: pd.Series) -> pd.Series:
@@ -197,7 +214,7 @@ def make_minhash_udf(k: int = 64, counter=None):
         # not the textbook affine permutation, but deterministic and
         # uniform, which is all LSH bucketing needs
         vals = _mod_mersenne(a[:, None] * h[None, :] + b[:, None])
-        empty = [0] * k
+        empty = [0] * K
         out = []
         for i in range(len(texts)):
             lo, hi = offsets[i], offsets[i + 1]
@@ -212,38 +229,24 @@ def make_minhash_udf(k: int = 64, counter=None):
     return minhash_udf
 
 
-def exact_dedup_groups(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def exact_dedup_groups(df: DataFrame) -> DataFrame:
     """(text_hash, canonical_id, dup_count) per distinct content hash.
     Shuffles only (hash, id) pairs — the text never moves."""
     return (
-        df.select(F.md5(F.col(text_col)).alias("text_hash"), F.col(id_col))
+        df.select(F.md5(F.col(TEXT_COL)).alias("text_hash"), F.col(ID_COL))
         .groupBy("text_hash")
         .agg(
-            F.min(id_col).alias("canonical_id"),
+            F.min(ID_COL).alias("canonical_id"),
             F.count("*").alias("dup_count"),
         )
     )
 
 
-def exact_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Keep one row (min id) per distinct text: semi-join against the
-    canonical ids — the corpus-sized side never shuffles its payload.
-
-    PRECONDITION: id_col is unique per row (true for doc_id/url keys).
-    With duplicated ids the semi-join keeps every row carrying a
-    canonical id; dedupe on (id, hash) first if ids can repeat."""
-    canon = exact_dedup_groups(df, id_col, text_col).select(
-        F.col("canonical_id").alias(id_col)
-    )
-    return df.join(canon, id_col, "left_semi")
-
-
-def _distinct_shingles_col(text: Column, n: int = 3) -> Column:
+def _distinct_shingles_col(text: Column) -> Column:
     """JVM-side distinct word-n-gram string array. Built from n O(len)
     slices zipped then joined — the per-gram lambda does a constant-size
     concat only (a per-gram F.slice would make this O(len^2))."""
+    n = SHINGLE_N
     w = F.filter(F.split(text, r"[ \t\n\r]+"), lambda x: x != "")
     nw = F.size(w)
     ng = nw - F.lit(n - 1)
@@ -260,26 +263,20 @@ def _distinct_shingles_col(text: Column, n: int = 3) -> Column:
 
 
 def ngram_jaccard_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    block_col: str | None = None,
-    n: int = 3,
-    threshold: float = 0.5,
+    df: DataFrame, block_col: str | None = None, threshold: float = 0.5
 ) -> DataFrame:
-    """Exact all-pairs jaccard within a blocking key. Pure built-ins:
-    array_intersect/array_union on distinct shingle arrays.
-
-    At full scale block_col is an LSH bucket (lsh_candidate_pairs) so
-    the join is candidates-only; with a plain column (e.g. lang) it is
-    the small-block exact path and the DuckDB-oracle-able query."""
+    """Exact all-pairs jaccard within a blocking key (all pairs when
+    ``block_col`` is None), (id_a, id_b, jaccard) with id_a < id_b.
+    Pure built-ins: array_intersect/array_union on distinct shingle
+    arrays. The quadratic truth the MinHash join is held to, and the
+    DuckDB-oracle-able query."""
     side = df.select(
-        F.col(id_col), _distinct_shingles_col(F.col(text_col), n).alias("grams"),
+        F.col(ID_COL), _distinct_shingles_col(F.col(TEXT_COL)).alias("grams"),
         *( [F.col(block_col)] if block_col else [] ),
     )
     a = side.alias("a")
     b = side.alias("b")
-    cond = F.col(f"a.{id_col}") < F.col(f"b.{id_col}")
+    cond = F.col(f"a.{ID_COL}") < F.col(f"b.{ID_COL}")
     if block_col:
         cond = cond & (F.col(f"a.{block_col}") == F.col(f"b.{block_col}"))
     joined = a.join(b, cond)
@@ -288,35 +285,25 @@ def ngram_jaccard_pairs(
     jac = inter.cast("double") / F.greatest(union, F.lit(1)).cast("double")
     return (
         joined.select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
+            F.col(f"a.{ID_COL}").alias("id_a"),
+            F.col(f"b.{ID_COL}").alias("id_b"),
             F.round(jac, 6).alias("jaccard"),
         )
         .filter(F.col("jaccard") >= threshold)
     )
 
 
-def dup_group_members(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """(id, canonical_id, dup_count) per row: which exact-dup group each
-    doc belongs to. Two hash-only shuffles, text never moves."""
-    groups = exact_dedup_groups(df, id_col, text_col)
-    m = df.select(F.col(id_col), F.md5(F.col(text_col)).alias("text_hash"))
-    return m.join(groups, "text_hash").select(
-        id_col, "canonical_id", "dup_count"
-    )
-
-
 def _members_and_canon(
-    df: DataFrame, id_col: str, text_col: str, eager: bool = False
+    df: DataFrame, eager: bool = False
 ) -> tuple[DataFrame, DataFrame]:
-    """(members, canon) sharing ONE pinned exact-dup group table.
+    """(members, canon) sharing ONE checkpointed exact-dup group table:
+    members is (doc_id, canonical_id, dup_count) per row, the map that
+    expands canonical pairs back to every copy; canon is the rows
+    whose doc_id is their group's canonical_id, the pre-collapsed
+    corpus the signatures are computed over.
 
-    Every minhash entry point needs both the member map
-    (dup_group_members) and the pre-collapsed corpus (exact_dedup);
-    built independently they each recompute the md5 groupBy — two
-    corpus-sized hash aggregations where one suffices (r07, guide
+    Built independently the two would each recompute the md5 groupBy —
+    two corpus-sized hash aggregations where one suffices (r07, guide
     §2.4: two operations keyed the same way share one exchange). The
     group table is (hash, id, count)-shaped. localCheckpoint, NOT
     persist: a persisted subtree executes without AQE partition
@@ -326,45 +313,23 @@ def _members_and_canon(
     branches scan the materialized RDD. ``eager`` materializes it
     before returning, for callers that run the branches as concurrent
     jobs: a lazy checkpoint would race them into computing the md5
-    groupBy once per job."""
-    groups = exact_dedup_groups(df, id_col, text_col).localCheckpoint(
-        eager=eager
-    )
-    m = df.select(F.col(id_col), F.md5(F.col(text_col)).alias("text_hash"))
+    groupBy once per job.
+
+    PRECONDITION: doc_id is unique per row. With duplicated ids the
+    semi-join keeps every row carrying a canonical id."""
+    groups = exact_dedup_groups(df).localCheckpoint(eager=eager)
+    m = df.select(F.col(ID_COL), F.md5(F.col(TEXT_COL)).alias("text_hash"))
     members = m.join(groups, "text_hash").select(
-        id_col, "canonical_id", "dup_count"
+        ID_COL, "canonical_id", "dup_count"
     )
     canon = df.join(
-        groups.select(F.col("canonical_id").alias(id_col)), id_col, "left_semi"
+        groups.select(F.col("canonical_id").alias(ID_COL)), ID_COL, "left_semi"
     )
     return members, canon
 
 
-def lsh_bucket_stats(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 64,
-    bands: int = 16,
-) -> DataFrame:
-    """Bucket-size histogram of the banded signature table — the
-    observability hook for the max_bucket cap (run it on the collapsed
-    corpus to see what the cap would skip)."""
-    banded = _banded_minhash(df, id_col, text_col, k, bands)
-    return (
-        banded.groupBy("band", "bucket")
-        .agg(F.count("*").alias("bucket_size"))
-        .groupBy("bucket_size")
-        .agg(F.count("*").alias("n_buckets"))
-        .orderBy(F.desc("bucket_size"))
-    )
-
-
 def _oversized_buckets(
-    banded: DataFrame,
-    max_bucket: int,
-    keys: tuple[str, ...] = ("band", "bucket"),
-    cap_stats: dict | None = None,
+    banded: DataFrame, max_bucket: int, cap_stats: dict | None = None
 ) -> DataFrame:
     """(band, bucket) keys whose membership exceeds max_bucket — the
     list the LSH join skips. Pass a dict as ``cap_stats`` to make the
@@ -375,7 +340,7 @@ def _oversized_buckets(
     fire observed-metrics events; the one extra job runs over the
     already-pinned banded table, so it is a small aggregation.)"""
     o = (
-        banded.groupBy(*keys)
+        banded.groupBy("band", "bucket")
         .agg(F.count("*").alias("_bn"))
         .filter(F.col("_bn") > max_bucket)
     )
@@ -386,21 +351,21 @@ def _oversized_buckets(
         ).collect()[0]
         cap_stats["capped_buckets"] = int(row["capped_buckets"])
         cap_stats["capped_rows"] = int(row["capped_rows"])
-    return o.select(*keys)
+    return o.select("band", "bucket")
 
 
-def _banded_minhash(
-    df: DataFrame, id_col: str, text_col: str, k: int, bands: int, counter=None
-) -> DataFrame:
-    rows = k // bands
+def _banded_minhash(df: DataFrame, counter=None) -> DataFrame:
+    """(doc_id, band, bucket): each doc's signature cut into BANDS
+    bands, each band hashed to one bucket."""
+    rows = K // BANDS
     sig = df.select(
-        F.col(id_col), make_minhash_udf(k, counter)(F.col(text_col)).alias("sig")
+        F.col(ID_COL), make_minhash_udf(counter)(F.col(TEXT_COL)).alias("sig")
     )
-    banded = sig.select(
-        F.col(id_col),
+    return sig.select(
+        F.col(ID_COL),
         F.explode(
             F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
+                F.sequence(F.lit(0), F.lit(BANDS - 1)),
                 lambda bidx: F.struct(
                     bidx.alias("band"),
                     F.xxhash64(
@@ -415,162 +380,13 @@ def _banded_minhash(
                 ),
             )
         ).alias("bb"),
-    ).select(id_col, "bb.band", "bb.bucket")
-    return banded
-
-
-def lsh_candidate_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 64,
-    bands: int = 16,
-    max_bucket: int | None = None,
-    cap_stats: dict | None = None,
-) -> DataFrame:
-    """MinHash-LSH candidate pairs: signature -> band hashes -> bucket
-    self-join. Distinct (id_a, id_b) with id_a < id_b.
-
-    ``max_bucket`` caps the self-join fan-out: a (band, bucket) with
-    more than max_bucket members is SKIPPED (anti-join against the —
-    tiny — oversized-bucket list, broadcastable). Run AFTER exact-dup
-    pre-collapse, an oversized bucket is a degenerate band (e.g. a
-    template megacluster), the classic O(K^2) web-scale blowup; use
-    lsh_bucket_stats to observe what a cap would drop, or pass a dict
-    as ``cap_stats`` to record how many buckets/rows the cap actually
-    skipped in THIS run."""
-    banded = _pin(_banded_minhash(df, id_col, text_col, k, bands))
-    if max_bucket is not None:
-        oversized = _oversized_buckets(banded, max_bucket, cap_stats=cap_stats)
-        banded = banded.join(oversized, ["band", "bucket"], "left_anti")
-    a = banded.alias("a")
-    b = banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
-        .distinct()
-    )
-
-
-def _expand_group_pairs(
-    canon_pairs: DataFrame,
-    members: DataFrame,
-    id_col: str,
-    intra_eligible: DataFrame,
-) -> DataFrame:
-    """Expand canonical-level near-dup pairs back to member-level pairs.
-
-    - cross-group: every (member of A) x (member of B) inherits the
-      canonical pair's jaccard — the join is sized by the OUTPUT,
-      never by candidate blowup;
-    - intra-group: all pairs inside one exact-dup group get jaccard
-      1.0 (identical texts), restricted to canonical ids in
-      ``intra_eligible``.
-    """
-    ma = members.select(
-        F.col("canonical_id").alias("ca"), F.col(id_col).alias("ia")
-    )
-    mb = members.select(
-        F.col("canonical_id").alias("cb"), F.col(id_col).alias("ib")
-    )
-    cross = (
-        canon_pairs.withColumnRenamed("id_a", "ca")
-        .withColumnRenamed("id_b", "cb")
-        .join(ma, "ca")
-        .join(mb, "cb")
-        .select(
-            F.least("ia", "ib").alias("id_a"),
-            F.greatest("ia", "ib").alias("id_b"),
-            "jaccard",
-        )
-    )
-    m1 = members.select(
-        "canonical_id", F.col(id_col).alias("ia")
-    )
-    m2 = members.select(
-        "canonical_id", F.col(id_col).alias("ib")
-    )
-    intra = (
-        m1.join(m2, "canonical_id")
-        .filter(F.col("ia") < F.col("ib"))
-        .join(intra_eligible, "canonical_id", "left_semi")
-        .select(
-            F.col("ia").alias("id_a"),
-            F.col("ib").alias("id_b"),
-            F.round(F.lit(1.0), 6).cast("double").alias("jaccard"),
-        )
-    )
-    return cross.unionByName(intra)
-
-
-def minhash_neardup_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.5,
-    k: int = 64,
-    bands: int = 16,
-    max_bucket: int | None = 4096,
-    cap_stats: dict | None = None,
-) -> DataFrame:
-    """Exact-dup pre-collapse -> LSH candidates over DISTINCT texts ->
-    exact-jaccard verification -> expand back to member pairs.
-
-    With 16 bands x 4 rows, detection probability at j=0.5 is ~64%, at
-    0.8 is ~99.98%, at 0.95+ is ~1 — candidates are exactly verified,
-    so output precision is 1.0 and recall follows the LSH S-curve.
-
-    Scale design: a K-sized cluster of identical boilerplate previously
-    emitted O(K^2) candidates PER BAND; after the collapse it is ONE
-    canonical row, its K(K-1)/2 output pairs are emitted directly as
-    jaccard-1.0 literals (output-sized work, no verification), and the
-    max_bucket cap bounds any residual degenerate bucket."""
-    members, canon = _members_and_canon(df, id_col, text_col)
-    cands = lsh_candidate_pairs(
-        canon, id_col, text_col, k, bands, max_bucket, cap_stats
-    )
-    side = canon.select(
-        F.col(id_col), _distinct_shingles_col(F.col(text_col)).alias("grams")
-    )
-    joined = (
-        cands.join(side.withColumnRenamed(id_col, "id_a").alias("ga"), "id_a")
-        .join(
-            side.withColumnRenamed(id_col, "id_b")
-            .withColumnRenamed("grams", "grams_b")
-            .alias("gb"),
-            "id_b",
-        )
-    )
-    inter = F.size(F.array_intersect("grams", "grams_b"))
-    union = F.size(F.array_union("grams", "grams_b"))
-    jac = inter.cast("double") / F.greatest(union, F.lit(1)).cast("double")
-    canon_pairs = joined.select(
-        "id_a", "id_b", F.round(jac, 6).alias("jaccard")
-    ).filter(F.col("jaccard") >= threshold)
-    # identical EMPTY texts have jaccard 0 (no shingles), not 1 — only
-    # groups whose text has at least one shingle expand to intra pairs
-    eligible = side.filter(F.size("grams") > 0).select(
-        F.col(id_col).alias("canonical_id")
-    )
-    return _expand_group_pairs(canon_pairs, members, id_col, eligible)
+    ).select(ID_COL, "bb.band", "bb.bucket")
 
 
 def minhash_neardup_join(
     df_new: DataFrame,
     df_old: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     threshold: float = 0.5,
-    k: int = 64,
-    bands: int = 16,
     max_bucket: int | None = 4096,
     cap_stats: dict | None = None,
 ) -> DataFrame:
@@ -579,10 +395,10 @@ def minhash_neardup_join(
     shape, where each drop is deduped against everything already kept
     without re-pairing the old corpus against itself.
 
-    Same scale design as the self-join variant: exact-dup pre-collapse
-    per side (a cross-side identical K x M cluster is ONE candidate
-    pair, expanded to output-sized rows), banded bucket join across
-    sides only, oversized buckets capped, candidates verified exactly.
+    Exact-dup pre-collapse per side (a cross-side identical n x m
+    cluster is ONE candidate pair, expanded to output-sized rows),
+    banded bucket join across sides only, oversized buckets capped,
+    candidates verified exactly.
     Identical texts across sides carry identical signatures, so they
     are always candidates (recall 1.0 at jaccard 1).
 
@@ -590,13 +406,13 @@ def minhash_neardup_join(
     corpus use save_dedup_index once + minhash_neardup_join_indexed per
     batch — the old side is then never re-shingled except for the
     (tiny) verification-candidate set."""
-    mem_new, canon_new = _members_and_canon(df_new, id_col, text_col)
-    mem_old, canon_old = _members_and_canon(df_old, id_col, text_col)
-    bn = _banded_minhash(canon_new, id_col, text_col, k, bands)
-    bo = _pin(_banded_minhash(canon_old, id_col, text_col, k, bands))
+    mem_new, canon_new = _members_and_canon(df_new)
+    mem_old, canon_old = _members_and_canon(df_old)
+    bn = _banded_minhash(canon_new)
+    bo = _pin(_banded_minhash(canon_old))
     return _join_verify_expand(
         bn, bo, canon_new, canon_old, mem_new, mem_old,
-        id_col, text_col, threshold, max_bucket, cap_stats,
+        threshold, max_bucket, cap_stats,
     )
 
 
@@ -607,8 +423,6 @@ def _join_verify_expand(
     texts_old: DataFrame,
     mem_new: DataFrame,
     mem_old: DataFrame,
-    id_col: str,
-    text_col: str,
     threshold: float,
     max_bucket: int | None,
     cap_stats: dict | None = None,
@@ -627,8 +441,8 @@ def _join_verify_expand(
         bn = bn.join(sizes, ["band", "bucket"], "left_anti")
         bo = bo.join(sizes, ["band", "bucket"], "left_anti")
     cands = _pin(
-        bn.withColumnRenamed(id_col, "id_new")
-        .join(bo.withColumnRenamed(id_col, "id_old"), ["band", "bucket"])
+        bn.withColumnRenamed(ID_COL, "id_new")
+        .join(bo.withColumnRenamed(ID_COL, "id_old"), ["band", "bucket"])
         .select("id_new", "id_old")
         .distinct()
     )
@@ -636,16 +450,16 @@ def _join_verify_expand(
     # pruned to the candidate ids BEFORE any text is read or shingled
     # left_semi deduplicates probe keys itself — no .distinct() shuffle
     side_new = texts_new.join(
-        cands.select(F.col("id_new").alias(id_col)), id_col, "left_semi"
+        cands.select(F.col("id_new").alias(ID_COL)), ID_COL, "left_semi"
     ).select(
-        F.col(id_col).alias("id_new"),
-        _distinct_shingles_col(F.col(text_col)).alias("grams"),
+        F.col(ID_COL).alias("id_new"),
+        _distinct_shingles_col(F.col(TEXT_COL)).alias("grams"),
     )
     side_old = texts_old.join(
-        cands.select(F.col("id_old").alias(id_col)), id_col, "left_semi"
+        cands.select(F.col("id_old").alias(ID_COL)), ID_COL, "left_semi"
     ).select(
-        F.col(id_col).alias("id_old"),
-        _distinct_shingles_col(F.col(text_col)).alias("grams_b"),
+        F.col(ID_COL).alias("id_old"),
+        _distinct_shingles_col(F.col(TEXT_COL)).alias("grams_b"),
     )
     joined = cands.join(side_new, "id_new").join(side_old, "id_old")
     inter = F.size(F.array_intersect("grams", "grams_b"))
@@ -654,13 +468,13 @@ def _join_verify_expand(
     canon_pairs = joined.select(
         "id_new", "id_old", F.round(jac, 6).alias("jaccard")
     ).filter(F.col("jaccard") >= threshold)
-    # expand each side through its exact-dup group (no intra pairs:
-    # within-side duplicates are the self-join operator's concern)
+    # expand each side through its exact-dup group; pairs within one
+    # side are not part of this relation
     ma = mem_new.select(
-        F.col("canonical_id").alias("id_new"), F.col(id_col).alias("ia")
+        F.col("canonical_id").alias("id_new"), F.col(ID_COL).alias("ia")
     )
     mb = mem_old.select(
-        F.col("canonical_id").alias("id_old"), F.col(id_col).alias("ib")
+        F.col("canonical_id").alias("id_old"), F.col(ID_COL).alias("ib")
     )
     return (
         canon_pairs.join(ma, "id_new")
@@ -677,15 +491,25 @@ def _join_verify_expand(
 # persisted signature index (the continuous-crawl scale path)
 # ----------------------------------------------------------------------
 
-def save_dedup_index(
-    spark,
-    df: DataFrame,
-    path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 64,
-    bands: int = 16,
-) -> None:
+def _write_index(df: DataFrame, path: str, mode: str, *more) -> None:
+    """Sign ``df``'s canonical rows into path/banded and write its
+    member map to path/members (``mode``: overwrite or append),
+    overlapped with the ``more`` writes. The writes are independent
+    jobs, so the tail of one back-fills the others (guide §2.6)."""
+    # eager: the writes below run concurrently
+    members, canon = _members_and_canon(df, eager=True)
+    banded = _banded_minhash(canon)
+    writes = (
+        lambda: banded.write.mode(mode).partitionBy("band").parquet(path + "/banded"),
+        lambda: members.write.mode(mode).parquet(path + "/members"),
+        *more,
+    )
+    with ThreadPoolExecutor(max_workers=len(writes)) as pool:
+        for f in [pool.submit(w) for w in writes]:
+            f.result()
+
+
+def save_dedup_index(spark, df: DataFrame, path: str) -> None:
     """Persist the corpus's LSH signature index so future batches never
     re-shingle it (the old-corpus re-sign dominated incremental
     dedup at scale):
@@ -694,60 +518,40 @@ def save_dedup_index(
                      input, partition-pruned per band at probe time;
       path/members/  (id, canonical_id, dup_count) — the exact-dup
                      expansion map;
-      path/meta/     (k, bands) — validated at load so a probe with
-                     mismatched signature params fails loudly instead
-                     of silently joining garbage."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from ..session import local_rows_df
-
-    # eager: the three writes below run concurrently
-    members, canon = _members_and_canon(df, id_col, text_col, eager=True)
-    banded = _banded_minhash(canon, id_col, text_col, k, bands)
-    # the three index tables are independent jobs — overlap them so the
-    # tail of one back-fills the others (guide §2.6). The meta frame
-    # is a single-slice local list: the default createDataFrame path
-    # parallelizes into 32 pickled slices and a downstream coalesce(1)
-    # evaluated them sequentially through the Python runner (~4 s
-    # measured for this one-row write, r07).
-    writes = (
-        lambda: banded.write.mode("overwrite")
-        .partitionBy("band")
-        .parquet(path + "/banded"),
-        lambda: members.write.mode("overwrite").parquet(path + "/members"),
-        lambda: local_rows_df(spark, [(k, bands)], "k int, bands int", slices=1)
+      path/meta/     (k, bands) — checked at every probe and update, so
+                     an index signed with other parameters fails loudly
+                     instead of silently joining garbage."""
+    # the meta frame is a single-slice local list: the default
+    # createDataFrame path parallelizes into 32 pickled slices and a
+    # downstream coalesce(1) evaluated them sequentially through the
+    # Python runner (~4 s measured for this one-row write, r07)
+    _write_index(
+        df, path, "overwrite",
+        lambda: local_rows_df(spark, [(K, BANDS)], "k int, bands int", slices=1)
         .write.mode("overwrite")
         .parquet(path + "/meta"),
     )
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        for f in [pool.submit(w) for w in writes]:
-            f.result()
 
 
-def update_dedup_index(
-    spark,
-    df_new: DataFrame,
-    path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> None:
+def update_dedup_index(spark, df_new: DataFrame, path: str) -> None:
     """Append a new batch's signatures + members to an existing index —
     the per-drop maintenance step of a continuous crawl. Only the new
     batch is shingled/signed. (Exact dups ACROSS batches keep separate
     canonical entries; identical texts carry identical signatures, so
     cross-batch joins still see them — band buckets simply hold both.)"""
-    k, bands = _load_index_meta(spark, path)
-    canon = exact_dedup(df_new, id_col, text_col)
-    banded = _banded_minhash(canon, id_col, text_col, k, bands)
-    banded.write.mode("append").partitionBy("band").parquet(path + "/banded")
-    dup_group_members(df_new, id_col, text_col).write.mode("append").parquet(
-        path + "/members"
-    )
+    _check_index_meta(spark, path)
+    _write_index(df_new, path, "append")
 
 
-def _load_index_meta(spark, path: str) -> tuple[int, int]:
+def _check_index_meta(spark, path: str) -> None:
+    """Raise unless the index at ``path`` was signed with (K, BANDS)."""
     meta = spark.read.parquet(path + "/meta").collect()[0]
-    return int(meta["k"]), int(meta["bands"])
+    k, bands = int(meta["k"]), int(meta["bands"])
+    if (k, bands) != (K, BANDS):
+        raise ValueError(
+            f"dedup index {path} was signed with k={k}, bands={bands}; "
+            f"this code signs with k={K}, bands={BANDS}"
+        )
 
 
 def minhash_neardup_join_indexed(
@@ -755,8 +559,6 @@ def minhash_neardup_join_indexed(
     df_new: DataFrame,
     index_path: str,
     df_old: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     threshold: float = 0.5,
     max_bucket: int | None = 4096,
     counter=None,
@@ -772,15 +574,14 @@ def minhash_neardup_join_indexed(
     hook proving the old corpus is never re-signed. Output is
     identical to minhash_neardup_join(df_new, df_old) because the
     index holds exactly the signatures that call would recompute."""
-    k, bands = _load_index_meta(spark, index_path)
+    _check_index_meta(spark, index_path)
     bo = spark.read.parquet(index_path + "/banded").select(
-        id_col, "band", "bucket"
+        ID_COL, "band", "bucket"
     )
     mem_old = spark.read.parquet(index_path + "/members")
-    mem_new, canon_new = _members_and_canon(df_new, id_col, text_col)
-    bn = _banded_minhash(canon_new, id_col, text_col, k, bands, counter=counter)
+    mem_new, canon_new = _members_and_canon(df_new)
+    bn = _banded_minhash(canon_new, counter=counter)
     return _join_verify_expand(
         bn, bo, canon_new, df_old, mem_new, mem_old,
-        id_col, text_col, threshold, max_bucket, cap_stats,
+        threshold, max_bucket, cap_stats,
     )
-

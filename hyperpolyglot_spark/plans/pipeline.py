@@ -292,17 +292,14 @@ def metrics(labels: DataFrame) -> DataFrame:
     """Corpus metrics: docs seen / kept / dropped-by-rule / scrub counts
     (the breakdown agg A1-A3 analog + north-star metrics rows). One
     partial+final hash aggregation — the only shuffle in the job.
-    When the labels carry a ``disposition`` column (run_pipeline always
-    adds one now) it joins the group-by, so the unresolved stratum's
-    kept/quarantined/dropped split is an explicit metrics row, not a
-    NULL-key footnote."""
+    ``disposition`` (run_pipeline's column) joins the group-by, so the
+    unresolved stratum's kept/quarantined/dropped split is an explicit
+    metrics row, not a NULL-key footnote."""
     scrub_sums = [
         F.sum(F.coalesce(F.col(f"scrub_{n}"), F.lit(0))).alias(f"scrub_{n}")
         for n in SCRUB_NAMES
     ]
-    keys = ["lang_pred", "strategy", "keep", "drop_rule"]
-    if "disposition" in labels.columns:
-        keys.append("disposition")
+    keys = ["lang_pred", "strategy", "keep", "drop_rule", "disposition"]
     return labels.groupBy(*keys).agg(
         F.count("*").alias("docs"),
         F.sum("n_chars").alias("chars"),

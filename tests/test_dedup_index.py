@@ -2,17 +2,17 @@
 dedup path. Proves (a) the indexed join gives the same answer as the
 re-signing join, (b) the old corpus is signed exactly once — batches
 never re-shingle it, (c) the bucket cap's recall loss is observable,
-(d) the fixture property the incremental oracle depends on holds."""
+(d) the fixture property the incremental oracle depends on holds,
+(e) an index signed with other parameters is refused."""
 
 import duckdb
 import pytest
 from pyspark.sql import functions as F
 
 from hyperpolyglot_spark.operators.dedup import (
-    exact_dedup,
+    exact_dedup_groups,
     minhash_neardup_join,
     minhash_neardup_join_indexed,
-    minhash_neardup_pairs,
     save_dedup_index,
     update_dedup_index,
     word_shingles,
@@ -55,7 +55,7 @@ def test_indexed_join_signs_only_the_new_batch(spark, docs, tmp_path):
         spark, new, idx, old, threshold=0.5, counter=counter
     )
     out.collect()
-    n_canon_new = exact_dedup(new).count()
+    n_canon_new = exact_dedup_groups(new).count()
     assert counter.value == n_canon_new, (counter.value, n_canon_new)
 
 
@@ -85,15 +85,16 @@ def test_bucket_cap_is_observable(spark):
     base = " ".join(f"word{w}" for w in range(60))  # j ~ 58/60 per pair
     rows = [(i, f"{base} tail{i}") for i in range(40)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
+    new, old = df.filter(F.col("doc_id") < 20), df.filter(F.col("doc_id") >= 20)
     stats: dict = {}
-    out = minhash_neardup_pairs(
-        df, threshold=0.9, max_bucket=8, cap_stats=stats
+    out = minhash_neardup_join(
+        new, old, threshold=0.9, max_bucket=8, cap_stats=stats
     )
     n = out.count()
     assert stats["capped_buckets"] > 0
     assert stats["capped_rows"] > stats["capped_buckets"] * 8
     # uncapped finds strictly more pairs than the capped run
-    full = minhash_neardup_pairs(df, threshold=0.9, max_bucket=None).count()
+    full = minhash_neardup_join(new, old, threshold=0.9, max_bucket=None).count()
     assert full > n
 
     # clean corpus: the cap never fires and stats says so
@@ -102,7 +103,10 @@ def test_bucket_cap_is_observable(spark):
         [(i, f"totally unique words {i} row {i*7}") for i in range(50)],
         "doc_id long, text string",
     )
-    minhash_neardup_pairs(docs, max_bucket=4096, cap_stats=clean).count()
+    minhash_neardup_join(
+        docs.filter(F.col("doc_id") < 25), docs.filter(F.col("doc_id") >= 25),
+        max_bucket=4096, cap_stats=clean,
+    ).count()
     assert clean == {"capped_buckets": 0, "capped_rows": 0}
 
 
@@ -142,10 +146,33 @@ def test_pinned_scope_releases_caches(spark):
     )
     before = len(D._PINNED)
     with D.pinned_scope():
-        minhash_neardup_pairs(docs, threshold=0.5).count()
+        minhash_neardup_join(
+            docs.filter(F.col("doc_id") < 15), docs.filter(F.col("doc_id") >= 15),
+            threshold=0.5,
+        ).count()
         pinned = D._PINNED[before:]
-        assert pinned, "minhash path should pin at least one table"
+        assert len(pinned) == 3, "the join pins bo, bn and the candidates"
         assert all(p.storageLevel.useMemory for p in pinned)
     assert len(D._PINNED) == before
     assert all(not p.storageLevel.useMemory for p in pinned)
 
+
+def test_index_signed_with_other_params_is_refused(spark, docs, tmp_path):
+    """An index whose meta records another (k, bands) must fail loudly,
+    naming both pairs, before the probe builds a join or the update
+    writes a file: its band hashes are not comparable to this code's."""
+    old = docs.filter(F.col("doc_id") < 250)
+    new = docs.filter(F.col("doc_id") >= 250)
+    idx = tmp_path / "idx"
+    save_dedup_index(spark, old, str(idx))
+    spark.createDataFrame([(32, 8)], "k int, bands int").write.mode(
+        "overwrite"
+    ).parquet(str(idx / "meta"))
+    files = sorted(p for p in idx.rglob("*"))
+    want = r"k=32, bands=8.*k=64, bands=16"
+
+    with pytest.raises(ValueError, match=want):
+        minhash_neardup_join_indexed(spark, new, str(idx), old)
+    with pytest.raises(ValueError, match=want):
+        update_dedup_index(spark, new, str(idx))
+    assert sorted(p for p in idx.rglob("*")) == files

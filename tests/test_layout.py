@@ -70,21 +70,14 @@ ENTRY_OR_TEST_NAMES = {
     # the spec scorer the tests call: classify_margin_py's winner alone
     f"{PKG}.functions.langid.classify_hashed_py",
     f"{PKG}.plans.pipeline.breakdown",
-    # dedup's oracles and entry queries, beside the indexed join:
+    # dedup's oracles, beside the indexed join:
     # the scalar hash the padding-width test holds the batch hash to
     f"{PKG}.operators.dedup._base_hash64",
     # the exact all-pairs truth of the MinHash tests (neardup_jaccard_pairs)
     f"{PKG}.operators.dedup.ngram_jaccard_pairs",
-    # the re-signing oracle of the indexed join (neardup_incremental)
+    # the re-signing oracle of the indexed join
+    # (test_indexed_join_matches_resign_join)
     f"{PKG}.operators.dedup.minhash_neardup_join",
-    # the self-join form of the megacluster test (neardup_minhash_pairs)
-    f"{PKG}.operators.dedup.minhash_neardup_pairs",
-    # the self-join's exact-dup group expansion
-    f"{PKG}.operators.dedup._expand_group_pairs",
-    # the self-join's candidates, held under all-pairs by the tests
-    f"{PKG}.operators.dedup.lsh_candidate_pairs",
-    # the bucket-size histogram of the bucket-cap test
-    f"{PKG}.operators.dedup.lsh_bucket_stats",
 }
 
 

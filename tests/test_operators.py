@@ -4,12 +4,13 @@ ground truth on the sf0.01 documents table."""
 import pytest
 from pyspark.sql import functions as F
 
+from hyperpolyglot_spark.operators import dedup as D
 from hyperpolyglot_spark.operators.dedup import (
-    exact_dedup,
     exact_dedup_groups,
-    lsh_candidate_pairs,
-    minhash_neardup_pairs,
+    minhash_neardup_join,
+    minhash_neardup_join_indexed,
     ngram_jaccard_pairs,
+    save_dedup_index,
     word_shingles,
 )
 
@@ -29,9 +30,6 @@ def test_exact_dedup(spark, docs):
         F.count("*").alias("groups"), F.sum("dup_count").alias("rows")
     ).collect()[0]
     assert agg["groups"] == 500 and agg["rows"] == 510
-    deduped = exact_dedup(dup)
-    assert deduped.count() == 510  # semi-join keeps both copies of ids…
-    # …so dedup by content hash instead:
     assert (
         dup.dropDuplicates(["text"]).count()
         == groups.count()
@@ -67,83 +65,61 @@ def test_exact_jaccard_pairs_vs_python(spark, docs):
 
 
 def test_minhash_lsh_finds_exact_pairs(spark, docs):
+    """The new-vs-old MinHash join equals the exact all-pairs jaccard
+    across the split, from candidates far fewer than all cross pairs."""
     exact = {
-        (r["id_a"], r["id_b"])
+        (r["id_b"], r["id_a"])
         for r in ngram_jaccard_pairs(docs, threshold=0.5).collect()
+        if r["id_a"] < 250 <= r["id_b"]
     }
-    lsh = {
-        (r["id_a"], r["id_b"])
-        for r in minhash_neardup_pairs(docs, threshold=0.5).collect()
-    }
+    new = docs.filter(F.col("doc_id") >= 250)
+    old = docs.filter(F.col("doc_id") < 250)
+    with D.pinned_scope():
+        lsh = {
+            (r["id_new"], r["id_old"])
+            for r in minhash_neardup_join(new, old, threshold=0.5).collect()
+        }
+        cands = D._PINNED[-1].count()  # pinned last: the candidate pairs
     # precision 1.0 by construction (verified), recall 1.0 on this
     # corpus (the true pairs sit at jaccard ~0.99 where the 16x4 LSH
     # S-curve is ~1)
-    assert lsh == exact
-    cands = lsh_candidate_pairs(docs).count()
-    assert cands < 500 * 499 / 2 / 10  # candidates ≪ all-pairs
-
-
-def test_lsh_megacluster_stays_linear(spark, docs):
-    """A K-sized identical-boilerplate cluster must NOT emit O(K^2) LSH
-    candidates (the 100TB blowup): exact-dup pre-collapse reduces it to
-    one canonical row, and the K(K-1)/2 output pairs are emitted as
-    jaccard-1.0 literals without verification."""
-    K = 1000
-    boiler = spark.range(100_000, 100_000 + K).select(
-        F.col("id").alias("doc_id"),
-        F.lit(
-            "the same boilerplate text repeated on every page of this site "
-            * 5
-        ).alias("text"),
-    )
-    base = docs.limit(20).select("doc_id", "text")
-    dup = base.union(boiler)
-
-    # candidate pairs are generated over DISTINCT texts only: 21 rows
-    canon = exact_dedup(dup)
-    assert canon.count() == 21
-    assert lsh_candidate_pairs(canon).count() <= 21 * 20 / 2
-
-    pairs = minhash_neardup_pairs(dup, threshold=0.5)
-    intra = pairs.filter(
-        (F.col("id_a") >= 100_000) & (F.col("jaccard") == 1.0)
-    ).count()
-    assert intra == K * (K - 1) // 2
+    assert lsh == exact and exact
+    assert cands < 250 * 250 / 10  # candidates ≪ all cross pairs
 
 
 def test_lsh_bucket_cap_skips_oversized(spark, docs):
-    """max_bucket=0 marks every bucket oversized -> zero candidates
-    (the skip path); the stats helper reports the bucket histogram."""
-    from hyperpolyglot_spark.operators.dedup import lsh_bucket_stats
-
-    base = docs.limit(30).select("doc_id", "text")
-    assert lsh_candidate_pairs(base, max_bucket=0).count() == 0
-    stats = lsh_bucket_stats(base).collect()
-    assert sum(r["n_buckets"] for r in stats) > 0
+    """max_bucket=0 marks every bucket oversized -> zero pairs (the skip
+    path), and cap_stats counts every banded row of both sides."""
+    new = docs.filter(F.col("doc_id") < 15)
+    old = docs.filter(F.col("doc_id").between(15, 29))
+    stats: dict = {}
+    out = minhash_neardup_join(new, old, max_bucket=0, cap_stats=stats)
+    assert out.count() == 0
+    assert stats["capped_rows"] == 30 * D.BANDS
 
 
 def test_identical_empty_texts_are_not_jaccard_neardups(spark):
-    """Identical EMPTY texts share an exact-dup group but have jaccard
-    0 (no shingles) — the intra-group expansion must skip them, like
+    """Identical EMPTY texts share signatures and so a bucket, but
+    have jaccard 0 (no shingles): verification must drop them, like
     the all-pairs oracle does."""
-    df = spark.createDataFrame(
-        [(1, ""), (2, ""), (3, "same words here"), (4, "same words here")],
-        "doc_id long, text string",
+    new = spark.createDataFrame(
+        [(1, ""), (3, "same words here")], "doc_id long, text string"
+    )
+    old = spark.createDataFrame(
+        [(2, ""), (4, "same words here")], "doc_id long, text string"
     )
     got = {
-        (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in minhash_neardup_pairs(df, threshold=0.5).collect()
+        (r["id_new"], r["id_old"]): r["jaccard"]
+        for r in minhash_neardup_join(new, old, threshold=0.5).collect()
     }
     assert got == {(3, 4): 1.0}
 
 
-# --- text stats ----------------------------------------------------------
-def test_incremental_neardup_join(spark, docs):
+def test_incremental_neardup_join(spark, docs, tmp_path):
     """New-vs-old LSH join: finds injected cross-side dups, never emits
     within-side pairs, and a cross-side identical K x M cluster costs
-    ONE candidate pair (pre-collapse per side)."""
-    from hyperpolyglot_spark.operators.dedup import minhash_neardup_join
-
+    ONE candidate pair (pre-collapse per side): the indexed join signs
+    the K identical new docs once."""
     old = docs.limit(30).select("doc_id", "text")
     # new batch: 10 exact copies of old docs + 5 fresh boilerplate rows
     copies = (
@@ -175,6 +151,14 @@ def test_incremental_neardup_join(spark, docs):
     )
     out = minhash_neardup_join(big_new, big_old, threshold=0.5)
     assert out.count() == K * M
+    idx = str(tmp_path / "idx")
+    save_dedup_index(spark, big_old, idx)
+    counter = spark.sparkContext.accumulator(0)
+    out = minhash_neardup_join_indexed(
+        spark, big_new, idx, big_old, threshold=0.5, counter=counter
+    )
+    assert out.count() == K * M
+    assert counter.value == 1
 
 
 def test_hash64_batch_is_padding_width_independent():

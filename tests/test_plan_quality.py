@@ -50,26 +50,6 @@ def test_agg_is_partial_final(spark):
     assert "partial_count" in plan
 
 
-def test_minhash_bucket_join_prunes_pairs(spark):
-    """The LSH path must join on (band, bucket) — never a cross join."""
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    from hyperpolyglot_spark.operators.dedup import lsh_candidate_pairs
-
-    plan = plan_of(lsh_candidate_pairs(docs))
-    assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
-
-
-def test_neardup_expansion_is_equijoin_only(spark):
-    """Pre-collapse + expansion adds joins; all must stay hash
-    equi-joins (no cartesian / nested-loop anywhere)."""
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    from hyperpolyglot_spark.operators.dedup import minhash_neardup_pairs
-
-    plan = plan_of(minhash_neardup_pairs(docs))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-
-
 def test_percent_of_total_has_no_global_window(spark):
     """pct queries use a broadcast scalar agg, not a partitionless
     window (which funnels rows through ONE partition)."""

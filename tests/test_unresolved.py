@@ -72,7 +72,7 @@ def test_margin_agrees_with_argmax():
     texts = [t for _, t in training_corpus()[:50]]
     texts += [t for _, t in fixture_rows_texts()]
     for t in texts:
-        lang, margin, top1 = classify_margin_py(t, None, m)
+        lang, margin, top1, _ = classify_margin_py(t, None, m)
         assert lang == classify_hashed_py(t, None, m)
         assert margin >= 0.0
 
