@@ -21,6 +21,13 @@ train_ppl_py / perplexity_py are the pure-Python spec, plain Python
 and numpy. The model is trained once on the driver and broadcast; the
 pipeline's fused label UDF (plans/pipeline.py) is the only Spark runner
 and scores each kept row with perplexity_py.
+
+The logprob10 sum runs in an order numpy fixes (elementwise products,
+then numpy's pairwise sum), never one a BLAS kernel picks: OpenBLAS
+chooses its dot kernel from the CPU at load time, and each kernel adds
+the terms in another order, so a BLAS dot would move perplexities in
+their last bits from host to host and the frozen label digest, which
+hashes them at their exact bits, would hold on one host only.
 """
 
 from __future__ import annotations
@@ -66,7 +73,7 @@ def train_ppl_py(corpus: list[tuple[str, str]]) -> PplModel:
 # Vectorized scoring form, cached per model: trigrams are packed into
 # int64 keys (c0<<42 | c1<<21 | c2 — codepoints < 2^21), the per-lang
 # log10 tables become SORTED key/value arrays, and a document scores
-# with numpy (unique + searchsorted + dot) instead of 2000 string
+# with numpy (unique + searchsorted + sum) instead of 2000 string
 # slices + dict probes. log10 is evaluated once per MODEL entry, not
 # once per document event. Same probabilities, ~10x less python time.
 # id(model) -> (model, scorer). The model reference is held STRONGLY so
@@ -117,7 +124,9 @@ def logprob10_py(
 ) -> tuple[float, int]:
     """(sum of log10 P over events, n_events); lang absent -> (0, 0).
     Events are grouped (np.unique) and scored count * logp against the
-    precomputed sorted tables — all-C numpy path."""
+    precomputed sorted tables — all-C numpy path. The terms are summed
+    by numpy's pairwise sum, in an order numpy fixes and no BLAS kernel
+    chooses, so the bits do not depend on the host's BLAS kernel."""
     sc = _scorer(model).get(lang)
     if sc is None:
         return 0.0, 0
@@ -142,7 +151,7 @@ def logprob10_py(
         cxk = uk[miss] >> 21
         posc = np.minimum(np.searchsorted(ck, cxk), len(ck) - 1)
         lps[miss] = np.where(ck[posc] == cxk, cl[posc], dflt)
-    return float(lps @ cnt.astype(np.float64)), int(n)
+    return float((lps * cnt).sum()), int(n)
 
 
 def perplexity_py(text: str, lang: str, model: PplModel) -> float | None:

@@ -1,8 +1,14 @@
 """KenLM-style perplexity: training and scoring spec, rule wiring,
 and the quality separation the MAX_PPL threshold relies on."""
 
+import json
 import math
+import os
+import platform
+import subprocess
+import sys
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -144,3 +150,46 @@ def test_threshold_cache_is_identity_checked():
     assert got != {"en": -1.0}  # identity check rejected the stale hit
     assert P._THRESHOLD_CACHE[id(m2)][0] is m2
     assert P.ppl_thresholds_for(m1) == t1
+
+
+def _blas_is_openblas() -> bool:
+    blas = np.show_config(mode="dicts")["Build Dependencies"]["blas"]
+    return "openblas" in str(blas.get("name", "")).lower()
+
+
+_PPL_BITS_SCRIPT = """
+import json, sys
+from hyperpolyglot_spark.datagen.pages import gen_page
+from hyperpolyglot_spark.functions.perplexity import default_ppl_model, perplexity_py
+pm = default_ppl_model()
+pages = [gen_page(i, 7) for i in range(int(sys.argv[1]))]
+ppl = [perplexity_py(p["text"], p["lang"], pm) for p in pages]
+print(json.dumps([None if v is None else v.hex() for v in ppl]))
+"""
+
+
+@pytest.mark.skipif(
+    platform.machine() != "x86_64" or not _blas_is_openblas(),
+    reason="needs numpy built against OpenBLAS on x86_64",
+)
+def test_perplexity_bits_do_not_depend_on_the_blas_kernel():
+    """perplexity_py is the spec the frozen label digest hashes at its
+    exact bits, so its sum's order must not be chosen by the BLAS kernel
+    OpenBLAS picks from the CPU: the bits this process gives equal those
+    of a child pinned to the SSE3 Prescott kernel."""
+    n = 200
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    path = os.pathsep.join(filter(None, [root, os.environ.get("PYTHONPATH")]))
+    env = dict(os.environ, OPENBLAS_CORETYPE="Prescott", PYTHONPATH=path)
+    proc = subprocess.run(
+        [sys.executable, "-c", _PPL_BITS_SCRIPT, str(n)],
+        cwd=root, env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    child = json.loads(proc.stdout.strip().splitlines()[-1])
+    pm = default_ppl_model()
+    here = [perplexity_py(p["text"], p["lang"], pm) for p in (gen_page(i, 7) for i in range(n))]
+    here = [None if v is None else v.hex() for v in here]
+    assert sum(v is not None for v in here) > n // 2
+    moved = [i for i, (a, b) in enumerate(zip(here, child)) if a != b]
+    assert not moved, f"{len(moved)} of {n} perplexities differ under Prescott, first: {moved[:10]}"
