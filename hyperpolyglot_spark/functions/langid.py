@@ -32,7 +32,7 @@ import re
 
 import numpy as np
 
-from .langdata import LANGUAGES, STOPWORDS, WORDS
+from .langdata import LANG_INFO, LANGUAGES, SCRIPT_LETTER_CLASSES, STOPWORDS, WORDS
 
 DEFAULT_LOG_PROB = -19.0  # classifier.rs:10
 MAX_SCORE_CHARS = 2000
@@ -91,6 +91,67 @@ NORM_TO = " " * len(_SPACE_CHARS)
 
 
 # ----------------------------------------------------------------------
+# code points: the one form every character scan of the label stages
+# reads (the script evidence here, quality's class counts and trigram
+# repetition, scrub's guards, the NB and LM trigram keys)
+# ----------------------------------------------------------------------
+# One UTF-32 encode per text plus boolean-mask gathers replace the
+# re-engine scans of single-char classes. The encode passes lone
+# surrogates through, so it is total: every str has its code points.
+# Masks are built lazily, once per process, by running the spec regex
+# over the full code-point alphabet, surrogates included, so a mask
+# equals its regex at every code point by construction (pinned by
+# tests). ~1 MB per mask; only classes actually scanned get one.
+
+_ALPHABET: str | None = None
+_MASK_CACHE: dict[tuple[str, int], np.ndarray] = {}
+_ALPHA_MASK: np.ndarray | None = None
+
+
+def text_codes(text: str) -> np.ndarray:
+    """Code points of ``text`` as uint32, lone surrogates included."""
+    return np.frombuffer(text.encode("utf-32-le", "surrogatepass"), dtype="<u4")
+
+
+def _alphabet() -> str:
+    global _ALPHABET
+    if _ALPHABET is None:
+        _ALPHABET = "".join(map(chr, range(0x110000)))
+    return _ALPHABET
+
+
+def _mask_of(chars: str) -> np.ndarray:
+    m = np.zeros(0x110000, dtype=bool)
+    m[text_codes(chars)] = True
+    return m
+
+
+def char_mask(rx: "re.Pattern[str]") -> np.ndarray:
+    """Boolean code-point lookup for a compiled single-char-class regex,
+    derived from the regex itself (findall over the alphabet)."""
+    key = (rx.pattern, rx.flags)
+    got = _MASK_CACHE.get(key)
+    if got is None:
+        _MASK_CACHE[key] = got = _mask_of("".join(rx.findall(_alphabet())))
+    return got
+
+
+def alpha_mask() -> np.ndarray:
+    """Code-point lookup for str.isalpha (the script evidence's letters)."""
+    global _ALPHA_MASK
+    if _ALPHA_MASK is None:
+        _ALPHA_MASK = _mask_of("".join(filter(str.isalpha, _alphabet())))
+    return _ALPHA_MASK
+
+
+def pack_trigrams(codes: np.ndarray) -> np.ndarray:
+    """int64 key of each 3-code-point window: c0 << 42 | c1 << 21 | c2
+    (code points are below 2^21)."""
+    a = codes.astype(np.int64)
+    return (a[:-2] << 42) | (a[1:-1] << 21) | a[2:]
+
+
+# ----------------------------------------------------------------------
 # deterministic training corpus (the samples/ analog)
 # ----------------------------------------------------------------------
 
@@ -105,8 +166,6 @@ _NO_SPACE_SCRIPTS = frozenset(
 
 
 def _lang_sep(lang: str) -> str:
-    from .langdata import LANG_INFO
-
     info = LANG_INFO.get(lang)
     return "" if info and info["script"] in _NO_SPACE_SCRIPTS else " "
 
@@ -150,102 +209,88 @@ def training_corpus(
 # Measured on the realtext short stratum: hashed 0.869 -> 0.889, dict
 # 0.892 -> 0.899; full passages unchanged.
 #
-# Scale shape: one int8 codepoint->script-component lookup (built
-# lazily once per worker) + np.bincount per doc — two gathers, no
-# regex in the hot path.
+# Scale shape: one uint8 code point -> script-component lookup (built
+# lazily once per worker), one np.bincount and one isalpha gather per
+# doc (script_letters) — no regex in the hot path. The same counts feed
+# the unresolved gate's two script checks below.
 
 SCRIPT_NARROW_MIN_LETTERS = 5
 SCRIPT_NARROW_MIN_RATIO = 0.5
 
 # SCRIPT_LETTER_CLASSES entries are pairwise disjoint EXCEPT
-# kanji_kana ⊃ han, so the flat id table stores disjoint components
-# and kanji_kana's coverage is summed from (kana, han).
-_SCRIPT_COMPONENT_RANGES: dict[str, str] = {"kana": "぀-ヿ"}
-_SCRIPT_COMPONENTS: dict[str, tuple[str, ...]] = {}
-_SID_TABLE = None
-_SID_NAMES: list[str] = []
-_SID_RANGES: dict[str, str] = {}
+# kanji_kana ⊃ han, so the table stores disjoint components (every
+# other script, plus kana) and a script's letters are the sum of its
+# components' (kanji_kana = kana + han).
+_COMPONENT_CLASSES = {s: c for s, c in SCRIPT_LETTER_CLASSES.items() if s != "kanji_kana"}
+_COMPONENT_CLASSES["kana"] = "぀-ヿ"
+_COMPONENTS = sorted(_COMPONENT_CLASSES)
+_SCRIPT_COMPONENTS: dict[str, tuple[int, ...]] = {
+    s: tuple(
+        _COMPONENTS.index(c) for c in (("kana", "han") if s == "kanji_kana" else (s,))
+    )
+    for s in SCRIPT_LETTER_CLASSES
+}
+_SCRIPT_TABLE: np.ndarray | None = None
+
+# a document's script evidence: (its letters, its letters per component)
+ScriptLetters = tuple[int, list[int]]
 
 
-def _script_tables():
-    global _SID_TABLE, _SID_NAMES
-    if _SID_TABLE is None:
-        import re as _re
-
-        import numpy as np
-
-        from .langdata import SCRIPT_LETTER_CLASSES
-        from .quality import alpha_mask, char_mask
-
-        ranges = dict(_SCRIPT_COMPONENT_RANGES)
-        for s, cls in SCRIPT_LETTER_CLASSES.items():
-            if s == "kanji_kana":
-                _SCRIPT_COMPONENTS[s] = ("kana", "han")
-                continue
-            ranges[s] = cls
-            _SCRIPT_COMPONENTS[s] = (s,)
-        _SID_RANGES.update(ranges)
-        _SID_NAMES = sorted(ranges)
-        table = np.full(0x110000, -1, dtype=np.int8)
+def _script_table() -> np.ndarray:
+    """uint8 code point -> index into _COMPONENTS of the component whose
+    class holds it, for letters (isalpha); len(_COMPONENTS) for every
+    other code point."""
+    global _SCRIPT_TABLE
+    if _SCRIPT_TABLE is None:
+        table = np.full(0x110000, len(_COMPONENTS), dtype=np.uint8)
         alpha = alpha_mask()
-        for i, name in enumerate(_SID_NAMES):
-            m = char_mask(_re.compile("[" + ranges[name] + "]")) & alpha
-            table[m] = i
-        _SID_TABLE = table
-    return _SID_TABLE, _SID_NAMES
+        for i, name in enumerate(_COMPONENTS):
+            table[char_mask(re.compile("[" + _COMPONENT_CLASSES[name] + "]")) & alpha] = i
+        _SCRIPT_TABLE = table
+    return _SCRIPT_TABLE
 
 
-def script_candidates(text: str) -> list[str]:
+def script_letters(text: str) -> ScriptLetters:
+    """(n_alpha, letters of each script component) of ``text``: one
+    code-point array, one isalpha gather and one bincount. Letters
+    only on both sides: the script classes hold non-alphabetic code
+    points (×/÷ in Latin-1, Hebrew niqqud, Greek punctuation) that
+    would let a raw class count exceed n_alpha."""
+    codes = text_codes(text)
+    hist = np.bincount(_script_table()[codes], minlength=len(_COMPONENTS) + 1)
+    return int(alpha_mask()[codes].sum()), hist[:-1].tolist()
+
+
+def _script_hits(letters: ScriptLetters, script: str) -> int:
+    counts = letters[1]
+    return sum(counts[i] for i in _SCRIPT_COMPONENTS[script])
+
+
+def script_candidates(letters: ScriptLetters) -> list[str]:
     """Languages whose script covers >= SCRIPT_NARROW_MIN_RATIO of the
     doc's letters, in LANGUAGES order (tie-break stability). Empty when
     the doc has < SCRIPT_NARROW_MIN_LETTERS letters or no script
     qualifies — callers fall back to the full universe."""
-    import numpy as np
-
-    from .langdata import LANG_INFO
-    from .quality import alpha_mask, text_codes
-
-    table, names = _script_tables()
-    codes = text_codes(text)
-    if codes is None:  # lone surrogates: regex fallback, same semantics
-        import re as _re
-
-        letters = [c for c in text if c.isalpha()]
-        n_alpha = len(letters)
-        if n_alpha < SCRIPT_NARROW_MIN_LETTERS:
-            return []
-        counts = {
-            name: sum(
-                1
-                for c in letters
-                if _re.match("[" + _SID_RANGES[name] + "]", c)
-            )
-            for name in names
-        }
-    else:
-        alpha = alpha_mask()[codes]
-        n_alpha = int(alpha.sum())
-        if n_alpha < SCRIPT_NARROW_MIN_LETTERS:
-            return []
-        sid = table[codes]
-        bc = np.bincount(sid[sid >= 0], minlength=len(names))
-        counts = {name: int(bc[i]) for i, name in enumerate(names)}
-    qualified = set()
-    for script, comps in _SCRIPT_COMPONENTS.items():
-        hits = sum(counts.get(c, 0) for c in comps)
-        if hits / n_alpha >= SCRIPT_NARROW_MIN_RATIO:
-            qualified.add(script)
-    if not qualified:
+    n_alpha = letters[0]
+    if n_alpha < SCRIPT_NARROW_MIN_LETTERS:
         return []
+    qualified = {
+        s
+        for s in _SCRIPT_COMPONENTS
+        if _script_hits(letters, s) / n_alpha >= SCRIPT_NARROW_MIN_RATIO
+    }
     return [l for l in LANGUAGES if LANG_INFO[l]["script"] in qualified]
 
 
-def _narrowed_cands(text: str, candidates: list[str] | None) -> list[str]:
+def _narrowed_cands(
+    candidates: list[str] | None, letters: ScriptLetters | None
+) -> list[str]:
     """Shared candidate-defaulting for the char-gram scorers: explicit
-    candidates verbatim; empty -> script narrowing -> full universe."""
+    candidates verbatim; empty -> script narrowing (by the doc's
+    ``letters``) -> full universe."""
     if candidates:
         return list(candidates)
-    return script_candidates(text) or list(LANGUAGES)
+    return script_candidates(letters) or list(LANGUAGES)
 
 
 # ----------------------------------------------------------------------
@@ -292,16 +337,31 @@ def classify_margin_py(text: str, candidates: list[str] | None, model=None):
     widest-bucket-coverage attractor (zh/ja), whose script
     incoherence with the document is itself a noise signal the
     unresolved gate checks — the narrowed winner is coherent by
-    construction and carries no such signal. One matvec either way:
-    winner and gate read different rows of the same score vector.
+    construction and carries no such signal. One score vector either
+    way: winner and gate read different rows of it.
 
     A singleton EXPLICIT candidate list is 'resolved elsewhere' and
     reports +inf margin (never gated); an empty feature set returns
-    margin 0.0 / top1 -inf only when there is genuinely no evidence."""
+    margin 0.0 / top1 -inf only when there is genuinely no evidence.
 
+    The score vector is summed in an order numpy fixes (elementwise
+    products, then a sum over the grams), never one a BLAS kernel
+    picks, so margins have the same bits on every host (the
+    perplexity module's docstring has the reason)."""
     if candidates and len(candidates) == 1:
         return candidates[0], float("inf"), 0.0, candidates[0]
-    cands = _narrowed_cands(text, candidates)  # winner set
+    return _margin(text, candidates, None if candidates else script_letters(text), model)
+
+
+def _margin(
+    text: str,
+    candidates: list[str] | None,
+    letters: ScriptLetters | None,
+    model: HashedModel | None,
+):
+    """classify_margin_py for none or several candidates; ``letters``
+    (script_letters of ``text``) narrows an empty list."""
+    cands = _narrowed_cands(candidates, letters)  # winner set
     gate_cands = list(candidates) if candidates else list(LANGUAGES)
     if model is None:
         model = default_hashed_model()
@@ -313,11 +373,11 @@ def classify_margin_py(text: str, candidates: list[str] | None, model=None):
         glang = next((l for l in gate_cands if l in model), gate_cands[0])
         return lang, 0.0, float("-inf"), glang
     # winner from the narrowed rows, top-2 and gate winner from the
-    # gate rows, one matvec
+    # gate rows, one score vector
     uk, cnts = packed
     idx = _keys_to_buckets(uk)
     mt, lidx = _hashed_matrix(model)
-    all_scores = cnts @ mt[idx]
+    all_scores = (cnts[:, None] * mt[idx]).sum(axis=0)
     rows = np.array([lidx.get(l, -1) for l in cands], dtype=np.int64)
     scores = np.where(rows >= 0, all_scores[np.maximum(rows, 0)], -np.inf)
     bi = int(np.argmax(scores))
@@ -342,8 +402,6 @@ def classify_margin_py(text: str, candidates: list[str] | None, model=None):
 # what the margin gate can't: the hashed model's OOV grams land in
 # arbitrary buckets, and the language with the widest bucket coverage
 # (zh) can win with a confident-looking margin on pure alien script.
-_KNOWN_LETTER_RE: "re.Pattern[str] | None" = None
-_SCRIPT_RES: dict[str, "re.Pattern[str]"] = {}
 MIN_SCRIPT_LETTERS = 10
 KNOWN_SCRIPT_MIN_RATIO = 0.5
 # a classifier prediction must be script-coherent: at least this
@@ -353,53 +411,13 @@ KNOWN_SCRIPT_MIN_RATIO = 0.5
 PRED_SCRIPT_MIN_RATIO = 0.3
 
 
-def _script_re(script: str):
-    got = _SCRIPT_RES.get(script)
-    if got is None:
-        import re as _re
-
-        from .langdata import SCRIPT_LETTER_CLASSES
-
-        got = _re.compile("[" + SCRIPT_LETTER_CLASSES[script] + "]")
-        _SCRIPT_RES[script] = got
-    return got
-
-
-def _known_letter_re():
-    global _KNOWN_LETTER_RE
-    if _KNOWN_LETTER_RE is None:
-        import re as _re
-
-        from .quality import KNOWN_LETTER_CLASS
-
-        _KNOWN_LETTER_RE = _re.compile(KNOWN_LETTER_CLASS)
-    return _KNOWN_LETTER_RE
-
-
-def known_script_ratio(text: str) -> tuple[int, float]:
-    """(n_letters, fraction of them inside known-script ranges).
-    Both numerator and denominator count LETTERS only (class mask
-    intersected with isalpha): the script ranges contain non-alphabetic
-    codepoints (×/÷ in Latin-1, Hebrew niqqud, Greek punctuation), so a
-    raw class count can exceed n_alpha and inflate the ratio for
-    mark-heavy docs, weakening the unknown-script gate. Mask fast path
-    (quality.char_mask — one utf-32 decode, two gathers); regex/isalpha
-    fallback keeps identical semantics."""
-    from .quality import alpha_mask, char_mask, text_codes
-
-    codes = text_codes(text)
-    if codes is None:
-        n_alpha = sum(c.isalpha() for c in text)
-        if not n_alpha:
-            return 0, 1.0
-        known = sum(c.isalpha() for c in _known_letter_re().findall(text))
-        return n_alpha, known / n_alpha
-    alpha = alpha_mask()[codes]
-    n_alpha = int(alpha.sum())
+def known_script_ratio(letters: ScriptLetters) -> tuple[int, float]:
+    """(n_letters, fraction of them in some known script's class), from
+    a doc's script_letters; (0, 1.0) for a doc without letters."""
+    n_alpha, counts = letters
     if not n_alpha:
         return 0, 1.0
-    known = char_mask(_known_letter_re())[codes]
-    return n_alpha, int((known & alpha).sum()) / n_alpha
+    return n_alpha, sum(counts) / n_alpha
 
 
 def classify_or_none_py(
@@ -412,7 +430,9 @@ def classify_or_none_py(
     """classify_hashed_py with the unresolved gate: None when the script is
     unknown, when the NB decision is noise-like on both axes (see the
     calibration note above), or when the FULL-UNIVERSE argmax is
-    script-incoherent with the document.
+    script-incoherent with the document. One script_letters of the
+    text serves the unknown-script gate, the narrowing of an empty
+    candidate list and the coherence check.
 
     The coherence check deliberately targets the gate-set winner, not
     the (script-narrowed) returned label: on OOV noise the full
@@ -420,36 +440,22 @@ def classify_or_none_py(
     script mismatch with the document is the noise signal — the
     narrowed winner is coherent by construction, so checking it would
     silence the gate (the alien-Latin fixture pins this)."""
-    gate = candidates is None or len(candidates) != 1
-    n_alpha = 0
-    if gate:
-        n_alpha, ratio = known_script_ratio(text)
-        if n_alpha >= MIN_SCRIPT_LETTERS and ratio < KNOWN_SCRIPT_MIN_RATIO:
-            return None
-    lang, margin, top1, gate_lang = classify_margin_py(text, candidates, model)
+    if candidates and len(candidates) == 1:
+        return candidates[0]  # resolved elsewhere: never gated
+    letters = script_letters(text)
+    n_alpha, ratio = known_script_ratio(letters)
+    if n_alpha >= MIN_SCRIPT_LETTERS and ratio < KNOWN_SCRIPT_MIN_RATIO:
+        return None
+    lang, margin, top1, gate_lang = _margin(text, candidates, letters, model)
     if margin < margin_thr and top1 < abs_thr:
         return None
-    if gate and n_alpha >= MIN_SCRIPT_LETTERS:
-        from .langdata import LANG_INFO
-        from .quality import char_mask, text_codes
-
-        info = LANG_INFO.get(gate_lang)
-        if info is not None:
-            # same letters-only counting as known_script_ratio: the
-            # script classes include non-alphabetic codepoints, and
-            # the denominator n_alpha counts letters
-            rx = _script_re(info["script"])
-            codes = text_codes(text)
-            if codes is None:
-                hits = sum(c.isalpha() for c in rx.findall(text))
-            else:
-                from .quality import alpha_mask
-
-                hits = int(
-                    (char_mask(rx)[codes] & alpha_mask()[codes]).sum()
-                )
-            if hits / n_alpha < PRED_SCRIPT_MIN_RATIO:
-                return None
+    info = LANG_INFO.get(gate_lang)
+    if (
+        n_alpha >= MIN_SCRIPT_LETTERS
+        and info is not None
+        and _script_hits(letters, info["script"]) / n_alpha < PRED_SCRIPT_MIN_RATIO
+    ):
+        return None
     return lang
 
 
@@ -482,6 +488,8 @@ def gram_bucket(gram: str) -> int:
     fit a signed 64-bit integer), mod HASH_BUCKETS — the same bucket in
     every process, unlike the salted builtin hash().
 
+    A lone surrogate hashes as its surrogatepass UTF-8 bytes.
+
     Grams repeat massively across documents, so lookups are memoized
     (bounded at 200k entries ~ 20MB per python worker; md5 runs only
     on first sight of a gram)."""
@@ -492,7 +500,7 @@ def gram_bucket(gram: str) -> int:
         if len(_BUCKET_CACHE) > 200_000:
             _BUCKET_CACHE.clear()
         b = (
-            int(hashlib.md5(gram.encode("utf-8")).hexdigest()[:15], 16)
+            int(hashlib.md5(gram.encode("utf-8", "surrogatepass")).hexdigest()[:15], 16)
             % HASH_BUCKETS
         )
         _BUCKET_CACHE[gram] = b
@@ -545,14 +553,14 @@ _KB_MAX = 200_000
 
 
 def _packed_grams(text: str) -> tuple[np.ndarray, np.ndarray] | None:
-    """Distinct trigrams of the capped lowercased text as int64-packed
-    keys + counts — the all-numpy replacement for Counter(text_grams)."""
+    """Distinct trigrams of the normalized, capped, lowercased text as
+    pack_trigrams keys + counts, None under NGRAM chars — the all-numpy
+    Counter(text_grams(normalize_scoring_text(text))), shared by the NB
+    scorer and the LM (perplexity.logprob10_py)."""
     t = normalize_scoring_text(text)[:MAX_SCORE_CHARS].lower()
     if len(t) < NGRAM:
         return None
-    a = np.frombuffer(t.encode("utf-32-le"), dtype=np.uint32).astype(np.int64)
-    keys = (a[:-2] << 42) | (a[1:-1] << 21) | a[2:]
-    uk, cnt = np.unique(keys, return_counts=True)
+    uk, cnt = np.unique(pack_trigrams(text_codes(t)), return_counts=True)
     return uk, cnt.astype(np.float64)
 
 
@@ -605,7 +613,7 @@ def _hashed_matrix(model: HashedModel) -> tuple[np.ndarray, dict[str, int]]:
     n_langs) transposed matrix, cached on model IDENTITY (the cache
     holds the model reference, so an `is` hit can never be a recycled
     address — the perplexity scorer-cache pattern): per-doc scoring is
-    then one contiguous row-gather + one matvec for ALL languages
+    then one contiguous row-gather + one weighted row sum for ALL languages
     instead of a Python loop of per-lang gathers."""
     global _HM_MATRIX
     c = _HM_MATRIX

@@ -13,9 +13,11 @@ pointed at a quality signal instead of a label:
     logprob10    = sum over trigram events of log10 P
     perplexity   = 10 ** (-logprob10 / n_events)
 
-Text prep is frozen: lowercase, first PPL_MAX_CHARS chars, events are
-all contiguous 3-char windows (no BOS/EOS padding). A doc with fewer
-than 3 chars has no events -> perplexity None (no rule fires).
+Text prep is frozen and shared with the NB classifier: the events are
+langid.text_grams, every contiguous 3-char window (no BOS/EOS padding)
+of the first MAX_SCORE_CHARS chars, lowercased; scoring normalizes
+the text first (langid._packed_grams). A doc with fewer than 3 chars
+has no events -> perplexity None (no rule fires).
 
 train_ppl_py / perplexity_py are the pure-Python spec, plain Python
 and numpy. The model is trained once on the driver and broadcast; the
@@ -33,22 +35,29 @@ hashes them at their exact bits, would hold on one host only.
 from __future__ import annotations
 
 import math
+import random
+import statistics
 from collections import Counter
 
 import numpy as np
 
-PPL_NGRAM = 3
+from .langid import (
+    LANGUAGES,
+    NGRAM,
+    STOPWORDS,
+    WORDS,
+    _lang_sep,
+    _packed_grams,
+    pack_trigrams,
+    text_codes,
+    text_grams,
+    training_corpus,
+)
+
 PPL_ALPHA = 0.1
-PPL_MAX_CHARS = 2000
 
 # lang -> (tri_counts, ctx_counts, vocab_size)
 PplModel = dict[str, tuple[dict[str, int], dict[str, int], int]]
-
-
-def ppl_events(text: str) -> list[str]:
-    """All 3-char windows of the lowercased, capped text."""
-    t = text[:PPL_MAX_CHARS].lower()
-    return [t[i : i + PPL_NGRAM] for i in range(max(0, len(t) - PPL_NGRAM + 1))]
 
 
 def train_ppl_py(corpus: list[tuple[str, str]]) -> PplModel:
@@ -58,36 +67,34 @@ def train_ppl_py(corpus: list[tuple[str, str]]) -> PplModel:
         tri: Counter[str] = Counter()
         for l, text in corpus:
             if l == lang:
-                tri.update(ppl_events(text))
+                tri.update(text_grams(text))
         if not tri:
             continue  # a lang with zero events has no LM (spec: absent)
         ctx: Counter[str] = Counter()
         vocab: set[str] = set()
         for g, c in tri.items():
-            ctx[g[: PPL_NGRAM - 1]] += c
-            vocab.add(g[PPL_NGRAM - 1])
+            ctx[g[: NGRAM - 1]] += c
+            vocab.add(g[NGRAM - 1])
         model[lang] = (dict(tri), dict(ctx), len(vocab))
     return model
 
 
 # Vectorized scoring form, cached per model: trigrams are packed into
-# int64 keys (c0<<42 | c1<<21 | c2 — codepoints < 2^21), the per-lang
-# log10 tables become SORTED key/value arrays, and a document scores
-# with numpy (unique + searchsorted + sum) instead of 2000 string
-# slices + dict probes. log10 is evaluated once per MODEL entry, not
-# once per document event. Same probabilities, ~10x less python time.
+# int64 keys (langid.pack_trigrams; a context's key is its trigrams'
+# key >> 21), the per-lang log10 tables become SORTED key/value arrays,
+# and a document scores with numpy (unique + searchsorted + sum)
+# instead of 2000 string slices + dict probes. log10 is evaluated once
+# per MODEL entry, not once per document event. Same probabilities,
+# ~10x less python time.
 # id(model) -> (model, scorer). The model reference is held STRONGLY so
 # the id can never be recycled by a different dict (id-reuse after GC
 # would silently serve the wrong scorer); identity is re-checked on hit.
 _SCORER_CACHE: dict[int, tuple[PplModel, dict]] = {}
 
 
-def _pack3(g: str) -> int:
-    return (ord(g[0]) << 42) | (ord(g[1]) << 21) | ord(g[2])
-
-
-def _pack2(cx: str) -> int:
-    return (ord(cx[0]) << 21) | ord(cx[1])
+def _sorted_table(keys: np.ndarray, logps: list[float]):
+    order = np.argsort(keys)
+    return keys[order], np.array(logps, dtype=np.float64)[order]
 
 
 def _scorer(model: PplModel) -> dict:
@@ -100,19 +107,16 @@ def _scorer(model: PplModel) -> dict:
     sc = {}
     for lang, (tri, ctx, v) in model.items():
         denom = {cx: c2 + PPL_ALPHA * v for cx, c2 in ctx.items()}
-        tri_items = sorted(
-            (_pack3(g), math.log10((c3 + PPL_ALPHA) / denom[g[:2]]))
-            for g, c3 in tri.items()
-        )
-        ctx_items = sorted(
-            (_pack2(cx), math.log10(PPL_ALPHA / d))
-            for cx, d in denom.items()
-        )
+        # each gram, and each context padded to 3 chars, is one window
+        # of the joined string every NGRAM code points
+        tri_keys = pack_trigrams(text_codes("".join(tri)))[::NGRAM]
+        ctx_keys = pack_trigrams(text_codes(" ".join(denom) + " "))[::NGRAM] >> 21
         sc[lang] = (
-            np.array([k for k, _ in tri_items], dtype=np.int64),
-            np.array([p for _, p in tri_items], dtype=np.float64),
-            np.array([k for k, _ in ctx_items], dtype=np.int64),
-            np.array([p for _, p in ctx_items], dtype=np.float64),
+            *_sorted_table(
+                tri_keys,
+                [math.log10((c3 + PPL_ALPHA) / denom[g[:2]]) for g, c3 in tri.items()],
+            ),
+            *_sorted_table(ctx_keys, [math.log10(PPL_ALPHA / d) for d in denom.values()]),
             math.log10(PPL_ALPHA / (PPL_ALPHA * v)),
         )
     _SCORER_CACHE[key] = (model, sc)
@@ -130,18 +134,13 @@ def logprob10_py(
     sc = _scorer(model).get(lang)
     if sc is None:
         return 0.0, 0
-    # r6: same invisible-char cleanup as the NB scorer (langid spec) —
-    # applied at SCORING time; training corpora are clean by
+    # r6: the NB scorer's grams, after the same invisible-char cleanup
+    # — applied at SCORING time; training corpora are clean by
     # construction
-    from .langid import normalize_scoring_text
-
-    t = normalize_scoring_text(text)[:PPL_MAX_CHARS].lower()
-    n = len(t) - PPL_NGRAM + 1
-    if n <= 0:
+    packed = _packed_grams(text)
+    if packed is None:
         return 0.0, 0
-    a = np.frombuffer(t.encode("utf-32-le"), dtype=np.uint32).astype(np.int64)
-    keys = (a[:-2] << 42) | (a[1:-1] << 21) | a[2:]
-    uk, cnt = np.unique(keys, return_counts=True)
+    uk, cnt = packed
     tk, tl, ck, cl, dflt = sc
     pos = np.minimum(np.searchsorted(tk, uk), len(tk) - 1)
     hit = tk[pos] == uk
@@ -151,7 +150,7 @@ def logprob10_py(
         cxk = uk[miss] >> 21
         posc = np.minimum(np.searchsorted(ck, cxk), len(ck) - 1)
         lps[miss] = np.where(ck[posc] == cxk, cl[posc], dflt)
-    return float((lps * cnt).sum()), int(n)
+    return float((lps * cnt).sum()), int(cnt.sum())
 
 
 def perplexity_py(text: str, lang: str, model: PplModel) -> float | None:
@@ -170,8 +169,6 @@ def default_ppl_model() -> PplModel:
     process, broadcast at score time."""
     global _DEFAULT_PPL_MODEL
     if _DEFAULT_PPL_MODEL is None:
-        from .langid import training_corpus
-
         _DEFAULT_PPL_MODEL = train_ppl_py(training_corpus())
     return _DEFAULT_PPL_MODEL
 
@@ -195,10 +192,6 @@ _SALAD_ALPHABET = "abcdefghijklmnopqrstuvwxyz"
 def _cal_clean(lang: str, seed: int) -> str:
     """Held-out clean doc: same pools/mix as training_corpus but a
     disjoint seed namespace — measures unseen-but-in-distribution ppl."""
-    import random
-
-    from .langid import STOPWORDS, WORDS, _lang_sep
-
     rng = random.Random(f"ppl-cal-clean:{seed}:{lang}")
     pool, stop = WORDS[lang], STOPWORDS[lang]
     sep = _lang_sep(lang)
@@ -212,10 +205,6 @@ def _cal_clean(lang: str, seed: int) -> str:
 def _cal_salad(lang: str, seed: int) -> str:
     """The 'perplexed' fixture stratum shape: genuine stopwords mixed
     with ascii gibberish — what the ppl rule exists to catch."""
-    import random
-
-    from .langid import STOPWORDS, _lang_sep
-
     rng = random.Random(f"ppl-cal-salad:{seed}:{lang}")
     stop = STOPWORDS[lang]
     sep = _lang_sep(lang)
@@ -237,10 +226,6 @@ def ppl_thresholds(model: PplModel, langs=None) -> dict[str, float]:
     """lang -> drop threshold: sqrt(median(clean) * median(salad)).
     Deterministic (seeded calibration docs); a language missing from
     the model gets no entry (callers fall back to quality.MAX_PPL)."""
-    import statistics
-
-    from .langid import LANGUAGES
-
     out: dict[str, float] = {}
     for lang in langs if langs is not None else LANGUAGES:
         if lang not in model:

@@ -28,14 +28,14 @@ import pyarrow as pa
 import pyarrow.compute as pc
 
 from .langdata import ALL_STOPWORDS
-from .langid import normalize_scoring_text
+from .langid import char_mask, normalize_scoring_text, pack_trigrams, text_codes
 
 # Letter ranges of every script in the language universe (the 26
-# scripts). Shared by the symbol class below (negated: anything not a
-# known letter/digit/space is a "symbol") and by langid's unknown-
-# script gate (positive: a doc whose letters mostly fall OUTSIDE these
-# ranges has zero candidate languages). Same literals compile under
-# Python re, Java regex, and RE2/DuckDB.
+# scripts): the union of langdata.SCRIPT_LETTER_CLASSES less A-Za-z,
+# which langid's unknown-script gate reads (tests pin the two equal).
+# The symbol class below is their negation: anything not a known
+# letter/digit/space is a "symbol". Same literals compile under Python
+# re, Java regex, and RE2/DuckDB.
 LETTER_RANGES = (
     "À-ʯ"  # latin-1 supplement + extended A/B + IPA (ə, hausa ɓɗ)
     "Ͱ-Ͽ"  # greek
@@ -70,9 +70,6 @@ LETTER_RANGES = (
 # Chars that count as "symbols": not alnum, not whitespace, and not a
 # letter of any known script.
 _SYMBOL_CLASS = "[^A-Za-z0-9\\s" + LETTER_RANGES + "]"
-# Positive form: a letter of SOME known script (ascii letters + the
-# shared ranges). Consumed by langid's unknown-script gate.
-KNOWN_LETTER_CLASS = "[A-Za-z" + LETTER_RANGES + "]"
 _SYMBOL_RE = re.compile(_SYMBOL_CLASS)
 _WS_SPLIT_RE = re.compile(r"[ \t\n\r\f\x0b]+")
 
@@ -217,81 +214,34 @@ RULES_WITH_PPL: tuple[tuple[str, str, str, float], ...] = RULES + (PPL_RULE,)
 
 
 # ======================================================================
-# vectorized char-class scanning
+# char-class counts
 # ======================================================================
-# The per-doc Python floor's next lever (single-char class scans were
-# a measured share of per-doc Python time): replace the
-# re-engine scans of single-char classes with one utf-32 decode plus
-# boolean-mask gathers. Masks are built LAZILY, once per process, by
-# running the SPEC regex over the full codepoint alphabet — parity with
-# the regex path is by construction, and pinned by tests. ~1 MB per
-# mask; only classes actually scanned get one.
+# The three single-char classes the signals count, as one uint8 code-
+# point table (langid.char_mask builds each bit from its spec regex):
+# one UTF-32 encode and one gather per text or batch.
 
-_ALPHABET: str | None = None
-_MASK_CACHE: dict[tuple[str, int], "object"] = {}
-_ALPHA_MASK = None
+_SYMBOL_BIT, _SPACELESS_BIT, _HANGUL_BIT = 1, 2, 4
+_CLASS_TABLE = None
 
 
-def _alphabet() -> str:
-    global _ALPHABET
-    if _ALPHABET is None:
-        import itertools
-
-        _ALPHABET = "".join(
-            map(chr, itertools.chain(range(0xD800), range(0xE000, 0x110000)))
-        )
-    return _ALPHABET
-
-
-def char_mask(rx: "re.Pattern[str]"):
-    """Boolean codepoint-lookup for a compiled single-char-class regex,
-    derived from the regex itself (findall over the alphabet)."""
-    key = (rx.pattern, rx.flags)
-    got = _MASK_CACHE.get(key)
-    if got is None:
-        hit = "".join(rx.findall(_alphabet()))
-        arr = np.zeros(0x110000, dtype=bool)
-        if hit:
-            arr[np.frombuffer(hit.encode("utf-32-le"), dtype="<u4")] = True
-        _MASK_CACHE[key] = got = arr
-    return got
-
-
-def alpha_mask():
-    """Codepoint lookup for str.isalpha (langid's letter counting)."""
-    global _ALPHA_MASK
-    if _ALPHA_MASK is None:
-        a = _alphabet()
-        m = np.zeros(0x110000, dtype=bool)
-        hit = "".join(c for c in a if c.isalpha())
-        m[np.frombuffer(hit.encode("utf-32-le"), dtype="<u4")] = True
-        _ALPHA_MASK = m
-    return _ALPHA_MASK
-
-
-def text_codes(text: str):
-    """Codepoint array of ``text``, or None when the text cannot be
-    utf-32-encoded (lone surrogates — regex fallback path)."""
-    try:
-        return np.frombuffer(text.encode("utf-32-le"), dtype="<u4")
-    except UnicodeEncodeError:
-        return None
+def _class_table():
+    """uint8 codepoint table: symbol | spaceless << 1 | hangul << 2."""
+    global _CLASS_TABLE
+    if _CLASS_TABLE is None:
+        t = char_mask(_SYMBOL_RE).astype(np.uint8)
+        t |= char_mask(_SPACELESS_RE).astype(np.uint8) << 1
+        t |= char_mask(_HANGUL_ANY_RE).astype(np.uint8) << 2
+        _CLASS_TABLE = t
+    return _CLASS_TABLE
 
 
 def _scan_counts(text: str) -> tuple[int, int, bool]:
-    """(n_symbols, n_spaceless, has_hangul) — mask fast path with the
-    spec regexes as fallback; identical results either way."""
-    codes = text_codes(text)
-    if codes is None:
-        return (
-            len(_SYMBOL_RE.findall(text)),
-            len(_SPACELESS_RE.findall(text)),
-            _HANGUL_ANY_RE.search(text) is not None,
-        )
+    """(n_symbols, n_spaceless, has_hangul): the spec regexes' counts."""
+    cls = _class_table()[text_codes(text)]
     return (
-        int(char_mask(_SYMBOL_RE)[codes].sum()),
-        int(char_mask(_SPACELESS_RE)[codes].sum()),
-        bool(char_mask(_HANGUL_ANY_RE)[codes].any()),
+        int(np.count_nonzero(cls & _SYMBOL_BIT)),
+        int(np.count_nonzero(cls & _SPACELESS_BIT)),
+        bool((cls & _HANGUL_BIT).any()),
     )
 
 
@@ -419,20 +369,7 @@ def py_keep_drop(
 # ratio is one float64 division of them, as in py_signals, so every
 # value is bit-identical to the per-row spec.
 
-_SYMBOL_BIT, _SPACELESS_BIT, _HANGUL_BIT = 1, 2, 4
-_CLASS_TABLE = None
 _LADDER_OPS = {"<": np.less, ">": np.greater, ">=": np.greater_equal}
-
-
-def _class_table():
-    """uint8 codepoint table: symbol | spaceless << 1 | hangul << 2."""
-    global _CLASS_TABLE
-    if _CLASS_TABLE is None:
-        t = char_mask(_SYMBOL_RE).astype(np.uint8)
-        t |= char_mask(_SPACELESS_RE).astype(np.uint8) << 1
-        t |= char_mask(_HANGUL_ANY_RE).astype(np.uint8) << 2
-        _CLASS_TABLE = t
-    return _CLASS_TABLE
 
 
 def _segment_sums(flags, lens):
@@ -446,19 +383,21 @@ def _segment_sums(flags, lens):
     return out
 
 
-def _encodable_rows(norm: list[str]):
+# a char that sends its row to py_signals: whitespace that py_words
+# splits on besides " ", or a lone surrogate, which Arrow's UTF-8
+# strings cannot carry
+_PY_ROW_RE = re.compile(r"[\t\n\r\f\x0b\ud800-\udfff]")
+
+
+def _batch_rows(norm: list[str]):
     """(rows, code points): the rows batch_signals computes itself, and
-    their texts' concatenated UTF-32 code points."""
+    their texts' concatenated code points."""
     rows = list(range(len(norm)))
     joined = "".join(norm)
-    if _WS_OTHER_RE.search(joined) is not None:
-        rows = [i for i in rows if _WS_OTHER_RE.search(norm[i]) is None]
+    if _PY_ROW_RE.search(joined) is not None:
+        rows = [i for i in rows if _PY_ROW_RE.search(norm[i]) is None]
         joined = "".join(norm[i] for i in rows)
-    try:
-        return rows, np.frombuffer(joined.encode("utf-32-le"), "<u4")
-    except UnicodeEncodeError:
-        rows = [i for i in rows if text_codes(norm[i]) is not None]
-        return rows, np.frombuffer("".join(norm[i] for i in rows).encode("utf-32-le"), "<u4")
+    return rows, text_codes(joined)
 
 
 def _distinct_triples(ids, doc, n_docs: int):
@@ -485,17 +424,14 @@ def _rep_char(codes) -> float:
     n = len(codes) - _REP_CHAR_N + 1
     if n <= 0:
         return 0.0
-    a = codes.astype(np.int64)
-    keys = (a[:-2] << 42) | (a[1:-1] << 21) | a[2:]
-    return 1.0 - len(np.unique(keys)) / n
+    return 1.0 - len(np.unique(pack_trigrams(codes))) / n
 
 
 def batch_signals(texts: list[str], urls: list[str]) -> dict[str, np.ndarray]:
     """py_signals of every (text, url) pair, as one float64 array per
     signal, NaN where py_signals gives None. Rows that py_words splits
-    on more than spaces, or that UTF-32 cannot encode (lone
-    surrogates), take py_signals itself; extraction output has
-    neither."""
+    on more than spaces, or that Arrow cannot carry (lone surrogates),
+    take py_signals itself; extraction output has neither."""
     n = len(texts)
     sig = {k: np.full(n, np.nan) for k in py_signals("")}  # every signal name
     sig["is_vendor_url"] = np.array(
@@ -507,7 +443,7 @@ def batch_signals(texts: list[str], urls: list[str]) -> dict[str, np.ndarray]:
     joined = "".join(texts)
     if normalize_scoring_text(joined) is not joined:
         norm = [normalize_scoring_text(t) for t in texts]
-    fast, codes = _encodable_rows(norm)
+    fast, codes = _batch_rows(norm)
     for i in sorted(set(range(n)) - set(fast)):
         for k, v in py_signals(texts[i], urls[i]).items():
             sig[k][i] = np.nan if v is None else v

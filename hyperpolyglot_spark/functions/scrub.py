@@ -12,9 +12,12 @@ Regexes are compiled once at module import — once per Python worker —
 not per call (the reference recompiles PCRE per match call,
 heuristics.rs:24-39; SURVEY.md §4 X7 says do better, so we do).
 
-Spark side: the pipeline's fused label UDF (plans/pipeline.py) is the
-only runner; it calls py_scrub on kept rows, counting and rewriting in
-one pass per text instead of 2xN regexp passes over a text column.
+Spark side: the pipeline's batch labeller (plans/pipeline.label_batch)
+is the only runner. It computes the guards of a batch's kept rows at
+once (batch_guards) and then runs scrub_guarded on each kept row,
+counting and rewriting in one pass per text instead of 2xN regexp
+passes over a text column. py_scrub, which computes one text's guards
+itself (_guards), is the per-row spec.
 """
 
 from __future__ import annotations
@@ -23,7 +26,7 @@ import re
 
 import numpy as np
 
-from .quality import char_mask
+from .langid import char_mask, text_codes
 
 # A hextet (1-4 hex chars) that contains at least one DIGIT — used by
 # the compressed-ipv6 branches so a bare all-letter token before '::'
@@ -245,10 +248,7 @@ def batch_guards(texts: list[str]) -> list[dict[str, bool]]:
     four-byte-wide string was slower than over each text in its own
     narrow form."""
     n = len(texts)
-    try:
-        codes = np.frombuffer("\0".join(texts).encode("utf-32-le"), "<u4")
-    except UnicodeEncodeError:
-        return [_guards(t) for t in texts]
+    codes = text_codes("\0".join(texts))
     starts = np.cumsum([0] + [len(t) + 1 for t in texts[:-1]])
 
     def doc_of(pos):

@@ -14,8 +14,8 @@ Stage order and candidate-narrowing semantics mirror the reference:
      reference's own public-API behavior for empty candidate lists).
 
 Spark shape: this module is the per-document spec only. The production
-job runs detect_lang_py inside the fused Arrow label UDF
-(plans/pipeline.make_label_udf), where the classifier stage is reached
+job runs detect_lang_py inside the batch labeller of its Arrow label UDF
+(plans/pipeline.label_batch), where the classifier stage is reached
 only by rows stages 1-4 leave unresolved — the early-exit cascade X1:
 resolved rows never pay the expensive stage.
 """

@@ -527,7 +527,7 @@ def save_dedup_index(spark, df: DataFrame, path: str) -> None:
     # Python runner (~4 s measured for this one-row write, r07)
     _write_index(
         df, path, "overwrite",
-        lambda: local_rows_df(spark, [(K, BANDS)], "k int, bands int", slices=1)
+        lambda: local_rows_df(spark, [(K, BANDS)], "k int, bands int")
         .write.mode("overwrite")
         .parquet(path + "/meta"),
     )

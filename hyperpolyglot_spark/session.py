@@ -182,20 +182,14 @@ def get_spark(
         # JVM->python queue. 256-row batches measured 2.5-4x faster on
         # the 32-core pipeline leg (26k vs 3.5-10k docs/sec, 300k
         # pages); cheap small-row UDFs lose only ~ms per batch.
-        .config(
-            "spark.sql.execution.arrow.maxRecordsPerBatch",
-            os.environ.get("SPARK_GRAFT_ARROW_BATCH", "256"),
-        )
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "256")
         # Same lesson on the SCAN side: the vectorized parquet reader
         # reserves batch-size rows per column vector, so the default
         # 4096 with ~50KB html rows is ~200MB per task — 32 tasks OOM
         # a spark-submit driver left at its default 1g heap. 512 caps
         # reader memory at ~25MB/task; plain-row scans lose nothing
         # measurable.
-        .config(
-            "spark.sql.parquet.columnarReaderBatchSize",
-            os.environ.get("SPARK_GRAFT_READER_BATCH", "512"),
-        )
+        .config("spark.sql.parquet.columnarReaderBatchSize", "512")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.enabled", "false")
@@ -211,7 +205,7 @@ def get_spark(
     return spark
 
 
-def local_rows_df(spark: SparkSession, rows, schema: str, slices: int | None = None):
+def local_rows_df(spark: SparkSession, rows, schema: str):
     """createDataFrame for SMALL driver-local row lists (fixtures, dim
     tables, meta rows).
 
@@ -225,7 +219,7 @@ def local_rows_df(spark: SparkSession, rows, schema: str, slices: int | None = N
     these frames at a few tasks with identical schema/row semantics.
     Only for driver-local lists that are small by construction — corpus
     data never goes through this path."""
-    n = slices or max(1, min(4, (len(rows) + 127) // 128))
+    n = max(1, min(4, (len(rows) + 127) // 128))
     return spark.createDataFrame(
         spark.sparkContext.parallelize(rows, n), schema
     )

@@ -47,7 +47,7 @@ def test_cap_before_lower_boundary():
         _packed_grams,
         text_grams,
     )
-    from hyperpolyglot_spark.functions.perplexity import ppl_events
+    from hyperpolyglot_spark.functions.perplexity import default_ppl_model, logprob10_py
 
     # 'İ' sits well before the cap; text extends past the cap so the
     # wrong order would shift the capped window by one char per 'İ'.
@@ -61,8 +61,8 @@ def test_cap_before_lower_boundary():
     }
     assert decoded == Counter(expected)
 
-    # perplexity events follow the same contract
-    assert ppl_events(text) == expected
+    # the LM scores the same events
+    assert logprob10_py(text, "de", default_ppl_model())[1] == len(expected)
 
 
 def test_classify_hashed_empty_model_falls_back_to_first_candidate():

@@ -69,6 +69,10 @@ ENTRY_OR_TEST_NAMES = {
     f"{PKG}.functions.langid.NORM_TO",
     # the spec scorer the tests call: classify_margin_py's winner alone
     f"{PKG}.functions.langid.classify_hashed_py",
+    # the NB decision with its gate statistics, for the tests: the job
+    # reaches its body (_margin) through classify_or_none_py, which
+    # shares one script_letters between it and the gate
+    f"{PKG}.functions.langid.classify_margin_py",
     f"{PKG}.plans.pipeline.breakdown",
     # dedup's oracles, beside the indexed join:
     # the scalar hash the padding-width test holds the batch hash to

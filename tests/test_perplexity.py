@@ -13,12 +13,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from hyperpolyglot_spark.datagen.pages import gen_page, gen_pages_pdf
+from hyperpolyglot_spark.functions.langid import classify_margin_py, text_grams
 from hyperpolyglot_spark.functions.perplexity import (
     PPL_ALPHA,
     default_ppl_model,
     logprob10_py,
     perplexity_py,
-    ppl_events,
     train_ppl_py,
 )
 from hyperpolyglot_spark.functions.quality import MAX_PPL
@@ -26,10 +26,11 @@ from hyperpolyglot_spark.plans.pipeline import py_label_page
 
 
 def test_events_spec():
-    assert ppl_events("") == []
-    assert ppl_events("ab") == []
-    assert ppl_events("AbC") == ["abc"]
-    assert ppl_events("abcd") == ["abc", "bcd"]
+    """The LM's events are the NB classifier's grams (langid.text_grams)."""
+    assert text_grams("") == []
+    assert text_grams("ab") == []
+    assert text_grams("AbC") == ["abc"]
+    assert text_grams("abcd") == ["abc", "bcd"]
 
 
 def test_probabilities_normalize():
@@ -167,29 +168,60 @@ ppl = [perplexity_py(p["text"], p["lang"], pm) for p in pages]
 print(json.dumps([None if v is None else v.hex() for v in ppl]))
 """
 
+_MARGIN_BITS_SCRIPT = """
+import json, sys
+from hyperpolyglot_spark.datagen.pages import gen_page
+from hyperpolyglot_spark.functions.langid import classify_margin_py
+pages = [gen_page(i, 7) for i in range(int(sys.argv[1]))]
+out = [classify_margin_py(p["text"], None) for p in pages]
+print(json.dumps([[lang, margin.hex(), top1.hex(), gate] for lang, margin, top1, gate in out]))
+"""
 
-@pytest.mark.skipif(
+needs_x86_openblas = pytest.mark.skipif(
     platform.machine() != "x86_64" or not _blas_is_openblas(),
     reason="needs numpy built against OpenBLAS on x86_64",
 )
+
+
+def _prescott_child(script: str, n: int):
+    """The JSON that ``script`` prints last, run with ``n`` in a child
+    process pinned to OpenBLAS's SSE3 Prescott kernel."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    path = os.pathsep.join(filter(None, [root, os.environ.get("PYTHONPATH")]))
+    env = dict(os.environ, OPENBLAS_CORETYPE="Prescott", PYTHONPATH=path)
+    proc = subprocess.run(
+        [sys.executable, "-c", script, str(n)],
+        cwd=root, env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    return json.loads(proc.stdout.strip().splitlines()[-1])
+
+
+@needs_x86_openblas
 def test_perplexity_bits_do_not_depend_on_the_blas_kernel():
     """perplexity_py is the spec the frozen label digest hashes at its
     exact bits, so its sum's order must not be chosen by the BLAS kernel
     OpenBLAS picks from the CPU: the bits this process gives equal those
     of a child pinned to the SSE3 Prescott kernel."""
     n = 200
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    path = os.pathsep.join(filter(None, [root, os.environ.get("PYTHONPATH")]))
-    env = dict(os.environ, OPENBLAS_CORETYPE="Prescott", PYTHONPATH=path)
-    proc = subprocess.run(
-        [sys.executable, "-c", _PPL_BITS_SCRIPT, str(n)],
-        cwd=root, env=env, capture_output=True, text=True, timeout=300,
-    )
-    assert proc.returncode == 0, proc.stderr[-4000:]
-    child = json.loads(proc.stdout.strip().splitlines()[-1])
+    child = _prescott_child(_PPL_BITS_SCRIPT, n)
     pm = default_ppl_model()
     here = [perplexity_py(p["text"], p["lang"], pm) for p in (gen_page(i, 7) for i in range(n))]
     here = [None if v is None else v.hex() for v in here]
     assert sum(v is not None for v in here) > n // 2
     moved = [i for i, (a, b) in enumerate(zip(here, child)) if a != b]
     assert not moved, f"{len(moved)} of {n} perplexities differ under Prescott, first: {moved[:10]}"
+
+
+@needs_x86_openblas
+def test_margin_bits_do_not_depend_on_the_blas_kernel():
+    """The classifier's gate statistics (margin and top1 per gram) sit
+    next to the 0.15 / -15.0 gate thresholds, so their sums must not be
+    ordered by the BLAS kernel either: classify_margin_py gives the bits
+    of a child pinned to the SSE3 Prescott kernel."""
+    n = 200
+    child = _prescott_child(_MARGIN_BITS_SCRIPT, n)
+    here = [classify_margin_py(gen_page(i, 7)["text"], None) for i in range(n)]
+    here = [[lang, margin.hex(), top1.hex(), gate] for lang, margin, top1, gate in here]
+    moved = [i for i, (a, b) in enumerate(zip(here, child)) if a != b]
+    assert not moved, f"{len(moved)} of {n} margins differ under Prescott, first: {moved[:10]}"

@@ -18,7 +18,13 @@ from hyperpolyglot_spark.functions.metadata import (
 from hyperpolyglot_spark.functions.quality import py_keep_drop, py_signals
 from hyperpolyglot_spark.functions.scrub import py_scrub
 
-TEXT = st.text(max_size=400)
+# every code point: hypothesis' default alphabet leaves out category Cs
+# and draws few code points that high, so lone surrogates get their own
+# branch (str holds them, and the spec functions are total over str)
+TEXT = st.text(
+    st.characters(exclude_categories=()) | st.characters(categories=["Cs"]),
+    max_size=400,
+)
 BYTES = st.binary(max_size=800)
 
 
@@ -101,7 +107,6 @@ def test_perplexity_total_and_positive(s, lang):
         default_ppl_model,
         logprob10_py,
         perplexity_py,
-        ppl_events,
     )
 
     from hyperpolyglot_spark.functions.langid import normalize_scoring_text
@@ -109,7 +114,7 @@ def test_perplexity_total_and_positive(s, lang):
     m = default_ppl_model()
     lp, n = logprob10_py(s, lang, m)
     # r6 spec: scoring normalizes invisible chars before gram windows
-    assert n == len(ppl_events(normalize_scoring_text(s))) or lang not in m
+    assert n == len(text_grams(normalize_scoring_text(s))) or lang not in m
     assert lp <= 0.0  # probabilities <= 1
     p = perplexity_py(s, lang, m)
     if p is not None:
@@ -131,6 +136,7 @@ def test_hashed_classifier_total_and_matches_reference(s):
         classify_hashed_py,
         default_hashed_model,
         gram_bucket,
+        script_letters,
         text_grams,
     )
 
@@ -142,7 +148,7 @@ def test_hashed_classifier_total_and_matches_reference(s):
     # reference must model the same input
     s = normalize_scoring_text(s)
     gc = Counter(text_grams(s))
-    cands = _narrowed_cands(s, None)
+    cands = _narrowed_cands(None, script_letters(s))
     best, bs, first = cands[0], float("-inf"), True
     for lang in cands:
         score = (

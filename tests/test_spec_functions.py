@@ -325,17 +325,17 @@ def test_train_py_logprobs_normalize():
 
 
 def test_char_mask_parity_with_regex():
-    """The mask fast path (quality.char_mask / alpha_mask) must agree
+    """The code-point masks (langid.char_mask / alpha_mask) must agree
     with the spec regexes char-for-char on adversarial inputs: every
     known-script boundary, unicode whitespace (NEL, NBSP, ideographic
-    space), astral symbols (emoji), and combining marks."""
+    space), astral symbols (emoji), combining marks and lone
+    surrogates, which the code-point form carries like any other."""
+    from hyperpolyglot_spark.functions.langid import alpha_mask, char_mask, text_codes
     from hyperpolyglot_spark.functions.quality import (
         _HANGUL_ANY_RE,
         _SPACELESS_RE,
         _SYMBOL_RE,
         _scan_counts,
-        alpha_mask,
-        text_codes,
     )
 
     samples = [
@@ -348,6 +348,7 @@ def test_char_mask_parity_with_regex():
         "\x85\x1c\x1d\x1e\x1f edge whitespace-ish controls",
         "combining á ë marks ก้ไทย",
         "ÀàʯḀỿͰϿЀӿ԰֏֐׿؀ۿ boundary letters",
+        "lone \ud800 high and \udfff low surrogates \udbff\udc00 paired-looking",
         "",
     ]
     for t in samples:
@@ -358,7 +359,43 @@ def test_char_mask_parity_with_regex():
         )
         assert _scan_counts(t) == want, t
         codes = text_codes(t)
+        assert len(codes) == len(t)
         assert int(alpha_mask()[codes].sum()) == sum(c.isalpha() for c in t), t
+    # every surrogate code point, one at a time
+    for rx in (_SYMBOL_RE, _SPACELESS_RE, _HANGUL_ANY_RE):
+        mask = char_mask(rx)
+        for cp in range(0xD800, 0xE000):
+            assert mask[cp] == (rx.search(chr(cp)) is not None), (rx.pattern, hex(cp))
+    assert not alpha_mask()[0xD800:0xE000].any()
+
+
+def test_script_table_letters_equal_the_regexes():
+    """The classifier's one script histogram (langid.script_letters)
+    counts, per script, exactly the letters (isalpha) its
+    SCRIPT_LETTER_CLASSES regex matches, and over all scripts exactly
+    the letters of the known-letter class [A-Za-z + LETTER_RANGES]
+    that the unknown-script gate and the symbol class share."""
+    import re
+
+    import numpy as np
+
+    from hyperpolyglot_spark.functions.langdata import SCRIPT_LETTER_CLASSES
+    from hyperpolyglot_spark.functions.langid import (
+        _COMPONENTS,
+        _SCRIPT_COMPONENTS,
+        _script_table,
+        alpha_mask,
+        char_mask,
+    )
+    from hyperpolyglot_spark.functions.quality import LETTER_RANGES
+
+    table, alpha = _script_table(), alpha_mask()
+    known = table < len(_COMPONENTS)
+    want = char_mask(re.compile("[A-Za-z" + LETTER_RANGES + "]")) & alpha
+    assert np.array_equal(known, want)
+    for script, cls in SCRIPT_LETTER_CLASSES.items():
+        got = np.isin(table, _SCRIPT_COMPONENTS[script])
+        assert np.array_equal(got, char_mask(re.compile("[" + cls + "]")) & alpha), script
 
 
 def test_scrub_broadened_patterns():

@@ -22,6 +22,7 @@ from hyperpolyglot_spark.functions.langid import (
     classify_or_none_py,
     default_hashed_model,
     known_script_ratio,
+    script_letters,
     training_corpus,
 )
 from hyperpolyglot_spark.operators.cascade import detect_lang_py
@@ -57,11 +58,11 @@ def test_real_oov_latin_outcomes_pinned():
 
 
 def test_unknown_script_ratio():
-    n, r = known_script_ratio("ᏣᎳᎩ ᎦᏬᏂᎯᏍᏗ ᎠᏂᏴᏫᏯ")
+    n, r = known_script_ratio(script_letters("ᏣᎳᎩ ᎦᏬᏂᎯᏍᏗ ᎠᏂᏴᏫᏯ"))
     assert n >= 10 and r < 0.5
-    n, r = known_script_ratio("plain english text here with many letters")
+    n, r = known_script_ratio(script_letters("plain english text here with many letters"))
     assert r == 1.0
-    assert known_script_ratio("12345 !!! ...") == (0, 1.0)
+    assert known_script_ratio(script_letters("12345 !!! ...")) == (0, 1.0)
 
 
 def test_margin_agrees_with_argmax():
@@ -143,17 +144,15 @@ def test_known_script_ratio_letters_only():
     script classes contain non-alphabetic codepoints (Hebrew niqqud,
     Latin-1 ×/÷), so a raw class count can exceed n_alpha. The ratio
     must be in [0,1] and mark-heavy docs must not be inflated."""
-    from hyperpolyglot_spark.functions.langid import known_script_ratio
-
     # hebrew with heavy niqqud (U+05B0-05BC are marks, not letters —
     # inside the hebrew range but not isalpha)
     marked = "שָׁלוֹם עוֹלָם טוֹב" * 5
-    n_alpha, ratio = known_script_ratio(marked)
+    n_alpha, ratio = known_script_ratio(script_letters(marked))
     assert 0.0 <= ratio <= 1.0
     assert n_alpha == sum(c.isalpha() for c in marked)
     # pure math symbols inside the latin-1 range: × ÷ are NOT letters
     # — they contribute to neither side
-    n2, r2 = known_script_ratio("× ÷ × ÷ abcdefghij")
+    n2, r2 = known_script_ratio(script_letters("× ÷ × ÷ abcdefghij"))
     assert n2 == 10 and r2 == 1.0
     # decomposed korean (conjoining jamo, U+1100-11FF) counts as a
     # known script now
@@ -161,7 +160,7 @@ def test_known_script_ratio_letters_only():
 
     jamo = unicodedata.normalize("NFD", "\ud55c\uad6d\uc5b4 \ud14d\uc2a4\ud2b8 ") * 10
     assert any(0x1100 <= ord(c) <= 0x11FF for c in jamo)
-    n3, r3 = known_script_ratio(jamo)
+    n3, r3 = known_script_ratio(script_letters(jamo))
     assert n3 > 0 and r3 == 1.0
 
 
